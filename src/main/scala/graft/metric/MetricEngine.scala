@@ -1,6 +1,12 @@
 package graft.metric
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -113,17 +119,200 @@ final class MetricEngine(spark: SparkSession, root: String,
       .withColumn("metric_id", xxhash64(col("name")))
       .withColumn("tsid", xxhash64(col("series_key")))
 
-  /** Ingest one batch of samples: populate ids, upsert the four meta tables,
-    * write data per segment (writes may not cross a segment —
-    * reference storage.rs:307-316). */
-  /** Register any series in `ided` (id-populated rows with name/metric_id/
-    * tsid/series_key/labels columns) that the series table doesn't know
-    * yet — steady-state batches carry no new series, so the four
-    * meta-table writes are skipped entirely (the reference's
+  /** Ingest one batch of samples: populate ids, register new series in
+    * the four meta tables, write data per segment (writes may not cross a
+    * segment — reference storage.rs:307-316). A driver-local batch
+    * (every HTTP remote-write and OTLP payload, `samples.toDF()`) commits
+    * with zero Spark jobs; see [[ingest]]. */
+  def write(samples: DataFrame): Unit =
+    ingest(samples, data, Seq(col("value")), register = true)
+
+  /** Ingest a batch of exemplars. Input columns: `name` (metric),
+    * `labels` (series labels map), `ex_labels` (the exemplar's own
+    * labels, e.g. trace_id), `timestamp` (ms), `value`. Ids populate
+    * exactly as [[write]]'s samples do; no meta rows are created here —
+    * the remote-write spec sends exemplars alongside their series'
+    * samples, so the series is registered by the samples in the same
+    * request (an exemplar for a never-written series is still stored and
+    * becomes reachable once its series registers). One sorted SST per
+    * touched segment, like the data table. */
+  def writeExemplars(ex: DataFrame): Unit =
+    ingest(ex, exemplars,
+      Seq(MetricEngine.labelsKeyColumn(col("ex_labels")).as("exemplar_key"),
+        col("value"), col("ex_labels").as("labels")),
+      register = false)
+
+  /** Ingest a batch of native histogram samples (remote-write
+    * [[graft.streaming.RemoteWrite.HistogramSample]] shape, flattened).
+    * Input columns: `name`, `labels` (map), `timestamp` (ms), `count`,
+    * `sum`, `bucket_schema`, `zero_threshold`, `zero_count`,
+    * `pos_idx`/`pos_cnt` (absolute positive bucket indexes + counts),
+    * `neg_idx`/`neg_cnt`, `custom_values` (NHCB bounds; empty for
+    * standard schemas). Ids populate exactly as [[write]]'s samples do,
+    * and histogram-only series DO register in the meta tables (unlike
+    * exemplars, nothing guarantees a sample will arrive for the same
+    * series — Prometheus 3.x scrapes can be histogram-only). Identity is
+    * (metric_id, tsid, ts): re-delivered batches upsert idempotently
+    * under Overwrite merge, same as the data table. */
+  def writeHistograms(h: DataFrame): Unit =
+    ingest(h, histograms,
+      Seq("count", "sum", "bucket_schema", "zero_threshold", "zero_count",
+        "pos_idx", "pos_cnt", "neg_idx", "neg_cnt", "custom_values").map(col),
+      register = true)
+
+  /** The write path behind [[write]], [[writeHistograms]] and
+    * [[writeExemplars]]: id population, series registration (when
+    * `register`), then `table`'s rows — (metric_id, tsid, ts) followed by
+    * `valueCols`, the leading columns of every time-partitioned table —
+    * as one sorted SST per segment the batch touches.
+    *
+    * A driver-local batch (optimized plan = batch `LocalRelation`, with
+    * the [[withIds]] columns folded in by `ConvertToLocalRelation`) is
+    * collected with no Spark job, registers against the driver-side
+    * tsid set, and hands local frames to the storage layer, whose driver
+    * encoder writes them — zero jobs per write, like the reference's
+    * in-process write of one in-memory batch. Any other batch (streaming
+    * micro-batches, scans) stays distributed: cached once, registered by
+    * an anti-join against the series table, one write job per segment. */
+  private def ingest(batch: DataFrame, table: TimeMergeStorage,
+      valueCols: Seq[Column], register: Boolean): Unit = {
+    val keyCols = Seq(col("metric_id"), col("tsid"), col("timestamp").as("ts"))
+    val width = keyCols.size + valueCols.size
+    val metaCols =
+      if (register) Seq(col("name"), col("series_key"), col("labels")) else Nil
+    val rows = withIds(batch).select(keyCols ++ valueCols ++ metaCols: _*)
+    def commit(df: DataFrame, seg: Long): Unit = {
+      val range = TimeRange(seg * segmentMs, (seg + 1) * segmentMs)
+      // dataBuckets > 1 is the cluster shape: N pk-hash-partitioned SSTs
+      // written in parallel per segment (a coalesce(1) single-file write
+      // serializes a large ingest batch through one task); 1 keeps the
+      // reference-faithful one-SST-per-write small path.
+      if ((table eq data) && dataBuckets > 1) data.writeBucketed(df, range, dataBuckets)
+      else table.write(df, range)
+    }
+    rows.queryExecution.optimizedPlan match {
+      case local: LocalRelation if !local.isStreaming =>
+        val got = rows.collect()
+        if (register)
+          registerSeries(got.map(r => NewSeries(r.getString(width), r.getLong(0),
+            r.getLong(1), r.getString(width + 1), r.getMap[String, String](width + 2))))
+        got.groupBy(r => Math.floorDiv(r.getLong(2), segmentMs)).toSeq.sortBy(_._1)
+          .foreach { case (seg, part) =>
+            commit(localFrame(part.map(r => Row.fromSeq(r.toSeq.take(width))),
+              table.schema.userSchema), seg)
+          }
+      case _ =>
+        val cached = rows.cache()
+        try {
+          if (register) registerSeriesDistributed(cached)
+          val segd = cached.select(cached.columns.take(width).map(col).toIndexedSeq: _*)
+            .withColumn("__seg__", TimeMergeStorage.segmentIdColumn(col("ts"), segmentMs))
+          // one sorted SST per segment touched by the batch (bounded by the
+          // batch's time span, typically 1)
+          segd.select("__seg__").distinct().collect().map(_.getLong(0)).foreach { g =>
+            commit(segd.filter(col("__seg__") === g).drop("__seg__"), g)
+          }
+        } finally cached.unpersist()
+    }
+  }
+
+  /** A driver-local frame over `rows` — its plan is a `LocalRelation`, so
+    * the storage layer encodes it on the driver. */
+  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
+  /** Tsids the series table holds, loaded once per engine by ONE
+    * projection scan and kept current by [[registerSeries]]. null = not
+    * loaded; None = more than [[MetricDictCacheMax]] series (each batch
+    * then runs one pruned `tsid IN (batch)` lookup instead). Same
+    * single-writer-per-root contract as [[metricDictCache]]; guarded by
+    * `registerLock`. */
+  private var knownTsids: Option[scala.collection.mutable.Set[Long]] = null
+  private val registerLock = new Object
+
+  /** The batch tsids the series table does not hold yet. */
+  private def unknownTsids(batch: Set[Long]): Set[Long] = {
+    if (knownTsids == null) {
+      val rows = series.scan(ScanRequest(projection = Some(Seq("tsid"))))
+        .limit(MetricDictCacheMax + 1).collect()
+      knownTsids = if (rows.length > MetricDictCacheMax) None
+        else Some(scala.collection.mutable.HashSet.from(rows.map(_.getLong(0))))
+    }
+    knownTsids match {
+      case Some(known) => batch.filterNot(known)
+      case None =>
+        batch -- series.scan(ScanRequest(
+            predicates = Seq(col("tsid").isin(batch.toSeq: _*)),
+            projection = Some(Seq("tsid"))))
+          .collect().map(_.getLong(0))
+    }
+  }
+
+  /** Register the series of a driver-local batch that the series table
+    * does not hold yet — re-delivered payloads and steady-state batches
+    * carry none, so they write no meta rows at all (the reference's
     * populate-then-persist wiring, metric/mod.rs:30-40, with an existence
-    * check in front). Shared by the samples and native-histogram write
-    * paths. */
-  private def registerSeriesMeta(ided: DataFrame): Unit = {
+    * check in front). The four meta tables' rows are built on the driver,
+    * distinct, and written as local frames (no Spark job).
+    *
+    * ORDER MATTERS for crash-retry consistency: `series` is written LAST
+    * and the known-tsid set only grows after it commits. A crash or
+    * failure before that leaves the batch's tsids unregistered, so the
+    * retry (or the next engine's fresh tsid load) sees them as new again
+    * and rewrites their metrics/tags/index rows — idempotent upserts.
+    * Writing `series` first would let a crash strand series whose
+    * tag/index rows never landed, invisible to every label matcher.
+    *
+    * The driver dictionaries are updated in place from the new rows,
+    * never dropped, so the next query pays no reload job. */
+  private def registerSeries(batch: Seq[NewSeries]): Unit = registerLock.synchronized {
+    val byTsid = batch.map(s => s.tsid -> s).toMap
+    val fresh =
+      if (byTsid.isEmpty) Nil else unknownTsids(byTsid.keySet).toSeq.sorted.map(byTsid)
+    if (fresh.nonEmpty) {
+      val dict = metricDictCache
+      val names = fresh.map(s => s.name -> s.metricId).distinct
+        .filterNot { case (n, _) => dict != null && dict.exists(_.contains(n)) }
+      val tagRows = fresh.flatMap(s => s.labels.map { case (k, v) =>
+        (s.metricId, k, v, s.tsid) })
+      // metrics, tags and index are independent upserts into three
+      // tables: commit them concurrently, and `series` after all three
+      val upserts = Seq(
+        (metrics, names.map { case (n, id) => Row(n, id, 0) }, metricsSchema),
+        (tags, tagRows.map(t => Row(t._1, t._2, t._3)).distinct, tagsSchema),
+        (index, tagRows.distinct.map(t => Row(t._1, t._2, t._3, t._4)), indexSchema))
+        .collect { case (table, rows, schema) if rows.nonEmpty =>
+          Future(blocking(table.write(localFrame(rows, schema), MetaRange)))(
+            ExecutionContext.global)
+        }
+      upserts.map(f => Try(Await.result(f, Duration.Inf)))
+        .collectFirst { case Failure(e) => throw e }
+      series.write(localFrame(fresh.map(s => Row(s.metricId, s.tsid,
+        s.seriesKey.getBytes(java.nio.charset.StandardCharsets.UTF_8))),
+        seriesSchema), MetaRange)
+      knownTsids.foreach(_ ++= fresh.map(_.tsid))
+      if (names.nonEmpty) dictLock.synchronized {
+        dictEpoch += 1
+        metricDictCache = metricDictCache match {
+          case Some(d) if d.size + names.size <= MetricDictCacheMax => Some(d ++ names)
+          case Some(_) => None
+          case unloadedOrOverCap => unloadedOrOverCap
+        }
+      }
+      fresh.groupBy(_.metricId).foreach { case (mid, ss) =>
+        val keys = ss.flatMap(_.labels.keys)
+        tagKeysCache.computeIfPresent(mid, (_, known) => (known ++ keys).distinct)
+      }
+    }
+  }
+
+  /** [[registerSeries]] for a distributed batch: an anti-join against the
+    * series table, skipped when no new series arrive. `fresh` is cached
+    * only as an optimization — a lost block recomputes the anti-join, so
+    * `series` is written last here too: until it commits, every recompute
+    * re-derives the same fresh set. The driver dictionaries are dropped
+    * afterwards (their next use reloads). */
+  private def registerSeriesDistributed(ided: DataFrame): Unit = registerLock.synchronized {
     val known = series.scan(ScanRequest(projection = Some(Seq("tsid"))))
     val fresh = ided
       .select(col("name"), col("metric_id"), col("tsid"), col("series_key"),
@@ -133,14 +322,6 @@ final class MetricEngine(spark: SparkSession, root: String,
       .cache()
     try {
       if (!fresh.isEmpty) {
-        // ORDER MATTERS: `fresh` is an anti-join against the series table,
-        // and cache() is only an optimization — a lost cache block
-        // recomputes the plan. Writing `series` FIRST would make a
-        // recompute (during the tags/index writes) see the batch's tsids
-        // as already-known and silently produce an EMPTY fresh set,
-        // permanently dropping those series' tag/index rows. Writing
-        // `series` LAST keeps every possible recompute consistent: until
-        // it commits, the anti-join re-derives the same fresh set.
         metrics.write(
           fresh.select(col("name").as("metric_name"), col("metric_id")).distinct()
             .withColumn("field_id", lit(0))
@@ -157,93 +338,11 @@ final class MetricEngine(spark: SparkSession, root: String,
           fresh.select(col("metric_id"), col("tsid"),
             col("series_key").cast(BinaryType).as("series_key")).distinct(),
           MetaRange)
-        // new metrics / label keys may exist now — drop the driver-side
-        // dictionary caches so the next lookup reloads
-        metricDictCache = null
+        dictLock.synchronized { dictEpoch += 1; metricDictCache = null }
         tagKeysCache.clear()
+        knownTsids = null
       }
     } finally fresh.unpersist()
-  }
-
-  def write(samples: DataFrame): Unit = {
-    val ided = withIds(samples).cache()
-    try {
-      registerSeriesMeta(ided)
-      val dataRows = ided.select(col("metric_id"), col("tsid"),
-        col("timestamp").as("ts"), col("value"))
-        .withColumn("__seg__", floor(col("ts") / lit(segmentMs)).cast("long"))
-      // One sorted SST per segment touched by the batch (bounded by the
-      // batch's time span, typically 1).
-      val segs = dataRows.select("__seg__").distinct().collect().map(_.getLong(0))
-      segs.foreach { g =>
-        val batch = dataRows.filter(col("__seg__") === g).drop("__seg__")
-        val range = TimeRange(g * segmentMs, (g + 1) * segmentMs)
-        // dataBuckets > 1 is the cluster shape: N pk-hash-partitioned SSTs
-        // written in parallel per segment (a coalesce(1) single-file write
-        // serializes a large ingest batch through one task); 1 keeps the
-        // reference-faithful one-SST-per-write small path.
-        if (dataBuckets > 1) data.writeBucketed(batch, range, dataBuckets)
-        else data.write(batch, range)
-      }
-    } finally ided.unpersist()
-  }
-
-  /** Ingest a batch of exemplars. Input columns: `name` (metric),
-    * `labels` (series labels map), `ex_labels` (the exemplar's own
-    * labels, e.g. trace_id), `timestamp` (ms), `value`. Ids populate
-    * exactly as [[write]]'s samples do; no meta rows are created here —
-    * the remote-write spec sends exemplars alongside their series'
-    * samples, so the series is registered by the samples in the same
-    * request (an exemplar for a never-written series is still stored and
-    * becomes reachable once its series registers). One sorted SST per
-    * touched segment, like the data table. */
-  def writeExemplars(ex: DataFrame): Unit = {
-    // cache like write()'s `ided`: the plan is otherwise re-executed once
-    // for the segment-discovery collect and once more per touched segment
-    val rows = withIds(ex)
-      .select(col("metric_id"), col("tsid"),
-        col("timestamp").as("ts"),
-        MetricEngine.labelsKeyColumn(col("ex_labels")).as("exemplar_key"),
-        col("value"), col("ex_labels").as("labels"))
-      .withColumn("__seg__", floor(col("ts") / lit(segmentMs)).cast("long"))
-      .cache()
-    try {
-      val segs = rows.select("__seg__").distinct().collect().map(_.getLong(0))
-      segs.foreach { g =>
-        exemplars.write(rows.filter(col("__seg__") === g).drop("__seg__"),
-          TimeRange(g * segmentMs, (g + 1) * segmentMs))
-      }
-    } finally rows.unpersist()
-  }
-
-  /** Ingest a batch of native histogram samples (remote-write
-    * [[graft.streaming.RemoteWrite.HistogramSample]] shape, flattened).
-    * Input columns: `name`, `labels` (map), `timestamp` (ms), `count`,
-    * `sum`, `bucket_schema`, `zero_threshold`, `zero_count`,
-    * `pos_idx`/`pos_cnt` (absolute positive bucket indexes + counts),
-    * `neg_idx`/`neg_cnt`, `custom_values` (NHCB bounds; empty for
-    * standard schemas). Ids populate exactly as [[write]]'s samples do,
-    * and histogram-only series DO register in the meta tables (unlike
-    * exemplars, nothing guarantees a sample will arrive for the same
-    * series — Prometheus 3.x scrapes can be histogram-only). Identity is
-    * (metric_id, tsid, ts): re-delivered batches upsert idempotently
-    * under Overwrite merge, same as the data table. */
-  def writeHistograms(h: DataFrame): Unit = {
-    val ided = withIds(h).cache()
-    try {
-      registerSeriesMeta(ided)
-      val rows = ided.select(col("metric_id"), col("tsid"),
-        col("timestamp").as("ts"), col("count"), col("sum"),
-        col("bucket_schema"), col("zero_threshold"), col("zero_count"),
-        col("pos_idx"), col("pos_cnt"), col("neg_idx"), col("neg_cnt"),
-        col("custom_values"))
-        .withColumn("__seg__", floor(col("ts") / lit(segmentMs)).cast("long"))
-      val segs = rows.select("__seg__").distinct().collect().map(_.getLong(0))
-      segs.foreach { g =>
-        histograms.write(rows.filter(col("__seg__") === g).drop("__seg__"),
-          TimeRange(g * segmentMs, (g + 1) * segmentMs))
-      }
-    } finally ided.unpersist()
   }
 
   /** Native histogram rows of the series matching a PromQL selector within
@@ -632,11 +731,13 @@ final class MetricEngine(spark: SparkSession, root: String,
     * overhead on a dictionary that only changes when a NEW metric
     * registers. null = not loaded; None = dictionary larger than the
     * driver budget (fall back to per-name pruned lookups); Some(map) =
-    * the full name→id dictionary. Invalidated by [[registerSeriesMeta]]
-    * (the only metrics-table writer), so a lookup after ingest reloads.
+    * the full name→id dictionary. The registration paths are the only
+    * metrics-table writers: [[registerSeries]] extends a loaded
+    * dictionary in place, [[registerSeriesDistributed]] drops it so the
+    * next lookup reloads.
     *
     * Single-writer-per-root assumption (documented, round 16): these
-    * caches see only THIS instance's registerSeriesMeta. Metrics or tag
+    * caches see only THIS instance's registrations. Metrics or tag
     * keys written to the same storage root by another MetricEngine
     * instance or process are invisible to name resolution until this
     * instance restarts — multi-writer deployments must route ingest
@@ -644,26 +745,40 @@ final class MetricEngine(spark: SparkSession, root: String,
     * manifest contract already requires this). */
   @volatile private var metricDictCache: Option[Map[String, Long]] = null
   private val MetricDictCacheMax = 100000
+  /** Bumped under `dictLock` by every registration that adds metrics, so
+    * a load whose scan may predate that commit never installs its stale
+    * dictionary over the registration's update. */
+  private var dictEpoch = 0L
+  private val dictLock = new Object
 
-  /** Populate [[metricDictCache]] if unloaded — and nothing else: the
-    * load must not route through a per-name lookup, because once the
+  /** The dictionary, loaded if it is not — and nothing else: the load
+    * must not route through a per-name lookup, because once the
     * dictionary exceeds the cap (cache = Some-wrapped None) a
     * metricIdOf("") probe would launch a pointless metric_name=""
     * scan+collect job per call, in exactly the >100k-metric regime the
     * fallback targets (round 16, advisor fix). */
-  private def ensureDictLoaded(): Unit = {
-    if (metricDictCache == null) {
+  private def loadedDict(): Option[Map[String, Long]] = {
+    var dict = metricDictCache
+    while (dict == null) {
+      val epoch = dictLock.synchronized(dictEpoch)
       val rows = metrics.scan(ScanRequest(
           projection = Some(Seq("metric_name", "metric_id"))))
         .limit(MetricDictCacheMax + 1).collect()
-      metricDictCache = if (rows.length > MetricDictCacheMax) None
-      else Some(rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
+      val loaded = if (rows.length > MetricDictCacheMax) None
+        else Some(rows.map(r => r.getString(0) -> r.getLong(1)).toMap)
+      dict = dictLock.synchronized {
+        if (dictEpoch != epoch) null // a registration raced the scan: reload
+        else {
+          if (metricDictCache == null) metricDictCache = loaded
+          metricDictCache
+        }
+      }
     }
+    dict
   }
 
-  private[metric] def metricIdOf(name: String): Option[Long] = {
-    ensureDictLoaded()
-    metricDictCache match {
+  private[metric] def metricIdOf(name: String): Option[Long] =
+    loadedDict() match {
       case Some(dict) => dict.get(name)
       case None =>
         val rows = metrics.scan(ScanRequest(
@@ -671,16 +786,12 @@ final class MetricEngine(spark: SparkSession, root: String,
           projection = Some(Seq("metric_id")))).limit(1).collect()
         rows.headOption.map(_.getLong(0))
     }
-  }
 
   /** The loaded dictionary itself, when it fits the driver budget — the
     * evaluator resolves name MATCHERS against it driver-side (≤ 100k
     * regex probes) instead of launching a dictionary-scan job per query;
     * None above the budget (callers keep their frame-based jobs). */
-  private[metric] def cachedMetricDict: Option[Map[String, Long]] = {
-    ensureDictLoaded()
-    metricDictCache
-  }
+  private[metric] def cachedMetricDict: Option[Map[String, Long]] = loadedDict()
 
   /** Step 2: probe the data table with the TSID set (broadcast semi-join),
     * bucket by step, aggregate; optional per-tag grouping joins the index
@@ -1469,7 +1580,8 @@ final class MetricEngine(spark: SparkSession, root: String,
   /** Per-metric tag-KEY dictionary cache (round 15): the serving
     * decoration of every exact-name result re-discovered the metric's
     * label keys with its own scan+collect job; the key set only changes
-    * when a new series registers ([[registerSeriesMeta]] invalidates).
+    * when a new series registers ([[registerSeries]] adds the new keys
+    * to a cached entry; [[registerSeriesDistributed]] clears the cache).
     * Bounded by the number of queried metrics × their key counts. */
   private val tagKeysCache =
     new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
@@ -2037,6 +2149,11 @@ object MetricEngine {
     }
     a.length < b.length
   }
+  /** One series of a driver-local write batch, as [[MetricEngine]]'s
+    * registration sees it. */
+  private final case class NewSeries(name: String, metricId: Long, tsid: Long,
+      seriesKey: String, labels: scala.collection.Map[String, String])
+
   /** Meta tables are not time-partitioned: single fixed segment. */
   private val MetaSegmentMs = Long.MaxValue
   private val MetaRange = TimeRange(0L, 1L)

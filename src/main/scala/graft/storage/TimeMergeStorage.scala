@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Scan request mirror of the reference's ScanRequest (storage.rs:65-70):
@@ -30,18 +31,17 @@ final case class WriteOptions(
     dictionaryColumns: Map[String, Boolean] = Map.empty,
     bloomFilterColumns: Seq[String] = Nil,     // config.rs:127, 96-103
     rowGroupBytes: Long = 8L << 20) {
-  def apply[T](w: org.apache.spark.sql.DataFrameWriter[T]): org.apache.spark.sql.DataFrameWriter[T] = {
-    var out = w.option("compression", compression)
-      .option("parquet.enable.dictionary", enableDictionary.toString)
-      .option("parquet.block.size", rowGroupBytes.toString)
-    dictionaryColumns.foreach { case (c, on) =>
-      out = out.option(s"parquet.enable.dictionary#$c", on.toString)
-    }
-    bloomFilterColumns.foreach { c =>
-      out = out.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
-    out
-  }
+  /** The parquet writer options — one map for both SST encoders (the
+    * Spark write job and the driver encoder), so their files agree. */
+  def asMap: Map[String, String] =
+    Map("compression" -> compression,
+      "parquet.enable.dictionary" -> enableDictionary.toString,
+      "parquet.block.size" -> rowGroupBytes.toString) ++
+      dictionaryColumns.map { case (c, on) => s"parquet.enable.dictionary#$c" -> on.toString } ++
+      bloomFilterColumns.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
+
+  def apply[T](w: org.apache.spark.sql.DataFrameWriter[T]): org.apache.spark.sql.DataFrameWriter[T] =
+    w.options(asMap)
 }
 
 /** Time-partitioned, primary-key-sorted, merge-on-read columnar store —
@@ -170,40 +170,101 @@ final class TimeMergeStorage(
 
   /** Sorted segment-bounded write: one new SST per call
     * (reference storage.rs:189-225). Rejects batches crossing a segment
-    * boundary (storage.rs:307-316). */
+    * boundary (storage.rs:307-316).
+    *
+    * Where the rows live picks the encoder. A driver-local frame (its
+    * optimized plan is a batch `LocalRelation`: a decoded remote-write
+    * payload, `Seq(...).toDF()`) is sorted and encoded on the driver with
+    * zero Spark jobs — the reference's in-process write of one in-memory
+    * batch. Any other frame (streaming micro-batches, scans) runs one Spark
+    * write job. Both write the same file: same column order and schema,
+    * same [[WriteOptions]], same pk order; one commit routine seals it. */
   def write(df: DataFrame, range: TimeRange): SstFile = {
     requireMatchesSchema(df)
     require(TimeRange.truncate(range.start, segmentMs) ==
             TimeRange.truncate(range.end - 1, segmentMs),
       s"write crosses segment boundary: $range at segment=${segmentMs}ms")
     val id = allocId()
+    val tmp = new HPath(dataDir, s"tmp-$id")
+    df.queryExecution.optimizedPlan match {
+      case local: LocalRelation if !local.isStreaming => encodeOnDriver(local, id, tmp)
+      case _ => encodeWithSpark(df, id, tmp)
+    }
+    val part = partFiles(tmp).headOption
+      .getOrElse(sys.error(s"no parquet part written under $tmp"))
+    val sst = seal(part, id, range)
+    storeFs.delete(tmp, recursive = true)
+    manifest.addFile(sst)
+    sst
+  }
+
+  /** The SST's sort order: pk prefix, ascending, nulls first. */
+  private def pkOrder: Seq[Column] =
+    schema.primaryKeys.map(c => TimeMergeStorage.qcol(c).asc_nulls_first)
+
+  /** Spark encoder: one write job, one part file under `tmp`. */
+  private def encodeWithSpark(df: DataFrame, id: Long, tmp: HPath): Unit = {
     val stamped = df
       .withColumn(SeqCol, lit(id))                        // types.rs:219-239
       .withColumn(ReservedCol, lit(null).cast("long"))
-    val tmp = new HPath(dataDir, s"tmp-$id")
     // Sort AFTER coalesce(1) (same hazard note as Compactor.execute): a
     // sort below the coalesce orders each pre-coalesce partition only,
     // and their concatenation is not globally pk-sorted — the single
     // output file must be (the merged read and the footer's
     // sorting-columns stamp both assume per-file pk order).
-    writeOptions(stamped.coalesce(1)
-      .sortWithinPartitions(schema.primaryKeys.map(c => TimeMergeStorage.qcol(c).asc_nulls_first): _*)
-      .write).mode("overwrite").parquet(tmp.toString)
-    val part = partFiles(tmp).headOption
-      .getOrElse(sys.error(s"no parquet part written under $tmp"))
+    writeOptions(stamped.coalesce(1).sortWithinPartitions(pkOrder: _*).write)
+      .mode("overwrite").parquet(tmp.toString)
+  }
+
+  /** Driver encoder: the `LocalRelation`'s rows, stamped with `__seq__` and
+    * the reserved column like [[encodeWithSpark]]'s projection, sorted by
+    * Catalyst's own pk ordering (interpreted — nothing to compile) and
+    * written through Spark's parquet `OutputWriter` with the same options
+    * and schema a write job would use, so the two files agree down to the
+    * footer's row metadata. */
+  private def encodeOnDriver(local: LocalRelation, id: Long, tmp: HPath): Unit = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types.LongType
+    val out = local.output
+    val ordering = new InterpretedOrdering(schema.primaryKeys.map { pk =>
+      val i = out.indexWhere(_.name == pk)
+      SortOrder(BoundReference(i, out(i).dataType, out(i).nullable),
+        Ascending, NullsFirst, Seq.empty)
+    })
+    val stamp = Seq(AttributeReference(SeqCol, LongType, nullable = false)(),
+      AttributeReference(ReservedCol, LongType)())
+    val fileSchema =
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.fromAttributes(out ++ stamp)
+    val opts = writeOptions.asMap
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConfWithOptions(opts))
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, opts, fileSchema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID(
+        s"graft-$id", 0, org.apache.hadoop.mapreduce.TaskType.MAP, 0, 0))
+    val writer = factory.newInstance(
+      new HPath(tmp, "part-00000.parquet").toString, fileSchema, ctx)
+    val suffix = new GenericInternalRow(Array[Any](id, null))
+    val row = new JoinedRow()
+    try local.data.sorted(ordering).foreach(r => writer.write(row(r, suffix)))
+    finally writer.close()
+  }
+
+  /** The commit routine every SST write shares: rename the staged `part`
+    * to its seq-named file, then ONE footer parse yields the row count,
+    * zone-map stats and the sorting-columns stamp — metadata only, no
+    * re-read job, one open instead of three (matters on object stores).
+    * The caller commits the returned entry to the manifest. */
+  private def seal(part: HPath, id: Long, range: TimeRange,
+      bucket: Int = -1): SstFile = {
     val dest = new HPath(dataDir, s"$id.parquet")
     storeFs.rename(part, dest)
-    storeFs.delete(tmp, recursive = true)
-    // ONE footer parse per commit: row count, zone-map stats, and the
-    // sorting-columns stamp all derive from it — metadata only, no re-read
-    // job, one open instead of three (matters on object stores).
     val footer = storeFs.parquetFooter(dest)
     val rows = storeFs.parquetRowCount(footer)
     storeFs.stampSortingColumns(dest, pkSorting, footer)
-    val sst = SstFile(id, dest.toString, rows, storeFs.size(dest), range,
-      stats = storeFs.parquetColumnStats(footer, statsColumns))
-    manifest.addFile(sst)
-    sst
+    SstFile(id, dest.toString, rows, storeFs.size(dest), range,
+      stats = storeFs.parquetColumnStats(footer, statsColumns), bucket = bucket)
   }
 
   /** Columns whose per-file min/max go into the manifest as zone maps
@@ -237,7 +298,7 @@ final class TimeMergeStorage(
     // expressions — deriving a bucket id first would collide buckets)
     writeOptions(
       df.repartition(numBuckets, schema.primaryKeys.map(TimeMergeStorage.qcol): _*)
-        .sortWithinPartitions(schema.primaryKeys.map(c => TimeMergeStorage.qcol(c).asc_nulls_first): _*)
+        .sortWithinPartitions(pkOrder: _*)
         .withColumn(SeqCol, lit(batchId))
         .withColumn(ReservedCol, lit(null).cast("long"))
         .write).mode("overwrite").parquet(tmp.toString)
@@ -248,18 +309,9 @@ final class TimeMergeStorage(
     // i of every batch holds the same key space — recorded in the manifest
     // so compaction can merge per (segment, bucket).
     val ssts = partFiles(tmp).map { part =>
-      val id = allocId()
-      val dest = new HPath(dataDir, s"$id.parquet")
       val bucket = "part-(\\d+)".r.findFirstMatchIn(part.getName)
         .map(_.group(1).toInt).getOrElse(-1)
-      storeFs.rename(part, dest)
-      // one footer parse per part: rows + stats + sorting stamp
-      val footer = storeFs.parquetFooter(dest)
-      val rows = storeFs.parquetRowCount(footer)
-      storeFs.stampSortingColumns(dest, pkSorting, footer)
-      SstFile(id, dest.toString, rows, storeFs.size(dest), range,
-        stats = storeFs.parquetColumnStats(footer, statsColumns),
-        bucket = bucket)
+      seal(part, allocId(), range, bucket)
     }
     storeFs.delete(tmp, recursive = true)
     manifest.update(ssts)
@@ -288,8 +340,7 @@ final class TimeMergeStorage(
       df.withColumn(segCol,
           TimeMergeStorage.segmentIdColumn(TimeMergeStorage.qcol(tsCol), segmentMs))
         .repartition(col(segCol))
-        .sortWithinPartitions(col(segCol).asc +:
-          schema.primaryKeys.map(c => TimeMergeStorage.qcol(c).asc_nulls_first): _*)
+        .sortWithinPartitions(col(segCol).asc +: pkOrder: _*)
         .withColumn(SeqCol, lit(batchId))
         .withColumn(ReservedCol, lit(null).cast("long"))
         .write).mode("overwrite").partitionBy(segCol).parquet(tmp.toString)
@@ -310,16 +361,7 @@ final class TimeMergeStorage(
       .flatMap { dir =>
         val seg = dir.getName.stripPrefix(s"$segCol=").toLong
         val range = TimeRange(seg * segmentMs, (seg + 1) * segmentMs)
-        partFiles(dir).map { part =>
-          val id = allocId()
-          val dest = new HPath(dataDir, s"$id.parquet")
-          storeFs.rename(part, dest)
-          val footer = storeFs.parquetFooter(dest)
-          val rows = storeFs.parquetRowCount(footer)
-          storeFs.stampSortingColumns(dest, pkSorting, footer)
-          SstFile(id, dest.toString, rows, storeFs.size(dest), range,
-            stats = storeFs.parquetColumnStats(footer, statsColumns))
-        }
+        partFiles(dir).map(seal(_, allocId(), range))
       }
     storeFs.delete(tmp, recursive = true)
     manifest.update(ssts)
@@ -352,7 +394,7 @@ final class TimeMergeStorage(
       scanWith(req, merge = df => graft.plans.MergeDedupOps.nativeDedupMerge(
         df, schema.primaryKeys, schema.updateMode, globalSort = true))
     else
-      scan(req).sort(schema.primaryKeys.map(c => TimeMergeStorage.qcol(c).asc_nulls_first): _*)
+      scan(req).sort(pkOrder: _*)
 
   /** Merge-on-read DELETE (beyond-ref; the reference's overwrite mode has
     * no delete marker): rows written with `tombstoneCol = true` are delete

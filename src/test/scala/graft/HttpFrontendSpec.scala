@@ -1059,4 +1059,108 @@ class HttpFrontendSpec extends AnyFunSuite {
       assert(viaHttp.body() == direct && viaHttp.body() != "[]")
     } finally fe.stop()
   }
+
+  test("driver-local ingest runs no Spark jobs: remote-write 1.0, 2.0 and " +
+      "OTLP POSTs with new or known series; only the first write after an " +
+      "engine opens loads the tsid set; a query after a new series reloads " +
+      "no dictionary") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftTestShims
+    import graft.streaming.Otlp
+    val root = Files.createTempDirectory("graft-http-zerojob").toString
+    // a root that already holds series, so the reopened engine has a real
+    // series table to load
+    locally {
+      import spark.implicits._
+      new MetricEngine(spark, root).write(samples(30, 0).toDF())
+    }
+    // Each request runs alone, with nothing else on the session, so the
+    // jobs started between its send and its response are its own.
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      GraftTestShims.drainListeners(spark)
+      val before = jobs.get()
+      f
+      GraftTestShims.drainListeners(spark)
+      jobs.get() - before
+    }
+    val engine = new MetricEngine(spark, root)
+    val fe = new HttpFrontend(spark, engine)
+    val port = fe.start()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def write(path: String, body: Array[Byte], code: Int = 204): Int =
+        jobsOf(assert(post(port, path, body).statusCode() == code))
+      def v1(ss: Seq[Sample]) =
+        write("/api/v1/write", org.xerial.snappy.Snappy.compress(RemoteWrite.encode(ss)))
+      def v2(ss: Seq[Sample]) =
+        write("/api/v1/write", org.xerial.snappy.Snappy.compress(RemoteWrite.encodeV2(ss)))
+      def otlp(host: String, at: Long) = write("/v1/metrics", Otlp.encode(
+        Map("service.name" -> "api"), Seq(Otlp.MetricSpec("otlp_gauge",
+          Seq(Otlp.Point(Map("host" -> host), at * 1000000L, 1.0))))), 200)
+      def series(host: String, at: Long) =
+        Seq(Sample("cpu_seconds_total", Map("host" -> host, "mode" -> "user"), at, 2.0))
+
+      // the first write after the engine opens may run the tsid-set load —
+      // one projection scan of the series table — and nothing else
+      val load = jobsOf(engine.series.scan(graft.storage.ScanRequest(
+        projection = Some(Seq("tsid")))).limit(100001).collect())
+      val first = v1(samples(30, 100))
+      assert(first <= load, s"first write ran $first jobs; the tsid load alone runs $load")
+      // known series only, then new series under the known metric
+      assert(v1(samples(30, 200)) == 0)
+      assert(v1(series("v1-new", t0 + 300000L)) == 0)
+      assert(v2(samples(30, 400)) == 0)
+      assert(v2(series("v2-new", t0 + 500000L)) == 0)
+      assert(otlp("otlp-new", t0 + 600000L) == 0)
+      assert(otlp("otlp-new", t0 + 601000L) == 0)
+      // exemplars and native histograms ride the same driver path
+      val extras = RemoteWrite.encodeRequest(RemoteWrite.Request(
+        series("hist-new", t0 + 700000L),
+        Seq(RemoteWrite.Exemplar("cpu_seconds_total",
+          Map("host" -> "hist-new", "mode" -> "user"), Map("trace_id" -> "t1"), 2.0,
+          t0 + 700000L)),
+        Nil,
+        Seq(RemoteWrite.HistogramSample("req_seconds", Map("host" -> "hist-new"),
+          t0 + 700000L, 3.0, 1.5, 0, 0.0, 0.0, Seq(0 -> 1.0, 1 -> 2.0), Nil))))
+      assert(write("/api/v1/write", org.xerial.snappy.Snappy.compress(extras)) == 0)
+
+      // every sample landed: 30 seed + 3×30 batches + 3 single-sample
+      // series, and both OTLP points
+      def count(metric: String) = engine.query(MetricQuery(metric,
+        agg = MetricAgg.Count)).collect()(0).getDouble(0)
+      assert(count("cpu_seconds_total") == 30 + 90 + 3)
+      assert(count("otlp_gauge") == 2)
+      assert(engine.histograms.scan().count() == 1)
+      assert(engine.exemplars.scan().count() == 1)
+
+      // a query after a write that adds a series — with a label key the
+      // metric never had — under an existing metric runs the same jobs as
+      // before it: no dictionary reload, and the new key is served
+      def query(matcher: String, at: Long) = {
+        val q = java.net.URLEncoder.encode(
+          s"sum without (mode) (cpu_seconds_total{$matcher})", "UTF-8")
+        val r = get(port, s"/api/v1/query?query=$q&time=${at / 1000}")
+        assert(r.statusCode() == 200, r.body())
+        r.body()
+      }
+      query("""host="v1-new"""", t0 + 300000L)
+      var body = ""
+      val warm = jobsOf { body = query("""host="v1-new"""", t0 + 300000L) }
+      assert(body.contains(""""host":"v1-new""""), body)
+      assert(v1(Seq(Sample("cpu_seconds_total",
+        Map("host" -> "probe-new", "mode" -> "user", "probe" -> "p1"),
+        t0 + 800000L, 2.0))) == 0)
+      val after = jobsOf { body = query("""probe="p1"""", t0 + 800000L) }
+      assert(body.contains(""""host":"probe-new"""") &&
+        body.contains(""""probe":"p1""""), body)
+      assert(after == warm, s"query after a new series ran $after jobs, warm $warm")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      fe.stop()
+    }
+  }
 }

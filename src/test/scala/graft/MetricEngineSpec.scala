@@ -676,4 +676,49 @@ class MetricEngineSpec extends AnyFunSuite {
         s"buckets leaked outside the requested range: $buckets")
     } finally spark.conf.unset("graft.promql.rangeWindows")
   }
+
+  test("series registration is idempotent: re-delivery adds no meta rows, " +
+      "a half-known batch registers only its new series, and a reopened " +
+      "engine sees every series and registers nothing twice") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-metric-reg").toString
+    def batch(hosts: Seq[String], at: Long) = hosts.flatMap(h => (0 until 3).map(i =>
+      Sample("reg_total", Map("host" -> h, "mode" -> "user"), at + i * 1000L, i)))
+    // stored rows, not merged ones: a duplicate registration would show
+    def stored(e: MetricEngine) = Seq(e.metrics, e.series, e.tags, e.index)
+      .map(_.manifest.allSsts().map(_.numRows).sum)
+    val e = new MetricEngine(spark, root)
+    val first = batch(Seq("a", "b", "c", "d"), day)
+    e.write(first.toDF())
+    val registered = stored(e)
+    // metrics 1, series 4, tags 4 hosts + mode=user, index 4 × 2 labels
+    assert(registered == Seq(1, 4, 5, 8))
+    // re-delivery, driver-local and distributed: no meta rows
+    e.write(first.toDF())
+    e.write(first.toDF().repartition(2))
+    assert(stored(e) == registered)
+    // half known, half new: only e and f register
+    e.write(batch(Seq("c", "d", "e", "f"), day + 60000L).toDF())
+    val (_, series, tags, index) = stored(e) match {
+      case Seq(m, s, t, i) => (m, s, t, i)
+    }
+    assert(series == 4 + 2 && index == 8 + 2 * 2)
+    assert(tags <= 5 + 3 && e.tags.scan().count() == 4 + 2 + 1)
+    assert(e.metrics.scan().count() == 1 && e.series.scan().count() == 6)
+
+    // a fresh engine on the same root sees every series ...
+    val reopened = new MetricEngine(spark, root)
+    val hosts = reopened.query(MetricQuery("reg_total", agg = MetricAgg.Count,
+      groupByTag = Some("host"))).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(hosts == Map("a" -> 3.0, "b" -> 3.0, "c" -> 6.0, "d" -> 6.0,
+      "e" -> 3.0, "f" -> 3.0))
+    // ... and its first write registers nothing twice, only what is new
+    val before = stored(reopened)
+    reopened.write(batch(Seq("a", "b", "c", "d", "e", "f"), day + 120000L).toDF())
+    assert(stored(reopened) == before)
+    reopened.write(batch(Seq("f", "g"), day + 180000L).toDF())
+    assert(stored(reopened)(1) == before(1) + 1 && stored(reopened)(3) == before(3) + 2)
+    assert(reopened.series.scan().count() == 7)
+    assert(reopened.data.scan().count() == 4 * 3 + 4 * 3 + 6 * 3 + 2 * 3)
+  }
 }

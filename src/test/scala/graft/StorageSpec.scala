@@ -1211,4 +1211,109 @@ class StorageSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("driver encoder == Spark encoder: a driver-local batch and the same " +
+      "rows as a distributed frame write identical SSTs") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import scala.jdk.CollectionConverters._
+    val kvSchema = StructType(Seq(
+      StructField("k", StringType), StructField("ts", LongType),
+      StructField("v", DoubleType), StructField("tag", StringType),
+      StructField("attrs", MapType(StringType, StringType))))
+    val opts = WriteOptions(compression = "zstd", enableDictionary = false,
+      dictionaryColumns = Map("tag" -> true), bloomFilterColumns = Seq("k"))
+    def store() = new TimeMergeStorage(spark, tmpRoot(),
+      StorageSchema(kvSchema, numPrimaryKeys = 2), segmentMs = 3600 * 1000L,
+      timestampColumn = Some("ts"), writeOptions = opts)
+    // unsorted input, a null pk and null values: nulls sort first
+    val rows = (0 until 500).map(i => Row(
+      if (i == 17) null else s"k${(i * 7) % 50}", 1000L + (i * 13) % 997,
+      i * 0.5, if (i % 5 == 0) null else s"t${i % 4}",
+      if (i % 3 == 0) Map("a" -> i.toString) else null))
+    val local = spark.createDataFrame(rows.asJava, kvSchema)
+    val distributed = local.repartition(2)
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(!distributed.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val range = TimeRange(0, 3600 * 1000L)
+    val (sd, sl) = (store(), store())
+    val viaSpark = sd.write(distributed, range)
+    val viaDriver = sl.write(local, range)
+
+    def footer(path: String) = {
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(path), new Configuration()))
+      try r.getFooter finally r.close()
+    }
+    val (fs, fl) = (footer(viaSpark.path), footer(viaDriver.path))
+    // file schema and Spark's row-metadata key (the schema Spark reads back)
+    assert(fl.getFileMetaData.getSchema == fs.getFileMetaData.getSchema)
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    assert(fl.getFileMetaData.getKeyValueMetaData.get(rowMeta) ==
+      fs.getFileMetaData.getKeyValueMetaData.get(rowMeta))
+    assert(fl.getFileMetaData.getKeyValueMetaData.get(rowMeta) != null)
+    // per-column chunk properties reflect the same WriteOptions
+    def chunks(f: org.apache.parquet.hadoop.metadata.ParquetMetadata) =
+      f.getBlocks.asScala.flatMap(_.getColumns.asScala).map(c =>
+        (c.getPath.toDotString, c.getCodec.name(),
+          c.getEncodings.asScala.exists(_.usesDictionary),
+          c.getBloomFilterOffset >= 0)).toSeq
+    assert(chunks(fl) == chunks(fs))
+    val byName = chunks(fl).map(c => c._1 -> c).toMap
+    assert(byName("k") == (("k", "ZSTD", false, true)))
+    assert(byName("tag")._3 && !byName("ts")._3 && !byName("ts")._4)
+    // the sorting_columns stamp, read from the trailing footer
+    def sorting(path: String) = {
+      val p = new Path(path)
+      val fsys = p.getFileSystem(new Configuration())
+      val len = fsys.getFileStatus(p).getLen
+      val in = fsys.open(p)
+      try {
+        val tail = new Array[Byte](8)
+        in.seek(len - 8); in.readFully(tail)
+        val fLen = java.nio.ByteBuffer.wrap(tail, 0, 4)
+          .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        in.seek(len - 8 - fLen)
+        org.apache.parquet.format.Util.readFileMetaData(in).getRow_groups.asScala
+          .map(_.getSorting_columns.asScala.map(c =>
+            (c.getColumn_idx, c.isDescending, c.isNulls_first)).toSeq).toSeq
+      } finally in.close()
+    }
+    assert(sorting(viaDriver.path) == sorting(viaSpark.path))
+    assert(sorting(viaDriver.path).head == Seq((0, false, true), (1, false, true)))
+    // manifest entries: row counts and zone-map stats
+    assert(viaDriver.numRows == 500 && viaSpark.numRows == 500)
+    assert(viaDriver.stats == viaSpark.stats && viaDriver.stats.keySet == Set("k", "ts"))
+    // the raw files hold the same rows in the same (pk) order
+    val raw = Seq(viaSpark, viaDriver).map(f =>
+      spark.read.parquet(f.path).drop("__seq__").collect().toSeq)
+    assert(raw(1) == raw(0) && raw(0).head.isNullAt(0))
+    // and the merged scans agree
+    val merged = Seq(sd, sl).map(_.scanSorted().collect().toSeq)
+    assert(merged(1) == merged(0) && merged(0).size == 500)
+  }
+
+  test("driver encoder keeps the write guards: cross-segment writes and " +
+      "schema mismatches are rejected before anything is written") {
+    import scala.jdk.CollectionConverters._
+    val root = tmpRoot()
+    val s = mkStorage(root)
+    val local = spark.createDataFrame(Seq(Row(1, 2, 3L)).asJava, abSchema)
+    val crossed = intercept[IllegalArgumentException](
+      s.write(local, TimeRange(1, 7200001L)))
+    assert(crossed.getMessage.contains("crosses segment boundary"))
+    val renamed = spark.createDataFrame(Seq(Row(1, 2, 3L)).asJava,
+      StructType(abSchema.fields.updated(2, StructField("val", LongType))))
+    assert(intercept[IllegalArgumentException](
+      s.write(renamed, TimeRange(0, 10))).getMessage.contains("do not match"))
+    val retyped = spark.createDataFrame(Seq(Row(1, 2, "x")).asJava,
+      StructType(abSchema.fields.updated(2, StructField("value", StringType))))
+    assert(intercept[IllegalArgumentException](
+      s.write(retyped, TimeRange(0, 10))).getMessage.contains("declares bigint"))
+    assert(s.manifest.allSsts().isEmpty)
+    assert(!new java.io.File(s"$root/data").list().exists(_.startsWith("tmp-")))
+  }
 }
