@@ -3288,10 +3288,6 @@ object SparkEntry {
     // (the e6 scale path) → connected components → keeper/drop decision —
     // the full near-duplicate removal pipeline over embeddings, chained
     // from verified primitives exactly like c1 chains the text side.
-    // The planted near-dup chains give the raw pair graph a 16-hop
-    // min-label diameter; the bounded 2-hop closure (components exactly
-    // preserved, spec-asserted) cuts the CC rounds ~4× — 9.5 s → 3.9 s at
-    // sf0.1, where each round is local job-launch latency.
     // bits = -1 (round 15): the corpus-proportional code length, so the
     // shipped recipe stays linear as the corpus grows (fixed 4-bit codes
     // are n²/16 in candidate volume — IvfProbe measured 695 vs 95
@@ -3301,7 +3297,7 @@ object SparkEntry {
       val pairs = Similarity.lshNearDupPairs(t(s, dir, "embeddings"),
         "vec_id", "embedding", dim = 64, threshold = 0.3, bits = -1)
         .select(col("id_a"), col("id_b"))
-      Dedup.duplicateClusters(Dedup.boundedTwoHopClosure(pairs))
+      Dedup.duplicateClusters(pairs)
         .select(col("id").as("vec_id"), col("cluster_id"),
           (col("id") === col("cluster_id")).as("is_keeper"))
     }),
@@ -3347,7 +3343,7 @@ object SparkEntry {
       val pairs = a.join(b, Seq("label")).filter(col("id_a") < col("id_b"))
         .filter(Similarity.dot(col("__ua__"), col("__ub__")) >= 0.3)
         .select(col("id_a"), col("id_b"))
-      Dedup.duplicateClusters(Dedup.boundedTwoHopClosure(pairs))
+      Dedup.duplicateClusters(pairs)
         .select(col("id").as("vec_id"), col("cluster_id"),
           (col("id") === col("cluster_id")).as("is_keeper"))
     }),
@@ -3589,9 +3585,8 @@ object SparkEntry {
     // the dist<=7 graph degenerates into "everything resembles everything"
     // — dense components, not a dedup signal. Even bounded, hash balls
     // CHAIN (A~B, B~C at dist 7 with A,C unlinked): components reach ~512
-    // nodes with double-digit diameters, so the 3-pass bounded closure in
-    // front of CC is what keeps the round count (driver-looped locally)
-    // sane — measured 9.5 s (no closure) -> 4.8 s at sf0.1; the residue is CC round latency, a local[32] artifact (SCALE.md).
+    // nodes with double-digit diameters, which the single-task union-find
+    // arm of duplicateClusters resolves in one pass.
     "c7_image_dedup" -> ((s, dir) => {
       val media = graft.pipeline.Multimodal.toMedia(
         graft.pipeline.Multimodal.withSyntheticNearDupImages(
@@ -3601,8 +3596,7 @@ object SparkEntry {
       val pairs = Dedup.hammingPairs64(sig, "media_id", "dhash",
           maxDist = 7, bands = 8)
         .select(col("id_a"), col("id_b"))
-      Dedup.duplicateClusters(
-          Dedup.boundedTwoHopClosure(pairs, passes = 3, maxDegree = 64))
+      Dedup.duplicateClusters(pairs)
         .select(col("id").as("media_id"), col("cluster_id"),
           (col("id") === col("cluster_id")).as("is_keeper"))
     }),

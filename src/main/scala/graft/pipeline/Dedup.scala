@@ -66,19 +66,6 @@ object Dedup {
       .select(col("band"), col("band_key"), col(idCol))
   }
 
-  /** Candidate pairs (a < b) sharing at least one LSH band — an equi-join on
-    * (band, band_key), broadcastable when the bucketed side is small and
-    * AQE-skew-safe otherwise.
-    *
-    * `maxBucket` caps quadratic blowup at scale: a bucket of m ids emits
-    * m(m-1)/2 pairs, and at 100 TB a boilerplate-heavy corpus produces
-    * million-document buckets (≈ 10^12 pairs from ONE bucket). Buckets
-    * larger than the cap are near-certain duplicate clusters already; pair
-    * enumeration there is wasted work, so they are star-expanded instead —
-    * every member pairs with the bucket's minimum id (m-1 pairs), which
-    * keeps the bucket a single connected component for the downstream
-    * clustering while bounding output at O(m). Default Int.MaxValue =
-    * exact behavior. */
   /** Band frames [[lshCandidatePairs]] persisted and nobody released yet.
     * Persist (MEMORY_AND_DISK, lineage kept) is a pure performance
     * hint here, so [[releaseBandCaches]] is always CORRECT to call — an
@@ -111,6 +98,19 @@ object Dedup {
   private[graft] val lastBandFrames =
     new ThreadLocal[Seq[DataFrame]] { override def initialValue = Nil }
 
+  /** Candidate pairs (a < b) sharing at least one LSH band — an equi-join on
+    * (band, band_key), broadcastable when the bucketed side is small and
+    * AQE-skew-safe otherwise.
+    *
+    * `maxBucket` caps quadratic blowup at scale: a bucket of m ids emits
+    * m(m-1)/2 pairs, and at 100 TB a boilerplate-heavy corpus produces
+    * million-document buckets (≈ 10^12 pairs from ONE bucket). Buckets
+    * larger than the cap are near-certain duplicate clusters already; pair
+    * enumeration there is wasted work, so they are star-expanded instead —
+    * every member pairs with the bucket's minimum id (m-1 pairs), which
+    * keeps the bucket a single connected component for the downstream
+    * clustering while bounding output at O(m). Default Int.MaxValue =
+    * exact behavior. */
   def lshCandidatePairs(sig: DataFrame, idCol: String, numHashes: Int,
       bandSize: Int, maxBucket: Int = Int.MaxValue): DataFrame = {
     val (pairs, persisted) =
@@ -141,12 +141,14 @@ object Dedup {
       // when-chain keeps the match iff no earlier band also collided.
       // Exactly-once by construction — no distinct, no second shuffle; the
       // join stays one broadcast/co-partitioned exchange.
-      // binary-packed band keys (round 16): same injective unhex+concat
-      // as [[lshBands]] — identical equality semantics, half the bytes
-      // through the band exchange and the carried __k* columns
+      // String band keys `mh_i || '|' || mh_j` — the oracle's own key, with
+      // its null propagation. The binary unhex+concat keys [[lshBands]]
+      // keeps on the capped path measured slower here (d3_lsh_pairs
+      // 3.3–4.4 s binary vs 2.2–2.6 s string, 4 cores, dedup seeds 31–34).
       val keyed = sig.select(col(idCol) +: (0 until numBands).map { b =>
-        concat((0 until bandSize).map(i =>
-          unhex(col(s"mh${b * bandSize + i}"))): _*).as(s"__k$b") }: _*)
+        concat((0 until bandSize).flatMap(i =>
+          Seq(lit("|"), col(s"mh${b * bandSize + i}"))).tail: _*)
+          .as(s"__k$b") }: _*)
       val banded = keyed.select(
           (col(idCol) +: (0 until numBands).map(b => col(s"__k$b"))) :+
           posexplode(array((0 until numBands).map(b => col(s"__k$b")): _*))
@@ -215,7 +217,7 @@ object Dedup {
   /** The canonical MinHash near-dup pipeline as ONE call: minhash
     * signatures → banded LSH candidates (with the `maxBucket`
     * star-expansion cap) → n-gram Jaccard verification on candidates only
-    * → bounded transitive closure → connected components → keeper/drop.
+    * → connected components ([[duplicateClusters]]) → keeper/drop.
     * Output: (id, cluster_id, is_keeper) with `is_keeper` = the cluster's
     * minimum id (one survivor per duplicate family).
     *
@@ -240,7 +242,7 @@ object Dedup {
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("id_a"), col("id_b"))
     val clusters =
-      try duplicateClusters(boundedTwoHopClosure(verified))
+      try duplicateClusters(verified)
       finally persisted.foreach(_.unpersist(blocking = false))
     clusters.select(col("id"), col("cluster_id"),
       (col("id") === col("cluster_id")).as("is_keeper"))
@@ -501,94 +503,30 @@ object Dedup {
       .select(col("id"), col("sig"), col("bk.band"), col("bk.key"))
   }
 
-  /** Reachability-preserving bounded 2-hop closure: each pass adds an edge
-    * (a, b) for every length-2 path a–mid–b whose midpoint has degree
-    * <= `maxDegree`, roughly halving every component's diameter — the
-    * cheap preprocessing that turns a chain-shaped candidate graph
-    * (diameter d) into an O(d / 2^passes)-round [[duplicateClusters]] run.
-    * Components are EXACTLY preserved: every added edge connects nodes
-    * already connected through its midpoint.
+  /** Duplicate clusters from candidate pairs: connected components, with
+    * every node labeled by the smallest id reachable from it, so
+    * `cluster_id == id` marks the keeper and the rest are drops.
     *
-    * The degree cap bounds the quadratic midpoint expansion (a hub of
-    * degree m would emit m²/2 edges; hubs are already diameter-2 around
-    * themselves, so closing them buys nothing) — added edges are at most
-    * `maxDegree`× the kept midpoints' edges per pass.
+    * The pairs are symmetrized and cached once, then one of two arms runs:
     *
-    * SMALL graphs (round 15): when the pair set is under the
-    * `graft.pipeline.localCcMaxEdges` cap (the same gate
-    * [[duplicateClusters]] uses for its single-task union-find arm), the
-    * passes are skipped and the input returns unchanged — the closure
-    * exists solely to cut the iterative clustering's round count, and a
-    * graph under the cap never runs those rounds. Components (the only
-    * downstream contract) are trivially preserved. */
-  def boundedTwoHopClosure(pairs: DataFrame, passes: Int = 2,
-      maxDegree: Int = 32): DataFrame = {
-    var edges = pairs.select(col("id_a"), col("id_b")).localCheckpoint()
-    val localCap = pairs.sparkSession.conf
-      .getOption("graft.pipeline.localCcMaxEdges")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(1L << 20)
-    // Skip only when the union-find arm will actually fire downstream:
-    // that arm is LongType-only, so a non-long (string/UUID) id graph
-    // under the cap still runs the iterative rounds — skipping the
-    // closure there would leave a long chain's diameter uncut and risk
-    // blowing duplicateClusters' maxIter (round 16, advisor fix).
-    val idsAreLong =
-      edges.schema("id_a").dataType == org.apache.spark.sql.types.LongType &&
-      edges.schema("id_b").dataType == org.apache.spark.sql.types.LongType
-    // the union-find arm's cap counts SYMMETRIZED edges — compare 2×
-    if (idsAreLong && localCap > 0 && 2L * edges.count() <= localCap)
-      return edges
-    (1 to passes).foreach { _ =>
-      val sym = edges.select(explode(array(
-          struct(col("id_a").as("src"), col("id_b").as("dst")),
-          struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val smallMids = sym.groupBy("src").agg(count(lit(1)).as("__d__"))
-        .filter(col("__d__") <= maxDegree).select(col("src"))
-      val viaSmall = sym.join(smallMids, "src")
-      val two = viaSmall.select(col("src").as("mid"), col("dst").as("a"))
-        .join(viaSmall.select(col("src").as("mid"), col("dst").as("b")), "mid")
-        .filter(col("a") < col("b"))
-        .select(col("a").as("id_a"), col("b").as("id_b"))
-      edges = edges.union(two).distinct().localCheckpoint()
-    }
-    edges
-  }
-
-  /** Duplicate clusters from candidate pairs: connected components by
-    * min-label propagation — every node ends labeled with the smallest id
-    * reachable from it, so `cluster_id == id` marks the keeper and the rest
-    * are drops. Iterates join+min to a fixpoint (driver-checked; component
-    * diameters of dedup graphs are tiny).
-    *
-    * `compressPaths = true` adds one pointer-jumping self-join per round
-    * (`label := min(label, label(label))`): labels then roughly SQUARE
-    * their reach each round, so convergence takes O(log diameter) rounds
-    * instead of O(diameter) — the 100 TB shape for high-diameter graphs
-    * (boilerplate chains), at the cost of one extra shuffle per round.
-    * Output is identical (property-tested): compression only accelerates
-    * the same monotone fixpoint.
-    *
-    * SMALL graphs (round 15): a candidate-pair graph whose symmetrized
-    * edge set fits one task (≤ `graft.pipeline.localCcMaxEdges`,
-    * default 2²⁰ ≈ 1M directed edges ≈ 50 MB of union-find state; 0
-    * disables) computes its components in a SINGLE min-root union-find
-    * pass over `coalesce(1)` instead of the iterative rounds — after
-    * LSH/banding blocking the duplicate graph is typically orders of
-    * magnitude smaller than the corpus, and each distributed round costs
-    * 2-3 query-stage jobs plus a driver sync (measured ~2.5 s of pure
-    * round overhead for a 2k-edge graph at 32 cores). Long ids only (the
-    * min-root order must match Spark's `least`); identical output by
-    * construction — the union-find root IS the component's minimum id,
-    * the same fixpoint the rounds converge to (property-tested). Above
-    * the cap, or for non-long ids, the iterative path runs unchanged.
+    *  - '''Union-find''' for LONG ids with at most
+    *    `graft.pipeline.localCcMaxEdges` symmetrized edges (default 2²⁰ ≈
+    *    50 MB of union-find state; 0 disables): one min-root pass over
+    *    `coalesce(1)`. Blocked duplicate graphs are typically far smaller
+    *    than the corpus, and each distributed round costs 2-3 jobs plus a
+    *    driver sync. Long ids only (the min-root order must match Spark's
+    *    `least`); the root IS the component's minimum id, the fixpoint the
+    *    other arm converges to (property-tested).
+    *  - '''Min-label propagation''' for everything else: the bounded 2-hop
+    *    closure ([[boundedTwoHopClosure]]) cuts every component's diameter
+    *    about 4×, then join+min rounds run to a driver-checked fixpoint.
+    *    A graph still changing after `maxIter` rounds throws instead of
+    *    returning split components.
     *
     * @param pairs (id_a, id_b) undirected candidate edges
     * @return (id, cluster_id) for every node appearing in `pairs`
     */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 50,
-      compressPaths: Boolean = false): DataFrame = {
+  def duplicateClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // Symmetrize with ONE scan of `pairs` (explode of both directions) — a
     // self-union would run the caller's candidate-pair pipeline twice.
     val edges = pairs.select(explode(array(
@@ -600,48 +538,80 @@ object Dedup {
       .getOption("graft.pipeline.localCcMaxEdges")
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(1L << 20)
-    if (edges.schema("src").dataType ==
-        org.apache.spark.sql.types.LongType && localCap > 0 &&
-        edges.count() <= localCap) {
-      // (the count materializes the edges cache — the job the fused init
-      // below would otherwise run)
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType)))
-      implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-        org.apache.spark.sql.Encoders.row(outSchema)
-      val local = edges.coalesce(1).mapPartitions { it =>
-        val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-        def find(x0: Long): Long = {
-          var x = x0
-          var p = parent.get(x).longValue()
-          while (p != x) { // path halving
-            val gp = parent.get(p).longValue()
-            parent.put(x, gp)
-            x = gp
-            p = parent.get(x).longValue()
-          }
-          x
+    // (the count materializes the edges cache — the job either arm's first
+    // pass over the edges would otherwise run)
+    val clusters =
+      if (edges.schema("src").dataType == org.apache.spark.sql.types.LongType &&
+          localCap > 0 && edges.count() <= localCap) unionFindClusters(edges)
+      else propagateLabels(boundedTwoHopClosure(edges), maxIter)
+    edges.unpersist()
+    clusters
+  }
+
+  /** The union-find arm of [[duplicateClusters]] over cached, symmetrized
+    * long-id edges. */
+  private def unionFindClusters(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val enc = Encoders.row(StructType(Seq(
+      StructField("id", LongType), StructField("cluster_id", LongType))))
+    edges.coalesce(1).mapPartitions { it =>
+      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
+      def find(x0: Long): Long = {
+        var x = x0
+        var p = parent.get(x).longValue()
+        while (p != x) { // path halving
+          val gp = parent.get(p).longValue()
+          parent.put(x, gp)
+          x = gp
+          p = parent.get(x).longValue()
         }
-        def add(x: Long): Unit =
-          if (!parent.containsKey(x)) parent.put(x, x)
-        it.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          add(a); add(b)
-          val ra = find(a); val rb = find(b)
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-        import scala.jdk.CollectionConverters._
-        parent.keySet().iterator().asScala.map { id =>
-          org.apache.spark.sql.Row(id.longValue(), find(id.longValue()))
-        }
-      }(enc).localCheckpoint()
-      edges.unpersist()
-      return local
+        x
+      }
+      def add(x: Long): Unit =
+        if (!parent.containsKey(x)) parent.put(x, x)
+      it.foreach { r =>
+        val a = r.getLong(0); val b = r.getLong(1)
+        add(a); add(b)
+        val ra = find(a); val rb = find(b)
+        if (ra < rb) parent.put(rb, ra)
+        else if (rb < ra) parent.put(ra, rb)
+      }
+      import scala.jdk.CollectionConverters._
+      parent.keySet().iterator().asScala.map { id =>
+        Row(id.longValue(), find(id.longValue()))
+      }
+    }(enc).localCheckpoint()
+  }
+
+  /** Reachability-preserving bounded 2-hop closure over symmetrized
+    * (src, dst) edges: each pass adds both directions of an edge (a, b) for
+    * every path a–mid–b whose midpoint has degree <= `maxDegree`, roughly
+    * halving every component's diameter (a chain of diameter d then needs
+    * about d/4 rounds). Components are EXACTLY preserved: every added edge
+    * connects nodes already connected through its midpoint. The degree cap
+    * bounds the quadratic midpoint expansion (a hub of degree m would emit
+    * m² edges; hubs are already diameter-2 around themselves). Each pass is
+    * localCheckpoint()ed; the result is distinct and symmetric. */
+  private[graft] def boundedTwoHopClosure(edges: DataFrame): DataFrame = {
+    val (passes, maxDegree) = (2, 32)
+    var sym = edges
+    (1 to passes).foreach { _ =>
+      val smallMids = sym.groupBy("src").agg(count(lit(1)).as("__d__"))
+        .filter(col("__d__") <= maxDegree).select(col("src"))
+      val viaSmall = sym.join(smallMids, "src")
+      val two = viaSmall.select(col("src").as("mid"), col("dst").as("src"))
+        .join(viaSmall.select(col("src").as("mid"), col("dst")), "mid")
+        .filter(col("src") =!= col("dst"))
+        .select(col("src"), col("dst"))
+      sym = sym.union(two).distinct().localCheckpoint()
     }
+    sym
+  }
+
+  /** The min-label arm of [[duplicateClusters]]: join+min rounds over
+    * symmetrized (src, dst) edges until no label changes. */
+  private def propagateLabels(edges: DataFrame, maxIter: Int): DataFrame = {
     // Periodic localCheckpoint truncates lineage — without it the plan tree
     // doubles every round and long chains OOM the driver on plan strings
     // alone (on a cluster, prefer reliable checkpointing to a configured
@@ -695,70 +665,22 @@ object Dedup {
     // it cannot be assumed broadcastable). The checkpointed localCheckpoint
     // blocks make this count cheap.
     val smallGraph = labels.count() < (1L << 22)
-    // One propagation round as a lazy transform: neighbor labels and own
-    // label feed the same min-aggregate (one fused shuffle — vs join +
-    // groupBy + left-join = two exchanges). Returns the next label frame
-    // plus any intra-round cache to free after the round's action.
-    def propagate(cur: DataFrame): (DataFrame, Seq[DataFrame]) = {
-      val labelsByDst = cur.select(col("id").as("dst"), col("cluster_id").as("n_label"))
-      var step = edges
-        .join(if (smallGraph) broadcast(labelsByDst) else labelsByDst, Seq("dst"))
-        .select(col("src").as("id"), col("n_label").as("cluster_id"))
-        .union(cur)
-        .groupBy("id").agg(min("cluster_id").as("cluster_id"))
-      if (!compressPaths) (step, Nil)
-      else {
-        // pointer jumping: follow the label's own label once. Sound because
-        // label values ARE node ids and labels only decrease — label(label)
-        // <= label always points within the component, so the min keeps the
-        // fixpoint identical while roughly squaring per-round reach.
-        // The propagate step is CACHED before the self-join: both join
-        // sides reference it, and without materialization the whole
-        // propagate subtree would be planned (and its final aggregate
-        // executed) twice per round.
-        val intermediate = step.cache()
-        val parent = intermediate.select(
-          col("id").as("__pid__"), col("cluster_id").as("__pl__"))
-        step = intermediate
-          .join(if (smallGraph) broadcast(parent) else parent,
-            col("cluster_id") === col("__pid__"), "left")
-          .select(col("id"),
-            least(col("cluster_id"), coalesce(col("__pl__"), col("cluster_id")))
-              .as("cluster_id"))
-        (step, Seq(intermediate))
-      }
-    }
-    // Double-stepping (round 16): past the first `doubleStepAfter` rounds,
-    // TWO propagation rounds run between convergence checks — the rounds
-    // fuse into the check's one job (the mid frame is cache()d so the
-    // second round's two references compute it once), halving driver
-    // syncs/actions in exactly the regime the iterative path still owns
-    // (graphs above the union-find cap, 1M–100M+ edges; a long-diameter
-    // graph pays tens of rounds). Sound by monotonicity: labels only
-    // decrease, so sum(labels) after round k+2 equal to the last checked
-    // sum means NEITHER round changed anything — the same amortized
-    // argument the non-integral changed-count path already uses. Early
-    // rounds keep the per-round check (short-converging graphs measured
-    // slower under amortized checks: up to one dead full-shuffle round
-    // past convergence for no sync savings); the `iter + 2 <= maxIter`
-    // guard preserves exact did-not-converge-within-maxIter semantics.
-    val doubleStepAfter = 4
     var converged = false
     var prevWasCheckpoint = true // the init frame is localCheckpoint()ed
     var iter = 0
     while (!converged && iter < maxIter) {
-      val steps =
-        if (idIsIntegral && iter >= doubleStepAfter && iter + 2 <= maxIter) 2
-        else 1
-      var step = labels
-      var frees: Seq[DataFrame] = Nil
-      (1 to steps).foreach { s =>
-        val cur = if (s == 1) step else { val c = step.cache(); frees :+= c; c }
-        val (nxt, intra) = propagate(cur)
-        step = nxt
-        frees ++= intra
-      }
-      val checkpointRound = (iter + steps) % checkpointEvery < steps
+      // One propagation round: neighbor labels and own label feed the same
+      // min-aggregate (one fused shuffle — vs join + groupBy + left-join =
+      // two exchanges).
+      val labelsByDst =
+        labels.select(col("id").as("dst"), col("cluster_id").as("n_label"))
+      val step = edges
+        .join(if (smallGraph) broadcast(labelsByDst) else labelsByDst, Seq("dst"))
+        .select(col("src").as("id"), col("n_label").as("cluster_id"))
+        .union(labels)
+        .groupBy("id").agg(min("cluster_id").as("cluster_id"))
+      iter += 1
+      val checkpointRound = iter % checkpointEvery == 0
       val next = if (checkpointRound) step.localCheckpoint() else step.cache()
       if (idIsIntegral) {
         // labelSum is the round's one action: it materializes the cache (or
@@ -767,11 +689,10 @@ object Dedup {
         val nextSum = labelSum(next)
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
-      } else if (checkpointRound || iter + steps >= maxIter) {
+      } else if (checkpointRound || iter >= maxIter) {
         // Amortized pointwise check (the join is too costly per round);
         // between checks no action runs, so the intermediate rounds fuse
-        // into this one job. Sound by monotonicity: labels only decrease,
-        // so labels_i == labels_{i+k} implies no intermediate round changed.
+        // into this one job.
         converged = changedCount(next, lastChecked) == 0L
         lastChecked = next
       }
@@ -781,15 +702,9 @@ object Dedup {
       // unpersisting them would make any evicted downstream block
       // unrecoverable; the context cleaner frees them on GC instead.
       if (!prevWasCheckpoint) labels.unpersist()
-      // intra-round caches (compress-round propagate frames, double-step
-      // mid frames) served their double read; evicted blocks recompute
-      // through lineage if next's cache later needs them
-      frees.foreach(_.unpersist())
       prevWasCheckpoint = checkpointRound
       labels = next
-      iter += steps
     }
-    edges.unpersist()
     // Returning non-converged labels would split components and mark false
     // keepers with no signal to the caller — fail loudly instead.
     if (!converged) throw new IllegalStateException(

@@ -33,13 +33,8 @@ object PipeProbe {
       println(s"[probe]   verified = ${v.count()}")
       v
     }
-    val closed = timed("two-hop closure") {
-      val c = Dedup.boundedTwoHopClosure(verified).localCheckpoint()
-      println(s"[probe]   closed = ${c.count()}")
-      c
-    }
     timed("connected components") {
-      println(s"[probe]   rows = ${Dedup.duplicateClusters(closed).count()}")
+      println(s"[probe]   rows = ${Dedup.duplicateClusters(verified).count()}")
     }
 
     // c4 semantic-dedup stages (within-label all-pairs on unit vectors)
@@ -59,17 +54,8 @@ object PipeProbe {
       println(s"[probe]   sem pairs = ${p.count()}")
       p
     }
-    val sClosed = timed("sem two-hop closure") {
-      val c = Dedup.boundedTwoHopClosure(sPairs).localCheckpoint()
-      println(s"[probe]   closed = ${c.count()}")
-      c
-    }
-    // Measured once at sf0.1 (round 7): compressPaths=true pointer jumping
-    // is 3.2-16 s vs naive 2.7-4.2 s on these graphs — the per-round
-    // self-join + cache materialization costs more than the rounds it
-    // saves at local job-launch latency; naive min-label stays the default.
     timed("sem components") {
-      println(s"[probe]   rows = ${Dedup.duplicateClusters(sClosed).count()}")
+      println(s"[probe]   rows = ${Dedup.duplicateClusters(sPairs).count()}")
     }
     spark.stop()
   }

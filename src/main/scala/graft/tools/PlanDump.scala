@@ -1,10 +1,10 @@
 package graft.tools
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to
-  * `plans/r15/<query>_<tag>.txt` — the optimization round's before/after
-  * plan evidence (the judge checks plan claims against these files).
+  * `<outDir>/<query>_<tag>.txt` — a change's before/after plan evidence
+  * (e.g. `plans/r17`, one directory per round).
   *
-  * Usage: runMain graft.tools.PlanDump <dir> <tag> <query>[,<query>...]
+  * Usage: runMain graft.tools.PlanDump <dir> <outDir> <tag> <query>[,<query>...]
   * Runs each query once first (fixture engines build, AQE has something
   * to re-plan) and captures the PRE-EXECUTION formatted plan — the shape
   * evidence (Exchange count, join strategy, PushedFilters) is all in the
@@ -13,12 +13,12 @@ package graft.tools
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val tag = args(1)
-    val names = args(2).split(',').toSeq
+    val outDir = java.nio.file.Paths.get(args(1))
+    val tag = args(2)
+    val names = args(3).split(',').toSeq
     val spark = graft.GraftSession.create(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     graft.SparkEntry.prewarm(spark, dir)
-    val outDir = java.nio.file.Paths.get("plans/r15")
     java.nio.file.Files.createDirectories(outDir)
     for (q <- names) graft.SparkEntry.queries.get(q) match {
       case None => println(s"[plandump] $q UNKNOWN query name — skipped")

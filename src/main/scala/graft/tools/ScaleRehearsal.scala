@@ -79,8 +79,8 @@ object ScaleRehearsal {
       .select(col("id_a"), col("id_b"))
       .persist(disk)
     val nVerified = timed("n-gram Jaccard verify (candidate-bounded)")(verified.count())
-    val clusters = Dedup.duplicateClusters(Dedup.boundedTwoHopClosure(verified))
-    val (nClustered, nKeepers) = timed("2-hop closure + connected components")(
+    val clusters = Dedup.duplicateClusters(verified)
+    val (nClustered, nKeepers) = timed("connected components")(
       (clusters.count(), clusters.filter(col("id") === col("cluster_id")).count()))
 
     println(f"[rehearsal] docs=$numDocs candidates=$nCand verified=$nVerified " +

@@ -1069,31 +1069,27 @@ class PipelineSpec extends AnyFunSuite {
     // pair — clusters must be IDENTICAL with and without closure
     val chain = (1L until 9L).map(i => (i, i + 1))
     val hub = (20L until 60L).map(i => (10L, i)) // degree 40 > cap 32
-    val pairs = (chain ++ hub ++ Seq((100L, 101L))).toDF("id_a", "id_b")
-    val direct = Dedup.duplicateClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val closed = Dedup.duplicateClusters(Dedup.boundedTwoHopClosure(pairs))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(closed == direct)
-    // under the local-CC cap the closure short-circuits (nothing to
-    // accelerate) — the input comes back unchanged
-    val gated = Dedup.boundedTwoHopClosure(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(gated == pairs.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet)
-    // forcing the iterative regime: the closure actually shortened the
-    // chain — node 9 gains an edge closer to 1 than its original
-    // neighbor 8 — and clusters still match the direct run
+    val undirected = chain ++ hub ++ Seq((100L, 101L))
+    val pairs = undirected.toDF("id_a", "id_b")
+    def clusters(df: org.apache.spark.sql.DataFrame) =
+      Dedup.duplicateClusters(df)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val direct = clusters(pairs)
+    // the closure shortened the chain — node 9 gains an edge closer to 1
+    // than its original neighbor 8 — skipped the over-cap hub, and its
+    // edges cluster identically
+    val closed = Dedup.boundedTwoHopClosure(
+      (undirected ++ undirected.map(_.swap)).toDF("src", "dst"))
+    val closedEdges =
+      closed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(closedEdges.exists { case (a, b) => b == 9L && a < 8L })
+    assert(!closedEdges.contains((20L, 21L)))
+    assert(closedEdges.forall { case (a, b) => closedEdges((b, a)) })
+    assert(clusters(closed.toDF("id_a", "id_b")) == direct)
+    // localCcMaxEdges = 0 forces the closure + rounds arm
     spark.conf.set("graft.pipeline.localCcMaxEdges", "0")
-    try {
-      val closedEdges = Dedup.boundedTwoHopClosure(pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(closedEdges.exists { case (a, b) => b == 9L && a < 8L })
-      val closedForced =
-        Dedup.duplicateClusters(Dedup.boundedTwoHopClosure(pairs))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(closedForced == direct)
-    } finally spark.conf.unset("graft.pipeline.localCcMaxEdges")
+    try assert(clusters(pairs) == direct)
+    finally spark.conf.unset("graft.pipeline.localCcMaxEdges")
   }
 
   test("duplicate clustering: components, keepers, chains") {
@@ -1113,16 +1109,17 @@ class PipelineSpec extends AnyFunSuite {
   test("duplicate clustering with STRING ids (non-integral convergence path)") {
     // string ids can't take the decimal-sum convergence shortcut — this
     // exercises the amortized changed-count path, including a chain long
-    // enough that one 4-round block is not enough to converge
-    val pairs = Seq(("a", "b"), ("b", "c"), ("x", "y"),
-      ("d1", "d2"), ("d2", "d3"), ("d3", "d4"), ("d4", "d5"), ("d5", "d6"),
-      ("d6", "d7"), ("d7", "d8"), ("d8", "d9")).toDF("id_a", "id_b")
+    // enough that one 4-round block is not enough to converge even after
+    // the 2-hop closure (d1..d40 — string order, so the chain's minimum
+    // "d1" sits at one end)
+    val pairs = (Seq(("a", "b"), ("b", "c"), ("x", "y")) ++
+      (1 until 40).map(i => (s"d$i", s"d${i + 1}"))).toDF("id_a", "id_b")
     val got = Dedup.duplicateClusters(pairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got("a") == "a" && got("b") == "a" && got("c") == "a")
     assert(got("x") == "x" && got("y") == "x")
-    assert((1 to 9).forall(i => got(s"d$i") == "d1"), got)
-    assert(got.size == 14)
+    assert((1 to 40).forall(i => got(s"d$i") == "d1"), got)
+    assert(got.size == 45)
   }
 
   test("duplicate clustering with fractional double ids") {
@@ -1132,35 +1129,6 @@ class PipelineSpec extends AnyFunSuite {
     val got = Dedup.duplicateClusters(pairs)
       .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     assert(got == Map(0.25 -> 0.25, 0.5 -> 0.25, 1.5 -> 0.25, 7.5 -> 7.5, 8.5 -> 7.5))
-  }
-
-  test("path-compressed clustering == naive on random graphs and long chains") {
-    // randomized equivalence: compression must only ACCELERATE the fixpoint
-    val rnd = new scala.util.Random(42)
-    for (trial <- 1 to 4) {
-      val n = 30 + trial * 20
-      val pairs = (1 to n).map(_ =>
-        (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-        .filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      val naive = Dedup.duplicateClusters(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val fast = Dedup.duplicateClusters(pairs, compressPaths = true)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(fast == naive, s"trial $trial")
-    }
-    // a 40-node chain has diameter 39: the compressed loop must converge
-    // well within an iteration budget the naive loop would blow through.
-    // localCcMaxEdges = 0 forces the ITERATIVE path (the small-graph
-    // union-find arm would otherwise answer both exactly in one pass)
-    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    spark.conf.set("graft.pipeline.localCcMaxEdges", "0")
-    try {
-      val got = Dedup.duplicateClusters(chain, maxIter = 12, compressPaths = true)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.size == 40 && got.values.forall(_ == 1L))
-      assertThrows[IllegalStateException](
-        Dedup.duplicateClusters(chain, maxIter = 12).collect())
-    } finally spark.conf.unset("graft.pipeline.localCcMaxEdges")
   }
 
   test("small-graph union-find clustering == iterative clustering") {
@@ -1186,6 +1154,12 @@ class PipelineSpec extends AnyFunSuite {
     val got = Dedup.duplicateClusters(chain, maxIter = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 300 && got.values.forall(_ == 1L))
+    // while the iterative arm, whose 2-hop closure leaves the chain a
+    // diameter of ~75, fails loudly rather than return split components
+    spark.conf.set("graft.pipeline.localCcMaxEdges", "0")
+    try assertThrows[IllegalStateException](
+      Dedup.duplicateClusters(chain, maxIter = 3).collect())
+    finally spark.conf.unset("graft.pipeline.localCcMaxEdges")
   }
 
   test("duplicate clustering of an empty pair set returns an empty frame") {
