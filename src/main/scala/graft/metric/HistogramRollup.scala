@@ -240,31 +240,21 @@ class HistogramRollup(engine: MetricEngine, val gridMs: Long) {
       matchers: Seq[graft.promql.LabelMatcher],
       range: TimeRange, bucketMs: Option[Long]): Option[DataFrame] = {
     import graft.promql._
-    val nameMs = matchers.filter(_.label == "__name__")
-    val names: Seq[String] = nameMs.collectFirst {
-      case LabelMatcher(_, MatchOp.Eq, v) if v.nonEmpty => Seq(v)
-    }.getOrElse(Nil)
-      .filter(n => nameMs.forall(PromQLContext.matcherMatches(_, n)))
-    val labelMs = matchers.filterNot(_.label == "__name__")
-    val frames = names.flatMap { name =>
-      engine.metricIdOf(name).map { mid =>
-        store.scan(ScanRequest(range = range,
-            predicates = Seq(col("metric_id") === mid)))
-          .join(engine.maybeBroadcast(
-            engine.matchedSeriesFrame(mid, labelMs)), Seq("tsid"))
-      }
-    }
+    // exact metric names only: a name regex answers from the raw path
+    if (!matchers.exists {
+        case LabelMatcher("__name__", MatchOp.Eq, v) => v.nonEmpty
+        case _ => false
+      }) return None
     // (the pruned partials subtree is referenced by the probe, the
     // entries explode, the meta aggregate and the per-bucket distinct —
     // kept lazy rather than localCheckpoint()ed so the routed plan stays
     // inspectable end to end (RollupSpec pins that it reads the rollup
     // store); the round-15 single-pass restructure below already cut the
     // subtree fan-out from ~15 references to 3)
-    val rows = frames.reduceOption(_ unionByName _).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(schema.fields.toSeq :+
-          StructField("series_key", StringType))))
+    val rows = engine.matchedSeriesScan(matchers, store, range,
+      (col("tsid") +: schema.fieldNames.toSeq.filter(_ != "tsid").map(col)) :+
+        col("series_key"),
+      StructType(schema.fields.toSeq :+ StructField("series_key", StringType)))
 
     // ONE probe job (replacing the callers' old emptiness probe): any
     // partials at all, and per series ONE schema + ONE NHCB bound set

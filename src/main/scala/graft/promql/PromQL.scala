@@ -49,7 +49,36 @@ import graft.metric.MetricAgg
   *   duration := (int ('ms'|'s'|'m'|'h'|'d'|'w'))+      e.g. 1h30m
   * }}}
   */
-sealed trait Expr
+sealed trait Expr {
+
+  /** The sub-expressions this node evaluates, left to right. `RangeFn`
+    * and `AtRange` are leaves: their selector is a typed field, never a
+    * child, so [[mapChildren]] cannot put another node kind there. */
+  def children: Seq[Expr] = this match {
+    case RangeSubquery(_, c, _, _) => Seq(c)
+    case Agg(_, _, c, _) => Seq(c)
+    case ParamAgg(_, _, _, c) => Seq(c)
+    case CountValues(_, _, c) => Seq(c)
+    case BinOp(_, a, b, _, _) => Seq(a, b)
+    case FnCall(_, c, _) => Seq(c)
+    case HistogramQuantile(_, c) => Seq(c)
+    case LabelFn(_, c, _, _) => Seq(c)
+    case _: Selector | _: RangeFn | _: AtRange | _: NumLit => Nil
+  }
+
+  /** This node with `f` applied to each of its [[children]]. */
+  def mapChildren(f: Expr => Expr): Expr = this match {
+    case q: RangeSubquery => q.copy(child = f(q.child))
+    case a: Agg => a.copy(child = f(a.child))
+    case p: ParamAgg => p.copy(child = f(p.child))
+    case c: CountValues => c.copy(child = f(c.child))
+    case b: BinOp => b.copy(lhs = f(b.lhs), rhs = f(b.rhs))
+    case c: FnCall => c.copy(child = f(c.child))
+    case h: HistogramQuantile => h.copy(child = f(h.child))
+    case l: LabelFn => l.copy(child = f(l.child))
+    case _: Selector | _: RangeFn | _: AtRange | _: NumLit => this
+  }
+}
 
 /** `=` / `!=` / `=~` / `!~`. Regex matchers are fully anchored, as in
   * Prometheus (`env=~"prod|stag"` matches exactly, not substrings). */
@@ -67,7 +96,13 @@ final case class LabelMatcher(label: String, op: MatchOp, value: String)
   * `offsetMs` shifts the evaluation window back in time: the value at query
   * time t is the underlying value at t - offset, re-stamped to t. */
 final case class Selector(metric: String, matchers: Seq[LabelMatcher],
-    offsetMs: Long = 0L) extends Expr
+    offsetMs: Long = 0L) extends Expr {
+
+  /** Every matcher, the metric name first as a `__name__ =` matcher. */
+  def allMatchers: Seq[LabelMatcher] =
+    (if (metric.nonEmpty) Seq(LabelMatcher("__name__", MatchOp.Eq, metric))
+    else Nil) ++ matchers
+}
 
 /** Range-vector functions over a window. */
 sealed trait RangeF
@@ -240,7 +275,6 @@ object PromQLParser {
   /** Whether an `AtRange.atMs` is an unresolved sentinel. */
   def isAtSentinel(at: Long): Boolean = Sentinels.contains(at)
 
-  /** Whether `e` still carries an unresolved `@ start()`/`@ end()`. */
   /** Go's `math.Pow` where it disagrees with `java.lang.Math.pow` — the
     * IEEE 754-2008 special cases Prometheus inherits: `Pow(1, y) = 1` for
     * ANY y (Java answers NaN for y = NaN or ±Inf) and `Pow(-1, ±Inf) = 1`
@@ -248,44 +282,24 @@ object PromQLParser {
   def goPow(a: Double, b: Double): Double =
     if (a == 1.0 || (a == -1.0 && b.isInfinity)) 1.0 else math.pow(a, b)
 
+  /** Whether `e` still carries an unresolved `@ start()`/`@ end()`. */
   def hasAtSentinel(e: Expr): Boolean = e match {
     case AtRange(_, _, _, at) => Sentinels.contains(at)
-    case RangeFn(_, _, _) | _: Selector | NumLit(_) => false
-    case RangeSubquery(_, c, _, _) => hasAtSentinel(c)
-    case Agg(_, _, c, _) => hasAtSentinel(c)
-    case ParamAgg(_, _, _, c) => hasAtSentinel(c)
-    case CountValues(_, _, c) => hasAtSentinel(c)
-    case BinOp(_, a, b, _, _) => hasAtSentinel(a) || hasAtSentinel(b)
-    case FnCall(_, c, _) => hasAtSentinel(c)
-    case HistogramQuantile(_, c) => hasAtSentinel(c)
-    case LabelFn(_, c, _, _) => hasAtSentinel(c)
+    case _ => e.children.exists(hasAtSentinel)
   }
 
   /** Substitute `@ start()` / `@ end()` with the query's actual bounds
     * (epoch ms). Entry points call this once, with `startMs`/`endMs` the
     * INCLUSIVE Prometheus-timeline bounds (instant queries pass the
     * evaluation time for both, as Prometheus defines). */
-  def resolveAtTimes(e: Expr, startMs: Long, endMs: Long): Expr = {
-    def r(x: Expr): Expr = x match {
-      case a @ AtRange(_, _, _, at) =>
-        if (at == AtStart) a.copy(atMs = startMs)
-        else if (at == AtEnd) a.copy(atMs = endMs)
-        else if (at == AtStartIncl) a.copy(atMs = startMs + 1)
-        else if (at == AtEndIncl) a.copy(atMs = endMs + 1)
-        else a
-      case s: Selector => s
-      case n: NumLit => n
-      case f: RangeFn => f
-      case sq: RangeSubquery => sq.copy(child = r(sq.child))
-      case a: Agg => a.copy(child = r(a.child))
-      case p: ParamAgg => p.copy(child = r(p.child))
-      case c: CountValues => c.copy(child = r(c.child))
-      case b: BinOp => b.copy(lhs = r(b.lhs), rhs = r(b.rhs))
-      case f: FnCall => f.copy(child = r(f.child))
-      case h: HistogramQuantile => h.copy(child = r(h.child))
-      case l: LabelFn => l.copy(child = r(l.child))
-    }
-    r(e)
+  def resolveAtTimes(e: Expr, startMs: Long, endMs: Long): Expr = e match {
+    case a @ AtRange(_, _, _, at) =>
+      if (at == AtStart) a.copy(atMs = startMs)
+      else if (at == AtEnd) a.copy(atMs = endMs)
+      else if (at == AtStartIncl) a.copy(atMs = startMs + 1)
+      else if (at == AtEndIncl) a.copy(atMs = endMs + 1)
+      else a
+    case _ => e.mapChildren(resolveAtTimes(_, startMs, endMs))
   }
 
   /** Pin every UN-PINNED range selector to `pinMs` — the exact
@@ -298,39 +312,18 @@ object PromQLParser {
     * timeline stays on the documented tumbling semantics, so callers fall
     * back to the tumbling instant path for the whole expression. */
   def pinRangeSelectors(e: Expr, pinMs: Long): Option[Expr] = {
-    var pinnable = true
-    def r(x: Expr): Expr = x match {
+    def pin(x: Expr): Expr = x match {
       case RangeFn(fn, sel, w) => AtRange(fn, sel, w, pinMs)
-      case s: Selector => s
-      case n: NumLit => n
-      case a: AtRange => a
-      case sq: RangeSubquery => pinnable = false; sq
-      case a: Agg => a.copy(child = r(a.child))
-      case p: ParamAgg => p.copy(child = r(p.child))
-      case c: CountValues => c.copy(child = r(c.child))
-      case b: BinOp => b.copy(lhs = r(b.lhs), rhs = r(b.rhs))
-      case f: FnCall => f.copy(child = r(f.child))
-      case h: HistogramQuantile => h.copy(child = r(h.child))
-      case l: LabelFn => l.copy(child = r(l.child))
+      case _ => x.mapChildren(pin)
     }
-    val out = r(e)
-    if (pinnable) Some(out) else None
+    if (hasSubquery(e)) None else Some(pin(e))
   }
 
   /** Whether the tree contains a subquery — the one shape whose inner
     * step timeline stays on tumbling semantics under every evaluation
     * mode (sliding range windows and instant pinning both fall back). */
-  def hasSubquery(e: Expr): Boolean = e match {
-    case _: RangeSubquery => true
-    case Agg(_, _, c, _) => hasSubquery(c)
-    case ParamAgg(_, _, _, c) => hasSubquery(c)
-    case CountValues(_, _, c) => hasSubquery(c)
-    case BinOp(_, a, b, _, _) => hasSubquery(a) || hasSubquery(b)
-    case FnCall(_, c, _) => hasSubquery(c)
-    case HistogramQuantile(_, c) => hasSubquery(c)
-    case LabelFn(_, c, _, _) => hasSubquery(c)
-    case _ => false
-  }
+  def hasSubquery(e: Expr): Boolean =
+    e.isInstanceOf[RangeSubquery] || e.children.exists(hasSubquery)
 
   private sealed trait Tok { def pos: Int }
   private final case class TIdent(s: String, pos: Int) extends Tok

@@ -1496,14 +1496,7 @@ object PromQLContext {
   private[graft] def innerWindows(e: Expr): Seq[Long] = e match {
     case RangeFn(_, _, w) => Seq(w)
     case RangeSubquery(_, _, w, _) => Seq(w)
-    case Agg(_, _, c, _) => innerWindows(c)
-    case ParamAgg(_, _, _, c) => innerWindows(c)
-    case CountValues(_, _, c) => innerWindows(c)
-    case BinOp(_, a, b, _, _) => innerWindows(a) ++ innerWindows(b)
-    case FnCall(_, c, _) => innerWindows(c)
-    case HistogramQuantile(_, c) => innerWindows(c)
-    case LabelFn(_, c, _, _) => innerWindows(c)
-    case _ => Nil
+    case _ => e.children.flatMap(innerWindows)
   }
 
   /** Total sliding-mode lookback of `e` in ms: how far BEFORE an output
@@ -1518,15 +1511,7 @@ object PromQLContext {
   private[graft] def slidingLookback(e: Expr): Long = e match {
     case RangeFn(_, _, w) => w
     case RangeSubquery(_, c, w, _) => w + slidingLookback(c)
-    case Agg(_, _, c, _) => slidingLookback(c)
-    case ParamAgg(_, _, _, c) => slidingLookback(c)
-    case CountValues(_, _, c) => slidingLookback(c)
-    case BinOp(_, a, b, _, _) =>
-      math.max(slidingLookback(a), slidingLookback(b))
-    case FnCall(_, c, _) => slidingLookback(c)
-    case HistogramQuantile(_, c) => slidingLookback(c)
-    case LabelFn(_, c, _, _) => slidingLookback(c)
-    case _ => 0L
+    case _ => e.children.map(slidingLookback).foldLeft(0L)(math.max)
   }
 
   /** Driver-side mirror of [[matcherPredicate]] for already-decoded label

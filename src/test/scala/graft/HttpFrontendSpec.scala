@@ -1060,6 +1060,81 @@ class HttpFrontendSpec extends AnyFunSuite {
     } finally fe.stop()
   }
 
+  test("a named selector's own __name__ matchers narrow it on every read " +
+      "surface: query_range, instant query, federate, series, remote read") {
+    import graft.streaming.RemoteRead
+    val engine = new MetricEngine(spark,
+      Files.createTempDirectory("graft-http-names").toString)
+    val fe = new HttpFrontend(spark, engine)
+    val port = fe.start()
+    try {
+      // recent timestamps: federation's lookback is anchored at "now"
+      val now = System.currentTimeMillis()
+      val body = RemoteWrite.encode(
+        (0 until 3).flatMap(i => Seq(
+          Sample("cpu_seconds_total", Map("host" -> s"h$i", "mode" -> "user"),
+            now - 90000L + i * 1000L, 1.0 + i),
+          Sample("cpu_seconds_total", Map("host" -> s"h$i", "mode" -> "user"),
+            now - 30000L + i * 1000L, 4.0 + i))) :+
+          Sample("mem_bytes", Map("host" -> "h0"), now - 30000L, 7.0))
+      assert(post(port, "/api/v1/write", body).statusCode() == 204)
+      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+      val hit = """cpu_seconds_total{__name__=~"cpu.*"}"""
+      val miss = """cpu_seconds_total{__name__=~"mem.*"}"""
+      // the same series without a name matcher, on the same evaluator path
+      val same = """cpu_seconds_total{mode!="none"}"""
+      val (s, e) = ((now - 600000L) / 1000, now / 1000)
+      def range(sel: String) = {
+        val r = get(port, s"/api/v1/query_range?query=" +
+          enc(s"sum by (host) ($sel)") + s"&start=$s&end=$e&step=60")
+        assert(r.statusCode() == 200, r.body()); r.body()
+      }
+      def instant(sel: String) = {
+        val r = get(port, s"/api/v1/query?query=" +
+          enc(s"sum without (mode) ($sel)") + s"&time=$e")
+        assert(r.statusCode() == 200, r.body()); r.body()
+      }
+      def federate(sel: String) = {
+        val r = get(port, s"/federate?match[]=${enc(sel)}")
+        assert(r.statusCode() == 200, r.body()); r.body().trim
+      }
+      def series(sel: String) = {
+        val r = get(port, s"/api/v1/series?match[]=${enc(sel)}")
+        assert(r.statusCode() == 200, r.body()); r.body()
+      }
+      def read(nameRe: Option[String]): Seq[Seq[RemoteRead.Series]] = {
+        val req = org.xerial.snappy.Snappy.compress(RemoteRead.encodeRequest(
+          Seq(RemoteRead.Query(now - 600000L, now, Seq(
+            RemoteRead.Matcher(0, "__name__", "cpu_seconds_total")) ++
+            nameRe.map(RemoteRead.Matcher(2, "__name__", _))))))
+        val resp = http.send(HttpRequest.newBuilder(
+            URI.create(s"http://127.0.0.1:$port/api/v1/read"))
+          .POST(HttpRequest.BodyPublishers.ofByteArray(req)).build(),
+          HttpResponse.BodyHandlers.ofByteArray())
+        assert(resp.statusCode() == 200, new String(resp.body(), "UTF-8"))
+        RemoteRead.decodeResponse(resp.body())
+      }
+
+      assert(range(hit) == range(same))
+      assert(Seq("h0", "h1", "h2").forall(h =>
+        range(hit).contains(s""""metric":{"host":"$h"}""")), range(hit))
+      assert(range(miss).contains(""""result":[]"""), range(miss))
+      assert(instant(hit) == instant(same))
+      assert(instant(hit).contains(""""metric":{"host":"h2"},"value":[""" +
+        s"""$e,"6.0"]"""), instant(hit))
+      assert(instant(miss).contains(""""result":[]"""), instant(miss))
+      assert(federate(hit) == federate("cpu_seconds_total"))
+      assert(federate(hit).split("\n").length == 3, federate(hit))
+      assert(federate(miss) == "", federate(miss))
+      assert(series(hit) == series("cpu_seconds_total"))
+      assert(series(hit).contains(""""host":"h1""""), series(hit))
+      assert(series(miss) == """{"status":"success","data":[]}""")
+      assert(read(Some("cpu.*")) == read(None))
+      assert(read(None).head.map(_.samples.length) == Seq(2, 2, 2))
+      assert(read(Some("mem.*")) == Seq(Nil))
+    } finally fe.stop()
+  }
+
   test("driver-local ingest runs no Spark jobs: remote-write 1.0, 2.0 and " +
       "OTLP POSTs with new or known series; only the first write after an " +
       "engine opens loads the tsid set; a query after a new series reloads " +
@@ -1075,18 +1150,37 @@ class HttpFrontendSpec extends AnyFunSuite {
       new MetricEngine(spark, root).write(samples(30, 0).toDF())
     }
     // Each request runs alone, with nothing else on the session, so the
-    // jobs started between its send and its response are its own.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    // jobs started between its send and its response are its own. Each job
+    // is recorded with its SQL execution and its stages, so a count that
+    // differs names the job that made the difference.
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            // the driver call that started the execution
+            executions.put(s.executionId, s.details.linesIterator
+              .find(l => l.contains("graft.") && !l.contains("sql.")).getOrElse(""))
+          case _ =>
+        }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add(s"job ${e.jobId}, " +
+          prop("spark.sql.execution.id").map(x => s"execution $x (${executions.get(x.toLong)})")
+            .getOrElse("no execution") +
+          ", stages " + e.stageInfos.map(st => s"${st.stageId} ${st.name}").mkString("; "))
+      }
     }
-    def jobsOf(f: => Unit): Int = {
+    def jobsIn(f: => Unit): Seq[String] = {
+      import scala.jdk.CollectionConverters._
       GraftTestShims.drainListeners(spark)
-      val before = jobs.get()
+      jobs.clear()
       f
       GraftTestShims.drainListeners(spark)
-      jobs.get() - before
+      jobs.asScala.toList
     }
+    def jobsOf(f: => Unit): Int = jobsIn(f).length
     val engine = new MetricEngine(spark, root)
     val fe = new HttpFrontend(spark, engine)
     val port = fe.start()
@@ -1149,15 +1243,18 @@ class HttpFrontendSpec extends AnyFunSuite {
       }
       query("""host="v1-new"""", t0 + 300000L)
       var body = ""
-      val warm = jobsOf { body = query("""host="v1-new"""", t0 + 300000L) }
+      val warm = jobsIn { body = query("""host="v1-new"""", t0 + 300000L) }
       assert(body.contains(""""host":"v1-new""""), body)
       assert(v1(Seq(Sample("cpu_seconds_total",
         Map("host" -> "probe-new", "mode" -> "user", "probe" -> "p1"),
         t0 + 800000L, 2.0))) == 0)
-      val after = jobsOf { body = query("""probe="p1"""", t0 + 800000L) }
+      val after = jobsIn { body = query("""probe="p1"""", t0 + 800000L) }
       assert(body.contains(""""host":"probe-new"""") &&
         body.contains(""""probe":"p1""""), body)
-      assert(after == warm, s"query after a new series ran $after jobs, warm $warm")
+      assert(after.length == warm.length,
+        s"query after a new series ran ${after.length} jobs, warm " +
+          s"${warm.length}\nwarm:\n${warm.mkString("\n")}\n" +
+          s"after:\n${after.mkString("\n")}")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       fe.stop()

@@ -1498,6 +1498,88 @@ class PromQLSpec extends AnyFunSuite {
       ctx.sql("sum by (host) (cpu) and on(host) group_left sum by (host) (mem)"))
   }
 
+  test("tree walks: @-sentinel and subquery detection, @ resolution, " +
+      "instant pinning, inner windows and sliding lookback over every node " +
+      "type") {
+    // columns: query, has @ sentinel, has subquery, innerWindows,
+    // slidingLookback, resolveAtTimes at start() = 100 s / end() = 200 s,
+    // pinRangeSelectors at 5 s (None: a subquery keeps tumbling semantics)
+    final case class Case(q: String, sentinel: Boolean, subquery: Boolean,
+        windows: Seq[Long], lookback: Long, resolved: String,
+        pinned: Option[String])
+    val m = 60000L
+    val cases = Seq(
+      Case("cpu", false, false, Nil, 0L, "cpu", Some("cpu")),
+      Case("""rate(cpu{host="a"}[5m])""", false, false, Seq(5 * m), 5 * m,
+        """rate(cpu{host="a"}[5m])""", Some("""rate(cpu{host="a"}[5m] @ 5)""")),
+      Case("rate(cpu[1m] @ 100)", false, false, Nil, 0L,
+        "rate(cpu[1m] @ 100)", Some("rate(cpu[1m] @ 100)")),
+      Case("sum without (host) (rate(cpu[5m] @ start()))", true, false, Nil,
+        0L, "sum without (host) (rate(cpu[5m] @ 100))",
+        Some("sum without (host) (rate(cpu[5m] @ start()))")),
+      Case("max_over_time(sum(rate(cpu[1m]))[1h:1m])", false, true,
+        Seq(60 * m), 61 * m, "max_over_time(sum(rate(cpu[1m]))[1h:1m])", None),
+      Case("max_over_time(avg_over_time(rate(cpu[1m])[10m:1m])[1h:10m])",
+        false, true, Seq(60 * m), 71 * m,
+        "max_over_time(avg_over_time(rate(cpu[1m])[10m:1m])[1h:10m])", None),
+      Case("topk(3, cpu @ end())", true, false, Nil, 0L, "topk(3, cpu @ 200)",
+        Some("topk(3, cpu @ end())")),
+      Case("""count_values("v", cpu offset 5m)""", false, false, Nil, 0L,
+        """count_values("v", cpu offset 5m)""",
+        Some("""count_values("v", cpu offset 5m)""")),
+      Case("2 * rate(cpu[5m]) + on(host) group_left(dc) mem", false, false,
+        Seq(5 * m), 5 * m, "2 * rate(cpu[5m]) + on(host) group_left(dc) mem",
+        Some("2 * rate(cpu[5m] @ 5) + on(host) group_left(dc) mem")),
+      Case("abs(delta(cpu[10m]))", false, false, Seq(10 * m), 10 * m,
+        "abs(delta(cpu[10m]))", Some("abs(delta(cpu[10m] @ 5))")),
+      Case("histogram_quantile(0.9, sum by (le) (rate(req_bucket[5m])))",
+        false, false, Seq(5 * m), 5 * m,
+        "histogram_quantile(0.9, sum by (le) (rate(req_bucket[5m])))",
+        Some("histogram_quantile(0.9, sum by (le) (rate(req_bucket[5m] @ 5)))")),
+      Case("""label_replace(rate(cpu[2m]), "dst", "$1", "host", "(.*)")""",
+        false, false, Seq(2 * m), 2 * m,
+        """label_replace(rate(cpu[2m]), "dst", "$1", "host", "(.*)")""",
+        Some("""label_replace(rate(cpu[2m] @ 5), "dst", "$1", "host", "(.*)")""")),
+      Case("""label_join(cpu @ start(), "dst", ",", "host", "dc")""", true,
+        false, Nil, 0L, """label_join(cpu @ 100, "dst", ",", "host", "dc")""",
+        Some("""label_join(cpu @ start(), "dst", ",", "host", "dc")""")),
+      Case("rate(cpu[5m]) / rate(mem[15m] offset 1m)", false, false,
+        Seq(5 * m, 15 * m), 15 * m, "rate(cpu[5m]) / rate(mem[15m] offset 1m)",
+        Some("rate(cpu[5m] @ 5) / rate(mem[15m] offset 1m @ 5)")),
+      Case("quantile_over_time(0.5, cpu[5m] @ end()) > bool " +
+          "max_over_time(mem[5m:1m])", true, true, Seq(5 * m), 5 * m,
+        "quantile_over_time(0.5, cpu[5m] @ 200) > bool max_over_time(mem[5m:1m])",
+        None),
+      Case("""sort_by_label(sum by (host) (cpu @ 150), "host")""", false, false,
+        Nil, 0L, """sort_by_label(sum by (host) (cpu @ 150), "host")""",
+        Some("""sort_by_label(sum by (host) (cpu @ 150), "host")""")))
+    // together the cases hold every node type
+    val kinds = Set[Class[_]](classOf[Selector], classOf[RangeFn],
+      classOf[AtRange], classOf[RangeSubquery], classOf[Agg],
+      classOf[ParamAgg], classOf[CountValues], classOf[NumLit],
+      classOf[BinOp], classOf[FnCall], classOf[HistogramQuantile],
+      classOf[LabelFn])
+    def nodes(e: Expr): Seq[Expr] = e +: e.children.flatMap(nodes)
+    assert(cases.flatMap(r => nodes(PromQLParser.parse(r.q))).map(_.getClass)
+      .toSet == kinds)
+    val wrap: Expr => Expr = c => FnCall("abs", c)
+    for (r <- cases; e <- nodes(PromQLParser.parse(r.q))) {
+      assert(e.mapChildren(identity) == e, e)
+      assert(e.mapChildren(wrap).children == e.children.map(wrap), e)
+    }
+    for (r <- cases) {
+      val e = PromQLParser.parse(r.q)
+      assert(PromQLParser.hasAtSentinel(e) == r.sentinel, r.q)
+      assert(PromQLParser.hasSubquery(e) == r.subquery, r.q)
+      assert(PromQLContext.innerWindows(e) == r.windows, r.q)
+      assert(PromQLContext.slidingLookback(e) == r.lookback, r.q)
+      assert(PromQLParser.resolveAtTimes(e, 100000L, 200000L) ==
+        PromQLParser.parse(r.resolved), r.q)
+      assert(PromQLParser.pinRangeSelectors(e, 5000L) ==
+        r.pinned.map(PromQLParser.parse), r.q)
+    }
+  }
+
   test("parser + context: @ pins a range window; output is time-pinned") {
     assert(PromQLParser.parse("rate(cpu[5m] @ 900)") ==
       AtRange(RangeF.Rate, Selector("cpu", Nil), 300000L, 900000L))
