@@ -3311,8 +3311,7 @@ object SparkEntry {
     // components → keeper/drop decision.
     "c3_minhash_dedup" -> ((s, dir) =>
       // one-call composite (Dedup.minhashDedup): sig → capped LSH →
-      // Jaccard verify → CC, releasing the band cache after the
-      // clustering actions consume the candidate join
+      // Jaccard verify → CC
       Dedup.minhashDedup(t(s, dir, "documents"), "doc_id", "text",
           numHashes = 8, bandSize = 2, maxBucket = 16,
           ngramN = 3, jaccardThreshold = 0.5)

@@ -39,212 +39,111 @@ object Dedup {
       .select(col(idCol) +: (0 until numHashes).map(i =>
         element_at(col("__sig__"), i + 1).as(s"mh$i")): _*)
 
-  /** LSH banding over a minhash signature: band key = the band's hashes,
-    * BINARY-packed (round 16: `concat(unhex(mh…))` — md5 hex strings are
-    * fixed 32 chars, so unhex is injective and concat boundaries cannot
-    * shift; key equality is bit-for-bit the string-concat equality this
-    * replaces, at half the bytes — 16 per hash instead of 33 with the
-    * separator. The band shuffle is the widest exchange of the minhash
-    * pipeline; §2.3 shuffle fewer bytes). Emits (band, key, id); equal
-    * keys within a band are candidate near-duplicates. Single
-    * `posexplode` over an array of band keys — the signature aggregation
-    * is computed once, not once per band, and the downstream self-join's
-    * two sides share (and reuse) one exchange. */
-  def lshBands(sig: DataFrame, idCol: String, numHashes: Int, bandSize: Int): DataFrame = {
-    // a non-dividing bandSize would silently DROP the trailing hashes
-    // (numHashes/bandSize truncates), quietly lowering recall below what
-    // the configured signature width implies — same guard as
-    // bandedHammingPairs' bits % bands check
-    require(numHashes % bandSize == 0,
-      s"bandSize=$bandSize must divide numHashes=$numHashes (a remainder " +
-        "would silently ignore the trailing minhashes)")
-    val numBands = numHashes / bandSize
-    val bandKeys = array((0 until numBands).map { b =>
-      concat((0 until bandSize).map(i => unhex(col(s"mh${b * bandSize + i}"))): _*)
-    }: _*)
-    sig.select(col(idCol), posexplode(bandKeys).as(Seq("band", "band_key")))
-      .select(col("band"), col("band_key"), col(idCol))
-  }
-
-  /** Band frames [[lshCandidatePairs]] persisted and nobody released yet.
-    * Persist (MEMORY_AND_DISK, lineage kept) is a pure performance
-    * hint here, so [[releaseBandCaches]] is always CORRECT to call — an
-    * evicted block just recomputes — the only question is when it stops
-    * costing: once the candidate join has been materialized (e.g. the
-    * connected-components actions inside [[minhashDedup]] ran). Tracked
-    * explicitly so long-lived cluster sessions don't accumulate band
-    * blocks across many dedup calls until LRU pressure evicts them. */
-  private val bandCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist every band frame [[lshCandidatePairs]] has persisted since
-    * the last release (non-blocking). Safe at any point — the band persist
-    * keeps full lineage. GLOBAL: drains frames from every in-flight call
-    * in the process, so use it from single-pipeline sessions only;
-    * [[minhashDedup]] releases only its OWN frames (per-invocation
-    * tracking), so concurrent composites never evict each other's bands
-    * mid-consumption. */
-  def releaseBandCaches(): Unit = {
-    var df = bandCaches.poll()
-    while (df != null) { df.unpersist(blocking = false); df = bandCaches.poll() }
-  }
-
-  private[graft] def pendingBandCaches: Int = bandCaches.size()
-
-  /** Test observability: the band frames the calling thread's last
-    * [[minhashDedup]] persisted — specs assert their storage level dropped
-    * to NONE after the composite returned (a global persisted-block diff
-    * races against concurrently-running suites on the shared session). */
-  private[graft] val lastBandFrames =
-    new ThreadLocal[Seq[DataFrame]] { override def initialValue = Nil }
-
-  /** Candidate pairs (a < b) sharing at least one LSH band — an equi-join on
-    * (band, band_key), broadcastable when the bucketed side is small and
-    * AQE-skew-safe otherwise.
+  /** Candidate pairs (a < b) whose signatures share at least one LSH band:
+    * an equi-join on (band, band_key), never an O(n²) cross join.
     *
-    * `maxBucket` caps quadratic blowup at scale: a bucket of m ids emits
-    * m(m-1)/2 pairs, and at 100 TB a boilerplate-heavy corpus produces
-    * million-document buckets (≈ 10^12 pairs from ONE bucket). Buckets
-    * larger than the cap are near-certain duplicate clusters already; pair
-    * enumeration there is wasted work, so they are star-expanded instead —
+    * The band frame is built once for both arms: string keys
+    * `mh_i || '|' || mh_j` (the oracle's own key, and measured faster than
+    * binary `unhex` keys on d3), one `posexplode`, and a repartition on
+    * (band, band_key) with an EXPLICIT count of
+    * `spark.sql.shuffle.partitions`. The count is load-bearing: AQE never
+    * coalesces a `REPARTITION_BY_NUM` exchange, so the quadratic pair
+    * emission spreads over every core instead of the one partition a
+    * small corpus coalesces to. Every join side reads that one exchange,
+    * so the signature is computed once.
+    *
+    * `maxBucket` caps quadratic blowup: a bucket of m ids emits m(m-1)/2
+    * pairs, and a boilerplate-heavy corpus produces million-document
+    * buckets. Buckets larger than the cap are star-expanded instead —
     * every member pairs with the bucket's minimum id (m-1 pairs), which
-    * keeps the bucket a single connected component for the downstream
-    * clustering while bounding output at O(m). Default Int.MaxValue =
-    * exact behavior. */
+    * keeps the bucket one connected component for [[duplicateClusters]].
+    * Default Int.MaxValue = exact behavior.
+    *
+    *  - Exact arm: a pair sharing k bands would come out of the join k
+    *    times, so it is emitted only from its FIRST shared band (both
+    *    sides carry every band key; a when-chain finds the first equal
+    *    one). Exactly-once by construction: no `distinct`, whose shuffle
+    *    of the raw pair stream would keep almost nothing map-side.
+    *  - Capped arm: bucket size and hub are window aggregates over the
+    *    band partitioning; small buckets self-join, big ones star-expand.
+    *    It keeps the `distinct`: a star pair can repeat a self-join pair,
+    *    and once a pair's first shared band can be an over-cap bucket,
+    *    first-shared-band emission would drop pairs. The cap bounds the
+    *    pair volume the `distinct` shuffles. */
   def lshCandidatePairs(sig: DataFrame, idCol: String, numHashes: Int,
       bandSize: Int, maxBucket: Int = Int.MaxValue): DataFrame = {
-    val (pairs, persisted) =
-      lshCandidatePairsTracked(sig, idCol, numHashes, bandSize, maxBucket)
-    persisted.foreach(bandCaches.add)
-    pairs
-  }
-
-  /** [[lshCandidatePairs]] plus the band frames it persisted — the
-    * per-invocation form: callers that own the whole consumption (the
-    * [[minhashDedup]] composite) unpersist exactly these frames when done,
-    * without touching frames other concurrent calls still depend on. */
-  private def lshCandidatePairsTracked(sig: DataFrame, idCol: String,
-      numHashes: Int, bandSize: Int, maxBucket: Int)
-      : (DataFrame, Seq[DataFrame]) = {
+    // a non-dividing bandSize would silently drop the trailing hashes
     require(numHashes % bandSize == 0,
       s"bandSize=$bandSize must divide numHashes=$numHashes (a remainder " +
         "would silently ignore the trailing minhashes)")
     val numBands = numHashes / bandSize
-    if (maxBucket == Int.MaxValue) {
-      // Exact (uncapped) path: a pair sharing k bands would come out of the
-      // band self-join k times, and deduplicating that with distinct()
-      // shuffles the RAW pair stream — the duplicates live in different
-      // band partitions, so the pre-shuffle partial aggregate removes
-      // almost nothing (measured: 21M-row shuffle to keep 9.9M pairs at
-      // sf0.1). Instead each pair is emitted ONLY from its first shared
-      // band: both sides carry their band-key columns, and a codegen'd
-      // when-chain keeps the match iff no earlier band also collided.
-      // Exactly-once by construction — no distinct, no second shuffle; the
-      // join stays one broadcast/co-partitioned exchange.
-      // String band keys `mh_i || '|' || mh_j` — the oracle's own key, with
-      // its null propagation. The binary unhex+concat keys [[lshBands]]
-      // keeps on the capped path measured slower here (d3_lsh_pairs
-      // 3.3–4.4 s binary vs 2.2–2.6 s string, 4 cores, dedup seeds 31–34).
-      val keyed = sig.select(col(idCol) +: (0 until numBands).map { b =>
+    val keys = (0 until numBands).map(b => col(s"__k$b"))
+    val banded = sig
+      .select(col(idCol) +: (0 until numBands).map { b =>
         concat((0 until bandSize).flatMap(i =>
           Seq(lit("|"), col(s"mh${b * bandSize + i}"))).tail: _*)
           .as(s"__k$b") }: _*)
-      val banded = keyed.select(
-          (col(idCol) +: (0 until numBands).map(b => col(s"__k$b"))) :+
-          posexplode(array((0 until numBands).map(b => col(s"__k$b")): _*))
-            .as(Seq("band", "band_key")): _*)
-        // distribute on the join keys BEFORE caching: the signature is a
-        // narrow per-row computation, so without this the band frame keeps
-        // the scan's file partitioning (one partition for a small parquet)
-        // and the quadratic pair emission runs in a single task
-        .repartition(col("band"), col("band_key"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val l = banded.select(Seq(col("band"), col("band_key"),
-        col(idCol).as("id_a")) ++
-        (0 until numBands).map(b => col(s"__k$b").as(s"__ka$b")): _*)
-      val r = banded.select(Seq(col("band"), col("band_key"),
-        col(idCol).as("id_b")) ++
-        (0 until numBands).map(b => col(s"__k$b").as(s"__kb$b")): _*)
+      .select((col(idCol) +: keys) :+
+        posexplode(array(keys: _*)).as(Seq("band", "band_key")): _*)
+      // a null key never joins; the join sides infer this filter and push
+      // it below the exchange, so stating it keeps every reader on ONE
+      // exchange (the capped arm's star branch would not infer it)
+      .where(col("band_key").isNotNull)
+      .repartition(
+        sig.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("band"), col("band_key"))
+    // one join side with its first `nKeys` band keys; the capped arm takes
+    // none, so every reader of `banded` prunes it to the same exchange
+    def side(df: DataFrame, s: String, nKeys: Int) = df.select(
+      Seq(col("band"), col("band_key"), col(idCol).as(s"id_$s")) ++
+        (0 until nKeys).map(b => col(s"__k$b").as(s"__k$s$b")): _*)
+    if (maxBucket == Int.MaxValue) {
       val firstShared = (0 until numBands).foldRight(lit(-1): Column)(
         (b, acc) => when(col(s"__ka$b") === col(s"__kb$b"), lit(b))
           .otherwise(acc))
-      return (l.join(r, Seq("band", "band_key"))
+      side(banded, "a", numBands)
+        .join(side(banded, "b", numBands), Seq("band", "band_key"))
         .filter(col("id_a") < col("id_b") && firstShared === col("band"))
-        .select("id_a", "id_b"), Seq(banded))
-    }
-    // Capped path: self-join on the band key, with the banded signature
-    // persisted so the signature computation runs once, not once per join
-    // side. A bucket-local collect_list + nested-transform variant was
-    // measured 4x SLOWER here: a skewed bucket of m ids emits m(m-1)/2
-    // pairs inside ONE task, while the join spreads the same quadratic
-    // output across the cluster. The final distinct() is kept here (the
-    // first-shared-band trick above would be wrong once big buckets are
-    // excluded from pair emission) — and is cheap, because the cap bounds
-    // the pair volume.
-    val bands = lshBands(sig, idCol, numHashes, bandSize)
-      .repartition(col("band"), col("band_key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // (the uncapped maxBucket == Int.MaxValue case returned on the exact
-    // path above — everything below serves the capped path only)
-    // Bucket size + hub as WINDOW aggregates over the (band, band_key)
-    // partitioning the repartition above just established (round 16,
-    // §2.4): the groupBy+join this replaces re-read the cached band frame
-    // and paid a sort-merge self-join (two sorts + join stages) to attach
-    // __m__/__hub__ back onto the rows the aggregate came from; one
-    // WindowExec computes both per-bucket values in a single pass with
-    // zero additional exchange.
-    val bw = org.apache.spark.sql.expressions.Window
-      .partitionBy("band", "band_key")
-    val sized = bands
-      .withColumn("__m__", count(lit(1)).over(bw))
-      .withColumn("__hub__", min(col(idCol)).over(bw))
-    val pairJoin = {
+        .select("id_a", "id_b")
+    } else {
+      val bw = org.apache.spark.sql.expressions.Window
+        .partitionBy("band", "band_key")
+      val sized = banded
+        .withColumn("__m__", count(lit(1)).over(bw))
+        .withColumn("__hub__", min(col(idCol)).over(bw))
       val small = sized.filter(col("__m__") <= maxBucket)
-        .select(col("band"), col("band_key"), col(idCol))
-      val l = small.select(col("band"), col("band_key"), col(idCol).as("id_a"))
-      val r = small.select(col("band"), col("band_key"), col(idCol).as("id_b"))
-      l.join(r, Seq("band", "band_key"))
+      side(small, "a", 0)
+        .join(side(small, "b", 0), Seq("band", "band_key"))
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b")
+        .union(sized  // star expansion: hub = min id, spokes = the rest
+          .filter(col("__m__") > maxBucket && col(idCol) =!= col("__hub__"))
+          .select(col("__hub__").as("id_a"), col(idCol).as("id_b")))
+        .distinct()
     }
-    val capped = pairJoin.union(
-      // star expansion: hub = min id, spokes = everyone else, O(m) pairs
-      sized.filter(col("__m__") > maxBucket && col(idCol) =!= col("__hub__"))
-        .select(col("__hub__").as("id_a"), col(idCol).as("id_b")))
-    (capped.distinct(), Seq(bands))
   }
+
+  /** No-op: [[lshCandidatePairs]] persists nothing, so there is nothing to
+    * release. */
+  @deprecated("lshCandidatePairs persists nothing; drop the call", "0.1.0")
+  def releaseBandCaches(): Unit = ()
 
   /** The canonical MinHash near-dup pipeline as ONE call: minhash
     * signatures → banded LSH candidates (with the `maxBucket`
     * star-expansion cap) → n-gram Jaccard verification on candidates only
     * → connected components ([[duplicateClusters]]) → keeper/drop.
     * Output: (id, cluster_id, is_keeper) with `is_keeper` = the cluster's
-    * minimum id (one survivor per duplicate family).
-    *
-    * The connected-components stage runs Spark ACTIONS internally (its
-    * per-round label materializations), which is what makes this composite
-    * the right place to release the LSH band cache: by the time clustering
-    * returns, the candidate join has been fully consumed, so unpersisting
-    * THIS call's band frames (per-invocation tracking — concurrent
-    * pipelines' frames are untouched) frees the blocks instead of leaving
-    * them pinned until session-wide LRU pressure — the long-lived-session
-    * hygiene a 100 TB cluster run needs. (Release is a performance hint
-    * only: the band persist keeps lineage, so downstream re-reads of the
-    * returned frame stay correct regardless.) */
+    * minimum id (one survivor per duplicate family). */
   def minhashDedup(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 8, bandSize: Int = 2, maxBucket: Int = Int.MaxValue,
       ngramN: Int = 3, jaccardThreshold: Double = 0.5): DataFrame = {
-    val (cand, persisted) = lshCandidatePairsTracked(
+    val cand = lshCandidatePairs(
       minhashSignature(docs, idCol, textCol, numHashes), idCol,
       numHashes, bandSize, maxBucket)
-    lastBandFrames.set(persisted)
     val verified = ngramJaccard(docs, cand, idCol, textCol, n = ngramN)
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("id_a"), col("id_b"))
-    val clusters =
-      try duplicateClusters(verified)
-      finally persisted.foreach(_.unpersist(blocking = false))
-    clusters.select(col("id"), col("cluster_id"),
+    duplicateClusters(verified).select(col("id"), col("cluster_id"),
       (col("id") === col("cluster_id")).as("is_keeper"))
   }
 

@@ -47,7 +47,6 @@ object CcProbe {
         // pin the pair graph so the runs time ONLY clustering
         val pairs = graph.localCheckpoint()
         val nPairs = pairs.count()
-        Dedup.releaseBandCaches()
         val byArm = Seq("default" -> None, "localCcMaxEdges=0" -> Some("0"))
           .map { case (arm, cap) =>
             cap.foreach(spark.conf.set("graft.pipeline.localCcMaxEdges", _))

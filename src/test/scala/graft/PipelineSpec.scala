@@ -35,60 +35,120 @@ class PipelineSpec extends AnyFunSuite {
     assert(!pairs.contains((3L, 4L)))
   }
 
-  test("LSH maxBucket: giant buckets star-expand, stay one component, O(m) pairs") {
-    // 6 identical docs (one giant bucket) + 2 identical docs (small bucket)
-    val df = docs((1L to 6L).map(i => i -> "same same text here") ++
-      Seq(10L -> "other words entirely now", 11L -> "other words entirely now"): _*)
-    val sig = Dedup.minhashSignature(df, "doc_id", "text", 8)
-    val exact = Dedup.lshCandidatePairs(sig, "doc_id", 8, 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = Dedup.lshCandidatePairs(sig, "doc_id", 8, 2, maxBucket = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.count(p => p._1 <= 6 && p._2 <= 6) == 15) // 6C2 exact pairs
-    // star expansion: the giant bucket contributes only hub pairs (1,x)
-    assert(capped.filter(p => p._1 <= 6 && p._2 <= 6) ==
-      (2L to 6L).map(x => (1L, x)).toSet)
-    // the small bucket is untouched by the cap
-    assert(exact.contains((10L, 11L)) && capped.contains((10L, 11L)))
-    // same connected components either way
-    val cExact = Dedup.duplicateClusters(
-      spark.createDataFrame(exact.toSeq).toDF("id_a", "id_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cCapped = Dedup.duplicateClusters(
-      spark.createDataFrame(capped.toSeq).toDF("id_a", "id_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cExact == cCapped)
+  test("property: LSH candidates == driver-side band buckets, exact and " +
+      "capped") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // duplicate families over a small vocabulary: copies collide in every
+    // band, one-token variants in some, and families of 3+ overflow caps
+    val vocab = (0 until 10).map(i => s"w$i")
+    val family = for {
+      len <- Gen.choose(2, 5)
+      base <- Gen.listOfN(len, Gen.oneOf(vocab))
+      copies <- Gen.choose(1, 4)
+      variants <- Gen.listOfN(2, Gen.oneOf(vocab)
+        .map(w => (base.tail :+ w).mkString(" ")))
+    } yield Seq.fill(copies)(base.mkString(" ")) ++ variants
+    val corpus = for {
+      nFamilies <- Gen.choose(2, 5)
+      texts <- Gen.listOfN(nFamilies, family).map(_.flatten)
+      ids <- Gen.pick(texts.size, 1L to 999L)
+    } yield ids.map(_.toLong).sorted.reverse.zip(texts).toList
+    // the giant-bucket case: six copies (one bucket per band over any
+    // small cap) beside a two-copy family
+    val giant = (1L to 6L).map(_ -> "same same text here") ++
+      Seq(10L -> "other words entirely now", 11L -> "other words entirely now")
+    val inputs = giant +: (0L until 6L).map(i =>
+      corpus(Gen.Parameters.default, Seed(i)).get)
+
+    def components(pairs: Set[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(x => x -> find(x)).toMap
+    }
+    var multiBand, overCap, firstSharedOverCap = 0
+    for ((rows, i) <- inputs.zipWithIndex) {
+      val sig = Dedup.minhashSignature(docs(rows: _*), "doc_id", "text", 8)
+      val buckets = sig.collect().toSeq
+        .flatMap(r => (0 until 4).map(b =>
+          (b, r.getString(1 + 2 * b) + "|" + r.getString(2 + 2 * b)) ->
+            r.getLong(0)))
+        .groupBy(_._1).toSeq.sortBy(_._1._1)
+        .map { case ((b, _), m) => b -> m.map(_._2).sorted }
+      def pairsOf(ids: Seq[Long]) =
+        for (a <- ids; b <- ids if a < b) yield (a, b)
+      val exact = buckets.flatMap(bm => pairsOf(bm._2)).toSet
+      def capped(cap: Int) = buckets.flatMap { case (_, m) =>
+        if (m.size <= cap) pairsOf(m) else m.tail.map(m.head -> _) }.toSet
+      def got(cap: Int) = Dedup.lshCandidatePairs(sig, "doc_id", 8, 2, cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val gotExact = got(Int.MaxValue)
+      assert(gotExact.size == gotExact.distinct.size, s"input $i: duplicates")
+      assert(gotExact.toSet == exact, s"input $i exact")
+      // coverage: pairs sharing several bands, buckets over the cap, and
+      // pairs whose first shared band is over the cap while a later one
+      // is not
+      val sharedBands = buckets.flatMap { case (b, m) =>
+        pairsOf(m).map(_ -> (b, m.size)) }.groupBy(_._1)
+        .map { case (p, bs) => p -> bs.map(_._2).sortBy(_._1) }
+      multiBand += sharedBands.count(_._2.size > 1)
+      for (cap <- Seq(2, 3)) {
+        assert(got(cap).toSet == capped(cap), s"input $i maxBucket=$cap")
+        assert(components(capped(cap)) == components(exact),
+          s"input $i maxBucket=$cap components")
+        overCap += buckets.count(_._2.size > cap)
+        firstSharedOverCap += sharedBands.count { case (_, bs) =>
+          bs.head._2 > cap && bs.exists(_._2 <= cap) }
+      }
+    }
+    assert(multiBand > 0 && overCap > 0 && firstSharedOverCap > 0,
+      s"weak inputs: $multiBand multi-band pairs, $overCap over-cap " +
+        s"buckets, $firstSharedOverCap first-shared-band-over-cap pairs")
   }
 
-  test("minhashDedup composite releases the LSH band cache after its " +
-      "clustering actions; result clusters true duplicates with min-id keeper") {
+  test("LSH band frame: no cache, one REPARTITION_BY_NUM exchange; " +
+      "min-id keepers") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
     val df = docs(
       (1L, "alpha beta gamma delta epsilon"),
       (2L, "alpha beta gamma delta epsilon"),
       (5L, "alpha beta gamma delta epsilon"),
       (3L, "zeta eta theta iota kappa"),
       (4L, "unrelated totally different content"))
-    Dedup.releaseBandCaches() // isolate from any earlier test's bands
+    val sig = Dedup.minhashSignature(df, "doc_id", "text", 8)
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    for (cap <- Seq(Int.MaxValue, 16)) {
+      val qe = Dedup.lshCandidatePairs(sig, "doc_id", 8, 2, cap).queryExecution
+      assert(qe.withCachedData.collect { case r: InMemoryRelation => r }
+        .isEmpty, s"maxBucket=$cap: band frame cached")
+      val exchanges = qe.sparkPlan.collect { case e: ShuffleExchangeExec => e }
+      val bandExchanges = exchanges.filter(_.shuffleOrigin == REPARTITION_BY_NUM)
+      assert(bandExchanges.nonEmpty, s"maxBucket=$cap: $exchanges")
+      bandExchanges.foreach(e => assert(e.numPartitions == partitions,
+        s"maxBucket=$cap: ${e.numPartitions} band partitions"))
+      // every join side reads the SAME exchange (reusable), so the
+      // signature is computed once
+      assert(bandExchanges.map(_.canonicalized).distinct.size == 1,
+        s"maxBucket=$cap: band exchanges differ: " +
+          bandExchanges.map(_.canonicalized.treeString).mkString("\n"))
+    }
     val out = Dedup.minhashDedup(df, "doc_id", "text",
       numHashes = 8, bandSize = 2, maxBucket = 16)
-    // the composite tracks its OWN band frames and never touches the
-    // global registry (concurrent pipelines must not evict each other)
-    assert(Dedup.pendingBandCaches == 0,
-      s"band caches still pending: ${Dedup.pendingBandCaches}")
     val rows = out.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(rows.contains((1L, 1L, true)) && rows.contains((2L, 1L, false)) &&
       rows.contains((5L, 1L, false)), rows.toString)
     assert(!rows.exists(r => r._1 == 3L && r._2 == 1L))
     assert(!rows.exists(r => r._1 == 4L && r._2 == 1L))
-    // exact release assertion (immune to concurrently-running suites'
-    // caches on the shared session): every band frame THIS composite
-    // persisted has been unpersisted by the time it returned
-    val bands = Dedup.lastBandFrames.get()
-    assert(bands.nonEmpty, "composite tracked no band frames")
-    bands.foreach(b => assert(
-      b.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      s"band frame still persisted at ${b.storageLevel}"))
   }
 
   test("simhash: identical docs equal; jaccard: identical=1, disjoint absent") {
