@@ -197,4 +197,18 @@ class PlanSpec extends AnyFunSuite {
     // "*(n)" prefixes mark whole-stage-codegen'd operators in the tree dump
     assert(plan.linesIterator.next().trim.startsWith("*("), plan.take(1500))
   }
+
+  test("query registry: distinct names, and every query has an oracle once " +
+      "the IVF and PQ indexes are trained") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size,
+      names.diff(names.distinct).mkString("duplicate query names: ", ", ", ""))
+    // building e4 and e9 trains the indexes the generated oracles embed
+    for (q <- Seq("e4_ivf_topk", "e9_pq_topk"))
+      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(oracles == queries, s"without an oracle: ${(queries -- oracles).toSeq.sorted}; " +
+      s"without a query: ${(oracles -- queries).toSeq.sorted}")
+  }
 }
