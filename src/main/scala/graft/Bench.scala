@@ -236,8 +236,8 @@ object Bench {
         try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
         (System.nanoTime() - t0) / 1e9
       }
-      // Steady-state hygiene (r3 post-mortem): prefix-sum and connected-
-      // components leave localCheckpoint blocks pinned until driver GC;
+      // Steady-state hygiene (r3 post-mortem): prefix sums and iterative
+      // connected components leave localCheckpoint blocks pinned until GC;
       // across 66 queries × 3 runs the block manager churns and the
       // late-alphabet queries time storage eviction instead of their plans
       // (official r3: ttl1 6.85 s vs 0.33 s isolated). Drop every

@@ -629,9 +629,9 @@ object SparkEntry {
     * calls this OUTSIDE any timed region, then snapshots
     * `sparkContext.getPersistentRDDs` — everything persisted after the
     * snapshot is per-query transient state it can safely unpersist between
-    * queries (the localCheckpoint blocks that prefix-sum and connected-
-    * components leave behind otherwise accumulate across a 60+-query run
-    * and the late queries measure storage-memory churn, not plans). */
+    * queries (the localCheckpoint blocks that prefix sums and iterative
+    * connected components leave behind otherwise accumulate across a
+    * 60+-query run and the late queries measure storage-memory churn). */
   def prewarm(s: SparkSession, dir: String): Unit = {
     // Each fixture is built independently and failures are contained: a
     // broken fixture must cost only its own queries (their per-query

@@ -1610,20 +1610,12 @@ final class MetricEngine(spark: SparkSession, root: String,
 
   /** Histogram rows of the matched series within `range`, shaped like
     * [[queryHistograms]] output (series_key + ts_ms + histogram cols).
-    *
-    * persist (round 15 materialized via localCheckpoint; round 16 advisor
-    * fix): every caller immediately probes `rows.isEmpty` to decide
-    * native-vs-classic routing and then evaluates the full expression
-    * over the same rows — without a persist the scan+series-join subtree
-    * runs once for the probe and again (entirely) for the result.
-    * MEMORY_AND_DISK persist rather than localCheckpoint: lineage is
-    * KEPT, so an evicted or executor-lost block recomputes instead of
-    * failing the query (localCheckpoint truncates lineage unrecoverably
-    * under executor loss/dynamic allocation on a cluster), and blocks
-    * are evictable under storage pressure. Freeing is GC-driven either
-    * way (the ContextCleaner unpersists when the frame's RDD is
-    * collected); repeated histogram queries therefore pin at most their
-    * own matched-window rows — the query's working set — until driver GC. */
+    * Every caller probes `rows.isEmpty` to route native-vs-classic and
+    * then evaluates over the same rows, so they are materialized once
+    * with `localCheckpoint` (a lazy frame runs the scan and series join
+    * for both: nh2–nh4 took 1.3–1.4× as long in `graft.Bench`). The
+    * blocks free when the frame is garbage-collected; no CacheManager
+    * entry is made, so no later query reads or matches against them. */
   private def scanMatchedHistograms(
       matchers: Seq[graft.promql.LabelMatcher],
       range: TimeRange): DataFrame = {
@@ -1636,7 +1628,7 @@ final class MetricEngine(spark: SparkSession, root: String,
         StructField("ts_ms", LongType) +:
         MetricEngine.histogramsSchema.fields.toSeq
           .filter(f => histCols.contains(f.name))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
   }
 
   /** Decode the given label keys from `series_key` into COLUMNS (absent

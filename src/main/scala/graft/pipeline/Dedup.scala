@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, each designed as a
@@ -193,8 +193,8 @@ object Dedup {
     * signature-space-bounded, never corpus-all-pairs. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 1, bands: Int = 2): DataFrame =
-    bandedHammingPairs(simhash16(df, idCol, textCol), idCol, "simhash16",
-      bits = 16, maxDist = maxDist, bands = bands)
+    hammingPairsFromKeys(simpleBandKeys(simhash16(df, idCol, textCol), idCol,
+      "simhash16", bits = 16, maxDist = maxDist, bands = bands), maxDist)
 
   /** [[simhashPairs]] at the 64-bit signature width — same banded
     * pigeonhole completeness (`maxDist < bands`). Band keys are
@@ -204,8 +204,8 @@ object Dedup {
     * tables for multiplicatively wider keys at identical output. */
   def simhashPairs64(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3, bands: Int = 8): DataFrame =
-    bandedHammingPairs(simhash64(df, idCol, textCol), idCol, "simhash64",
-      bits = 64, maxDist = maxDist, bands = bands)
+    hammingPairs64(simhash64(df, idCol, textCol), idCol, "simhash64",
+      maxDist = maxDist, bands = bands)
 
   /** Banded-LSH hamming pairs over a PRECOMPUTED 64-bit signature column
     * (e.g. an image dHash from
@@ -214,8 +214,8 @@ object Dedup {
     * `maxDist < bands` (pigeonhole); emits (id_a, id_b, dist). */
   def hammingPairs64(sig: DataFrame, idCol: String, sigCol: String,
       maxDist: Int = 7, bands: Int = 8): DataFrame =
-    bandedHammingPairs(sig, idCol, sigCol, bits = 64, maxDist = maxDist,
-      bands = bands)
+    hammingPairsFromKeys(simpleBandKeys(sig, idCol, sigCol, bits = 64,
+      maxDist = maxDist, bands = bands), maxDist)
 
   /** Measured simple-banding saturation threshold: the BandingProbe
     * crossover (round 13, SCALE.md banding table) where 16-bit band keys'
@@ -223,6 +223,14 @@ object Dedup {
     * bucket-saturation onset past which the simple scheme's equi-join
     * turns quadratic (~10⁶ uniform 64-bit signatures). */
   private[graft] val ComboBandingThreshold = 1000000L
+
+  /** The simple scheme's band count for a given radius: the fewest
+    * power-of-two bands completeness allows (pigeonhole: bands > maxDist)
+    * — ONE definition shared by [[autoHammingPairs64]]'s simple arm and
+    * [[comboBandingThresholdFor]], which is calibrated to exactly this
+    * arm's key width and silently mis-scales if the two ever diverge. */
+  private def simpleBandsFor(maxDist: Int): Int =
+    Seq(1, 2, 4, 8, 16, 32, 64).find(_ > maxDist).get
 
   /** The [[ComboBandingThreshold]] crossover rescaled to the band-key
     * width the simple scheme would actually use for this `maxDist`:
@@ -232,14 +240,6 @@ object Dedup {
     * 8-bit simple keys (256 buckets) that saturate near 4k docs — three
     * orders of magnitude before the 16-bit calibration point — while
     * maxDist ≤ 1 gives ≥32-bit keys that never saturate in practice. */
-  /** The simple scheme's band count for a given radius: the fewest
-    * power-of-two bands completeness allows (pigeonhole: bands > maxDist)
-    * — ONE definition shared by [[autoHammingPairs64]]'s simple arm and
-    * [[comboBandingThresholdFor]], which is calibrated to exactly this
-    * arm's key width and silently mis-scales if the two ever diverge. */
-  private def simpleBandsFor(maxDist: Int): Int =
-    Seq(1, 2, 4, 8, 16, 32, 64).find(_ > maxDist).get
-
   private[graft] def comboBandingThresholdFor(maxDist: Int): Long = {
     val keyBits = 64 / simpleBandsFor(maxDist)
     if (keyBits >= 48) Long.MaxValue // 2^48 buckets: no realistic corpus saturates
@@ -249,12 +249,12 @@ object Dedup {
 
   /** Hamming pairs with the banding scheme picked BY CORPUS SIZE (round
     * 14 — the [[combinationHammingPairs]] scaladoc's tuning knob,
-    * automated): one count job over the checkpointed signature frame,
-    * then below the threshold docs simple banding with the fewest
-    * tables completeness allows (the next power-of-two band count above
-    * `maxDist` — widest keys, one explode row per band); at or above it,
-    * Manku combination banding (blocks = 8, C(8, 8−maxDist) tables of
-    * multiplicatively wider keys). Output is IDENTICAL either way
+    * automated): one count job over the signature frame (Spark prunes it
+    * to a plain scan), then below the threshold docs simple banding with
+    * the fewest tables completeness allows (the next power-of-two band
+    * count above `maxDist` — widest keys, one explode row per band); at
+    * or above it, Manku combination banding (blocks = 8, C(8, 8−maxDist)
+    * tables of multiplicatively wider keys). Output is IDENTICAL either way
     * (property-tested against brute force); only the candidate-join
     * shape changes. The default `comboThreshold = -1` resolves to
     * [[comboBandingThresholdFor]] — the measured crossover rescaled to
@@ -263,7 +263,7 @@ object Dedup {
     * always takes the simple scheme (at maxDist = 7 the blocks = 8
     * combination scheme IS simple banding — C(8,1) single-block keys —
     * and maxDist ≥ 8 is outside its completeness bound). */
-  def autoHammingPairs64(sig0: DataFrame, idCol: String, sigCol: String,
+  def autoHammingPairs64(sig: DataFrame, idCol: String, sigCol: String,
       maxDist: Int = 3, comboThreshold: Long = -1L): DataFrame = {
     require(maxDist >= 0 && maxDist < 64)
     val threshold =
@@ -278,18 +278,14 @@ object Dedup {
             s"occupancy-scaled default; got $comboThreshold")
         comboBandingThresholdFor(maxDist)
       }
-    val sig = sig0.localCheckpoint()
-    if (maxDist >= 7 || sig.count() < threshold) {
-      val bands = simpleBandsFor(maxDist)
-      hammingPairsFromKeys(
+    hammingPairsFromKeys(
+      if (maxDist >= 7 || sig.count() < threshold)
         simpleBandKeys(sig, idCol, sigCol, bits = 64, maxDist = maxDist,
-          bands = bands), maxDist)
-    } else
-      // blocks = 8 ⇒ C(8, r) ≤ 70 tables, always under the combination
-      // guard; the frame is already checkpointed, so build keys directly
-      hammingPairsFromKeys(
-        comboBandKeys(sig, idCol, sigCol, bits = 64, maxDist = maxDist,
-          blocks = 8), maxDist)
+          bands = simpleBandsFor(maxDist))
+      // blocks = 8 ⇒ C(8, r) ≤ 70 tables, always under the combination guard
+      else comboBandKeys(sig, idCol, sigCol, bits = 64, maxDist = maxDist,
+        blocks = 8),
+      maxDist)
   }
 
   /** Hamming pairs via COMBINATION banding (Manku et al., WWW'07 §3): the
@@ -323,8 +319,7 @@ object Dedup {
       f"combination banding would build $tables%.0f tables " +
         s"(C($blocks, $r)); pick fewer blocks or a larger maxDist")
     hammingPairsFromKeys(
-      comboBandKeys(sig.localCheckpoint(), idCol, sigCol, bits, maxDist,
-        blocks), maxDist)
+      comboBandKeys(sig, idCol, sigCol, bits, maxDist, blocks), maxDist)
   }
 
   /** Exploded (id, sig, band, key) frame of the COMBINATION scheme —
@@ -353,37 +348,29 @@ object Dedup {
   }
 
   /** The shared tail of both banding schemes: equi-join the exploded key
-    * frame with itself, exact-popcount verify, de-dup multi-band hits. */
-  private def hammingPairsFromKeys(banded: DataFrame,
+    * frame with itself, exact-popcount verify, de-dup multi-band hits.
+    * The key frame is repartitioned on (band, key) with an explicit
+    * `spark.sql.shuffle.partitions` count, as in [[lshCandidatePairs]]:
+    * both join sides read that one exchange, so the signature is computed
+    * once and nothing is cached. */
+  private def hammingPairsFromKeys(keys: DataFrame,
       maxDist: Int): DataFrame = {
-    val a = banded.select(col("band"), col("key"),
-      col("id").as("id_a"), col("sig").as("sh_a"))
-    val b = banded.select(col("band"), col("key"),
-      col("id").as("id_b"), col("sig").as("sh_b"))
-    a.join(b, Seq("band", "key")).filter(col("id_a") < col("id_b"))
+    val banded = keys.repartition(
+      keys.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      col("band"), col("key"))
+    def side(s: String) = banded.select(col("band"), col("key"),
+      col("id").as(s"id_$s"), col("sig").as(s"sh_$s"))
+    side("a").join(side("b"), Seq("band", "key"))
+      .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long").as("dist"))
       .filter(col("dist") <= maxDist)
       .distinct() // a pair may collide in several bands
   }
 
-  private def bandedHammingPairs(sig0: DataFrame, idCol: String,
-      sigCol: String, bits: Int, maxDist: Int, bands: Int): DataFrame =
-    // localCheckpoint HERE (not in the key helper): the signature frame
-    // feeds both self-join sides — without it the tokenize + vote-agg
-    // shuffle runs twice (1.87 s → 1.54 s on the d7 bench query). Kept
-    // out of the helpers so a caller that already checkpointed (the
-    // BandingProbe sharing one frame across three schemes) doesn't pay
-    // redundant materializations.
-    hammingPairsFromKeys(
-      simpleBandKeys(sig0.localCheckpoint(), idCol, sigCol, bits, maxDist,
-        bands), maxDist)
-
   /** Exploded (id, sig, band, key) frame of the SIMPLE banded scheme —
-    * band b's key is the signature's b-th `bits/bands`-bit slice. Callers
-    * that feed it to a self-join should localCheckpoint the signature
-    * frame first (see [[bandedHammingPairs]]). */
-  private[graft] def simpleBandKeys(sig0: DataFrame, idCol: String,
+    * band b's key is the signature's b-th `bits/bands`-bit slice. */
+  private[graft] def simpleBandKeys(sig: DataFrame, idCol: String,
       sigCol: String, bits: Int, maxDist: Int, bands: Int): DataFrame = {
     require(bits % bands == 0, s"bands must divide $bits, got $bands")
     require(maxDist < bands,
@@ -395,7 +382,7 @@ object Dedup {
     // degenerates into the full n² cross join this module exists to
     // avoid. The key is the whole signature; mask with all-ones.
     val mask = if (width == 64) -1L else (1L << width) - 1
-    sig0.select(col(idCol).as("id"), col(sigCol).as("sig"),
+    sig.select(col(idCol).as("id"), col(sigCol).as("sig"),
         explode(array((0 until bands).map(b => struct(lit(b).as("band"),
           shiftright(col(sigCol), b * width)
             .bitwiseAND(lit(mask)).as("key"))): _*)).as("bk"))
@@ -406,21 +393,23 @@ object Dedup {
     * every node labeled by the smallest id reachable from it, so
     * `cluster_id == id` marks the keeper and the rest are drops.
     *
-    * The pairs are symmetrized and cached once, then one of two arms runs:
+    * The pairs are symmetrized and cached once, then one of two arms runs;
+    * the cache is released before the call returns or throws:
     *
     *  - '''Union-find''' for LONG ids with at most
     *    `graft.pipeline.localCcMaxEdges` symmetrized edges (default 2²⁰ ≈
-    *    50 MB of union-find state; 0 disables): one min-root pass over
-    *    `coalesce(1)`. Blocked duplicate graphs are typically far smaller
-    *    than the corpus, and each distributed round costs 2-3 jobs plus a
-    *    driver sync. Long ids only (the min-root order must match Spark's
-    *    `least`); the root IS the component's minimum id, the fixpoint the
-    *    other arm converges to (property-tested).
+    *    50 MB of union-find state; 0 disables): the edges are collected
+    *    and one min-root pass runs on the driver, which returns a
+    *    driver-local frame. Blocked duplicate graphs are typically far
+    *    smaller than the corpus, and each distributed round costs 2-3 jobs
+    *    plus a driver sync. Long ids only (the min-root order must match
+    *    Spark's `least`); the root IS the component's minimum id, the
+    *    fixpoint the other arm converges to (property-tested).
     *  - '''Min-label propagation''' for everything else: the bounded 2-hop
     *    closure ([[boundedTwoHopClosure]]) cuts every component's diameter
     *    about 4×, then join+min rounds run to a driver-checked fixpoint.
     *    A graph still changing after `maxIter` rounds throws instead of
-    *    returning split components.
+    *    returning split components, and frees every frame it made.
     *
     * @param pairs (id_a, id_b) undirected candidate edges
     * @return (id, cluster_id) for every node appearing in `pairs`
@@ -439,48 +428,38 @@ object Dedup {
       .getOrElse(1L << 20)
     // (the count materializes the edges cache — the job either arm's first
     // pass over the edges would otherwise run)
-    val clusters =
+    try {
       if (edges.schema("src").dataType == org.apache.spark.sql.types.LongType &&
           localCap > 0 && edges.count() <= localCap) unionFindClusters(edges)
-      else propagateLabels(boundedTwoHopClosure(edges), maxIter)
-    edges.unpersist()
-    clusters
+      else propagateLabels(edges, maxIter)
+    } finally edges.unpersist()
   }
 
-  /** The union-find arm of [[duplicateClusters]] over cached, symmetrized
-    * long-id edges. */
+  /** The union-find arm of [[duplicateClusters]]: path-halving union-find
+    * on the driver over the collected long-id edges, each undirected edge
+    * once (`src <= dst` keeps a self-loop's node). */
   private def unionFindClusters(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val enc = Encoders.row(StructType(Seq(
-      StructField("id", LongType), StructField("cluster_id", LongType))))
-    edges.coalesce(1).mapPartitions { it =>
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.get(x).longValue()
-        while (p != x) { // path halving
-          val gp = parent.get(p).longValue()
-          parent.put(x, gp)
-          x = gp
-          p = parent.get(x).longValue()
-        }
-        x
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent(x)
+      while (p != x) { // path halving
+        val gp = parent(p)
+        parent(x) = gp
+        x = gp
+        p = parent(x)
       }
-      def add(x: Long): Unit =
-        if (!parent.containsKey(x)) parent.put(x, x)
-      it.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        add(a); add(b)
-        val ra = find(a); val rb = find(b)
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      import scala.jdk.CollectionConverters._
-      parent.keySet().iterator().asScala.map { id =>
-        Row(id.longValue(), find(id.longValue()))
-      }
-    }(enc).localCheckpoint()
+      x
+    }
+    edges.where(col("src") <= col("dst")).collect().foreach { r =>
+      val a = r.getLong(0); val b = r.getLong(1)
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra < rb) parent(rb) = ra
+      else if (rb < ra) parent(ra) = rb
+    }
+    edges.sparkSession.createDataFrame(
+      parent.keys.map(id => (id, find(id))).toSeq).toDF("id", "cluster_id")
   }
 
   /** Reachability-preserving bounded 2-hop closure over symmetrized
@@ -491,7 +470,8 @@ object Dedup {
     * connects nodes already connected through its midpoint. The degree cap
     * bounds the quadratic midpoint expansion (a hub of degree m would emit
     * m² edges; hubs are already diameter-2 around themselves). Each pass is
-    * localCheckpoint()ed; the result is distinct and symmetric. */
+    * localCheckpoint()ed and frees the pass before it; the result is
+    * distinct and symmetric. */
   private[graft] def boundedTwoHopClosure(edges: DataFrame): DataFrame = {
     val (passes, maxDegree) = (2, 32)
     var sym = edges
@@ -503,14 +483,18 @@ object Dedup {
         .join(viaSmall.select(col("src").as("mid"), col("dst")), "mid")
         .filter(col("src") =!= col("dst"))
         .select(col("src"), col("dst"))
-      sym = sym.union(two).distinct().localCheckpoint()
+      val next = sym.union(two).distinct().localCheckpoint()
+      if (sym ne edges) GraftShims.releaseCheckpoint(sym)
+      sym = next
     }
     sym
   }
 
-  /** The min-label arm of [[duplicateClusters]]: join+min rounds over
-    * symmetrized (src, dst) edges until no label changes. */
-  private def propagateLabels(edges: DataFrame, maxIter: Int): DataFrame = {
+  /** The min-label arm of [[duplicateClusters]]: the bounded 2-hop closure
+    * of the symmetrized (src, dst) edges, then join+min rounds over it
+    * until no label changes. */
+  private def propagateLabels(sym: DataFrame, maxIter: Int): DataFrame = {
+    val edges = boundedTwoHopClosure(sym)
     // Periodic localCheckpoint truncates lineage — without it the plan tree
     // doubles every round and long chains OOM the driver on plan strings
     // alone (on a cluster, prefer reliable checkpointing to a configured
@@ -527,6 +511,7 @@ object Dedup {
       .agg(min(col("dst")).as("__mn__"))
       .select(col("id"), least(col("id"), col("__mn__")).as("cluster_id"))
       .localCheckpoint()
+    var lastCheckpoint = labels
     // Labels only ever decrease (least of self and neighbors), so for
     // INTEGRAL ids Σ cluster_id is strictly monotone while anything changes:
     // the convergence test is one cheap aggregate over the just-checkpointed
@@ -555,8 +540,6 @@ object Dedup {
         .join(prev.select(col("id"), col("cluster_id").as("__prev__")), "id")
         .filter(col("__cur__") =!= col("__prev__")).count()
     var prevSum = if (idIsIntegral) labelSum(labels) else null
-    // Non-integral path: the frame the next changed-count compares against.
-    var lastChecked = labels
     // The node set is fixed across iterations, so pick the join strategy
     // once: a label table under ~4M rows (~64 MB) broadcasts to every
     // executor and the per-round join loses both its exchanges; bigger
@@ -565,7 +548,6 @@ object Dedup {
     // blocks make this count cheap.
     val smallGraph = labels.count() < (1L << 22)
     var converged = false
-    var prevWasCheckpoint = true // the init frame is localCheckpoint()ed
     var iter = 0
     while (!converged && iter < maxIter) {
       // One propagation round: neighbor labels and own label feed the same
@@ -589,26 +571,32 @@ object Dedup {
         converged = nextSum.compareTo(prevSum) == 0
         prevSum = nextSum
       } else if (checkpointRound || iter >= maxIter) {
-        // Amortized pointwise check (the join is too costly per round);
-        // between checks no action runs, so the intermediate rounds fuse
-        // into this one job.
-        converged = changedCount(next, lastChecked) == 0L
-        lastChecked = next
+        // Amortized pointwise check against the last checkpoint (the join
+        // is too costly per round); between checks no action runs, so the
+        // intermediate rounds fuse into this one job.
+        converged = changedCount(next, lastCheckpoint) == 0L
       }
-      // Only cache()-round frames are safe to free eagerly: their blocks
-      // recompute through lineage rooted at the last checkpoint. A
-      // checkpointed frame's blocks ARE later rounds' lineage root —
-      // unpersisting them would make any evicted downstream block
-      // unrecoverable; the context cleaner frees them on GC instead.
-      if (!prevWasCheckpoint) labels.unpersist()
-      prevWasCheckpoint = checkpointRound
+      // A cache()-round frame is freed once the next round has read it:
+      // its blocks recompute through lineage rooted at the last
+      // checkpoint. That checkpoint's blocks ARE the later rounds' lineage
+      // root, so it is freed only when a newer checkpoint has materialized.
+      if (labels ne lastCheckpoint) labels.unpersist()
+      if (checkpointRound) {
+        GraftShims.releaseCheckpoint(lastCheckpoint)
+        lastCheckpoint = next
+      }
       labels = next
     }
     // Returning non-converged labels would split components and mark false
-    // keepers with no signal to the caller — fail loudly instead.
-    if (!converged) throw new IllegalStateException(
-      s"duplicateClusters did not converge within $maxIter iterations " +
-        "— raise maxIter for high-diameter graphs")
+    // keepers with no signal to the caller — fail loudly instead, and free
+    // what this arm made.
+    if (!converged) {
+      if (labels ne lastCheckpoint) labels.unpersist()
+      Seq(lastCheckpoint, edges).foreach(GraftShims.releaseCheckpoint)
+      throw new IllegalStateException(
+        s"duplicateClusters did not converge within $maxIter iterations " +
+          "— raise maxIter for high-diameter graphs")
+    }
     labels
   }
 

@@ -43,46 +43,46 @@ object Sharding {
       .repartitionByRange(orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vIdx = parted.schema.fieldIndex(valCol)
-    // Both passes use RDD mapPartitionsWithIndex, NOT TaskContext/
-    // spark_partition_id(): those report the *task's* partition id, which
-    // diverges from the parent split under any downstream narrow merge — a
-    // plain `.coalesce(1)` silently re-seeds every partition with the wrong
-    // offset. The split index bound here is the true range-partition rank
-    // no matter how the plan above is rearranged.
-    // Pass 1 — per-partition totals: one (pid, sum) pair per partition, so
-    // the driver holds O(partitions) state and its prefix scan is trivial.
-    val totals = parted.rdd
-      .mapPartitionsWithIndex { (idx, iter) =>
-        var t = 0L
-        iter.foreach(r => t += r.getLong(vIdx))
-        Iterator(idx -> t)
+    try {
+      val vIdx = parted.schema.fieldIndex(valCol)
+      // Both passes use RDD mapPartitionsWithIndex, NOT TaskContext/
+      // spark_partition_id(): those report the *task's* partition id, which
+      // diverges from the parent split under any downstream narrow merge — a
+      // plain `.coalesce(1)` silently re-seeds every partition with the wrong
+      // offset. The split index bound here is the true range-partition rank
+      // no matter how the plan above is rearranged.
+      // Pass 1 — per-partition totals: one (pid, sum) pair per partition, so
+      // the driver holds O(partitions) state and its prefix scan is trivial.
+      val totals = parted.rdd
+        .mapPartitionsWithIndex { (idx, iter) =>
+          var t = 0L
+          iter.foreach(r => t += r.getLong(vIdx))
+          Iterator(idx -> t)
+        }
+        .collect().toMap
+      val pids = totals.keys.toSeq.sorted
+      val offsets = pids.zip(pids.scanLeft(0L)((acc, p) => acc + totals(p))).toMap
+      // Pass 2 — sequential accumulation inside each already-sorted cached
+      // partition, seeded with the partition's prefix offset. A prefix sum is
+      // inherently serial per partition, which is exactly mapPartitions'
+      // legitimate use: the Window alternative (partitionBy(pid) over the
+      // same data) plans a SECOND full-data exchange just to re-cluster rows
+      // that are already clustered.
+      val outSchema = StructType(parted.schema.fields.dropRight(1) :+
+        StructField(outCol, LongType, nullable = false))
+      val out = parted.rdd.mapPartitionsWithIndex { (idx, iter) =>
+        var acc = offsets.getOrElse(idx, 0L)
+        iter.map { r =>
+          acc += r.getLong(vIdx)
+          Row.fromSeq(r.toSeq.patch(vIdx, Nil, 1) :+ acc)
+        }
       }
-      .collect().toMap
-    val pids = totals.keys.toSeq.sorted
-    val offsets = pids.zip(pids.scanLeft(0L)((acc, p) => acc + totals(p))).toMap
-    // Pass 2 — sequential accumulation inside each already-sorted cached
-    // partition, seeded with the partition's prefix offset. A prefix sum is
-    // inherently serial per partition, which is exactly mapPartitions'
-    // legitimate use: the Window alternative (partitionBy(pid) over the
-    // same data) plans a SECOND full-data exchange just to re-cluster rows
-    // that are already clustered.
-    val outSchema = StructType(parted.schema.fields.dropRight(1) :+
-      StructField(outCol, LongType, nullable = false))
-    val out = parted.rdd.mapPartitionsWithIndex { (idx, iter) =>
-      var acc = offsets.getOrElse(idx, 0L)
-      iter.map { r =>
-        acc += r.getLong(vIdx)
-        Row.fromSeq(r.toSeq.patch(vIdx, Nil, 1) :+ acc)
-      }
-    }
-    // Materialize the result eagerly so the input cache (same size) can be
-    // released NOW rather than pinning a full dataset copy for the session
-    // lifetime; the result's blocks free with the returned frame. On a
-    // cluster job, prefer writing the result to a table over caching either.
-    val result = df.sparkSession.createDataFrame(out, outSchema).localCheckpoint()
-    parted.unpersist()
-    result
+      // Materialize the result eagerly so the input cache (same size) is
+      // released NOW, also when a pass throws; the result's blocks free with
+      // the returned frame. On a cluster job, prefer writing the result to a
+      // table over caching either.
+      df.sparkSession.createDataFrame(out, outSchema).localCheckpoint()
+    } finally parted.unpersist()
   }
 
   /** Pack documents into shards of ~`tokenBudget` tokens, filling shards in

@@ -98,9 +98,9 @@ object Similarity {
     val fams = math.max(1, families)
     // bits = -1: corpus-proportional code, exactly lshNearDupPairs' arm —
     // fixed bits make per-query candidate counts grow n/2^bits
-    val (vecs, b) = resolveAutoBits(vectors, bits, fams)
+    val b = resolveAutoBits(vectors, bits, fams)
     val cands = (0 until fams).map { f =>
-      val vb = vecs.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
+      val vb = vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"),
         lshBucket(col(vecCol), dim, b, f).as("bucket"))
       val qb = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
         lshBucket(col(vecCol), dim, b, f).as("bucket")))
@@ -372,36 +372,34 @@ object Similarity {
       maxBucket: Int = Int.MaxValue, families: Int = 1): DataFrame = {
     val fams = math.max(1, families)
     // bits = -1: corpus-proportional code length (round 14 — the
-    // [[ivfIndex]] k = -1 twin; one count job over the checkpointed
-    // input, which every family's join sides then reuse). Fixed bits go
-    // quadratic as a corpus grows — occupancy n/2^bits, candidates
+    // [[ivfIndex]] k = -1 twin; one count job over the input). Fixed bits
+    // go quadratic as a corpus grows — occupancy n/2^bits, candidates
     // n²/2^bits — exactly the shape auto-sized IVF cells fixed for
     // knnGraph; the recall a longer code costs is recovered the
     // documented way (union more families).
-    val (vecs, b) = resolveAutoBits(vectors, bits, fams)
+    val b = resolveAutoBits(vectors, bits, fams)
     val perFamily = (0 until fams).map(
-      lshNearDupPairsFamily(vecs, idCol, vecCol, dim, threshold, b,
+      lshNearDupPairsFamily(vectors, idCol, vecCol, dim, threshold, b,
         maxBucket, _))
     if (perFamily.length == 1) perFamily.head
     else perFamily.reduce(_ unionByName _).distinct()
   }
 
   /** The shared `bits = -1` arm of [[lshNearDupPairs]] and [[lshTopK]]:
-    * one count job over the checkpointed corpus (which every family's
-    * join sides then reuse), code length from [[autoLshBits]] under the
-    * stacked-family plane budget. ONE definition so the two APIs can
-    * never diverge on the sizing formula. Only the documented sentinel
+    * one count job over the corpus (Spark prunes it to a plain scan), code
+    * length from [[autoLshBits]] under the stacked-family plane budget.
+    * ONE definition so the two APIs can never diverge on the sizing
+    * formula. Only the documented sentinel
     * -1 selects the auto arm: any other non-positive `bits` is a caller
     * bug (a config-plumbing 0 used to fail fast at plan build, and must
     * not silently become corpus-sized codes plus an extra count job). */
   private def resolveAutoBits(vectors: DataFrame, bits: Int,
-      fams: Int): (DataFrame, Int) =
-    if (bits > 0) (vectors, bits)
+      fams: Int): Int =
+    if (bits > 0) bits
     else {
       require(bits == -1,
         s"bits must be positive, or -1 for corpus-proportional sizing; got $bits")
-      val v = vectors.localCheckpoint()
-      (v, autoLshBits(v.count(), maxBits = math.min(24, 101 / fams)))
+      autoLshBits(vectors.count(), maxBits = math.min(24, 101 / fams))
     }
 
   /** Corpus-proportional LSH code length: bits such that the EXPECTED
@@ -423,50 +421,37 @@ object Similarity {
       maxBucket: Int, family: Int): DataFrame = {
     // norm projected ONCE per vector (bit-identical to the per-pair fold
     // it replaces — see [[cosineWithNorms]]) so the bucket join's
-    // quadratic verify is one dot product per candidate
+    // quadratic verify is one dot product per candidate; the bucket
+    // repartition (as in [[graft.pipeline.Dedup.lshCandidatePairs]]) is
+    // the one exchange every reader below shares, and nothing is cached
     val b = vectors.select(col(idCol), col(vecCol),
-      lshBucket(col(vecCol), dim, bits, family).as("__bucket__"),
-      norm(col(vecCol)).as("__n__"))
+        lshBucket(col(vecCol), dim, bits, family).as("__bucket__"),
+        norm(col(vecCol)).as("__n__"))
+      .repartition(
+        vectors.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("__bucket__"))
     val verified = (pairs: DataFrame) => pairs
       .select(col("id_a"), col("id_b"),
         round(cosineWithNorms(col("va"), col("vb"),
           col("__na__"), col("__nb__")), 4).as("cos"))
       .filter(col("cos") >= threshold)
-    if (maxBucket == Int.MaxValue) {
-      val l = b.select(col("__bucket__"), col(idCol).as("id_a"),
-        col(vecCol).as("va"), col("__n__").as("__na__"))
-      val r = b.select(col("__bucket__"), col(idCol).as("id_b"),
-        col(vecCol).as("vb"), col("__n__").as("__nb__"))
-      verified(l.join(r, Seq("__bucket__")).filter(col("id_a") < col("id_b")))
-    } else {
-      val stats = b.groupBy("__bucket__")
-        .agg(count(lit(1)).as("__m__"), min(col(idCol)).as("__hub__"))
-      // localCheckpoint, not persist: the frame feeds four branches below,
-      // and a bare persist would squat in the block manager for the
-      // session's lifetime (the ContextCleaner frees checkpoint blocks
-      // when the RDD is collected — same pattern as bandedHammingPairs)
-      val sized = b.join(stats, Seq("__bucket__")).localCheckpoint()
-      val small = sized.filter(col("__m__") <= maxBucket)
-      val l = small.select(col("__bucket__"), col(idCol).as("id_a"),
-        col(vecCol).as("va"), col("__n__").as("__na__"))
-      val r = small.select(col("__bucket__"), col(idCol).as("id_b"),
-        col(vecCol).as("vb"), col("__n__").as("__nb__"))
-      val allPairs = l.join(r, Seq("__bucket__")).filter(col("id_a") < col("id_b"))
-      // star arm: hub vector fetched once per oversized bucket (hub = min
-      // id, so id_a < id_b holds by construction)
-      val hubVecs = sized.filter(col("__m__") > maxBucket &&
-          col(idCol) === col("__hub__"))
-        .select(col("__bucket__"), col(vecCol).as("va"),
-          col("__n__").as("__na__"))
-      val starPairs = sized.filter(col("__m__") > maxBucket &&
-          col(idCol) =!= col("__hub__"))
-        .select(col("__bucket__"), col("__hub__").as("id_a"),
-          col(idCol).as("id_b"), col(vecCol).as("vb"),
-          col("__n__").as("__nb__"))
-        .join(hubVecs, Seq("__bucket__"))
-      verified(allPairs.unionByName(starPairs.select(
-        col("__bucket__"), col("id_a"), col("va"), col("__na__"),
-        col("id_b"), col("vb"), col("__nb__"))))
+    def side(df: DataFrame, s: String) = df.select(col("__bucket__"),
+      col(idCol).as(s"id_$s"), col(vecCol).as(s"v$s"),
+      col("__n__").as(s"__n${s}__"))
+    def selfJoin(df: DataFrame) = side(df, "a").join(side(df, "b"),
+      Seq("__bucket__")).filter(col("id_a") < col("id_b"))
+    if (maxBucket == Int.MaxValue) verified(selfJoin(b))
+    else {
+      // bucket size and hub as window aggregates, as in the capped arm of
+      // lshCandidatePairs; an oversized bucket's hub (min id, so
+      // id_a < id_b by construction) pairs with each other member
+      val bw = org.apache.spark.sql.expressions.Window.partitionBy("__bucket__")
+      val sized = b.withColumn("__m__", count(lit(1)).over(bw))
+        .withColumn("__hub__", min(col(idCol)).over(bw))
+      val big = sized.filter(col("__m__") > maxBucket)
+      verified(selfJoin(sized.filter(col("__m__") <= maxBucket)).unionByName(
+        side(big.filter(col(idCol) === col("__hub__")), "a").join(
+          side(big.filter(col(idCol) =!= col("__hub__")), "b"), "__bucket__")))
     }
   }
 

@@ -55,13 +55,13 @@ object CcProbe {
                 .map(r => r.getLong(0) -> r.getLong(1)).toMap
               run() // warm
               val secs = (1 to 3).map { _ =>
-                Thread.sleep(300) // let the previous run's job events land
+                org.apache.spark.sql.GraftShims.drainListeners(spark)
                 jobs.set(0L)
                 val t0 = System.nanoTime()
                 run()
                 (System.nanoTime() - t0) / 1e9
               }
-              Thread.sleep(300)
+              org.apache.spark.sql.GraftShims.drainListeners(spark)
               val nJobs = jobs.get
               val roundsNote =
                 if (cap.isEmpty) "" else s" rounds=${rounds(pairs)}"

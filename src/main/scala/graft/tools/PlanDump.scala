@@ -1,5 +1,10 @@
 package graft.tools
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftShims
+import org.apache.spark.sql.execution.{ExplainMode, LocalTableScanExec,
+  RDDScanExec}
+
 /** Dump `.explain("formatted")` for named SparkEntry queries to
   * `<outDir>/<query>_<tag>.txt` — a change's before/after plan evidence
   * (e.g. `plans/r17`, one directory per round).
@@ -8,7 +13,9 @@ package graft.tools
   * Runs each query once first (fixture engines build, AQE has something
   * to re-plan) and captures the PRE-EXECUTION formatted plan — the shape
   * evidence (Exchange count, join strategy, PushedFilters) is all in the
-  * initial plan.
+  * initial plan. The dump's first line counts the Spark jobs that ran while
+  * the query was BUILT: a builder that collects or checkpoints runs its
+  * work there, and its plan only reads the result ("built eagerly").
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,17 +27,30 @@ object PlanDump {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     graft.SparkEntry.prewarm(spark, dir)
     java.nio.file.Files.createDirectories(outDir)
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
     for (q <- names) graft.SparkEntry.queries.get(q) match {
       case None => println(s"[plandump] $q UNKNOWN query name — skipped")
       case Some(fn) =>
         try {
           fn(spark, dir).count() // build fixture caches (engines, indexes)
+          GraftShims.drainListeners(spark)
+          jobs.set(0L)
           val df = fn(spark, dir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+          GraftShims.drainListeners(spark)
+          val eager = jobs.get > 0 && df.queryExecution.sparkPlan
+            .collectLeaves().forall(l =>
+              l.isInstanceOf[LocalTableScanExec] || l.isInstanceOf[RDDScanExec])
+          val head = s"build jobs: ${jobs.get}" +
+            (if (eager) " (built eagerly: the plan reads the result)" else "")
+          val plan = head + "\n" + df.queryExecution.explainString(
+            ExplainMode.fromString("formatted"))
           java.nio.file.Files.write(outDir.resolve(s"${q}_$tag.txt"),
             plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          println(s"[plandump] wrote ${q}_$tag.txt (${plan.length} chars)")
+          println(s"[plandump] wrote ${q}_$tag.txt (${plan.length} chars, $head)")
         } catch { case e: Throwable =>
           println(s"[plandump] $q FAILED: ${e.getMessage}")
         }

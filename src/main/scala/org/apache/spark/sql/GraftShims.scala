@@ -17,6 +17,19 @@ object GraftShims {
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until every posted listener event has been delivered, so a
+    * listener's counts are complete when read. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Free the blocks under a `localCheckpoint()`ed frame no reader needs,
+    * without `RDD.unpersist`'s warning that they cannot be recomputed. */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.asInstanceOf[classic.Dataset[Row]].queryExecution.logical.collect {
+      case r: execution.LogicalRDD =>
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+    }
+
   /** The analyzed logical plan of a DataFrame (attribute-resolved, so custom
     * parent nodes can bind to its output by name). */
   def logicalPlan(df: DataFrame): catalyst.plans.logical.LogicalPlan =

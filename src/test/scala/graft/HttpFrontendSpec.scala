@@ -1140,7 +1140,7 @@ class HttpFrontendSpec extends AnyFunSuite {
       "engine opens loads the tsid set; a query after a new series reloads " +
       "no dictionary") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.GraftTestShims
+    import org.apache.spark.sql.GraftShims
     import graft.streaming.Otlp
     val root = Files.createTempDirectory("graft-http-zerojob").toString
     // a root that already holds series, so the reopened engine has a real
@@ -1174,10 +1174,10 @@ class HttpFrontendSpec extends AnyFunSuite {
     }
     def jobsIn(f: => Unit): Seq[String] = {
       import scala.jdk.CollectionConverters._
-      GraftTestShims.drainListeners(spark)
+      GraftShims.drainListeners(spark)
       jobs.clear()
       f
-      GraftTestShims.drainListeners(spark)
+      GraftShims.drainListeners(spark)
       jobs.asScala.toList
     }
     def jobsOf(f: => Unit): Int = jobsIn(f).length

@@ -115,6 +115,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("LSH band frame: no cache, one REPARTITION_BY_NUM exchange; " +
       "min-id keepers") {
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
       ShuffleExchangeExec}
@@ -125,26 +126,58 @@ class PipelineSpec extends AnyFunSuite {
       (3L, "zeta eta theta iota kappa"),
       (4L, "unrelated totally different content"))
     val sig = Dedup.minhashSignature(df, "doc_id", "text", 8)
+    val sim = Dedup.simhash64(df, "doc_id", "text")
+    val vecs = ((1L to 6L).map(i => (i, Array(1f, 2f, 3f, 4f))) ++
+      Seq((7L, Array(-4f, -3f, -2f, -1f)), (8L, Array(-4f, -3f, -2f, -1f))))
+      .toDF("vec_id", "embedding")
+    def lsh(bits: Int, cap: Int) = Similarity.lshNearDupPairs(vecs,
+      "vec_id", "embedding", dim = 4, threshold = 0.99, bits = bits,
+      maxBucket = cap)
     val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    for (cap <- Seq(Int.MaxValue, 16)) {
-      val qe = Dedup.lshCandidatePairs(sig, "doc_id", 8, 2, cap).queryExecution
+    val frames = Seq(Int.MaxValue, 16).map(cap =>
+        s"lshCandidatePairs maxBucket=$cap" ->
+          Dedup.lshCandidatePairs(sig, "doc_id", 8, 2, cap)) ++ Seq(
+      "simhashPairs64" -> Dedup.simhashPairs64(df, "doc_id", "text"),
+      "combinationHammingPairs" -> Dedup.combinationHammingPairs(sim,
+        "doc_id", "simhash64", bits = 64, maxDist = 3, blocks = 8),
+      "autoHammingPairs64" ->
+        Dedup.autoHammingPairs64(sim, "doc_id", "simhash64"),
+      "lshNearDupPairs exact" -> lsh(4, Int.MaxValue),
+      "lshNearDupPairs maxBucket=4" -> lsh(4, 4),
+      "lshNearDupPairs bits=-1" -> lsh(-1, Int.MaxValue))
+    for ((name, frame) <- frames) {
+      val qe = frame.queryExecution
       assert(qe.withCachedData.collect { case r: InMemoryRelation => r }
-        .isEmpty, s"maxBucket=$cap: band frame cached")
+        .isEmpty, s"$name: band frame cached")
+      assert(qe.withCachedData.collect { case r: LogicalRDD => r }
+        .isEmpty, s"$name: input checkpointed")
       val exchanges = qe.sparkPlan.collect { case e: ShuffleExchangeExec => e }
       val bandExchanges = exchanges.filter(_.shuffleOrigin == REPARTITION_BY_NUM)
-      assert(bandExchanges.nonEmpty, s"maxBucket=$cap: $exchanges")
+      assert(bandExchanges.nonEmpty, s"$name: $exchanges")
       bandExchanges.foreach(e => assert(e.numPartitions == partitions,
-        s"maxBucket=$cap: ${e.numPartitions} band partitions"))
+        s"$name: ${e.numPartitions} band partitions"))
       // every join side reads the SAME exchange (reusable), so the
       // signature is computed once
       assert(bandExchanges.map(_.canonicalized).distinct.size == 1,
-        s"maxBucket=$cap: band exchanges differ: " +
+        s"$name: band exchanges differ: " +
           bandExchanges.map(_.canonicalized.treeString).mkString("\n"))
     }
+    // lshNearDupPairs' arms still find what they did: the capped arm
+    // star-expands the six-copy bucket around its min id
+    assert(lsh(4, 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      ((2L to 6L).map(i => (1L, i)).toSet + ((7L, 8L))))
+    // collecting the pipelines leaves no persisted RDD behind
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val clusters = Dedup.duplicateClusters(
+      Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("id_a", "id_b")).collect()
+    assert(clusters.length == 5)
     val out = Dedup.minhashDedup(df, "doc_id", "text",
       numHashes = 8, bandSize = 2, maxBucket = 16)
     val rows = out.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    assert((persisted -- before).isEmpty,
+      s"left persisted: ${persisted -- before}")
     assert(rows.contains((1L, 1L, true)) && rows.contains((2L, 1L, false)) &&
       rows.contains((5L, 1L, false)), rows.toString)
     assert(!rows.exists(r => r._1 == 3L && r._2 == 1L))
@@ -1216,10 +1249,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.size == 300 && got.values.forall(_ == 1L))
     // while the iterative arm, whose 2-hop closure leaves the chain a
     // diameter of ~75, fails loudly rather than return split components
+    // — and frees what it made: the edges cache, the closure and the
+    // label rounds
+    import org.apache.spark.sql.GraftTestShims.cachedEntries
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val (rdds0, cached0) = (persisted, cachedEntries(spark))
     spark.conf.set("graft.pipeline.localCcMaxEdges", "0")
     try assertThrows[IllegalStateException](
       Dedup.duplicateClusters(chain, maxIter = 3).collect())
     finally spark.conf.unset("graft.pipeline.localCcMaxEdges")
+    assert((persisted -- rdds0).isEmpty, s"left persisted: ${persisted -- rdds0}")
+    assert(cachedEntries(spark) == cached0)
   }
 
   test("duplicate clustering of an empty pair set returns an empty frame") {

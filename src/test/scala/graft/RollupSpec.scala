@@ -614,4 +614,22 @@ class RollupSpec extends AnyFunSuite {
     assert(sched2.refreshFailuresTotal == 1)
     assert(sched2.lastRefreshError.exists(_.contains("poisoned")))
   }
+
+  test("native histogram queries at two windows leave no CacheManager " +
+      "entry behind") {
+    import graft.streaming.MetricStreamIngest
+    import graft.streaming.RemoteWrite.HistogramSample
+    val eng = freshEngine()
+    MetricStreamIngest.ingestHistograms(eng, spark, (1 to 4).map(i =>
+      HistogramSample("lat", Map("host" -> "a"), i * 60000L,
+        count = 3.0 * i, sum = 0.0, schema = 0, zeroThreshold = 0.001,
+        zeroCount = 0, positiveBuckets = Seq((1, 1.0 * i), (2, 2.0 * i)),
+        negativeBuckets = Nil)))
+    import org.apache.spark.sql.GraftTestShims.cachedEntries
+    val before = cachedEntries(spark)
+    for (w <- Seq("2m", "3m")) assert(eng.instantPromQL(
+      s"histogram_quantile(0.5, rate(lat[$w]))", 4 * 60000L).collect()
+      .nonEmpty, w)
+    assert(cachedEntries(spark) == before)
+  }
 }
