@@ -62,12 +62,13 @@ import graft.metric.Sample
   *    sanitize — they stringify into a label value, not a label name.
   *  - timestamps truncate ns → ms (the engine's resolution).
   *
-  * Wire primitives are shared with [[RemoteWrite]] — same varint /
-  * length-validation hardening. Bodies may be gzip-compressed
-  * (Content-Encoding: gzip is what OTLP/HTTP exporters send) or raw.
+  * Every record reads and writes through [[Wire]]: record bounds,
+  * unknown-field skip, and a depth cap that turns a deeply nested
+  * `AnyValue` into an error instead of a stack overflow. Bodies may be
+  * gzip-compressed (Content-Encoding: gzip is what OTLP/HTTP exporters
+  * send) or raw.
   */
 object Otlp {
-  import RemoteWrite.{varint, lenAt, skip, fixed64}
 
   /** Everything one OTLP request decodes to: number-point samples,
     * native-histogram samples (exponential histograms directly,
@@ -86,23 +87,20 @@ object Otlp {
   /** Decode an ExportMetricsServiceRequest body into samples AND native
     * histograms. */
   def decodeAll(bytes: Array[Byte], utf8Names: Boolean = false): Decoded = {
-    val out = mutable.ArrayBuffer.empty[Sample]
-    val outH = mutable.ArrayBuffer.empty[RemoteWrite.HistogramSample]
-    val outE = mutable.ArrayBuffer.empty[RemoteWrite.Exemplar]
-    var pos = 0
-    while (pos < bytes.length) {
-      val (tag, p1) = varint(bytes, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(bytes, pos)
-          decodeResourceMetrics(bytes, p2, p2 + len, out, outH, outE,
-            utf8Names)
-          pos = p2 + len
-        case (_, wt) => pos = skip(bytes, pos, wt.toInt)
-      }
+    val out = new Out(utf8Names)
+    val r = new Wire.Reader(bytes)
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => decodeResourceMetrics(r.message(), out)
+      case _ => r.skip()
     }
-    Decoded(out.toSeq, outH.toSeq, outE.toSeq)
+    Decoded(out.samples.toSeq, out.histograms.toSeq, out.exemplars.toSeq)
+  }
+
+  /** One decode's outputs and its name-translation mode. */
+  private final class Out(val utf8: Boolean) {
+    val samples = mutable.ArrayBuffer.empty[Sample]
+    val histograms = mutable.ArrayBuffer.empty[RemoteWrite.HistogramSample]
+    val exemplars = mutable.ArrayBuffer.empty[RemoteWrite.Exemplar]
   }
 
   /** Thrown when a gzip body inflates past the caller's cap — the
@@ -132,217 +130,113 @@ object Otlp {
     }
     else bytes
 
-  private def decodeResourceMetrics(b: Array[Byte], start: Int, end: Int,
-      out: mutable.ArrayBuffer[Sample],
-      outH: mutable.ArrayBuffer[RemoteWrite.HistogramSample],
-      outE: mutable.ArrayBuffer[RemoteWrite.Exemplar],
-      utf8: Boolean): Unit = {
-    var pos = start
+  private def decodeResourceMetrics(r: Wire.Reader, out: Out): Unit = {
     var resourceAttrs = Map.empty[String, String]
-    val scopeSpans = mutable.ArrayBuffer.empty[(Int, Int)]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) => // resource
-          val (len, p2) = lenAt(b, pos)
-          resourceAttrs = decodeAttrList(b, p2, p2 + len, fieldNum = 1,
-            utf8)
-          pos = p2 + len
-        case (2, 2) => // scope_metrics — remember spans, decode after the
-          // resource is known (proto field order is not guaranteed)
-          val (len, p2) = lenAt(b, pos)
-          scopeSpans += ((p2, p2 + len))
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    val scopes = mutable.ArrayBuffer.empty[Wire.Reader]
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => // Resource { repeated KeyValue attributes = 1; }
+        val res = r.message()
+        resourceAttrs = Map.empty
+        while (res.next()) (res.field, res.wireType) match {
+          case (1, 2) => resourceAttrs ++= decodeKeyValue(res.message(), out.utf8)
+          case _ => res.skip()
+        }
+      // scope_metrics — decode after the resource is known (proto field
+      // order is not guaranteed)
+      case (2, 2) => scopes += r.message()
+      case _ => r.skip()
     }
-    scopeSpans.foreach { case (s, e) =>
-      decodeScopeMetrics(b, s, e, resourceAttrs, out, outH, outE, utf8)
-    }
-  }
-
-  private def decodeScopeMetrics(b: Array[Byte], start: Int, end: Int,
-      resourceAttrs: Map[String, String],
-      out: mutable.ArrayBuffer[Sample],
-      outH: mutable.ArrayBuffer[RemoteWrite.HistogramSample],
-      outE: mutable.ArrayBuffer[RemoteWrite.Exemplar],
-      utf8: Boolean): Unit = {
-    var pos = start
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (2, 2) => // metric
-          val (len, p2) = lenAt(b, pos)
-          decodeMetric(b, p2, p2 + len, resourceAttrs, out, outH, outE,
-            utf8)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
+    scopes.foreach { sm =>
+      while (sm.next()) (sm.field, sm.wireType) match {
+        case (2, 2) => decodeMetric(sm.message(), resourceAttrs, out) // metric
+        case _ => sm.skip()
       }
     }
   }
 
-  private def decodeMetric(b: Array[Byte], start: Int, end: Int,
-      resourceAttrs: Map[String, String],
-      out: mutable.ArrayBuffer[Sample],
-      outH: mutable.ArrayBuffer[RemoteWrite.HistogramSample],
-      outE: mutable.ArrayBuffer[RemoteWrite.Exemplar],
-      utf8: Boolean): Unit = {
-    var pos = start
+  private def decodeMetric(r: Wire.Reader, resourceAttrs: Map[String, String],
+      out: Out): Unit = {
     var name = ""
-    val pointSpans = mutable.ArrayBuffer.empty[(Int, Int)]
-    val histSpans = mutable.ArrayBuffer.empty[(Int, Int)]
-    val expSpans = mutable.ArrayBuffer.empty[(Int, Int)]
-    val summarySpans = mutable.ArrayBuffer.empty[(Int, Int)]
-    var deltaSum = false
+    val points = mutable.ArrayBuffer.empty[Wire.Reader]
+    val hists = mutable.ArrayBuffer.empty[Wire.Reader]
+    val exps = mutable.ArrayBuffer.empty[Wire.Reader]
+    val summaries = mutable.ArrayBuffer.empty[Wire.Reader]
+    val delta = mutable.Set.empty[Int] // kinds (field numbers) sent as DELTA
     var monotonic = false
-    var deltaHist = false
-    var deltaExp = false
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          name = new String(b, p2, len, "UTF-8")
-          pos = p2 + len
-        case (f, 2) if f == 5 || f == 7 => // gauge | sum
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q < p2 + len) {
-            val (t2, q1) = varint(b, q)
-            q = q1
-            (t2 >> 3, t2 & 7) match {
-              case (1, 2) => // data_points
-                val (l2, q2) = lenAt(b, q)
-                pointSpans += ((q2, q2 + l2))
-                q = q2 + l2
-              case (2, 0) if f == 7 => // Sum.aggregation_temporality
-                val (v, q2) = varint(b, q)
-                // DELTA(1) sums are per-interval increments — ingesting
-                // them raw corrupts rate()/increase() (a sawtooth posing
-                // as a cumulative counter). Prometheus's OTLP endpoint
-                // rejects them by default; so do we: drop the points.
-                if (v == 1L) deltaSum = true
-                q = q2
-              case (3, 0) if f == 7 => // Sum.is_monotonic
-                val (v, q2) = varint(b, q)
-                monotonic = v != 0L
-                q = q2
-              case (_, wt) => q = skip(b, q, wt.toInt)
-            }
-          }
-          pos = p2 + len
-        case (f, 2) if f == 9 || f == 10 => // histogram | exponential_histogram
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q < p2 + len) {
-            val (t2, q1) = varint(b, q)
-            q = q1
-            (t2 >> 3, t2 & 7) match {
-              case (1, 2) => // data_points
-                val (l2, q2) = lenAt(b, q)
-                if (f == 9) histSpans += ((q2, q2 + l2))
-                else expSpans += ((q2, q2 + l2))
-                q = q2 + l2
-              case (2, 0) => // aggregation_temporality — DELTA drops, like sums
-                val (v, q2) = varint(b, q)
-                if (v == 1L) { if (f == 9) deltaHist = true else deltaExp = true }
-                q = q2
-              case (_, wt) => q = skip(b, q, wt.toInt)
-            }
-          }
-          pos = p2 + len
-        case (11, 2) => // summary — Summary{ data_points = 1 }
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q < p2 + len) {
-            val (t2, q1) = varint(b, q)
-            q = q1
-            (t2 >> 3, t2 & 7) match {
-              case (1, 2) =>
-                val (l2, q2) = lenAt(b, q)
-                summarySpans += ((q2, q2 + l2))
-                q = q2 + l2
-              case (_, wt) => q = skip(b, q, wt.toInt)
-            }
-          }
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => name = r.string()
+      // gauge | sum | histogram | exponential_histogram | summary: each
+      // holds data_points = 1; sum and both histograms carry
+      // aggregation_temporality = 2, sum is_monotonic = 3
+      case (kind @ (5 | 7 | 9 | 10 | 11), 2) =>
+        val m = r.message()
+        val pts = kind match {
+          case 5 | 7 => points; case 9 => hists; case 10 => exps
+          case _ => summaries
+        }
+        while (m.next()) (m.field, m.wireType) match {
+          case (1, 2) => pts += m.message()
+          // DELTA(1) sums are per-interval increments — ingesting them raw
+          // corrupts rate()/increase() (a sawtooth posing as a cumulative
+          // counter). Prometheus's OTLP endpoint rejects them by default;
+          // so do we: drop the points (histograms likewise).
+          case (2, 0) if kind == 7 || kind == 9 || kind == 10 =>
+            if (m.varint() == 1L) delta += kind
+          case (3, 0) if kind == 7 => monotonic = m.varint() != 0L
+          case _ => m.skip()
+        }
+      case _ => r.skip()
     }
     // monotonic cumulative sums gain the Prometheus counter suffix —
     // the default OTLP→Prometheus translation (strategy "with suffixes");
     // a name already ending in _total is left alone (no double suffix)
-    val prom0 = if (utf8) name else sanitizeName(name)
+    val prom0 = if (out.utf8) name else sanitizeName(name)
     val prom =
-      if (monotonic && !deltaSum && prom0.nonEmpty &&
+      if (monotonic && !delta(7) && prom0.nonEmpty &&
           !prom0.endsWith("_total")) prom0 + "_total"
       else prom0
     // a nameless metric would ingest an unaddressable "" series
     // (Prometheus rejects these at ingest) — skip like malformed points
-    // Per-span attrs of the points that actually INGESTED — captured from
-    // the first decode pass so (a) exemplars on skipped points
-    // (stale/timeless/valueless) drop with their point exactly like the
-    // delta-dropped case below, and (b) the exemplar pass never re-decodes
-    // attributes it already has (the old second walk re-parsed every
-    // point's attribute maps even when it carried zero exemplars).
-    val ingested = mutable.Map.empty[(Int, Int), Map[String, String]]
-    if (prom.nonEmpty && !deltaSum) pointSpans.foreach { case (s, e) =>
-      decodeNumberPoint(b, s, e, utf8).foreach { case (attrs, tsNano, value) =>
-        out += Sample(prom, resourceAttrs ++ attrs, tsNano / 1000000L, value)
-        ingested((s, e)) = attrs
-      }
-    }
-    if (prom.nonEmpty && !deltaHist) histSpans.foreach { case (s, e) =>
-      decodeFixedHistogramPoint(b, s, e, utf8).foreach { h =>
-        outH += h.copy(name = prom, labels = resourceAttrs ++ h.labels)
-        ingested((s, e)) = h.labels
-      }
-    }
-    if (prom.nonEmpty && !deltaExp) expSpans.foreach { case (s, e) =>
-      decodeExponentialPoint(b, s, e, utf8).foreach { h =>
-        outH += h.copy(name = prom, labels = resourceAttrs ++ h.labels)
-        ingested((s, e)) = h.labels
-      }
-    }
+    if (prom.isEmpty) return
     // Exemplars ride on number, histogram, and exponential-histogram
     // data points; they ingest with their point's series labels
     // (resource ++ point attributes), trace/span ids as
     // `trace_id`/`span_id` exemplar labels — the Prometheus OTLP
-    // translation. Dropped points (delta metrics, stale/timeless points)
-    // drop their exemplars with them — the series they'd attach to was
-    // never ingested.
-    def emitExemplars(spans: Seq[(Int, Int)], exF: Int): Unit =
-      spans.foreach { case (s0, e0) =>
-        ingested.get((s0, e0)).foreach { attrs =>
-          exemplarSpans(b, s0, e0, exF).foreach { case (xs, xe) =>
-            decodeOtlpExemplar(b, xs, xe, utf8).foreach { case (labels, tsNano, v) =>
-              outE += RemoteWrite.Exemplar(prom, resourceAttrs ++ attrs,
-                labels, v, tsNano / 1000000L)
-            }
-          }
-        }
+    // translation. Each point decoder hands back its exemplar records;
+    // they decode only when the point itself ingests, so dropped points
+    // (delta metrics, stale/timeless points) drop their exemplars too.
+    def emitExemplars(attrs: Map[String, String], xs: Seq[Wire.Reader]): Unit =
+      xs.foreach(x => decodeOtlpExemplar(x, out.utf8).foreach {
+        case (labels, tsNano, v) => out.exemplars += RemoteWrite.Exemplar(
+          prom, resourceAttrs ++ attrs, labels, v, tsNano / 1000000L)
+      })
+    if (!delta(7)) points.foreach { p =>
+      decodeNumberPoint(p, out.utf8).foreach { case (attrs, tsNano, value, xs) =>
+        out.samples += Sample(prom, resourceAttrs ++ attrs, tsNano / 1000000L, value)
+        emitExemplars(attrs, xs)
       }
-    if (prom.nonEmpty) {
-      if (!deltaSum) emitExemplars(pointSpans.toSeq, exF = 5)
-      if (!deltaHist) emitExemplars(histSpans.toSeq, exF = 8)
-      if (!deltaExp) emitExemplars(expSpans.toSeq, exF = 11)
     }
+    def emitHistograms(pts: Seq[Wire.Reader], decode: (Wire.Reader, Boolean) =>
+        Option[(RemoteWrite.HistogramSample, Seq[Wire.Reader])]): Unit =
+      pts.foreach(p => decode(p, out.utf8).foreach { case (h, xs) =>
+        out.histograms += h.copy(name = prom, labels = resourceAttrs ++ h.labels)
+        emitExemplars(h.labels, xs)
+      })
+    if (!delta(9)) emitHistograms(hists.toSeq, decodeFixedHistogramPoint)
+    if (!delta(10)) emitHistograms(exps.toSeq, decodeExponentialPoint)
     // Summaries translate to the classic Prometheus series triple —
     // `<name>_sum`, `<name>_count`, and one `<name>{quantile="q"}` series
     // per reported quantile (the standard OTLP→Prometheus mapping; the
     // quantile label renders like Go strconv 'f', e.g. "0.99").
-    if (prom.nonEmpty) summarySpans.foreach { case (s, e) =>
-      decodeSummaryPoint(b, s, e, utf8).foreach {
+    summaries.foreach { p =>
+      decodeSummaryPoint(p, out.utf8).foreach {
         case (attrs, tsNano, count, sum, quantiles) =>
           val tsMs = tsNano / 1000000L
           val base = resourceAttrs ++ attrs
-          out += Sample(prom + "_sum", base, tsMs, sum)
-          out += Sample(prom + "_count", base, tsMs, count.toDouble)
+          out.samples += Sample(prom + "_sum", base, tsMs, sum)
+          out.samples += Sample(prom + "_count", base, tsMs, count.toDouble)
           quantiles.foreach { case (q, v) =>
-            out += Sample(prom,
+            out.samples += Sample(prom,
               base + ("quantile" -> goFloatText(q)), tsMs, v)
           }
       }
@@ -375,41 +269,30 @@ object Otlp {
     * NO recorded value (opentelemetry-proto DataPointFlags). */
   private val FlagNoRecordedValue = 1L
 
-  /** One NumberDataPoint → (attributes, time ns, value); None when the
-    * point carries no timestamp, no value field, or the
-    * no-recorded-value staleness flag — each would otherwise ingest a
-    * phantom 0.0 (a fake counter reset). Skip the point, not the
-    * request. */
-  private def decodeNumberPoint(b: Array[Byte], start: Int,
-      end: Int, utf8: Boolean): Option[(Map[String, String], Long, Double)] = {
-    var pos = start
+  /** One NumberDataPoint → (attributes, time ns, value, exemplar
+    * records at field 5); None when the point carries no timestamp, no
+    * value field, or the no-recorded-value staleness flag — each would
+    * otherwise ingest a phantom 0.0 (a fake counter reset). Skip the
+    * point, not the request. */
+  private def decodeNumberPoint(r: Wire.Reader, utf8: Boolean)
+      : Option[(Map[String, String], Long, Double, Seq[Wire.Reader])] = {
     var ts = 0L
     var value = 0.0
     var sawValue = false
     var stale = false
     var attrs = Map.empty[String, String]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (3, 1) => ts = fixed64(b, pos); pos += 8
-        case (4, 1) =>
-          value = java.lang.Double.longBitsToDouble(fixed64(b, pos))
-          sawValue = true; pos += 8
-        case (6, 1) => // sfixed64
-          value = fixed64(b, pos).toDouble; sawValue = true; pos += 8
-        case (7, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          attrs = attrs ++ decodeKeyValue(b, p2, p2 + len, utf8)
-          pos = p2 + len
-        case (8, 0) => // flags
-          val (v, p2) = varint(b, pos)
-          stale = (v & FlagNoRecordedValue) != 0L
-          pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    val exemplars = mutable.ArrayBuffer.empty[Wire.Reader]
+    while (r.next()) (r.field, r.wireType) match {
+      case (3, 1) => ts = r.fixed64()
+      case (4, 1) => value = r.double(); sawValue = true
+      case (5, 2) => exemplars += r.message()
+      case (6, 1) => value = r.fixed64().toDouble; sawValue = true // sfixed64
+      case (7, 2) => attrs ++= decodeKeyValue(r.message(), utf8)
+      case (8, 0) => stale = (r.varint() & FlagNoRecordedValue) != 0L // flags
+      case _ => r.skip()
     }
-    if (ts == 0L || !sawValue || stale) None else Some((attrs, ts, value))
+    if (ts == 0L || !sawValue || stale) None
+    else Some((attrs, ts, value, exemplars.toSeq))
   }
 
   /** One OTLP ExponentialHistogramDataPoint → a Prometheus native
@@ -430,81 +313,51 @@ object Otlp {
     * ExponentialHistogramDataPoint): attributes=1, time_unix_nano=3,
     * count=4 (fixed64), sum=5 (double), scale=6 (sint32), zero_count=7
     * (fixed64), positive=8, negative=9 (Buckets{offset=1 sint32,
-    * bucket_counts=2 repeated uint64}), flags=10, zero_threshold=14. */
-  private def decodeExponentialPoint(b: Array[Byte], start: Int,
-      end: Int, utf8: Boolean): Option[RemoteWrite.HistogramSample] = {
-    var pos = start
+    * bucket_counts=2 repeated uint64}), flags=10, exemplars=11,
+    * zero_threshold=14. */
+  private def decodeExponentialPoint(r: Wire.Reader, utf8: Boolean)
+      : Option[(RemoteWrite.HistogramSample, Seq[Wire.Reader])] = {
     var ts = 0L; var count = 0L; var sum = 0.0; var scale = 0
     var zeroCount = 0L; var zeroTh = 0.0; var stale = false
     var attrs = Map.empty[String, String]
     var posB: (Int, Seq[Long]) = (0, Nil)
     var negB: (Int, Seq[Long]) = (0, Nil)
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          attrs = attrs ++ decodeKeyValue(b, p2, p2 + len, utf8)
-          pos = p2 + len
-        case (3, 1) => ts = fixed64(b, pos); pos += 8
-        case (4, 1) => count = fixed64(b, pos); pos += 8
-        case (5, 1) =>
-          sum = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (6, 0) =>
-          val (v, p2) = varint(b, pos)
-          scale = RemoteWrite.zigzagDecode(v).toInt; pos = p2
-        case (7, 1) => zeroCount = fixed64(b, pos); pos += 8
-        case (8, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          posB = decodeExpBuckets(b, p2, p2 + len); pos = p2 + len
-        case (9, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          negB = decodeExpBuckets(b, p2, p2 + len); pos = p2 + len
-        case (10, 0) =>
-          val (v, p2) = varint(b, pos)
-          stale = (v & FlagNoRecordedValue) != 0L; pos = p2
-        case (14, 1) =>
-          zeroTh = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    val exemplars = mutable.ArrayBuffer.empty[Wire.Reader]
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => attrs ++= decodeKeyValue(r.message(), utf8)
+      case (3, 1) => ts = r.fixed64()
+      case (4, 1) => count = r.fixed64()
+      case (5, 1) => sum = r.double()
+      case (6, 0) => scale = r.sint().toInt
+      case (7, 1) => zeroCount = r.fixed64()
+      case (8, 2) => posB = decodeExpBuckets(r.message())
+      case (9, 2) => negB = decodeExpBuckets(r.message())
+      case (10, 0) => stale = (r.varint() & FlagNoRecordedValue) != 0L
+      case (11, 2) => exemplars += r.message()
+      case (14, 1) => zeroTh = r.double()
+      case _ => r.skip()
     }
     if (ts == 0L || stale || scale < -4) None
     else {
       val down = math.max(0, scale - 8)
-      Some(RemoteWrite.HistogramSample("", attrs, ts / 1000000L,
+      Some((RemoteWrite.HistogramSample("", attrs, ts / 1000000L,
         count = count.toDouble, sum = sum, schema = math.min(scale, 8),
         zeroThreshold = zeroTh, zeroCount = zeroCount.toDouble,
         positiveBuckets = toPromBuckets(posB._1, posB._2, down),
-        negativeBuckets = toPromBuckets(negB._1, negB._2, down)))
+        negativeBuckets = toPromBuckets(negB._1, negB._2, down)),
+        exemplars.toSeq))
     }
   }
 
   /** ExponentialHistogramDataPoint.Buckets: offset (sint32) + repeated
     * uint64 bucket_counts (packed or unpacked). */
-  private def decodeExpBuckets(b: Array[Byte], start: Int,
-      end: Int): (Int, Seq[Long]) = {
-    var pos = start
+  private def decodeExpBuckets(r: Wire.Reader): (Int, Seq[Long]) = {
     var offset = 0
     val counts = mutable.ArrayBuffer.empty[Long]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 0) =>
-          val (v, p2) = varint(b, pos)
-          offset = RemoteWrite.zigzagDecode(v).toInt; pos = p2
-        case (2, 2) => // packed
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q < p2 + len) {
-            val (v, q2) = varint(b, q); counts += v; q = q2
-          }
-          pos = p2 + len
-        case (2, 0) =>
-          val (v, p2) = varint(b, pos); counts += v; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 0) => offset = r.sint().toInt
+      case (2, _) => r.packedVarints(counts += _)
+      case _ => r.skip()
     }
     (offset, counts.toSeq)
   }
@@ -526,62 +379,25 @@ object Otlp {
     merged.toSeq
   }
 
-  /** One data point's exemplar sub-spans, for any point kind (`exF` =
-    * that kind's exemplars field number: number 5, fixed-bucket
-    * histogram 8, exponential histogram 11). A second cheap walk over
-    * the point bytes — spans only, zero allocation for points without
-    * exemplars (attributes come from the point's first decode pass). */
-  private def exemplarSpans(b: Array[Byte], start: Int, end: Int,
-      exF: Int): Seq[(Int, Int)] = {
-    var pos = start
-    val ex = mutable.ArrayBuffer.empty[(Int, Int)]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (f, 2) if f == exF =>
-          val (len, p2) = lenAt(b, pos)
-          ex += ((p2, p2 + len)); pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
-    }
-    ex.toSeq
-  }
-
   /** One OTLP Exemplar → (exemplar labels, time ns, value). Field
     * numbers (metrics/v1 Exemplar): filtered_attributes=7,
     * time_unix_nano=2, as_double=3, span_id=4 (bytes → lowercase hex),
     * trace_id=5 (bytes → lowercase hex), as_int=6. Timeless or valueless
     * exemplars skip. */
-  private def decodeOtlpExemplar(b: Array[Byte], start: Int,
-      end: Int, utf8: Boolean): Option[(Map[String, String], Long, Double)] = {
-    var pos = start
+  private def decodeOtlpExemplar(r: Wire.Reader, utf8: Boolean)
+      : Option[(Map[String, String], Long, Double)] = {
     var ts = 0L; var v = 0.0; var saw = false
     var attrs = Map.empty[String, String]
     var traceId = ""; var spanId = ""
-    def hex(from: Int, len: Int): String =
-      (from until from + len).map(i => f"${b(i) & 0xff}%02x").mkString
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (7, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          attrs = attrs ++ decodeKeyValue(b, p2, p2 + len, utf8)
-          pos = p2 + len
-        case (2, 1) => ts = fixed64(b, pos); pos += 8
-        case (3, 1) =>
-          v = java.lang.Double.longBitsToDouble(fixed64(b, pos))
-          saw = true; pos += 8
-        case (6, 1) => v = fixed64(b, pos).toDouble; saw = true; pos += 8
-        case (4, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          spanId = hex(p2, len); pos = p2 + len
-        case (5, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          traceId = hex(p2, len); pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
+    while (r.next()) (r.field, r.wireType) match {
+      case (7, 2) => attrs ++= decodeKeyValue(r.message(), utf8)
+      case (2, 1) => ts = r.fixed64()
+      case (3, 1) => v = r.double(); saw = true
+      case (6, 1) => v = r.fixed64().toDouble; saw = true
+      case (4, 2) => spanId = hex(r.bytes())
+      case (5, 2) => traceId = hex(r.bytes())
+      case _ => r.skip()
     }
     if (ts == 0L || !saw) None
     else Some((attrs ++
@@ -596,48 +412,28 @@ object Otlp {
     * quantile_values=6 (ValueAtQuantile{ quantile=1, value=2 — both
     * double }), attributes=7, flags=8. Points with no timestamp or the
     * no-recorded-value staleness flag skip, like number points. */
-  private def decodeSummaryPoint(b: Array[Byte], start: Int, end: Int,
-      utf8: Boolean)
+  private def decodeSummaryPoint(r: Wire.Reader, utf8: Boolean)
       : Option[(Map[String, String], Long, Long, Double,
         Seq[(Double, Double)])] = {
-    var pos = start
     var ts = 0L; var count = 0L; var sum = 0.0; var stale = false
     var attrs = Map.empty[String, String]
     val quantiles = mutable.ArrayBuffer.empty[(Double, Double)]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (3, 1) => ts = fixed64(b, pos); pos += 8
-        case (4, 1) => count = fixed64(b, pos); pos += 8
-        case (5, 1) =>
-          sum = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (6, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          var qq = 0.0; var qv = 0.0
-          while (q < p2 + len) {
-            val (t2, q1) = varint(b, q)
-            q = q1
-            (t2 >> 3, t2 & 7) match {
-              case (1, 1) =>
-                qq = java.lang.Double.longBitsToDouble(fixed64(b, q)); q += 8
-              case (2, 1) =>
-                qv = java.lang.Double.longBitsToDouble(fixed64(b, q)); q += 8
-              case (_, wt) => q = skip(b, q, wt.toInt)
-            }
-          }
-          quantiles += ((qq, qv))
-          pos = p2 + len
-        case (7, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          attrs = attrs ++ decodeKeyValue(b, p2, p2 + len, utf8)
-          pos = p2 + len
-        case (8, 0) =>
-          val (v, p2) = varint(b, pos)
-          stale = (v & FlagNoRecordedValue) != 0L; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (3, 1) => ts = r.fixed64()
+      case (4, 1) => count = r.fixed64()
+      case (5, 1) => sum = r.double()
+      case (6, 2) =>
+        val vq = r.message()
+        var qq = 0.0; var qv = 0.0
+        while (vq.next()) (vq.field, vq.wireType) match {
+          case (1, 1) => qq = vq.double()
+          case (2, 1) => qv = vq.double()
+          case _ => vq.skip()
+        }
+        quantiles += ((qq, qv))
+      case (7, 2) => attrs ++= decodeKeyValue(r.message(), utf8)
+      case (8, 0) => stale = (r.varint() & FlagNoRecordedValue) != 0L
+      case _ => r.skip()
     }
     if (ts == 0L || stale) None
     else Some((attrs, ts, count, sum, quantiles.toSeq))
@@ -658,97 +454,43 @@ object Otlp {
     * Field numbers (HistogramDataPoint): attributes=9, time_unix_nano=3,
     * count=4 (fixed64), sum=5 (double), bucket_counts=6 (repeated
     * fixed64, packed), explicit_bounds=7 (repeated double, packed),
-    * flags=10. */
-  private def decodeFixedHistogramPoint(b: Array[Byte], start: Int,
-      end: Int, utf8: Boolean): Option[RemoteWrite.HistogramSample] = {
-    var pos = start
+    * exemplars=8, flags=10. */
+  private def decodeFixedHistogramPoint(r: Wire.Reader, utf8: Boolean)
+      : Option[(RemoteWrite.HistogramSample, Seq[Wire.Reader])] = {
     var ts = 0L; var count = 0L; var sum = 0.0; var stale = false
     var attrs = Map.empty[String, String]
     val counts = mutable.ArrayBuffer.empty[Long]
     val bounds = mutable.ArrayBuffer.empty[Double]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (9, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          attrs = attrs ++ decodeKeyValue(b, p2, p2 + len, utf8)
-          pos = p2 + len
-        case (3, 1) => ts = fixed64(b, pos); pos += 8
-        case (4, 1) => count = fixed64(b, pos); pos += 8
-        case (5, 1) =>
-          sum = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (6, 2) => // packed fixed64 bucket_counts
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q + 8 <= p2 + len) { counts += fixed64(b, q); q += 8 }
-          pos = p2 + len
-        case (6, 1) => counts += fixed64(b, pos); pos += 8
-        case (7, 2) => // packed double explicit_bounds
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q + 8 <= p2 + len) {
-            bounds += java.lang.Double.longBitsToDouble(fixed64(b, q)); q += 8
-          }
-          pos = p2 + len
-        case (7, 1) =>
-          bounds += java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (10, 0) =>
-          val (v, p2) = varint(b, pos)
-          stale = (v & FlagNoRecordedValue) != 0L; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    val exemplars = mutable.ArrayBuffer.empty[Wire.Reader]
+    while (r.next()) (r.field, r.wireType) match {
+      case (9, 2) => attrs ++= decodeKeyValue(r.message(), utf8)
+      case (3, 1) => ts = r.fixed64()
+      case (4, 1) => count = r.fixed64()
+      case (5, 1) => sum = r.double()
+      case (6, _) => r.packedFixed64(counts += _) // bucket_counts
+      case (7, _) => r.packedDoubles(bounds += _) // explicit_bounds
+      case (8, 2) => exemplars += r.message()
+      case (10, 0) => stale = (r.varint() & FlagNoRecordedValue) != 0L
+      case _ => r.skip()
     }
     if (ts == 0L || stale || bounds.isEmpty || counts.length != bounds.length + 1)
       None
-    else Some(RemoteWrite.HistogramSample("", attrs, ts / 1000000L,
+    else Some((RemoteWrite.HistogramSample("", attrs, ts / 1000000L,
       count = count.toDouble, sum = sum, schema = -53,
       zeroThreshold = 0.0, zeroCount = 0.0,
       positiveBuckets = counts.zipWithIndex.collect {
         case (c, i) if c != 0L => (i, c.toDouble) }.toSeq,
       negativeBuckets = Nil,
-      customValues = bounds.toSeq))
+      customValues = bounds.toSeq), exemplars.toSeq))
   }
 
-  /** A repeated-KeyValue list where each element is a `fieldNum`-tagged
-    * length-delimited KeyValue (Resource.attributes = field 1). */
-  private def decodeAttrList(b: Array[Byte], start: Int, end: Int,
-      fieldNum: Int, utf8: Boolean): Map[String, String] = {
-    var pos = start
-    var attrs = Map.empty[String, String]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (f, 2) if f == fieldNum =>
-          val (len, p2) = lenAt(b, pos)
-          attrs = attrs ++ decodeKeyValue(b, p2, p2 + len, utf8)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
-    }
-    attrs
-  }
-
-  private def decodeKeyValue(b: Array[Byte], start: Int,
-      end: Int, utf8: Boolean): Map[String, String] = {
-    var pos = start
+  private def decodeKeyValue(r: Wire.Reader, utf8: Boolean): Map[String, String] = {
     var key = ""
     var value = ""
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          key = new String(b, p2, len, "UTF-8")
-          pos = p2 + len
-        case (2, 2) => // AnyValue
-          val (len, p2) = lenAt(b, pos)
-          value = decodeAnyValue(b, p2, p2 + len)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => key = r.string()
+      case (2, 2) => value = decodeAnyValue(r.message())
+      case _ => r.skip()
     }
     if (key.isEmpty) Map.empty
     else Map((if (utf8) key else sanitizeLabel(key)) -> value)
@@ -762,66 +504,31 @@ object Otlp {
     if (s.nonEmpty && s.head.isDigit) "_" + s else s
   }
 
-  private def decodeAnyValue(b: Array[Byte], start: Int, end: Int): String = {
-    var pos = start
-    var out = ""
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) => // string_value
-          val (len, p2) = lenAt(b, pos)
-          out = new String(b, p2, len, "UTF-8")
-          pos = p2 + len
-        case (2, 0) => // bool_value
-          val (v, p2) = varint(b, pos); out = (v != 0L).toString; pos = p2
-        case (3, 0) => // int_value
-          val (v, p2) = varint(b, pos); out = v.toString; pos = p2
-        case (4, 1) => // double_value
-          out = java.lang.Double.longBitsToDouble(fixed64(b, pos)).toString
-          pos += 8
-        case (5, 2) => // array_value: ArrayValue{ repeated AnyValue values = 1 }
-          val (len, p2) = lenAt(b, pos)
-          val items = mutable.ArrayBuffer.empty[String]
-          var q = p2
-          while (q < p2 + len) {
-            val (t2, q1) = varint(b, q)
-            q = q1
-            (t2 >> 3, t2 & 7) match {
-              case (1, 2) =>
-                val (l2, q2) = lenAt(b, q)
-                items += decodeAnyValue(b, q2, q2 + l2)
-                q = q2 + l2
-              case (_, wt) => q = skip(b, q, wt.toInt)
-            }
-          }
-          out = items.mkString("[", ",", "]")
-          pos = p2 + len
-        case (6, 2) => // kvlist_value: KeyValueList{ repeated KeyValue values = 1 }
-          val (len, p2) = lenAt(b, pos)
-          val items = mutable.ArrayBuffer.empty[String]
-          var q = p2
-          while (q < p2 + len) {
-            val (t2, q1) = varint(b, q)
-            q = q1
-            (t2 >> 3, t2 & 7) match {
-              case (1, 2) =>
-                val (l2, q2) = lenAt(b, q)
-                decodeKeyValue(b, q2, q2 + l2, utf8 = false).foreach { case (k, v) =>
-                  items += s"$k=$v" }
-                q = q2 + l2
-              case (_, wt) => q = skip(b, q, wt.toInt)
-            }
-          }
-          out = items.mkString("{", ",", "}")
-          pos = p2 + len
-        case (7, 2) => // bytes_value -> base64 (never a silently-empty label)
-          val (len, p2) = lenAt(b, pos)
-          out = java.util.Base64.getEncoder.encodeToString(
-            java.util.Arrays.copyOfRange(b, p2, p2 + len))
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
+  private def decodeAnyValue(r: Wire.Reader): String = {
+    // the `values = 1` records of an ArrayValue or a KeyValueList
+    def values(list: Wire.Reader)(f: Wire.Reader => Unit): Unit =
+      while (list.next()) (list.field, list.wireType) match {
+        case (1, 2) => f(list.message())
+        case _ => list.skip()
       }
+    var out = ""
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => out = r.string() // string_value
+      case (2, 0) => out = (r.varint() != 0L).toString // bool_value
+      case (3, 0) => out = r.varint().toString // int_value
+      case (4, 1) => out = r.double().toString // double_value
+      case (5, 2) => // array_value: ArrayValue{ repeated AnyValue values = 1 }
+        val items = mutable.ArrayBuffer.empty[String]
+        values(r.message())(v => items += decodeAnyValue(v))
+        out = items.mkString("[", ",", "]")
+      case (6, 2) => // kvlist_value: KeyValueList{ repeated KeyValue values = 1 }
+        val items = mutable.ArrayBuffer.empty[String]
+        values(r.message())(kv => decodeKeyValue(kv, utf8 = false)
+          .foreach { case (k, v) => items += s"$k=$v" })
+        out = items.mkString("{", ",", "}")
+      // bytes_value -> base64 (never a silently-empty label)
+      case (7, 2) => out = java.util.Base64.getEncoder.encodeToString(r.bytes())
+      case _ => r.skip()
     }
     out
   }
@@ -838,7 +545,6 @@ object Otlp {
   // Test/fixture encoder (differential twin of the decoder, like
   // RemoteWrite.encode): one ResourceMetrics with the given resource
   // attributes and one gauge or sum metric per (name, points) entry.
-  import RemoteWrite.{lenDelim, writeVarint, fixed64Bytes}
 
   /** Fixture Exemplar (ids as lowercase hex strings). */
   final case class ExemplarSpec(attrs: Map[String, String], timeNano: Long,
@@ -872,142 +578,77 @@ object Otlp {
 
   def encode(resourceAttrs: Map[String, String],
       metrics: Seq[MetricSpec]): Array[Byte] = {
-    def anyString(v: String): Array[Byte] =
-      lenDelim(1, v.getBytes("UTF-8")).toArray
-    def keyValue(k: String, v: String): Array[Byte] =
-      (lenDelim(1, k.getBytes("UTF-8")) ++ lenDelim(2, anyString(v))).toArray
-    val resource = resourceAttrs.toSeq.sortBy(_._1)
-      .flatMap { case (k, v) => lenDelim(1, keyValue(k, v)) }.toArray
-    val metricBufs = metrics.map { m =>
-      val pts = m.points.flatMap { p =>
-        val dp = mutable.ArrayBuffer.empty[Byte]
-        dp += ((3 << 3) | 1).toByte
-        dp ++= fixed64LE(p.timeNano)
-        if (!p.noValue) {
-          if (p.asInt) {
-            dp += ((6 << 3) | 1).toByte
-            dp ++= fixed64LE(p.value.toLong)
-          } else {
-            dp += ((4 << 3) | 1).toByte
-            dp ++= fixed64Bytes(p.value)
-          }
-        }
-        if (p.flags != 0L) {
-          dp += ((8 << 3) | 0).toByte
-          dp ++= writeVarint(p.flags)
-        }
-        p.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          dp ++= lenDelim(7, keyValue(k, v))
-        }
-        p.exemplars.foreach { x =>
-          val xb = mutable.ArrayBuffer.empty[Byte]
-          x.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-            xb ++= lenDelim(7, keyValue(k, v))
-          }
-          xb += ((2 << 3) | 1).toByte; xb ++= fixed64LE(x.timeNano)
-          xb += ((3 << 3) | 1).toByte; xb ++= fixed64Bytes(x.value)
-          def unhex(h: String): Array[Byte] =
-            h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-          if (x.spanIdHex.nonEmpty) xb ++= lenDelim(4, unhex(x.spanIdHex))
-          if (x.traceIdHex.nonEmpty) xb ++= lenDelim(5, unhex(x.traceIdHex))
-          dp ++= lenDelim(5, xb.toArray)
-        }
-        lenDelim(1, dp.toArray)
-      }.toArray
-      val sumExtra =
-        if (m.sum) {
-          val t = mutable.ArrayBuffer.empty[Byte]
-          t += ((2 << 3) | 0).toByte
-          t ++= writeVarint(if (m.deltaTemporality) 1L else 2L)
-          if (m.monotonic) {
-            t += ((3 << 3) | 0).toByte
-            t ++= writeVarint(1L)
-          }
-          t.toArray
-        } else Array.emptyByteArray
-      def temporality: Array[Byte] = {
-        val t = mutable.ArrayBuffer.empty[Byte]
-        t += ((2 << 3) | 0).toByte
-        t ++= writeVarint(if (m.deltaTemporality) 1L else 2L)
-        t.toArray
+    // KeyValue { key = 1; AnyValue value = 2 { string_value = 1 } }
+    def keyValues(w: Wire.Writer, field: Int, attrs: Map[String, String]): Unit =
+      attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
+        w.message(field)(_.string(1, k).message(2)(_.string(1, v))) }
+    def flags(w: Wire.Writer, field: Int, v: Long): Unit =
+      if (v != 0L) w.varint(field, v)
+    def numberPoint(dp: Wire.Writer, p: Point): Unit = {
+      dp.fixed64(3, p.timeNano)
+      if (!p.noValue) {
+        if (p.asInt) dp.fixed64(6, p.value.toLong) else dp.double(4, p.value)
       }
-      def expBuckets(field: Int, offset: Int, counts: Seq[Long]): Array[Byte] = {
-        val bb = mutable.ArrayBuffer.empty[Byte]
-        bb += ((1 << 3) | 0).toByte
-        bb ++= writeVarint(RemoteWrite.zigzagEncode(offset.toLong))
-        val packed = counts.flatMap(writeVarint).toArray
-        bb ++= lenDelim(2, packed)
-        lenDelim(field, bb.toArray).toArray
+      flags(dp, 8, p.flags)
+      keyValues(dp, 7, p.attrs)
+      p.exemplars.foreach { x =>
+        def unhex(h: String): Array[Byte] =
+          h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+        dp.message(5) { xb =>
+          keyValues(xb, 7, x.attrs)
+          xb.fixed64(2, x.timeNano).double(3, x.value)
+          if (x.spanIdHex.nonEmpty) xb.bytes(4, unhex(x.spanIdHex))
+          if (x.traceIdHex.nonEmpty) xb.bytes(5, unhex(x.traceIdHex))
+        }
       }
-      val expPts = m.expPoints.flatMap { p =>
-        val dp = mutable.ArrayBuffer.empty[Byte]
-        p.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          dp ++= lenDelim(1, keyValue(k, v))
-        }
-        dp += ((3 << 3) | 1).toByte; dp ++= fixed64LE(p.timeNano)
-        dp += ((4 << 3) | 1).toByte; dp ++= fixed64LE(p.count)
-        dp += ((5 << 3) | 1).toByte; dp ++= fixed64Bytes(p.sum)
-        dp += ((6 << 3) | 0).toByte
-        dp ++= writeVarint(RemoteWrite.zigzagEncode(p.scale.toLong))
-        dp += ((7 << 3) | 1).toByte; dp ++= fixed64LE(p.zeroCount)
-        if (p.posCounts.nonEmpty) dp ++= expBuckets(8, p.posOffset, p.posCounts)
-        if (p.negCounts.nonEmpty) dp ++= expBuckets(9, p.negOffset, p.negCounts)
-        if (p.flags != 0L) {
-          dp += ((10 << 3) | 0).toByte; dp ++= writeVarint(p.flags)
-        }
-        if (p.zeroThreshold != 0.0) {
-          dp += ((14 << 3) | 1).toByte; dp ++= fixed64Bytes(p.zeroThreshold)
-        }
-        lenDelim(1, dp.toArray)
-      }.toArray
-      val histPts = m.histPoints.flatMap { p =>
-        val dp = mutable.ArrayBuffer.empty[Byte]
-        dp += ((3 << 3) | 1).toByte; dp ++= fixed64LE(p.timeNano)
-        dp += ((4 << 3) | 1).toByte; dp ++= fixed64LE(p.count)
-        dp += ((5 << 3) | 1).toByte; dp ++= fixed64Bytes(p.sum)
-        dp ++= lenDelim(6,
-          p.bucketCounts.flatMap(fixed64LE).toArray)
-        dp ++= lenDelim(7,
-          p.explicitBounds.flatMap(fixed64Bytes).toArray)
-        if (p.flags != 0L) {
-          dp += ((10 << 3) | 0).toByte; dp ++= writeVarint(p.flags)
-        }
-        p.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          dp ++= lenDelim(9, keyValue(k, v))
-        }
-        lenDelim(1, dp.toArray)
-      }.toArray
-      val summaryPts = m.summaryPoints.flatMap { p =>
-        val dp = mutable.ArrayBuffer.empty[Byte]
-        dp += ((3 << 3) | 1).toByte; dp ++= fixed64LE(p.timeNano)
-        dp += ((4 << 3) | 1).toByte; dp ++= fixed64LE(p.count)
-        dp += ((5 << 3) | 1).toByte; dp ++= fixed64Bytes(p.sum)
-        p.quantiles.foreach { case (q, v) =>
-          val vq = mutable.ArrayBuffer.empty[Byte]
-          vq += ((1 << 3) | 1).toByte; vq ++= fixed64Bytes(q)
-          vq += ((2 << 3) | 1).toByte; vq ++= fixed64Bytes(v)
-          dp ++= lenDelim(6, vq.toArray)
-        }
-        p.attrs.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          dp ++= lenDelim(7, keyValue(k, v))
-        }
-        if (p.flags != 0L) {
-          dp += ((8 << 3) | 0).toByte; dp ++= writeVarint(p.flags)
-        }
-        lenDelim(1, dp.toArray)
-      }.toArray
-      val body = lenDelim(1, m.name.getBytes("UTF-8")) ++
-        (if (m.expPoints.nonEmpty) lenDelim(10, expPts ++ temporality)
-         else if (m.histPoints.nonEmpty) lenDelim(9, histPts ++ temporality)
-         else if (m.summaryPoints.nonEmpty) lenDelim(11, summaryPts)
-         else lenDelim(if (m.sum) 7 else 5, pts ++ sumExtra))
-      lenDelim(2, body.toArray) // ScopeMetrics.metrics
     }
-    val scopeMetrics = metricBufs.flatten.toArray
-    val rm = lenDelim(1, resource) ++ lenDelim(2, scopeMetrics)
-    lenDelim(1, rm.toArray).toArray // request.resource_metrics
+    def expPoint(dp: Wire.Writer, p: ExpHistPoint): Unit = {
+      keyValues(dp, 1, p.attrs)
+      dp.fixed64(3, p.timeNano).fixed64(4, p.count).double(5, p.sum)
+        .sint(6, p.scale.toLong).fixed64(7, p.zeroCount)
+      def buckets(field: Int, offset: Int, counts: Seq[Long]): Unit =
+        if (counts.nonEmpty)
+          dp.message(field)(_.sint(1, offset.toLong).packedVarints(2, counts))
+      buckets(8, p.posOffset, p.posCounts)
+      buckets(9, p.negOffset, p.negCounts)
+      flags(dp, 10, p.flags)
+      if (p.zeroThreshold != 0.0) dp.double(14, p.zeroThreshold)
+    }
+    def histPoint(dp: Wire.Writer, p: HistPoint): Unit = {
+      dp.fixed64(3, p.timeNano).fixed64(4, p.count).double(5, p.sum)
+        .packedFixed64(6, p.bucketCounts).packedDoubles(7, p.explicitBounds)
+      flags(dp, 10, p.flags)
+      keyValues(dp, 9, p.attrs)
+    }
+    def summaryPoint(dp: Wire.Writer, p: SummaryPoint): Unit = {
+      dp.fixed64(3, p.timeNano).fixed64(4, p.count).double(5, p.sum)
+      p.quantiles.foreach { case (q, v) => dp.message(6)(_.double(1, q).double(2, v)) }
+      keyValues(dp, 7, p.attrs)
+      flags(dp, 8, p.flags)
+    }
+    def metric(mw: Wire.Writer, m: MetricSpec): Unit = {
+      def temporality(w: Wire.Writer): Unit =
+        w.varint(2, if (m.deltaTemporality) 1L else 2L)
+      mw.string(1, m.name)
+      if (m.expPoints.nonEmpty) mw.message(10) { d =>
+        m.expPoints.foreach(p => d.message(1)(expPoint(_, p))); temporality(d) }
+      else if (m.histPoints.nonEmpty) mw.message(9) { d =>
+        m.histPoints.foreach(p => d.message(1)(histPoint(_, p))); temporality(d) }
+      else if (m.summaryPoints.nonEmpty) mw.message(11) { d =>
+        m.summaryPoints.foreach(p => d.message(1)(summaryPoint(_, p))) }
+      else mw.message(if (m.sum) 7 else 5) { d =>
+        m.points.foreach(p => d.message(1)(numberPoint(_, p)))
+        if (m.sum) {
+          temporality(d)
+          if (m.monotonic) d.varint(3, 1L)
+        }
+      }
+    }
+    val w = new Wire.Writer
+    w.message(1) { rm => // request.resource_metrics
+      rm.message(1)(keyValues(_, 1, resourceAttrs)) // resource
+      rm.message(2)(sm => metrics.foreach(m => sm.message(2)(metric(_, m))))
+    }
+    w.toByteArray
   }
-
-  private def fixed64LE(v: Long): Seq[Byte] =
-    (0 until 8).map(i => ((v >> (8 * i)) & 0xff).toByte)
 }

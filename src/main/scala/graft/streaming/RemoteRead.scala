@@ -41,13 +41,12 @@ import scala.collection.mutable
   * Chunked frames are NOT snappy-compressed (per the protocol — XOR
   * chunks are already compact). Sampled bodies stay snappy BLOCK
   * compressed on both directions (same framing as remote write;
-  * [[RemoteWrite.unframe]] handles the sniffing on the way in). Wire
-  * primitives are shared with [[RemoteWrite]] — same
-  * varint/length-validation hardening, so crafted length fields error
-  * instead of spinning the decode loop.
+  * [[RemoteWrite.unframe]] handles the sniffing on the way in). Every
+  * record reads and writes through [[Wire]] (record bounds, unknown-field
+  * skip, depth cap), and the Label and Sample codecs are
+  * [[RemoteWrite]]'s.
   */
 object RemoteRead {
-  import RemoteWrite.{varint, lenAt, skip, lenDelim, writeVarint, fixed64Bytes}
 
   /** Matcher type ordinals follow prompb: 0=EQ, 1=NEQ, 2=RE, 3=NRE. */
   final case class Matcher(tpe: Int, name: String, value: String)
@@ -94,29 +93,15 @@ object RemoteRead {
   /** Decode a (snappy-framed or raw) ReadRequest, negotiation left to the
     * caller. */
   def decodeReadRequest(bytes: Array[Byte]): ReadRequest = {
-    val b = RemoteWrite.unframe(bytes)
     val queries = mutable.ArrayBuffer.empty[Query]
-    val accepted = mutable.ArrayBuffer.empty[Long]
-    var pos = 0
-    while (pos < b.length) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          queries += decodeQuery(b, p2, p2 + len)
-          pos = p2 + len
-        case (2, 2) => // packed repeated enum
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q < p2 + len) { val (v, qn) = varint(b, q); accepted += v; q = qn }
-          pos = p2 + len
-        case (2, 0) => // unpacked repeated enum
-          val (v, p2) = varint(b, pos); accepted += v; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    val accepted = mutable.ArrayBuffer.empty[Int]
+    val r = new Wire.Reader(RemoteWrite.unframe(bytes))
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => queries += decodeQuery(r.message())
+      case (2, _) => r.packedVarints(v => accepted += v.toInt) // repeated enum
+      case _ => r.skip()
     }
-    ReadRequest(queries.toSeq, accepted.map(_.toInt).toSeq)
+    ReadRequest(queries.toSeq, accepted.toSeq)
   }
 
   /** Decode a ReadRequest for the SAMPLES path. Fails loudly when the
@@ -131,175 +116,109 @@ object RemoteRead {
     req.queries
   }
 
-  private def decodeQuery(b: Array[Byte], start: Int, end: Int): Query = {
-    var pos = start
+  private def decodeQuery(r: Wire.Reader): Query = {
     var startMs = 0L
     var endMs = 0L
     val matchers = mutable.ArrayBuffer.empty[Matcher]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 0) => val (v, p2) = varint(b, pos); startMs = v; pos = p2
-        case (2, 0) => val (v, p2) = varint(b, pos); endMs = v; pos = p2
-        case (3, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          matchers += decodeMatcher(b, p2, p2 + len)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt) // hints etc.
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 0) => startMs = r.varint()
+      case (2, 0) => endMs = r.varint()
+      case (3, 2) => matchers += decodeMatcher(r.message())
+      case _ => r.skip() // hints etc.
     }
     Query(startMs, endMs, matchers.toSeq)
   }
 
-  private def decodeMatcher(b: Array[Byte], start: Int, end: Int): Matcher = {
-    var pos = start
+  private def decodeMatcher(r: Wire.Reader): Matcher = {
     var tpe = 0
     var name = ""
     var value = ""
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 0) => val (v, p2) = varint(b, pos); tpe = v.toInt; pos = p2
-        case (f, 2) if f == 2 || f == 3 =>
-          val (len, p2) = lenAt(b, pos)
-          val s = new String(b, p2, len, "UTF-8")
-          if (f == 2) name = s else value = s
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 0) => tpe = r.varint().toInt
+      case (2, 2) => name = r.string()
+      case (3, 2) => value = r.string()
+      case _ => r.skip()
     }
     Matcher(tpe, name, value)
   }
 
   /** Encode a ReadResponse: one QueryResult per query, in request order. */
   def encodeResponse(results: Seq[Seq[Series]]): Array[Byte] = {
-    val out = mutable.ArrayBuffer.empty[Byte]
+    val w = new Wire.Writer
     results.foreach { seriesList =>
-      val qr = mutable.ArrayBuffer.empty[Byte]
-      seriesList.foreach { s =>
-        val ts = mutable.ArrayBuffer.empty[Byte]
-        s.labels.sortBy(_._1).foreach { case (k, v) =>
-          val lbl = lenDelim(1, k.getBytes("UTF-8")) ++
-            lenDelim(2, v.getBytes("UTF-8"))
-          ts ++= lenDelim(1, lbl.toArray)
+      w.message(1)(qr => seriesList.foreach { s =>
+        qr.message(1) { ts =>
+          RemoteWrite.writeLabels(ts, s.labels.sortBy(_._1))
+          s.samples.sortBy(_._1).foreach { case (t, v) =>
+            RemoteWrite.writeSample(ts, t, v) }
         }
-        s.samples.sortBy(_._1).foreach { case (t, v) =>
-          val sm = mutable.ArrayBuffer.empty[Byte]
-          sm += ((1 << 3) | 1).toByte
-          sm ++= fixed64Bytes(v)
-          sm += ((2 << 3) | 0).toByte
-          sm ++= writeVarint(t)
-          ts ++= lenDelim(2, sm.toArray)
-        }
-        qr ++= lenDelim(1, ts.toArray)
-      }
-      out ++= lenDelim(1, qr.toArray)
+      })
     }
-    out.toArray
+    w.toByteArray
   }
 
   /** Encode a ReadRequest — the CLIENT side, for tests and soak harnesses
     * (differential twin of [[encodeResponse]], like RemoteWrite.encode). */
   def encodeRequest(queries: Seq[Query],
       acceptedResponseTypes: Seq[Int] = Nil): Array[Byte] = {
-    val out = mutable.ArrayBuffer.empty[Byte]
+    val w = new Wire.Writer
     queries.foreach { q =>
-      val qb = mutable.ArrayBuffer.empty[Byte]
-      qb += ((1 << 3) | 0).toByte
-      qb ++= writeVarint(q.startMs)
-      qb += ((2 << 3) | 0).toByte
-      qb ++= writeVarint(q.endMs)
-      q.matchers.foreach { m =>
-        val mb = mutable.ArrayBuffer.empty[Byte]
-        mb += ((1 << 3) | 0).toByte
-        mb ++= writeVarint(m.tpe.toLong)
-        mb ++= lenDelim(2, m.name.getBytes("UTF-8"))
-        mb ++= lenDelim(3, m.value.getBytes("UTF-8"))
-        qb ++= lenDelim(3, mb.toArray)
+      w.message(1) { qb =>
+        qb.varint(1, q.startMs).varint(2, q.endMs)
+        q.matchers.foreach { m =>
+          qb.message(3)(_.varint(1, m.tpe.toLong).string(2, m.name)
+            .string(3, m.value))
+        }
       }
-      out ++= lenDelim(1, qb.toArray)
     }
-    if (acceptedResponseTypes.nonEmpty) {
-      val packed = mutable.ArrayBuffer.empty[Byte]
-      acceptedResponseTypes.foreach(t => packed ++= writeVarint(t.toLong))
-      out ++= lenDelim(2, packed.toArray)
-    }
-    out.toArray
+    if (acceptedResponseTypes.nonEmpty)
+      w.packedVarints(2, acceptedResponseTypes.map(_.toLong))
+    w.toByteArray
   }
 
   /** Decode a (snappy-framed or raw) ReadResponse — client side. */
   def decodeResponse(bytes: Array[Byte]): Seq[Seq[Series]] = {
-    val b = RemoteWrite.unframe(bytes)
     val results = mutable.ArrayBuffer.empty[Seq[Series]]
-    var pos = 0
-    while (pos < b.length) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          results += decodeQueryResult(b, p2, p2 + len)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    val r = new Wire.Reader(RemoteWrite.unframe(bytes))
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => // QueryResult { repeated TimeSeries timeseries = 1; }
+        val qr = r.message()
+        val series = mutable.ArrayBuffer.empty[Series]
+        while (qr.next()) (qr.field, qr.wireType) match {
+          case (1, 2) => series += decodeSeries(qr.message(), chunked = false)
+          case _ => qr.skip()
+        }
+        results += series.toSeq
+      case _ => r.skip()
     }
     results.toSeq
   }
 
-  private def decodeQueryResult(b: Array[Byte], start: Int, end: Int): Seq[Series] = {
-    var pos = start
-    val series = mutable.ArrayBuffer.empty[Series]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          series += decodeTimeSeries(b, p2, p2 + len)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
-    }
-    series.toSeq
-  }
-
-  private def decodeTimeSeries(b: Array[Byte], start: Int, end: Int): Series = {
-    var pos = start
+  /** A TimeSeries (`chunked = false`: samples at field 2) or a
+    * ChunkedSeries (`chunked = true`: XOR chunks at field 2, expanded to
+    * samples); both carry their labels at field 1. */
+  private def decodeSeries(r: Wire.Reader, chunked: Boolean): Series = {
     val labels = mutable.ArrayBuffer.empty[(String, String)]
     val samples = mutable.ArrayBuffer.empty[(Long, Double)]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          labels += decodeLabelPair(b, p2, p2 + len)
-          pos = p2 + len
-        case (2, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          samples += decodeSamplePair(b, p2, p2 + len)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => labels += RemoteWrite.readLabel(r.message())
+      case (2, 2) if chunked => samples ++= decodeChunk(r.message())
+      case (2, 2) => samples += RemoteWrite.readSample(r.message())
+      case _ => r.skip()
     }
     Series(labels.toSeq, samples.toSeq)
   }
 
-  private def decodeLabelPair(b: Array[Byte], start: Int, end: Int): (String, String) = {
-    var pos = start
-    var name = ""
-    var value = ""
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      val (len, p2) = lenAt(b, pos)
-      val s = new String(b, p2, len, "UTF-8")
-      if ((tag >> 3) == 1) name = s else if ((tag >> 3) == 2) value = s
-      pos = p2 + len
+  private def decodeChunk(r: Wire.Reader): Seq[(Long, Double)] = {
+    var enc = -1
+    var data: Array[Byte] = Array.empty
+    while (r.next()) (r.field, r.wireType) match {
+      case (3, 0) => enc = r.varint().toInt
+      case (4, 2) => data = r.bytes()
+      case _ => r.skip()
     }
-    (name, value)
+    if (enc != 1) sys.error(s"unsupported chunk encoding $enc")
+    XorChunk.decode(data)
   }
 
   // ---- STREAMED_XOR_CHUNKS (response type 1) --------------------------
@@ -325,17 +244,10 @@ object RemoteRead {
 
   /** Wrap one marshaled ChunkedReadResponse into a stream frame:
     * uvarint(len) ++ 4-byte big-endian CRC32-Castagnoli ++ data. */
-  def frame(data: Array[Byte]): Array[Byte] = {
-    val out = mutable.ArrayBuffer.empty[Byte]
-    out ++= writeVarint(data.length.toLong)
-    val crc = crc32c(data)
-    out += ((crc >>> 24) & 0xff).toByte
-    out += ((crc >>> 16) & 0xff).toByte
-    out += ((crc >>> 8) & 0xff).toByte
-    out += (crc & 0xff).toByte
-    out ++= data
-    out.toArray
-  }
+  def frame(data: Array[Byte]): Array[Byte] =
+    new Wire.Writer().rawVarint(data.length.toLong)
+      .raw(java.nio.ByteBuffer.allocate(4).putInt(crc32c(data)).array())
+      .raw(data).toByteArray
 
   /** Drive a TRUE streaming chunked-read response (round 12): for each
     * query, in order, group its series_key-sorted row iterator into
@@ -370,18 +282,17 @@ object RemoteRead {
     * validating each CRC (client side / tests). */
   def unframeAll(stream: Array[Byte]): Seq[Array[Byte]] = {
     val out = mutable.ArrayBuffer.empty[Array[Byte]]
-    var pos = 0
-    while (pos < stream.length) {
-      val (len, p1) = varint(stream, pos)
-      if (len < 0 || p1 + 4 + len > stream.length)
-        sys.error(s"chunked frame overruns the stream at $pos")
-      val want = ((stream(p1) & 0xff) << 24) | ((stream(p1 + 1) & 0xff) << 16) |
-        ((stream(p1 + 2) & 0xff) << 8) | (stream(p1 + 3) & 0xff)
-      val data = java.util.Arrays.copyOfRange(stream, p1 + 4, p1 + 4 + len.toInt)
+    val r = new Wire.Reader(stream)
+    while (r.remaining > 0) {
+      val at = stream.length - r.remaining
+      val len = r.varint()
+      if (len < 0 || len > r.remaining - 4L)
+        sys.error(s"chunked frame overruns the stream at $at")
+      val want = java.nio.ByteBuffer.wrap(r.raw(4)).getInt
+      val data = r.raw(len.toInt)
       if (crc32c(data) != want)
-        sys.error(s"chunked frame CRC mismatch at $pos")
+        sys.error(s"chunked frame CRC mismatch at $at")
       out += data
-      pos = p1 + 4 + len.toInt
     }
     out.toSeq
   }
@@ -392,109 +303,33 @@ object RemoteRead {
     * serving edge calls this once per series. */
   def encodeChunkedFrame(series: Seq[Series], queryIndex: Long,
       maxChunkSamples: Int = MaxChunkSamples): Array[Byte] = {
-    val out = mutable.ArrayBuffer.empty[Byte]
+    val w = new Wire.Writer
     series.foreach { s =>
-      val cs = mutable.ArrayBuffer.empty[Byte]
-      s.labels.sortBy(_._1).foreach { case (k, v) =>
-        val lbl = lenDelim(1, k.getBytes("UTF-8")) ++
-          lenDelim(2, v.getBytes("UTF-8"))
-        cs ++= lenDelim(1, lbl.toArray)
+      w.message(1) { cs =>
+        RemoteWrite.writeLabels(cs, s.labels.sortBy(_._1))
+        s.samples.sortBy(_._1).grouped(maxChunkSamples).foreach { slice =>
+          cs.message(2)(_.varint(1, slice.head._1) // min_time_ms
+            .varint(2, slice.last._1) // max_time_ms
+            .varint(3, 1L) // Encoding.XOR
+            .bytes(4, XorChunk.encode(slice)))
+        }
       }
-      s.samples.sortBy(_._1).grouped(maxChunkSamples).foreach { slice =>
-        val ch = mutable.ArrayBuffer.empty[Byte]
-        ch += ((1 << 3) | 0).toByte
-        ch ++= writeVarint(slice.head._1) // min_time_ms
-        ch += ((2 << 3) | 0).toByte
-        ch ++= writeVarint(slice.last._1) // max_time_ms
-        ch += ((3 << 3) | 0).toByte
-        ch ++= writeVarint(1L) // Encoding.XOR
-        ch ++= lenDelim(4, XorChunk.encode(slice))
-        cs ++= lenDelim(2, ch.toArray)
-      }
-      out ++= lenDelim(1, cs.toArray)
     }
-    out += ((2 << 3) | 0).toByte
-    out ++= writeVarint(queryIndex)
-    out.toArray
+    w.varint(2, queryIndex).toByteArray
   }
 
   /** Decode one ChunkedReadResponse frame payload back to
     * (queryIndex, series with XOR chunks expanded to samples) —
     * client side / tests. */
   def decodeChunkedFrame(bytes: Array[Byte]): (Long, Seq[Series]) = {
-    var pos = 0
     var queryIndex = 0L
     val series = mutable.ArrayBuffer.empty[Series]
-    while (pos < bytes.length) {
-      val (tag, p1) = varint(bytes, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(bytes, pos)
-          series += decodeChunkedSeries(bytes, p2, p2 + len)
-          pos = p2 + len
-        case (2, 0) =>
-          val (v, p2) = varint(bytes, pos); queryIndex = v; pos = p2
-        case (_, wt) => pos = skip(bytes, pos, wt.toInt)
-      }
+    val r = new Wire.Reader(bytes)
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => series += decodeSeries(r.message(), chunked = true)
+      case (2, 0) => queryIndex = r.varint()
+      case _ => r.skip()
     }
     (queryIndex, series.toSeq)
-  }
-
-  private def decodeChunkedSeries(b: Array[Byte], start: Int,
-      end: Int): Series = {
-    var pos = start
-    val labels = mutable.ArrayBuffer.empty[(String, String)]
-    val samples = mutable.ArrayBuffer.empty[(Long, Double)]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          labels += decodeLabelPair(b, p2, p2 + len)
-          pos = p2 + len
-        case (2, 2) => // Chunk
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          var enc = -1
-          var data: Array[Byte] = Array.empty
-          while (q < p2 + len) {
-            val (ctag, q1) = varint(b, q)
-            q = q1
-            (ctag >> 3, ctag & 7) match {
-              case (3, 0) => val (v, q2) = varint(b, q); enc = v.toInt; q = q2
-              case (4, 2) =>
-                val (dlen, q2) = lenAt(b, q)
-                data = java.util.Arrays.copyOfRange(b, q2, q2 + dlen)
-                q = q2 + dlen
-              case (_, wt) => q = skip(b, q, wt.toInt)
-            }
-          }
-          if (enc != 1) sys.error(s"unsupported chunk encoding $enc")
-          samples ++= XorChunk.decode(data)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
-    }
-    Series(labels.toSeq, samples.toSeq)
-  }
-
-  private def decodeSamplePair(b: Array[Byte], start: Int, end: Int): (Long, Double) = {
-    var pos = start
-    var value = 0.0
-    var ts = 0L
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 1) =>
-          value = java.lang.Double.longBitsToDouble(RemoteWrite.fixed64(b, pos))
-          pos += 8
-        case (2, 0) => val (t, p2) = varint(b, pos); ts = t; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
-    }
-    (ts, value)
   }
 }

@@ -15,13 +15,15 @@ import graft.metric.Sample
   * Sample       { double value = 1; int64 timestamp = 2; }   // ms epoch
   * }}}
   *
-  * Zero dependencies: protobuf wire encoding is varints + length-delimited
-  * records (the reference's pooled zero-copy parser is the same idea,
-  * src/remote_write/src/pb_reader.rs:85-467 — JVM-side we parse straight to
-  * [[Sample]]s). The full request surface the reference parses — exemplars
-  * (TimeSeries field 3) and metric metadata (WriteRequest field 3,
-  * remote_write.proto:22-77) — decodes via [[decodeRequest]]; [[decode]]
-  * stays the samples-only fast path the ingest pipeline consumes.
+  * Zero dependencies: every record reads and writes through [[Wire]], the
+  * one bounded protobuf reader and writer (the reference's pooled
+  * zero-copy parser is the same idea,
+  * src/remote_write/src/pb_reader.rs:85-467 — JVM-side we parse straight
+  * to [[Sample]]s). The full request surface the reference parses —
+  * exemplars (TimeSeries field 3) and metric metadata (WriteRequest field
+  * 3, remote_write.proto:22-77) — decodes via [[decodeRequest]];
+  * [[decode]] stays the samples-only fast path the ingest pipeline
+  * consumes.
   */
 object RemoteWrite {
 
@@ -98,18 +100,9 @@ object RemoteWrite {
     * decompressed garbage. */
   private def walksAsMessage(b: Array[Byte]): Boolean =
     try {
-      var pos = 0
-      var ok = true
-      while (ok && pos < b.length) {
-        val (tag, p1) = varint(b, pos)
-        val wt = (tag & 7).toInt
-        if ((tag >> 3) <= 0 || (wt != 0 && wt != 1 && wt != 2 && wt != 5)) ok = false
-        else {
-          pos = skip(b, p1, wt)
-          if (pos > b.length) ok = false
-        }
-      }
-      ok
+      val r = new Wire.Reader(b)
+      while (r.next()) { if (r.field <= 0) return false; r.skip() }
+      true
     } catch { case scala.util.control.NonFatal(_) => false }
 
   /** Samples-only fast path for the ingest pipeline: exemplar and metadata
@@ -182,38 +175,25 @@ object RemoteWrite {
     * (v1 uses 1/3, v2 reserves 1-3 and uses 4/5). */
   private[streaming] def looksLikeV2(b: Array[Byte]): Boolean =
     try {
-      var pos = 0
-      while (pos < b.length) {
-        val (tag, p1) = varint(b, pos)
-        (tag >> 3) match {
-          case 4 | 5 => return true
-          case 1 | 2 | 3 => return false
-          case _ => pos = skip(b, p1, (tag & 7).toInt)
-        }
+      val r = new Wire.Reader(b)
+      while (r.next()) r.field match {
+        case 4 | 5 => return true
+        case 1 | 2 | 3 => return false
+        case _ => r.skip()
       }
       false
     } catch { case scala.util.control.NonFatal(_) => false }
 
   private def decodeV2Impl(bytes: Array[Byte], collectExtras: Boolean): Request = {
     // two passes: symbols may legally serialize after the timeseries that
-    // reference them, so collect record bounds first, resolve after
+    // reference them, so collect the series records first, resolve after
     val symbols = mutable.ArrayBuffer.empty[String]
-    val tsRanges = mutable.ArrayBuffer.empty[(Int, Int)]
-    var pos = 0
-    while (pos < bytes.length) {
-      val (tag, p1) = varint(bytes, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (4, 2) =>
-          val (len, p2) = lenAt(bytes, pos)
-          symbols += new String(bytes, p2, len, "UTF-8")
-          pos = p2 + len
-        case (5, 2) =>
-          val (len, p2) = lenAt(bytes, pos)
-          tsRanges += ((p2, p2 + len))
-          pos = p2 + len
-        case (_, wt) => pos = skip(bytes, pos, wt.toInt)
-      }
+    val series = mutable.ArrayBuffer.empty[Wire.Reader]
+    val r = new Wire.Reader(bytes)
+    while (r.next()) (r.field, r.wireType) match {
+      case (4, 2) => symbols += r.string()
+      case (5, 2) => series += r.message()
+      case _ => r.skip()
     }
     def sym(ref: Int): String = {
       if (ref < 0 || ref >= symbols.length)
@@ -228,52 +208,27 @@ object RemoteWrite {
     val exemplars = mutable.ArrayBuffer.empty[Exemplar]
     val metadata = mutable.ArrayBuffer.empty[Metadata]
     val histograms = mutable.ArrayBuffer.empty[HistogramSample]
-    tsRanges.foreach { case (start, end) =>
-      var p = start
+    series.foreach { ts =>
       val refs = mutable.ArrayBuffer.empty[Int]
-      val ss = mutable.ArrayBuffer.empty[(Double, Long)]
+      val ss = mutable.ArrayBuffer.empty[(Long, Double)]
       val hs = mutable.ArrayBuffer.empty[HistogramSample]
       val exs = mutable.ArrayBuffer.empty[(Seq[Int], Double, Long)]
       var md: Option[(Int, Int, Int)] = None // (type, help_ref, unit_ref)
-      while (p < end) {
-        val (tag, p1) = varint(bytes, p)
-        p = p1
-        (tag >> 3, tag & 7) match {
-          case (1, 2) => // packed labels_refs
-            val (len, p2) = lenAt(bytes, p)
-            var q = p2
-            while (q < p2 + len) {
-              val (r, q2) = varint(bytes, q); refs += r.toInt; q = q2
-            }
-            p = p2 + len
-          case (1, 0) => // unpacked single ref
-            val (r, p2) = varint(bytes, p); refs += r.toInt; p = p2
-          case (2, 2) =>
-            val (len, p2) = lenAt(bytes, p)
-            ss += decodeSample(bytes, p2, p2 + len)
-            p = p2 + len
-          case (3, 2) => // native histogram
-            val (len, p2) = lenAt(bytes, p)
-            hs += decodeHistogram(bytes, p2, p2 + len)
-            p = p2 + len
-          case (4, 2) if collectExtras =>
-            val (len, p2) = lenAt(bytes, p)
-            exs += decodeExemplarV2(bytes, p2, p2 + len)
-            p = p2 + len
-          case (5, 2) if collectExtras =>
-            val (len, p2) = lenAt(bytes, p)
-            md = Some(decodeMetadataV2(bytes, p2, p2 + len))
-            p = p2 + len
-          case (_, wt) => p = skip(bytes, p, wt.toInt)
-        }
+      while (ts.next()) (ts.field, ts.wireType) match {
+        case (1, _) => ts.packedVarints(v => refs += v.toInt)
+        case (2, 2) => ss += readSample(ts.message())
+        case (3, 2) => hs += decodeHistogram(ts.message()) // native histogram
+        case (4, 2) if collectExtras => exs += decodeExemplarV2(ts.message())
+        case (5, 2) if collectExtras => md = Some(decodeMetadataV2(ts.message()))
+        case _ => ts.skip()
       }
       val labels = labelsOf(refs.toSeq)
       val name = labels.getOrElse(NameLabel, "")
       val rest = labels - NameLabel
-      samples ++= ss.map { case (v, ts) => Sample(name, rest, ts, v) }
+      samples ++= ss.map { case (t, v) => Sample(name, rest, t, v) }
       histograms ++= hs.map(_.copy(name = name, labels = rest))
-      exemplars ++= exs.map { case (eRefs, v, ts) =>
-        Exemplar(name, rest, labelsOf(eRefs), v, ts) }
+      exemplars ++= exs.map { case (eRefs, v, t) =>
+        Exemplar(name, rest, labelsOf(eRefs), v, t) }
       md.foreach { case (tpe, helpRef, unitRef) =>
         metadata += Metadata(tpe, name, sym(helpRef), sym(unitRef)) }
     }
@@ -286,9 +241,7 @@ object RemoteWrite {
     * absolute `(index, count)` pairs here, once, at the edge. The
     * `name`/`labels` fields are stamped by the caller (they live on the
     * enclosing TimeSeries). */
-  private def decodeHistogram(b: Array[Byte], start: Int,
-      end: Int): HistogramSample = {
-    var pos = start
+  private def decodeHistogram(r: Wire.Reader): HistogramSample = {
     var countI = 0L; var countF = 0.0; var countIsFloat = false
     var sum = 0.0; var schema = 0; var zeroTh = 0.0
     var zeroI = 0L; var zeroF = 0.0; var zeroIsFloat = false
@@ -300,69 +253,24 @@ object RemoteWrite {
     val negCounts = mutable.ArrayBuffer.empty[Double]
     val posCounts = mutable.ArrayBuffer.empty[Double]
     val customValues = mutable.ArrayBuffer.empty[Double]
-    def packedZigzag(out: mutable.ArrayBuffer[Long]): Unit = {
-      val (len, p2) = lenAt(b, pos)
-      var q = p2
-      while (q < p2 + len) {
-        val (v, q2) = varint(b, q); out += zigzagDecode(v); q = q2
-      }
-      pos = p2 + len
-    }
-    def packedDoubles(out: mutable.ArrayBuffer[Double]): Unit = {
-      val (len, p2) = lenAt(b, pos)
-      var q = p2
-      while (q < p2 + len) {
-        out += java.lang.Double.longBitsToDouble(fixed64(b, q)); q += 8
-      }
-      pos = p2 + len
-    }
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 0) => val (v, p2) = varint(b, pos); countI = v; pos = p2
-        case (2, 1) =>
-          countF = java.lang.Double.longBitsToDouble(fixed64(b, pos))
-          countIsFloat = true; pos += 8
-        case (3, 1) =>
-          sum = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (4, 0) =>
-          val (v, p2) = varint(b, pos)
-          schema = zigzagDecode(v).toInt; pos = p2
-        case (5, 1) =>
-          zeroTh = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (6, 0) => val (v, p2) = varint(b, pos); zeroI = v; pos = p2
-        case (7, 1) =>
-          zeroF = java.lang.Double.longBitsToDouble(fixed64(b, pos))
-          zeroIsFloat = true; pos += 8
-        case (8, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          negSpans += decodeBucketSpan(b, p2, p2 + len); pos = p2 + len
-        case (9, 2) => packedZigzag(negDeltas)
-        case (9, 0) =>
-          val (v, p2) = varint(b, pos); negDeltas += zigzagDecode(v); pos = p2
-        case (10, 2) => packedDoubles(negCounts)
-        case (10, 1) =>
-          negCounts += java.lang.Double.longBitsToDouble(fixed64(b, pos))
-          pos += 8
-        case (11, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          posSpans += decodeBucketSpan(b, p2, p2 + len); pos = p2 + len
-        case (12, 2) => packedZigzag(posDeltas)
-        case (12, 0) =>
-          val (v, p2) = varint(b, pos); posDeltas += zigzagDecode(v); pos = p2
-        case (13, 2) => packedDoubles(posCounts)
-        case (13, 1) =>
-          posCounts += java.lang.Double.longBitsToDouble(fixed64(b, pos))
-          pos += 8
-        case (14, 0) => val (v, p2) = varint(b, pos); resetHint = v.toInt; pos = p2
-        case (15, 0) => val (v, p2) = varint(b, pos); ts = v; pos = p2
-        case (16, 2) => packedDoubles(customValues)
-        case (16, 1) =>
-          customValues += java.lang.Double.longBitsToDouble(fixed64(b, pos))
-          pos += 8
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 0) => countI = r.varint()
+      case (2, 1) => countF = r.double(); countIsFloat = true
+      case (3, 1) => sum = r.double()
+      case (4, 0) => schema = r.sint().toInt
+      case (5, 1) => zeroTh = r.double()
+      case (6, 0) => zeroI = r.varint()
+      case (7, 1) => zeroF = r.double(); zeroIsFloat = true
+      case (8, 2) => negSpans += decodeBucketSpan(r.message())
+      case (9, _) => r.packedVarints(v => negDeltas += Wire.zigzagDecode(v))
+      case (10, _) => r.packedDoubles(negCounts += _)
+      case (11, 2) => posSpans += decodeBucketSpan(r.message())
+      case (12, _) => r.packedVarints(v => posDeltas += Wire.zigzagDecode(v))
+      case (13, _) => r.packedDoubles(posCounts += _)
+      case (14, 0) => resetHint = r.varint().toInt
+      case (15, 0) => ts = r.varint()
+      case (16, _) => r.packedDoubles(customValues += _)
+      case _ => r.skip()
     }
     val isFloat = countIsFloat || zeroIsFloat ||
       posCounts.nonEmpty || negCounts.nonEmpty
@@ -378,19 +286,12 @@ object RemoteWrite {
       resetHint = resetHint, floatHistogram = isFloat)
   }
 
-  private def decodeBucketSpan(b: Array[Byte], start: Int,
-      end: Int): (Int, Int) = {
-    var pos = start
+  private def decodeBucketSpan(r: Wire.Reader): (Int, Int) = {
     var offset = 0; var length = 0
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 0) =>
-          val (v, p2) = varint(b, pos); offset = zigzagDecode(v).toInt; pos = p2
-        case (2, 0) => val (v, p2) = varint(b, pos); length = v.toInt; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 0) => offset = r.sint().toInt
+      case (2, 0) => length = r.varint().toInt
+      case _ => r.skip()
     }
     (offset, length)
   }
@@ -425,53 +326,28 @@ object RemoteWrite {
     out.toSeq
   }
 
-  private[streaming] def zigzagDecode(v: Long): Long = (v >>> 1) ^ -(v & 1L)
-  private[streaming] def zigzagEncode(v: Long): Long = (v << 1) ^ (v >> 63)
-
-  private def decodeExemplarV2(b: Array[Byte], start: Int,
-      end: Int): (Seq[Int], Double, Long) = {
-    var pos = start
+  private def decodeExemplarV2(r: Wire.Reader): (Seq[Int], Double, Long) = {
     val refs = mutable.ArrayBuffer.empty[Int]
     var value = 0.0
     var ts = 0L
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          var q = p2
-          while (q < p2 + len) {
-            val (r, q2) = varint(b, q); refs += r.toInt; q = q2
-          }
-          pos = p2 + len
-        case (1, 0) =>
-          val (r, p2) = varint(b, pos); refs += r.toInt; pos = p2
-        case (2, 1) =>
-          value = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (3, 0) =>
-          val (t, p2) = varint(b, pos); ts = t; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, _) => r.packedVarints(v => refs += v.toInt)
+      case (2, 1) => value = r.double()
+      case (3, 0) => ts = r.varint()
+      case _ => r.skip()
     }
     (refs.toSeq, value, ts)
   }
 
-  private def decodeMetadataV2(b: Array[Byte], start: Int,
-      end: Int): (Int, Int, Int) = {
-    var pos = start
+  private def decodeMetadataV2(r: Wire.Reader): (Int, Int, Int) = {
     var tpe = 0
     var helpRef = 0
     var unitRef = 0
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 0) => val (t, p2) = varint(b, pos); tpe = t.toInt; pos = p2
-        case (3, 0) => val (r, p2) = varint(b, pos); helpRef = r.toInt; pos = p2
-        case (4, 0) => val (r, p2) = varint(b, pos); unitRef = r.toInt; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 0) => tpe = r.varint().toInt
+      case (3, 0) => helpRef = r.varint().toInt
+      case (4, 0) => unitRef = r.varint().toInt
+      case _ => r.skip()
     }
     (tpe, helpRef, unitRef)
   }
@@ -481,192 +357,103 @@ object RemoteWrite {
     val exemplars = mutable.ArrayBuffer.empty[Exemplar]
     val metadata = mutable.ArrayBuffer.empty[Metadata]
     val histograms = mutable.ArrayBuffer.empty[HistogramSample]
-    var pos = 0
-    while (pos < bytes.length) {
-      val (tag, p1) = varint(bytes, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) => // timeseries
-          val (len, p2) = lenAt(bytes, pos)
-          decodeTimeSeries(bytes, p2, p2 + len, samples, histograms,
-            if (collectExtras) Some(exemplars) else None)
-          pos = p2 + len
-        case (3, 2) if collectExtras => // metadata
-          val (len, p2) = lenAt(bytes, pos)
-          metadata += decodeMetadata(bytes, p2, p2 + len)
-          pos = p2 + len
-        case (_, wt) => pos = skip(bytes, pos, wt.toInt)
-      }
+    val r = new Wire.Reader(bytes)
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => decodeTimeSeries(r.message(), samples, histograms,
+        if (collectExtras) Some(exemplars) else None)
+      case (3, 2) if collectExtras => metadata += decodeMetadata(r.message())
+      case _ => r.skip()
     }
     Request(samples.toSeq, exemplars.toSeq, metadata.toSeq, histograms.toSeq)
   }
 
-  private def decodeTimeSeries(b: Array[Byte], start: Int, end: Int,
+  private def decodeTimeSeries(r: Wire.Reader,
       samplesOut: mutable.ArrayBuffer[Sample],
       histogramsOut: mutable.ArrayBuffer[HistogramSample],
       exemplarsOut: Option[mutable.ArrayBuffer[Exemplar]]): Unit = {
-    var pos = start
     val labels = mutable.LinkedHashMap.empty[String, String]
-    val samples = mutable.ArrayBuffer.empty[(Double, Long)]
+    val samples = mutable.ArrayBuffer.empty[(Long, Double)]
     val histograms = mutable.ArrayBuffer.empty[HistogramSample]
     val exemplars = mutable.ArrayBuffer.empty[(Map[String, String], Double, Long)]
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) => // label
-          val (len, p2) = lenAt(b, pos)
-          val (n, v) = decodeLabel(b, p2, p2 + len)
-          labels(n) = v
-          pos = p2 + len
-        case (2, 2) => // sample
-          val (len, p2) = lenAt(b, pos)
-          samples += decodeSample(b, p2, p2 + len)
-          pos = p2 + len
-        case (3, 2) => // exemplar — parsed only for the full-request path
-          val (len, p2) = lenAt(b, pos)
-          if (exemplarsOut.isDefined)
-            exemplars += decodeExemplar(b, p2, p2 + len)
-          pos = p2 + len
-        case (4, 2) => // native histogram (prompb TimeSeries field 4)
-          val (len, p2) = lenAt(b, pos)
-          histograms += decodeHistogram(b, p2, p2 + len)
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => labels += readLabel(r.message())
+      case (2, 2) => samples += readSample(r.message())
+      // exemplar — parsed only for the full-request path
+      case (3, 2) if exemplarsOut.isDefined => exemplars += decodeExemplar(r.message())
+      case (4, 2) => histograms += decodeHistogram(r.message()) // native histogram
+      case _ => r.skip()
     }
     val name = labels.getOrElse(NameLabel, "")
     val rest = (labels - NameLabel).toMap
-    samplesOut ++= samples.map { case (v, ts) => Sample(name, rest, ts, v) }
+    samplesOut ++= samples.map { case (ts, v) => Sample(name, rest, ts, v) }
     histogramsOut ++= histograms.map(_.copy(name = name, labels = rest))
     exemplarsOut.foreach(_ ++= exemplars.map { case (ls, v, ts) =>
       Exemplar(name, rest, ls, v, ts) })
   }
 
-  private def decodeExemplar(b: Array[Byte], start: Int,
-      end: Int): (Map[String, String], Double, Long) = {
-    var pos = start
+  private def decodeExemplar(r: Wire.Reader): (Map[String, String], Double, Long) = {
     val labels = mutable.LinkedHashMap.empty[String, String]
     var value = 0.0
     var ts = 0L
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 2) =>
-          val (len, p2) = lenAt(b, pos)
-          val (n, v) = decodeLabel(b, p2, p2 + len)
-          labels(n) = v
-          pos = p2 + len
-        case (2, 1) =>
-          value = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (3, 0) =>
-          val (t, p2) = varint(b, pos); ts = t; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => labels += readLabel(r.message())
+      case (2, 1) => value = r.double()
+      case (3, 0) => ts = r.varint()
+      case _ => r.skip()
     }
     (labels.toMap, value, ts)
   }
 
-  private def decodeMetadata(b: Array[Byte], start: Int, end: Int): Metadata = {
-    var pos = start
+  private def decodeMetadata(r: Wire.Reader): Metadata = {
     var tpe = 0
     var family = ""
     var help = ""
     var unit = ""
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 0) => val (t, p2) = varint(b, pos); tpe = t.toInt; pos = p2
-        case (f, 2) if f == 2 || f == 4 || f == 5 =>
-          val (len, p2) = lenAt(b, pos)
-          val s = new String(b, p2, len, "UTF-8")
-          if (f == 2) family = s else if (f == 4) help = s else unit = s
-          pos = p2 + len
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 0) => tpe = r.varint().toInt
+      case (2, 2) => family = r.string()
+      case (4, 2) => help = r.string()
+      case (5, 2) => unit = r.string()
+      case _ => r.skip()
     }
     Metadata(tpe, family, help, unit)
   }
 
-  private def decodeLabel(b: Array[Byte], start: Int, end: Int): (String, String) = {
-    var pos = start
+  /** prompb `Label { string name = 1; string value = 2; }` — the one
+    * label codec of remote write, remote read and chunked read. */
+  private[streaming] def readLabel(r: Wire.Reader): (String, String) = {
     var name = ""
     var value = ""
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      val (len, p2) = lenAt(b, pos)
-      val s = new String(b, p2, len, "UTF-8")
-      if ((tag >> 3) == 1) name = s else if ((tag >> 3) == 2) value = s
-      pos = p2 + len
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 2) => name = r.string()
+      case (2, 2) => value = r.string()
+      case _ => r.skip()
     }
     (name, value)
   }
 
-  private def decodeSample(b: Array[Byte], start: Int, end: Int): (Double, Long) = {
-    var pos = start
+  /** prompb `Sample { double value = 1; int64 timestamp = 2; }` as
+    * `(timestamp, value)`. */
+  private[streaming] def readSample(r: Wire.Reader): (Long, Double) = {
     var value = 0.0
     var ts = 0L
-    while (pos < end) {
-      val (tag, p1) = varint(b, pos)
-      pos = p1
-      (tag >> 3, tag & 7) match {
-        case (1, 1) => value = java.lang.Double.longBitsToDouble(fixed64(b, pos)); pos += 8
-        case (2, 0) => val (t, p2) = varint(b, pos); ts = t; pos = p2
-        case (_, wt) => pos = skip(b, pos, wt.toInt)
-      }
+    while (r.next()) (r.field, r.wireType) match {
+      case (1, 1) => value = r.double()
+      case (2, 0) => ts = r.varint()
+      case _ => r.skip()
     }
-    (value, ts)
+    (ts, value)
   }
 
-  private[streaming] def varint(b: Array[Byte], start: Int): (Long, Int) = {
-    var result = 0L
-    var shift = 0
-    var pos = start
-    while ({
-      // a legal varint is at most 10 bytes; unbounded continuation bits in
-      // attacker-crafted input must error, not shift into garbage
-      if (shift > 63) sys.error(s"varint too long at $start")
-      val x = b(pos) & 0xff
-      result |= (x & 0x7fL) << shift
-      pos += 1
-      shift += 7
-      (x & 0x80) != 0
-    }) ()
-    (result, pos)
-  }
+  /** Labels as repeated `Label` field 1 — of a TimeSeries, an Exemplar
+    * or a ChunkedSeries. */
+  private[streaming] def writeLabels(w: Wire.Writer,
+      labels: Iterable[(String, String)]): Unit =
+    labels.foreach { case (k, v) => w.message(1)(_.string(1, k).string(2, v)) }
 
-  /** Length-delimited field bounds, validated: the declared length must be
-    * non-negative and fit inside the buffer. Without this, a crafted
-    * length varint (e.g. 2^32-6) truncates to a NEGATIVE Int, `pos + len`
-    * lands back ON the tag it came from, and the decode loop spins
-    * forever — a remote CPU-pin DoS through the HTTP write endpoint
-    * (no exception, so per-payload catches never fire). Every
-    * length-delimited read routes through here so `pos` strictly
-    * advances or the walk errors out. */
-  private[streaming] def lenAt(b: Array[Byte], pos: Int): (Int, Int) = {
-    val (len, p) = varint(b, pos)
-    if (len < 0L || len > (b.length - p).toLong)
-      sys.error(s"bad length-delimited field: len=$len at $pos")
-    (len.toInt, p)
-  }
-
-  private[streaming] def fixed64(b: Array[Byte], pos: Int): Long = {
-    var v = 0L
-    var i = 7
-    while (i >= 0) { v = (v << 8) | (b(pos + i) & 0xffL); i -= 1 }
-    v
-  }
-
-  private[streaming] def skip(b: Array[Byte], pos: Int, wireType: Int): Int = wireType match {
-    case 0 => varint(b, pos)._2
-    case 1 => pos + 8
-    case 2 => val (len, p) = lenAt(b, pos); p + len
-    case 5 => pos + 4
-    case wt => sys.error(s"unsupported wire type $wt")
-  }
+  /** One `Sample` as TimeSeries field 2. */
+  private[streaming] def writeSample(w: Wire.Writer, ts: Long, v: Double): Unit =
+    w.message(2)(_.double(1, v).varint(2, ts))
 
   // ------------------------------------------------------------- encoder
   // Minimal writer for tests and the soak harness (differential fixture
@@ -699,105 +486,54 @@ object RemoteWrite {
     }
   }
 
-  /** Encode one prompb `Histogram` record (shared v1/v2 layout). */
-  private def encodeHistogram(h: HistogramSample): Array[Byte] = {
-    val out = mutable.ArrayBuffer.empty[Byte]
-    def varintField(field: Int, v: Long): Unit = {
-      out += ((field << 3) | 0).toByte; out ++= writeVarint(v); ()
+  /** The fields of one prompb `Histogram` record (shared v1/v2 layout). */
+  private def writeHistogram(w: Wire.Writer, h: HistogramSample): Unit = {
+    if (h.floatHistogram) w.double(2, h.count) else w.varint(1, h.count.toLong)
+    w.double(3, h.sum).sint(4, h.schema.toLong).double(5, h.zeroThreshold)
+    if (h.floatHistogram) w.double(7, h.zeroCount)
+    else w.varint(6, h.zeroCount.toLong)
+    // spans, deltas and counts at fields spanField, +1 and +2:
+    // negative 8/9/10, positive 11/12/13
+    def buckets(spanField: Int, bs: Seq[(Int, Double)]): Unit = {
+      val (spans, deltas, counts) = sparseOf(bs, h.floatHistogram)
+      spans.foreach { case (o, l) =>
+        w.message(spanField)(_.sint(1, o.toLong).varint(2, l.toLong)) }
+      if (deltas.nonEmpty)
+        w.packedVarints(spanField + 1, deltas.map(Wire.zigzagEncode))
+      if (counts.nonEmpty) w.packedDoubles(spanField + 2, counts)
     }
-    def doubleField(field: Int, v: Double): Unit = {
-      out += ((field << 3) | 1).toByte; out ++= fixed64Bytes(v); ()
-    }
-    def spanBytes(offset: Int, length: Int): Array[Byte] = {
-      val b = mutable.ArrayBuffer.empty[Byte]
-      b += ((1 << 3) | 0).toByte
-      b ++= writeVarint(zigzagEncode(offset.toLong))
-      b += ((2 << 3) | 0).toByte
-      b ++= writeVarint(length.toLong)
-      b.toArray
-    }
-    def packedZigzag(field: Int, vs: Seq[Long]): Unit = {
-      if (vs.nonEmpty) {
-        out ++= lenDelim(field,
-          vs.flatMap(v => writeVarint(zigzagEncode(v))).toArray); ()
-      }
-    }
-    def packedDoubles(field: Int, vs: Seq[Double]): Unit = {
-      if (vs.nonEmpty) {
-        out ++= lenDelim(field, vs.flatMap(fixed64Bytes).toArray); ()
-      }
-    }
-    if (h.floatHistogram) doubleField(2, h.count)
-    else varintField(1, h.count.toLong)
-    doubleField(3, h.sum)
-    varintField(4, zigzagEncode(h.schema.toLong))
-    doubleField(5, h.zeroThreshold)
-    if (h.floatHistogram) doubleField(7, h.zeroCount)
-    else varintField(6, h.zeroCount.toLong)
-    val (negSpans, negDeltas, negCounts) =
-      sparseOf(h.negativeBuckets, h.floatHistogram)
-    val (posSpans, posDeltas, posCounts) =
-      sparseOf(h.positiveBuckets, h.floatHistogram)
-    negSpans.foreach { case (o, l) => out ++= lenDelim(8, spanBytes(o, l)) }
-    packedZigzag(9, negDeltas)
-    packedDoubles(10, negCounts)
-    posSpans.foreach { case (o, l) => out ++= lenDelim(11, spanBytes(o, l)) }
-    packedZigzag(12, posDeltas)
-    packedDoubles(13, posCounts)
-    if (h.resetHint != 0) varintField(14, h.resetHint.toLong)
-    varintField(15, h.timestamp)
-    packedDoubles(16, h.customValues)
-    out.toArray
+    buckets(8, h.negativeBuckets)
+    buckets(11, h.positiveBuckets)
+    if (h.resetHint != 0) w.varint(14, h.resetHint.toLong)
+    w.varint(15, h.timestamp)
+    if (h.customValues.nonEmpty) w.packedDoubles(16, h.customValues)
   }
 
   def encodeRequest(req: Request): Array[Byte] = {
-    val out = mutable.ArrayBuffer.empty[Byte]
+    val w = new Wire.Writer
     val exBySeries = req.exemplars.groupBy(e => (e.name, e.seriesLabels))
     val histBySeries = req.histograms.groupBy(h => (h.name, h.labels))
     val seriesKeys = (req.samples.map(s => (s.name, s.labels)) ++
       exBySeries.keys ++ histBySeries.keys).distinct
     val byKey = req.samples.groupBy(s => (s.name, s.labels))
     seriesKeys.foreach { case key @ (name, labels) =>
-      val ts = mutable.ArrayBuffer.empty[Byte]
-      (Seq(NameLabel -> name) ++ labels.toSeq.sortBy(_._1)).foreach { case (k, v) =>
-        val lbl = lenDelim(1, k.getBytes("UTF-8")) ++ lenDelim(2, v.getBytes("UTF-8"))
-        ts ++= lenDelim(1, lbl.toArray)
-      }
-      byKey.getOrElse(key, Nil).foreach { s =>
-        val sm = mutable.ArrayBuffer.empty[Byte]
-        sm += ((1 << 3) | 1).toByte
-        sm ++= fixed64Bytes(s.value)
-        sm += ((2 << 3) | 0).toByte
-        sm ++= writeVarint(s.timestamp)
-        ts ++= lenDelim(2, sm.toArray)
-      }
-      histBySeries.getOrElse(key, Nil).foreach { h =>
-        ts ++= lenDelim(4, encodeHistogram(h))
-      }
-      exBySeries.getOrElse(key, Nil).foreach { e =>
-        val ex = mutable.ArrayBuffer.empty[Byte]
-        e.labels.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          val lbl = lenDelim(1, k.getBytes("UTF-8")) ++ lenDelim(2, v.getBytes("UTF-8"))
-          ex ++= lenDelim(1, lbl.toArray)
+      w.message(1) { ts =>
+        writeLabels(ts, (NameLabel -> name) +: labels.toSeq.sortBy(_._1))
+        byKey.getOrElse(key, Nil).foreach(s => writeSample(ts, s.timestamp, s.value))
+        histBySeries.getOrElse(key, Nil).foreach(h => ts.message(4)(writeHistogram(_, h)))
+        exBySeries.getOrElse(key, Nil).foreach { e =>
+          ts.message(3) { ex =>
+            writeLabels(ex, e.labels.toSeq.sortBy(_._1))
+            ex.double(2, e.value).varint(3, e.timestamp)
+          }
         }
-        ex += ((2 << 3) | 1).toByte
-        ex ++= fixed64Bytes(e.value)
-        ex += ((3 << 3) | 0).toByte
-        ex ++= writeVarint(e.timestamp)
-        ts ++= lenDelim(3, ex.toArray)
       }
-      out ++= lenDelim(1, ts.toArray)
     }
     req.metadata.foreach { m =>
-      val md = mutable.ArrayBuffer.empty[Byte]
-      md += ((1 << 3) | 0).toByte
-      md ++= writeVarint(m.metricType.toLong)
-      md ++= lenDelim(2, m.familyName.getBytes("UTF-8"))
-      md ++= lenDelim(4, m.help.getBytes("UTF-8"))
-      md ++= lenDelim(5, m.unit.getBytes("UTF-8"))
-      out ++= lenDelim(3, md.toArray)
+      w.message(3)(_.varint(1, m.metricType.toLong).string(2, m.familyName)
+        .string(4, m.help).string(5, m.unit))
     }
-    out.toArray
+    w.toByteArray
   }
 
   /** Remote-write 2.0 encoder (tests + soaks): interns every string into
@@ -812,12 +548,9 @@ object RemoteWrite {
   def encodeRequestV2(req: Request): Array[Byte] = {
     val symbols = mutable.LinkedHashMap.empty[String, Int]
     symbols("") = 0
-    def ref(s: String): Int = symbols.getOrElseUpdate(s, symbols.size)
-    def packedRefs(field: Int, refs: Seq[Int]): mutable.ArrayBuffer[Byte] =
-      lenDelim(field, refs.flatMap(r => writeVarint(r.toLong)).toArray)
-    def labelRefs(name: String, labels: Map[String, String]): Seq[Int] =
-      (Seq(NameLabel -> name) ++ labels.toSeq.sortBy(_._1))
-        .flatMap { case (k, v) => Seq(ref(k), ref(v)) }
+    def ref(s: String): Long = symbols.getOrElseUpdate(s, symbols.size).toLong
+    def refs(labels: Seq[(String, String)]): Seq[Long] =
+      labels.flatMap { case (k, v) => Seq(ref(k), ref(v)) }
 
     val exBySeries = req.exemplars.groupBy(e => (e.name, e.seriesLabels))
     val histBySeries = req.histograms.groupBy(h => (h.name, h.labels))
@@ -830,81 +563,26 @@ object RemoteWrite {
     val familiesPresent = seriesKeys.map(_._1).toSet
     val allKeys = seriesKeys ++ mdByFamily.keys.toSeq.sorted
       .filterNot(familiesPresent).map(f => (f, Map.empty[String, String]))
-    val tsRecords = mutable.ArrayBuffer.empty[Byte]
+    val tsRecords = new Wire.Writer
     val mdEmitted = mutable.Set.empty[String]
     allKeys.foreach { case key @ (name, labels) =>
-      val ts = mutable.ArrayBuffer.empty[Byte]
-      ts ++= packedRefs(1, labelRefs(name, labels))
-      byKey.getOrElse(key, Nil).foreach { s =>
-        val sm = mutable.ArrayBuffer.empty[Byte]
-        sm += ((1 << 3) | 1).toByte
-        sm ++= fixed64Bytes(s.value)
-        sm += ((2 << 3) | 0).toByte
-        sm ++= writeVarint(s.timestamp)
-        ts ++= lenDelim(2, sm.toArray)
+      tsRecords.message(5) { ts =>
+        ts.packedVarints(1, refs((NameLabel -> name) +: labels.toSeq.sortBy(_._1)))
+        byKey.getOrElse(key, Nil).foreach(s => writeSample(ts, s.timestamp, s.value))
+        histBySeries.getOrElse(key, Nil).foreach(h => ts.message(3)(writeHistogram(_, h)))
+        exBySeries.getOrElse(key, Nil).foreach { e =>
+          ts.message(4)(_.packedVarints(1, refs(e.labels.toSeq.sortBy(_._1)))
+            .double(2, e.value).varint(3, e.timestamp))
+        }
+        if (!mdEmitted(name)) mdByFamily.get(name).map(_.head).foreach { m =>
+          mdEmitted += name
+          ts.message(5)(_.varint(1, m.metricType.toLong)
+            .varint(3, ref(m.help)).varint(4, ref(m.unit)))
+        }
       }
-      histBySeries.getOrElse(key, Nil).foreach { h =>
-        ts ++= lenDelim(3, encodeHistogram(h))
-      }
-      exBySeries.getOrElse(key, Nil).foreach { e =>
-        val ex = mutable.ArrayBuffer.empty[Byte]
-        ex ++= packedRefs(1,
-          e.labels.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-            Seq(ref(k), ref(v)) })
-        ex += ((2 << 3) | 1).toByte
-        ex ++= fixed64Bytes(e.value)
-        ex += ((3 << 3) | 0).toByte
-        ex ++= writeVarint(e.timestamp)
-        ts ++= lenDelim(4, ex.toArray)
-      }
-      if (!mdEmitted(name)) mdByFamily.get(name).map(_.head).foreach { m =>
-        mdEmitted += name
-        val md = mutable.ArrayBuffer.empty[Byte]
-        md += ((1 << 3) | 0).toByte
-        md ++= writeVarint(m.metricType.toLong)
-        md += ((3 << 3) | 0).toByte
-        md ++= writeVarint(ref(m.help).toLong)
-        md += ((4 << 3) | 0).toByte
-        md ++= writeVarint(ref(m.unit).toLong)
-        ts ++= lenDelim(5, md.toArray)
-      }
-      tsRecords ++= lenDelim(5, ts.toArray)
     }
-    val out = mutable.ArrayBuffer.empty[Byte]
-    symbols.keys.foreach(s => out ++= lenDelim(4, s.getBytes("UTF-8")))
-    out ++= tsRecords
-    out.toArray
-  }
-
-  private[streaming] def fixed64Bytes(d: Double): Seq[Byte] = {
-    // RAW bits: doubleToLongBits canonicalizes every NaN payload, which
-    // destroys Prometheus staleness markers (IsStaleNaN is a BIT-equality
-    // check on 0x7ff0000000000002) in remote-read SAMPLES responses —
-    // and would make the SAMPLES and XOR-chunked paths return different
-    // bytes for the same stored data (XorChunk already writes raw bits).
-    val bits = java.lang.Double.doubleToRawLongBits(d)
-    (0 until 8).map(i => ((bits >> (8 * i)) & 0xff).toByte)
-  }
-
-  private[streaming] def lenDelim(field: Int, payload: Array[Byte]): mutable.ArrayBuffer[Byte] = {
-    val b = mutable.ArrayBuffer.empty[Byte]
-    // the tag itself is a varint — one byte only for field numbers < 16
-    // (histogram custom_values is field 16, a two-byte tag)
-    b ++= writeVarint(((field << 3) | 2).toLong)
-    b ++= writeVarint(payload.length.toLong)
-    b ++= payload
-    b
-  }
-
-  private[streaming] def writeVarint(value: Long): Seq[Byte] = {
-    var v = value
-    val b = mutable.ArrayBuffer.empty[Byte]
-    while ({
-      val x = (v & 0x7f).toInt
-      v >>>= 7
-      if (v != 0) b += (x | 0x80).toByte else b += x.toByte
-      v != 0
-    }) ()
-    b.toSeq
+    val out = new Wire.Writer
+    symbols.keys.foreach(out.string(4, _))
+    out.raw(tsRecords.toByteArray).toByteArray
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.concurrent.Executors
 
 import graft.storage.{Manifest, SstFile, TimeRange}
@@ -22,18 +22,22 @@ import graft.streaming.RemoteWrite
   *     the graft analog runs through the real Manifest (JSON-lines +
   *     local-FS I/O included), so its number is an upper bound.
   *
-  * Run: `sbt "runMain graft.tools.CodecBench"`; results in SCALE.md.
+  * Without the capture the parse lanes run on [[RemoteWriteWorkload]]'s
+  * synthetic payload; the first `[codec] workload:` line says which input
+  * was used.
+  *
+  * Run: `sbt "runMain graft.tools.CodecBench [capture.data]"`; results in
+  * SCALE.md.
   */
 object CodecBench {
   def main(args: Array[String]): Unit = {
-    val workload = Paths.get(
-      "/root/reference/src/remote_write/tests/workloads/1709380533560664458.data")
-    require(Files.isReadable(workload), s"workload not found: $workload")
-    val bytes = Files.readAllBytes(workload)
+    val workload = RemoteWriteWorkload.load(args.headOption)
+    val bytes = workload.bytes
     val mb = bytes.length / 1e6
 
     val nSamples = RemoteWrite.decode(bytes).size
-    println(f"[codec] workload: ${bytes.length} bytes, $nSamples samples")
+    println(f"[codec] workload: ${workload.label}, ${bytes.length} bytes, " +
+      f"$nSamples samples")
 
     def bench(label: String, iters: Int)(f: => Unit): Double = {
       (1 to 3).foreach(_ => f) // warmup

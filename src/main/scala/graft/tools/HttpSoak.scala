@@ -2,7 +2,7 @@ package graft.tools
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 
@@ -37,10 +37,10 @@ import graft.streaming.RemoteWrite
   * must EXACTLY match the engine's count for that (metric, range) — the
   * protocol-level read-back twin of the ingest exactness check.
   *
-  * Falls back to a synthetic 2,000-sample payload when the reference
-  * capture is absent.
+  * Replays [[RemoteWriteWorkload]]: the reference capture when its path
+  * is given, else a synthetic 2,000-sample payload.
   *
-  * Run: `sbt "runMain graft.tools.HttpSoak [seconds] [cadenceMs]"`
+  * Run: `sbt "runMain graft.tools.HttpSoak [seconds] [cadenceMs] [capture.data]"`
   */
 object HttpSoak {
   def main(args: Array[String]): Unit = {
@@ -51,20 +51,10 @@ object HttpSoak {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val capture = Paths.get(
-      "/root/reference/src/remote_write/tests/workloads/1709380533560664458.data")
-    val baseSamples: Seq[Sample] =
-      if (Files.isRegularFile(capture)) {
-        val s = RemoteWrite.decode(Files.readAllBytes(capture))
-        println(s"[httpsoak] captured workload: ${s.size} samples, " +
-          s"${s.map(_.name).distinct.size} metrics")
-        s
-      } else {
-        println("[httpsoak] capture absent — synthetic 2000-sample payload")
-        (0 until 2000).map(i => Sample("soak_http_metric",
-          Map("worker" -> s"w${i % 4}", "host" -> s"h${i % 16}"),
-          1723680000000L + i * 250L, i * 0.5))
-      }
+    val workload = RemoteWriteWorkload.load(args.lift(2))
+    val baseSamples = workload.samples
+    println(s"[httpsoak] ${workload.label}: ${baseSamples.size} samples, " +
+      s"${baseSamples.map(_.name).distinct.size} metrics")
     // distinct (series, ts) per iteration — the engine's Overwrite key;
     // duplicates inside one payload merge to one row
     val distinctPerIter = baseSamples

@@ -865,6 +865,32 @@ class HttpFrontendSpec extends AnyFunSuite {
     } finally fe.stop()
   }
 
+  test("OTLP /v1/metrics answers 400 to 3,000 nested array_values and " +
+      "keeps serving: the depth cap replaces a worker-killing stack overflow") {
+    import graft.streaming.Otlp
+    val engine = new MetricEngine(spark,
+      Files.createTempDirectory("graft-http-otlp-deep").toString)
+    val fe = new HttpFrontend(spark, engine)
+    val port = fe.start()
+    try {
+      // a timeout: a handler thread that dies never answers
+      val r = http.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$port/v1/metrics"))
+        .timeout(java.time.Duration.ofSeconds(60))
+        .POST(HttpRequest.BodyPublishers.ofByteArray(
+          StreamingSpec.deepOtlpBody(3000, t0))).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 400, r.body())
+      val ok = post(port, "/v1/metrics", Otlp.encode(Map("service.name" -> "api"),
+        Seq(Otlp.MetricSpec("deep_probe", Seq(
+          Otlp.Point(Map("host" -> "a"), t0 * 1000000L, 7.0))))))
+      assert(ok.statusCode() == 200, ok.body())
+      val cnt = engine.query(MetricQuery("deep_probe",
+        agg = MetricAgg.Count)).collect()(0).getDouble(0)
+      assert(cnt == 1.0, cnt.toString)
+    } finally fe.stop()
+  }
+
   test("OTLP utf8Names end to end over HTTP (round 15): dotted metric AND " +
       "label names ingest verbatim, group via the quoted by-list on " +
       "/api/v1/query, and the JSON metric object carries the dotted key") {

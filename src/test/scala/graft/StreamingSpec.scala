@@ -8,6 +8,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.metric._
 import graft.streaming._
 
+object StreamingSpec {
+  /** An OTLP body with one gauge point at `t0` (ms) whose attribute
+    * `deep` holds `levels` nested array_values around the string "x". */
+  def deepOtlpBody(levels: Int, t0: Long): Array[Byte] = {
+    var any = new Wire.Writer().string(1, "x").toByteArray
+    (1 to levels).foreach { _ =>
+      any = new Wire.Writer().message(5)(_.bytes(1, any)).toByteArray
+    }
+    new Wire.Writer().message(1)(_.message(2)(_.message(2)(
+      _.string(1, "temp").message(5)(_.message(1)(
+        _.fixed64(3, t0 * 1000000L).double(4, 1.0)
+          .message(7)(_.string(1, "deep").bytes(2, any))))))).toByteArray
+  }
+}
+
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -328,8 +343,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(org.xerial.snappy.Snappy.isValidCompressedBuffer(bytes, 0, bytes.length),
       "collision premise: the crafted bytes must validate as snappy")
     assert(RemoteWrite.unframe(bytes).sameElements(bytes))
-    // and a decode of the raw body is harmless (empty request, no throw)
-    assert(RemoteWrite.decodeRequest(bytes).samples.isEmpty)
+    // and a decode of the raw body fails cleanly (a 400 at the edge): its
+    // one series ends inside a fixed64 field (tag 0x11, then one byte),
+    // which the bounded reader refuses instead of skipping past the
+    // record's end
+    intercept[RuntimeException](RemoteWrite.decodeRequest(bytes))
   }
 
   test("decodes the reference's captured Prometheus workloads " +
@@ -372,6 +390,75 @@ class StreamingSpec extends AnyFunSuite {
     val bytes = RemoteWrite.encode(samples(2)) ++ Array[Byte](
       ((9 << 3) | 0).toByte, 0x7f.toByte)
     assert(RemoteWrite.decode(bytes).size == 2)
+    // One row per nested record: the payload is built once plain and once
+    // with an unknown varint field (14) and an unknown fixed64 field (15)
+    // appended to that record; both must decode to the same value (a
+    // Label read as "every field is length-delimited" takes `0x70 0x64`
+    // for a 100-byte string and fails).
+    def unknown(w: Wire.Writer): Unit = { w.varint(14, 100).fixed64(15, 0x0102030405060708L); () }
+    def v1(rec: String): Array[Byte] = {
+      def x(at: String)(w: Wire.Writer): Unit = if (at == rec) unknown(w)
+      new Wire.Writer().message(1) { ts =>
+        ts.message(1) { l => l.string(1, "__name__").string(2, "up"); x("label")(l) }
+        ts.message(1)(_.string(1, "job").string(2, "api"))
+        ts.message(2) { sm => sm.double(1, 1.5).varint(2, t0); x("sample")(sm) }
+        x("series")(ts)
+      }.toByteArray
+    }
+    def v2(rec: String): Array[Byte] = {
+      val w = new Wire.Writer
+      Seq("", "__name__", "up", "job", "api").foreach(w.string(4, _))
+      w.message(5) { ts =>
+        ts.packedVarints(1, Seq(1L, 2L, 3L, 4L))
+        ts.message(2)(_.double(1, 1.5).varint(2, t0))
+        if (rec == "series") unknown(ts)
+      }.toByteArray
+    }
+    def read(rec: String): Array[Byte] =
+      new Wire.Writer().message(1) { q =>
+        q.varint(1, t0).varint(2, t0 + 60000L)
+        q.message(3) { m =>
+          m.varint(1, 2L).string(2, "job").string(3, "a.*")
+          if (rec == "matcher") unknown(m)
+        }
+        if (rec == "query") unknown(q)
+      }.packedVarints(2, Seq(0L)).toByteArray
+    def otlp(rec: String): Array[Byte] =
+      new Wire.Writer().message(1)(_.message(2)(_.message(2) { m =>
+        m.string(1, "temp").message(5)(_.message(1) { dp =>
+          dp.fixed64(3, t0 * 1000000L).double(4, 21.5)
+          dp.message(7) { kv =>
+            kv.string(1, "room").message(2)(_.string(1, "lab"))
+            if (rec == "keyvalue") unknown(kv)
+          }
+          if (rec == "point") unknown(dp)
+        })
+      })).toByteArray
+    val rows: Seq[(String, String, String => Array[Byte], Array[Byte] => Any)] = Seq(
+      ("v1 Label", "label", v1, RemoteWrite.decodeRequest),
+      ("v1 Sample", "sample", v1, RemoteWrite.decodeRequest),
+      ("v1 TimeSeries", "series", v1, RemoteWrite.decodeRequest),
+      ("v2 TimeSeries", "series", v2, RemoteWrite.decodeRequest),
+      ("ReadRequest Query", "query", read, RemoteRead.decodeReadRequest),
+      ("ReadRequest Matcher", "matcher", read, RemoteRead.decodeReadRequest),
+      ("OTLP NumberDataPoint", "point", otlp, Otlp.decodeAll(_)),
+      ("OTLP KeyValue", "keyvalue", otlp, Otlp.decodeAll(_)))
+    rows.foreach { case (name, rec, build, decode) =>
+      val plain = build("")
+      val extended = build(rec)
+      assert(extended.length == plain.length + 11, s"$name: fields not appended")
+      val want = decode(plain)
+      val got = scala.util.Try(decode(extended))
+      assert(got == scala.util.Success(want), s"$name: $got != $want")
+    }
+    // the plain payloads decode to what they were built from
+    assert(RemoteWrite.decode(v1("")) ==
+      Seq(Sample("up", Map("job" -> "api"), t0, 1.5)))
+    assert(RemoteWrite.decode(v2("")) == RemoteWrite.decode(v1("")))
+    assert(RemoteRead.decodeReadRequest(read("")) == RemoteRead.ReadRequest(
+      Seq(RemoteRead.Query(t0, t0 + 60000L, Seq(RemoteRead.Matcher(2, "job", "a.*")))),
+      Seq(0)))
+    assert(Otlp.decode(otlp("")) == Seq(Sample("temp", Map("room" -> "lab"), t0, 21.5)))
   }
 
   test("watermarked 30-min chunk building over a stream") {
@@ -1011,6 +1098,42 @@ class StreamingSpec extends AnyFunSuite {
     intercept[RuntimeException](RemoteWrite.decode(evil3))
     // unframe on attacker bytes goes through the same guarded walk
     assert(RemoteWrite.unframe(evil) sameElements evil)
+    // a nested record that declares more bytes than its parent holds: the
+    // first TimeSeries' Sample claims 40 bytes; a reader bounded only by
+    // the buffer decodes a phantom `up{} @0 = 0.0` out of the next series
+    val next = RemoteWrite.encode(samples(3))
+    val overrun = new Wire.Writer().message(1) { ts =>
+      ts.message(1)(_.string(1, "__name__").string(2, "up"))
+      ts.raw(Array[Byte](0x12, 40))
+    }.raw(next).toByteArray
+    assert(next.length > 40)
+    intercept[RuntimeException](RemoteWrite.decode(overrun))
+    // a packed double run of 5 bytes (histogram negative_counts, field 10):
+    // an 8-byte step would take 3 bytes of the span record after it
+    val partial = new Wire.Writer().message(1) { ts =>
+      ts.message(1)(_.string(1, "__name__").string(2, "h"))
+      ts.message(4)(_.raw(Array[Byte](0x52, 5, 1, 2, 3, 4, 5))
+        .message(8)(_.sint(1, 0L).varint(2, 1L)).varint(15, t0))
+    }.toByteArray
+    intercept[RuntimeException](RemoteWrite.decodeRequest(partial))
+    // the same partial run in OTLP explicit_bounds must not drop its tail
+    // silently
+    val otlpPartial = new Wire.Writer().message(1)(_.message(2)(_.message(2)(
+      _.string(1, "lat").message(9)(_.message(1)(_.fixed64(3, t0 * 1000000L)
+        .packedFixed64(6, Seq(1L, 2L)).bytes(7, Array[Byte](0, 0, 0, 0, 0, 0, 0xf0.toByte, 0x3f, 9)))
+        .varint(2, 2L))))).toByteArray
+    intercept[RuntimeException](Otlp.decodeAll(otlpPartial))
+  }
+
+  test("deeply nested OTLP AnyValues fail with a RuntimeException, not a " +
+      "stack overflow") {
+    val body = StreamingSpec.deepOtlpBody(3000, t0)
+    assert(body.length > 18000)
+    intercept[RuntimeException](Otlp.decodeAll(body))
+    // nesting inside the depth cap still decodes
+    val shallow = Otlp.decodeAll(StreamingSpec.deepOtlpBody(10, t0))
+    assert(shallow.samples.map(_.labels("deep")) ==
+      Seq("[" * 10 + "x" + "]" * 10))
   }
 
   test("NaN payload bits survive the remote-write/read codec round trip: " +
