@@ -1,5 +1,7 @@
 package graft.metric
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.concurrent.{Await, ExecutionContext, Future, blocking}
 import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
@@ -55,8 +57,10 @@ final case class MetricQuery(
   * matters, the concrete hash differs from the reference.
   *
   * Scale: the data table is partitioned (segment, tsid) — aggregation
-  * shuffles on tsid which is a uniform 64-bit hash, so no skew; index/series
-  * lookups produce small TSID sets that broadcast into the data scan.
+  * shuffles on tsid which is a uniform 64-bit hash, so no skew; label
+  * lookups produce small TSID sets that broadcast into the data scan,
+  * resolved on the driver from the series catalog (at most 100k series)
+  * or, above it, by the index/series tables.
   */
 final class MetricEngine(spark: SparkSession, root: String,
     segmentMs: Long = 12L * 3600 * 1000,
@@ -221,32 +225,49 @@ final class MetricEngine(spark: SparkSession, root: String,
   private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
-  /** Tsids the series table holds, loaded once per engine by ONE
-    * projection scan and kept current by [[registerSeries]]. null = not
-    * loaded; None = more than [[MetricDictCacheMax]] series (each batch
-    * then runs one pruned `tsid IN (batch)` lookup instead). Same
-    * single-writer-per-root contract as [[metricDictCache]]; guarded by
-    * `registerLock`. */
-  private var knownTsids: Option[scala.collection.mutable.Set[Long]] = null
+  /** The driver-side series catalog ([[SeriesCatalog]]): every series of
+    * the `series` table with its decoded labels, loaded once per engine
+    * by ONE projection scan, extended in place by [[registerSeries]]
+    * after each `series` commit, and dropped by
+    * [[registerSeriesDistributed]]. null = not loaded; None = more than
+    * [[MetricDictCacheMax]] series — label matching, label discovery and
+    * label attach then run their distributed index/series plans, and
+    * each registered batch runs one pruned `tsid IN (batch)` lookup.
+    * Readers take one immutable snapshot per call, so a query racing a
+    * registration sees the old or the new series set, never part of it.
+    * Same single-writer-per-root contract as [[metricDictCache]];
+    * written under `registerLock`. */
+  @volatile private var catalog: Option[SeriesCatalog] = null
   private val registerLock = new Object
 
-  /** The batch tsids the series table does not hold yet. */
-  private def unknownTsids(batch: Set[Long]): Set[Long] = {
-    if (knownTsids == null) {
-      val rows = series.scan(ScanRequest(projection = Some(Seq("tsid"))))
-        .limit(MetricDictCacheMax + 1).collect()
-      knownTsids = if (rows.length > MetricDictCacheMax) None
-        else Some(scala.collection.mutable.HashSet.from(rows.map(_.getLong(0))))
-    }
-    knownTsids match {
-      case Some(known) => batch.filterNot(known)
-      case None =>
-        batch -- series.scan(ScanRequest(
-            predicates = Seq(col("tsid").isin(batch.toSeq: _*)),
-            projection = Some(Seq("tsid"))))
-          .collect().map(_.getLong(0))
+  /** The catalog snapshot, loaded if it is not. */
+  private[graft] def loadedCatalog(): Option[SeriesCatalog] = {
+    val loaded = catalog
+    if (loaded != null) loaded
+    else registerLock.synchronized {
+      if (catalog == null) {
+        val rows = series.scan(ScanRequest(
+            projection = Some(Seq("metric_id", "tsid", "series_key"))))
+          .limit(MetricDictCacheMax + 1).collect()
+        catalog = if (rows.length > MetricDictCacheMax) None
+          else Some(SeriesCatalog.empty.added(rows.map(r => (r.getLong(0),
+            r.getLong(1), new String(r.getAs[Array[Byte]](2), UTF_8)))))
+      }
+      catalog
     }
   }
+
+  /** The batch series the series table does not hold yet. */
+  private def unknownSeries(batch: Seq[NewSeries]): Seq[NewSeries] =
+    loadedCatalog() match {
+      case Some(cat) => batch.filterNot(s => cat.contains(s.metricId, s.tsid))
+      case None =>
+        val known = series.scan(ScanRequest(
+            predicates = Seq(col("tsid").isin(batch.map(_.tsid): _*)),
+            projection = Some(Seq("tsid"))))
+          .collect().map(_.getLong(0)).toSet
+        batch.filterNot(s => known(s.tsid))
+    }
 
   /** Register the series of a driver-local batch that the series table
     * does not hold yet — re-delivered payloads and steady-state batches
@@ -256,7 +277,7 @@ final class MetricEngine(spark: SparkSession, root: String,
     * distinct, and written as local frames (no Spark job).
     *
     * ORDER MATTERS for crash-retry consistency: `series` is written LAST
-    * and the known-tsid set only grows after it commits. A crash or
+    * and the catalog only grows after it commits. A crash or
     * failure before that leaves the batch's tsids unregistered, so the
     * retry (or the next engine's fresh tsid load) sees them as new again
     * and rewrites their metrics/tags/index rows — idempotent upserts.
@@ -266,9 +287,9 @@ final class MetricEngine(spark: SparkSession, root: String,
     * The driver dictionaries are updated in place from the new rows,
     * never dropped, so the next query pays no reload job. */
   private def registerSeries(batch: Seq[NewSeries]): Unit = registerLock.synchronized {
-    val byTsid = batch.map(s => s.tsid -> s).toMap
+    val distinct = batch.map(s => s.tsid -> s).toMap.values.toSeq
     val fresh =
-      if (byTsid.isEmpty) Nil else unknownTsids(byTsid.keySet).toSeq.sorted.map(byTsid)
+      if (distinct.isEmpty) Nil else unknownSeries(distinct).sortBy(_.tsid)
     if (fresh.nonEmpty) {
       val dict = metricDictCache
       val names = fresh.map(s => s.name -> s.metricId).distinct
@@ -290,7 +311,8 @@ final class MetricEngine(spark: SparkSession, root: String,
       series.write(localFrame(fresh.map(s => Row(s.metricId, s.tsid,
         s.seriesKey.getBytes(java.nio.charset.StandardCharsets.UTF_8))),
         seriesSchema), MetaRange)
-      knownTsids.foreach(_ ++= fresh.map(_.tsid))
+      catalog = catalog.map(_.added(fresh.map(s => (s.metricId, s.tsid, s.seriesKey))))
+        .filter(_.size <= MetricDictCacheMax)
       if (names.nonEmpty) dictLock.synchronized {
         dictEpoch += 1
         metricDictCache = metricDictCache match {
@@ -298,10 +320,6 @@ final class MetricEngine(spark: SparkSession, root: String,
           case Some(_) => None
           case unloadedOrOverCap => unloadedOrOverCap
         }
-      }
-      fresh.groupBy(_.metricId).foreach { case (mid, ss) =>
-        val keys = ss.flatMap(_.labels.keys)
-        tagKeysCache.computeIfPresent(mid, (_, known) => (known ++ keys).distinct)
       }
     }
   }
@@ -339,8 +357,7 @@ final class MetricEngine(spark: SparkSession, root: String,
             col("series_key").cast(BinaryType).as("series_key")).distinct(),
           MetaRange)
         dictLock.synchronized { dictEpoch += 1; metricDictCache = null }
-        tagKeysCache.clear()
-        knownTsids = null
+        catalog = null
       }
     } finally fresh.unpersist()
   }
@@ -417,21 +434,22 @@ final class MetricEngine(spark: SparkSession, root: String,
     * [[federate]] and the histogram rollup: resolve the metric set from the
     * `__name__` matchers ([[MatchedMetrics]]), then per metric scan `table`
     * pruned by (range, metric_id) and restrict to the matched series via
-    * one inner join on the DISTRIBUTED (tsid, series_key) frame from
-    * [[matchedSeriesFrame]] — bounded plan size AND bounded driver memory
-    * at any series cardinality (an `isin` literal list would grow the
-    * predicate with the match count). Above the fan-out cap, ONE
-    * un-predicated scan semi-joined on the matched (metric_id, tsid)
-    * series frame (the data pk leads with metric_id, so the broadcast join
-    * filters right behind the sorted scan). Output columns = `projection`
-    * over (scanned columns + series_key); `emptySchema` shapes the
-    * no-match result. */
+    * one inner join on the (tsid, series_key) frame from
+    * [[matchedSeriesFrame]] — a broadcast local frame from the catalog,
+    * or the distributed series/index plan above its cap (never an `isin`
+    * literal list, which would grow the predicate with the match count).
+    * Above the fan-out cap, ONE un-predicated scan joined on the matched
+    * (metric_id, tsid, series_key) frame (the data pk leads with
+    * metric_id, so the broadcast join filters right behind the sorted
+    * scan). Output columns = `projection` over (scanned columns +
+    * series_key); `emptySchema` shapes the no-match result. */
   private[metric] def matchedSeriesScan(
       matchers: Seq[graft.promql.LabelMatcher],
       table: graft.storage.TimeMergeStorage, range: TimeRange,
       projection: Seq[Column], emptySchema: StructType): DataFrame = {
     val labelMs = matchers.filterNot(_.label == "__name__")
     val matched = new MatchedMetrics(Seq(matchers))
+    val cat = loadedCatalog()
     if (matched.some.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
@@ -439,12 +457,13 @@ final class MetricEngine(spark: SparkSession, root: String,
       matched.some.map(_._2).sorted.map { mid =>
         table.scan(ScanRequest(range = range,
             predicates = Seq(col("metric_id") === mid)))
-          .join(maybeBroadcast(matchedSeriesFrame(mid, labelMs)), Seq("tsid"))
+          .join(maybeBroadcast(matchedSeriesFrame(cat, mid, labelMs)), Seq("tsid"))
           .select(projection: _*)
       }.reduce(_ unionByName _)
     else
       table.scan(ScanRequest(range = range))
-        .join(maybeBroadcast(matchedSeriesFrameAll(matched.ids, labelMs)),
+        .join(maybeBroadcast(matchedSeriesFrameAll(cat,
+            matched.all.map(_.map(_._2)), matched.ids, labelMs)),
           Seq("metric_id", "tsid"))
         .select(projection: _*)
   }
@@ -465,6 +484,8 @@ final class MetricEngine(spark: SparkSession, root: String,
     *    (an exact name is a map lookup, anything else probes every cached
     *    name with the anchored-regex semantics of the frame path), or, over
     *    the dictionary's driver budget, ONE capped job on [[named]];
+    *  - [[all]]: every matched pair, from the dictionary — None over its
+    *    driver budget;
     *  - [[capped]]: more metrics matched than get a branch of their own;
     *  - [[frames]] (per set), [[named]] and [[ids]]: the same matches as
     *    lazy dictionary frames with the matchers as Spark predicates, for
@@ -486,54 +507,68 @@ final class MetricEngine(spark: SparkSession, root: String,
     lazy val ids: DataFrame =
       frames.reduce(_ unionByName _).select("metric_id").distinct()
 
-    lazy val some: Seq[(String, Long)] =
-      if (nameSets.isEmpty) Nil
-      else loadedDict() match {
-        case Some(dict) =>
-          val exact = nameSets.map(_.collectFirst {
-            case LabelMatcher(_, MatchOp.Eq, v) if v.nonEmpty => v })
-          val candidates =
-            if (exact.forall(_.isDefined))
-              exact.flatten.distinct.flatMap(n => dict.get(n).map(n -> _))
-            else dict.toSeq
-          candidates.filter(p => nameSets.exists(matches(_, p._1)))
-            .sortBy(_._1).take(NameUnionFanout + 1)
-        case None => named.limit(NameUnionFanout + 1).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
+    lazy val all: Option[Seq[(String, Long)]] =
+      if (nameSets.isEmpty) Some(Nil)
+      else loadedDict().map { dict =>
+        val exact = nameSets.map(_.collectFirst {
+          case LabelMatcher(_, MatchOp.Eq, v) if v.nonEmpty => v })
+        val candidates =
+          if (exact.forall(_.isDefined))
+            exact.flatten.distinct.flatMap(n => dict.get(n).map(n -> _))
+          else dict.toSeq
+        candidates.filter(p => nameSets.exists(matches(_, p._1))).sortBy(_._1)
       }
+    lazy val some: Seq[(String, Long)] = all match {
+      case Some(pairs) => pairs.take(NameUnionFanout + 1)
+      case None => named.limit(NameUnionFanout + 1).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
+    }
     lazy val capped: Boolean = some.length > NameUnionFanout
 
-    /** Per set, its pairs of [[some]] — meaningful under the cap only. */
-    def perSet: Seq[Seq[(String, Long)]] =
-      nameSets.map(ms => some.filter(p => matches(ms, p._1)))
+    /** Per set, its pairs of `pairs` ([[some]] under the cap, or [[all]]). */
+    def perSet(pairs: Seq[(String, Long)]): Seq[Seq[(String, Long)]] =
+      nameSets.map(ms => pairs.filter(p => matches(ms, p._1)))
 
-    /** Tag keys of the matched metrics: up to 4 metrics (every recording
-      * rule, the labeled instant path, small unions like the OTLP summary
-      * triple) read the cached per-metric sets — no job after first use;
-      * more run ONE job semi-joined on [[ids]] (a per-metric loop would
-      * launch a job per metric on a cold cache). */
-    def tagKeys: Set[String] =
-      if (some.length <= 4) some.flatMap(p => tagKeysOf(p._2)).toSet
-      else tags.scan(ScanRequest(
+    /** Tag keys of the matched metrics: from the catalog snapshot `cat`
+      * with no job, or above its cap ONE job semi-joined on [[ids]]. */
+    def tagKeys(cat: Option[SeriesCatalog]): Set[String] = (cat, all) match {
+      case (Some(c), Some(pairs)) => pairs.flatMap(p => c.keysOf(p._2)).toSet
+      case _ => tags.scan(ScanRequest(
           projection = Some(Seq("metric_id", "tag_key"))))
         .join(maybeBroadcast(ids), Seq("metric_id"), "left_semi")
         .select("tag_key").distinct()
         .collect().map(_.getString(0)).toSet
+    }
   }
 
   /** Multi-metric twin of [[matchedSeriesFrame]]: (metric_id, tsid,
     * series_key:string) of every series of the matched metric ids whose
-    * labels match `matchers`. Index-exact matchers prune through the
-    * (tag_value → tsid) dictionary semi-joined per matcher on
-    * (metric_id, tsid); residual matchers evaluate as a Spark filter
-    * over the decoded key — nothing stages on the driver at any
-    * metric-name or series cardinality. */
-  private[metric] def matchedSeriesFrameAll(mids: DataFrame,
+    * labels match `matchers`. With the catalog `cat` and the matched ids
+    * `mids` on the driver, a local frame built with no job; otherwise
+    * (either above its cap) the distributed plan over `midsFrame`:
+    * index-exact matchers prune through the (tag_value → tsid)
+    * dictionary semi-joined per matcher on (metric_id, tsid), residual
+    * matchers evaluate as a Spark filter over the decoded key, and
+    * nothing stages on the driver. */
+  private[graft] def matchedSeriesFrameAll(cat: Option[SeriesCatalog],
+      mids: Option[Seq[Long]], midsFrame: => DataFrame,
+      matchers: Seq[graft.promql.LabelMatcher]): DataFrame =
+    (cat, mids) match {
+      case (Some(c), Some(ms)) =>
+        val keep = labelsMatch(matchers)
+        localFrame(ms.distinct.flatMap(mid => c.series(mid).collect {
+            case (tsid, s) if keep(s.labels) => Row(mid, tsid, s.key) }),
+          StructType(Seq(StructField("metric_id", LongType),
+            StructField("tsid", LongType), StructField("series_key", StringType))))
+      case _ => distributedSeriesFrameAll(midsFrame, matchers)
+    }
+
+  private def distributedSeriesFrameAll(mids0: DataFrame,
       matchers: Seq[graft.promql.LabelMatcher]): DataFrame = {
     import graft.promql._
     var keyed = series.scan(ScanRequest(
         projection = Some(Seq("metric_id", "tsid", "series_key"))))
-      .join(maybeBroadcast(mids), Seq("metric_id"), "left_semi")
+      .join(maybeBroadcast(mids0), Seq("metric_id"), "left_semi")
       .select(col("metric_id"), col("tsid"),
         col("series_key").cast("string").as("series_key"))
     val (exact, residual) = matchers.partition(m => indexExact(Seq(m)))
@@ -548,7 +583,7 @@ final class MetricEngine(spark: SparkSession, root: String,
           s"not index-exact: $other (guard with indexExact first)")
       }
       val dict = index.scan(ScanRequest(predicates = pred))
-        .join(maybeBroadcast(mids), Seq("metric_id"), "left_semi")
+        .join(maybeBroadcast(mids0), Seq("metric_id"), "left_semi")
         .select("metric_id", "tsid").distinct()
       keyed = keyed.join(dict, Seq("metric_id", "tsid"), "left_semi")
     }
@@ -559,32 +594,60 @@ final class MetricEngine(spark: SparkSession, root: String,
     keyed
   }
 
-  /** Distributed (tsid, series_key:string) frame of metric `mid`'s series
-    * matching the non-`__name__` `matchers` — nothing materializes on the
-    * driver (the round-11 verdict's last scale wart): index-exact matchers
-    * (`=` non-empty, positive regexes that can't match "") prune through
-    * [[indexExactTsids]]'s per-label dictionary semi-joins; residual
-    * matchers (`!=` / `!~` / empty-matching shapes, which select series
-    * with ABSENT labels the index cannot represent) evaluate as a Spark
-    * filter over the labels map decoded from `series_key`
-    * ([[MetricEngine.seriesLabelsColumn]]) with exact Prometheus matcher
-    * semantics ([[matcherColumn]]). At a million-series metric the driver
-    * holds only the plan; the per-metric series dictionary stays on the
-    * executors. */
-  private def matchedSeriesFrame(mid: Long,
-      matchers: Seq[graft.promql.LabelMatcher]): DataFrame = {
-    val (exact, residual) = matchers.partition(m => indexExact(Seq(m)))
-    var keyed = series.scan(ScanRequest(
-        predicates = Seq(col("metric_id") === mid),
-        projection = Some(Seq("tsid", "series_key"))))
-      .select(col("tsid"), col("series_key").cast("string").as("series_key"))
-    if (exact.nonEmpty)
-      keyed = keyed.join(indexExactTsids(mid, exact), Seq("tsid"), "left_semi")
-    if (residual.nonEmpty) {
-      val labels = MetricEngine.seriesLabelsColumn(col("series_key"))
-      keyed = keyed.filter(residual.map(matcherColumn(labels, _)).reduce(_ && _))
+  /** (tsid, series_key:string) frame of metric `mid`'s series matching
+    * the non-`__name__` `matchers`. While the catalog `cat` is loaded, a
+    * local frame built on the driver with no Spark job: the catalog holds
+    * at most [[MetricDictCacheMax]] series, so the driver never holds more
+    * than that. Above the cap (`cat` = None) nothing materializes on the
+    * driver: index-exact matchers (`=` non-empty, positive regexes that
+    * can't match "") prune through [[indexExactTsids]]'s per-label
+    * dictionary semi-joins; residual matchers (`!=` / `!~` /
+    * empty-matching shapes, which select series with ABSENT labels the
+    * index cannot represent) evaluate as a Spark filter over the labels
+    * map decoded from `series_key` ([[MetricEngine.seriesLabelsColumn]]).
+    * Both arms apply exact Prometheus matcher semantics ([[labelsMatch]],
+    * [[matcherColumn]]). */
+  private[graft] def matchedSeriesFrame(cat: Option[SeriesCatalog], mid: Long,
+      matchers: Seq[graft.promql.LabelMatcher]): DataFrame = cat match {
+    case Some(c) =>
+      val keep = labelsMatch(matchers)
+      localFrame(c.series(mid).collect {
+          case (tsid, s) if keep(s.labels) => Row(tsid, s.key) }.toSeq,
+        StructType(Seq(StructField("tsid", LongType),
+          StructField("series_key", StringType))))
+    case None =>
+      val (exact, residual) = matchers.partition(m => indexExact(Seq(m)))
+      var keyed = series.scan(ScanRequest(
+          predicates = Seq(col("metric_id") === mid),
+          projection = Some(Seq("tsid", "series_key"))))
+        .select(col("tsid"), col("series_key").cast("string").as("series_key"))
+      if (exact.nonEmpty)
+        keyed = keyed.join(indexExactTsids(None, mid, exact), Seq("tsid"), "left_semi")
+      if (residual.nonEmpty) {
+        val labels = MetricEngine.seriesLabelsColumn(col("series_key"))
+        keyed = keyed.filter(residual.map(matcherColumn(labels, _)).reduce(_ && _))
+      }
+      keyed
+  }
+
+  /** Driver twin of [[matcherColumn]]: `matchers` as one predicate over a
+    * decoded label map — absent label = "", regexes compiled once and
+    * matched over the whole value (the `\A…\z` anchoring of the Spark
+    * arm). */
+  private def labelsMatch(
+      matchers: Seq[graft.promql.LabelMatcher]): Map[String, String] => Boolean = {
+    import graft.promql._
+    val tests = matchers.map { m =>
+      val ok: String => Boolean = m.op match {
+        case MatchOp.Eq => _ == m.value
+        case MatchOp.Ne => _ != m.value
+        case MatchOp.Re | MatchOp.Nre =>
+          val re = java.util.regex.Pattern.compile("(?:" + m.value + ")")
+          v => re.matcher(v).matches() == (m.op == MatchOp.Re)
+      }
+      (labels: Map[String, String]) => ok(labels.getOrElse(m.label, ""))
     }
-    keyed
+    labels => tests.forall(_(labels))
   }
 
   /** One Prometheus matcher as a Spark predicate over a decoded labels
@@ -643,46 +706,61 @@ final class MetricEngine(spark: SparkSession, root: String,
     }
   }
 
-  /** Step-1 TSID resolution for an [[indexExact]] matcher set: one index
-    * dictionary filter per matcher ( `=` equality, `=~` anchored rlike),
-    * AND-ed via semi-joins — the regex runs on the small per-metric
-    * (tag_value, tsid) dictionary, never the data scan. No matchers =
-    * every series of the metric. */
-  private def indexExactTsids(mid: Long,
+  /** Step-1 TSID resolution for an [[indexExact]] matcher set. While the
+    * catalog `cat` is loaded, a local tsid frame matched on the driver
+    * with no job; above its cap, one index dictionary filter per matcher
+    * (`=` equality, `=~` anchored rlike), AND-ed via semi-joins — the
+    * regex runs on the small per-metric (tag_value, tsid) dictionary,
+    * never the data scan. No matchers = every series of the metric. */
+  private[graft] def indexExactTsids(cat: Option[SeriesCatalog], mid: Long,
       matchers: Seq[graft.promql.LabelMatcher]): DataFrame = {
     import graft.promql._
-    val per = matchers.map {
-      case LabelMatcher(l, MatchOp.Eq, v) =>
-        index.scan(ScanRequest(predicates = Seq(col("metric_id") === mid,
-            col("tag_key") === l, col("tag_value") === v)))
-          .select("tsid").distinct()
-      case LabelMatcher(l, MatchOp.Re, re) =>
-        index.scan(ScanRequest(predicates = Seq(col("metric_id") === mid,
-            col("tag_key") === l,
-            col("tag_value").rlike("\\A(?:" + re + ")\\z"))))
-          .select("tsid").distinct()
-      case other => throw new IllegalStateException(
-        s"not index-exact: $other (guard with indexExact first)")
+    cat match {
+      case Some(c) =>
+        val keep = labelsMatch(matchers)
+        tsidFrame(c.series(mid).collect { case (t, s) if keep(s.labels) => t })
+      case None => matchers.map {
+        case LabelMatcher(l, MatchOp.Eq, v) =>
+          index.scan(ScanRequest(predicates = Seq(col("metric_id") === mid,
+              col("tag_key") === l, col("tag_value") === v)))
+            .select("tsid").distinct()
+        case LabelMatcher(l, MatchOp.Re, re) =>
+          index.scan(ScanRequest(predicates = Seq(col("metric_id") === mid,
+              col("tag_key") === l,
+              col("tag_value").rlike("\\A(?:" + re + ")\\z"))))
+            .select("tsid").distinct()
+        case other => throw new IllegalStateException(
+          s"not index-exact: $other (guard with indexExact first)")
+      }.reduceOption((a, b) => a.join(b, Seq("tsid"), "left_semi"))
+        .getOrElse(series.scan(ScanRequest(
+            predicates = Seq(col("metric_id") === mid)))
+          .select("tsid").distinct())
     }
-    per.reduceOption((a, b) => a.join(b, Seq("tsid"), "left_semi"))
-      .getOrElse(series.scan(ScanRequest(
-          predicates = Seq(col("metric_id") === mid)))
-        .select("tsid").distinct())
   }
 
   /** TSIDs matching every label filter — the RFC two-step lookup, step 1
-    * (20240827-metric-engine.md:121-126): filter the index table per label,
-    * intersect via repeated semi-join. */
-  def lookupTsids(metricId: Long, labelFilters: Map[String, String]): DataFrame = {
-    if (labelFilters.isEmpty)
-      return series.scan(ScanRequest(predicates = Seq(col("metric_id") === metricId)))
-        .select("tsid").distinct()
-    labelFilters.map { case (k, v) =>
-      index.scan(ScanRequest(predicates = Seq(
-        col("metric_id") === metricId, col("tag_key") === k, col("tag_value") === v)))
-        .select("tsid").distinct()
-    }.reduce((a, b) => a.join(b, Seq("tsid"), "left_semi"))
-  }
+    * (20240827-metric-engine.md:121-126): from the catalog on the driver,
+    * or above its cap by filtering the index table per label and
+    * intersecting via repeated semi-join. */
+  def lookupTsids(metricId: Long, labelFilters: Map[String, String]): DataFrame =
+    loadedCatalog() match {
+      case Some(c) =>
+        tsidFrame(c.series(metricId).collect {
+          case (t, s) if labelFilters.forall { case (k, v) => s.labels.get(k).contains(v) } => t })
+      case None if labelFilters.isEmpty =>
+        series.scan(ScanRequest(predicates = Seq(col("metric_id") === metricId)))
+          .select("tsid").distinct()
+      case None =>
+        labelFilters.map { case (k, v) =>
+          index.scan(ScanRequest(predicates = Seq(
+            col("metric_id") === metricId, col("tag_key") === k, col("tag_value") === v)))
+            .select("tsid").distinct()
+        }.reduce((a, b) => a.join(b, Seq("tsid"), "left_semi"))
+    }
+
+  /** A local one-column `tsid` frame. */
+  private def tsidFrame(tsids: Iterable[Long]): DataFrame =
+    localFrame(tsids.map(Row(_)).toSeq, StructType(Seq(StructField("tsid", LongType))))
 
   /** Registered rollups ([[Rollup]]) considered for transparent routing
     * by [[queryPromQL]]'s fast path, coarsest grid first (the coarsest
@@ -831,39 +909,50 @@ final class MetricEngine(spark: SparkSession, root: String,
 
   /** Capped label-VALUES discovery frame — the engine behind
     * `GET /api/v1/label/<name>/values` (no-selector arm): distinct values
-    * of `label` (`__name__` = the metric-name dictionary), sorted and
-    * limit-capped INSIDE the plan (Sort + GlobalLimit →
-    * TakeOrderedAndProject), so a high-cardinality label (instance / pod
-    * ids — this endpoint's worst customer, refreshed per Grafana
-    * variable) never stages its full value dictionary on the driver.
-    * `limit` Int.MaxValue = uncapped (the API's explicit no-limit
-    * contract — the caller asked for everything). */
-  def labelValues(label: String, limit: Int = Int.MaxValue): DataFrame = {
-    val (df, c) =
-      if (label == "__name__")
-        (metrics.scan(ScanRequest(projection = Some(Seq("metric_name")))),
-          "metric_name")
-      else
-        (tags.scan(ScanRequest(
+    * of `label` (`__name__` = the metric-name dictionary), sorted. While
+    * the driver dictionary (the series catalog, or for `__name__` the
+    * metric dictionary) is loaded, the values come from it: uncapped,
+    * a sorted local frame that runs no job. Above its cap they come from
+    * the `tags`/`metrics` scan, sorted in the plan, so a high-cardinality
+    * label (instance / pod ids — this endpoint's worst customer,
+    * refreshed per Grafana variable) never stages its full value
+    * dictionary on the driver. A capped call (`limit` below
+    * Int.MaxValue, the API's explicit no-limit contract) sorts and limits
+    * INSIDE the plan on both arms (TakeOrderedAndProject). */
+  def labelValues(label: String, limit: Int = Int.MaxValue): DataFrame =
+    if (label == "__name__")
+      discovery(loadedDict().map(_.keys), "metric_name", limit,
+        metrics.scan(ScanRequest(projection = Some(Seq("metric_name")))))
+    else
+      discovery(loadedCatalog().map(_.byMetric.valuesIterator
+          .flatMap(_.valuesIterator.flatMap(_.labels.get(label))).toSet),
+        "tag_value", limit,
+        tags.scan(ScanRequest(
           predicates = Seq(col("tag_key") === label),
-          projection = Some(Seq("tag_value")))), "tag_value")
-    val sorted = df.distinct().orderBy(c)
-    if (limit == Int.MaxValue) sorted else sorted.limit(limit)
-  }
+          projection = Some(Seq("tag_value")))))
 
   /** Capped label-NAMES discovery frame — the engine behind
     * `GET /api/v1/labels` (no-selector arm): distinct tag keys plus the
-    * implicit `__name__`, sorted and limit-capped INSIDE the plan
-    * (TakeOrderedAndProject), the [[labelValues]] symmetry (round 14).
-    * Bounded by label-NAME cardinality anyway (thousands, not the
-    * million-value dictionaries labelValues defends against), but the
-    * in-plan cap costs nothing and keeps every discovery endpoint off
-    * the full-collect path. */
-  def labelKeys(limit: Int = Int.MaxValue): DataFrame = {
-    val keys = tags.scan(ScanRequest(projection = Some(Seq("tag_key"))))
-      .union(spark.range(1).select(lit("__name__").as("tag_key")))
-      .distinct().orderBy("tag_key")
-    if (limit == Int.MaxValue) keys else keys.limit(limit)
+    * implicit `__name__`, sorted — from the catalog with no job, or
+    * above its cap from the `tags` scan; capped in the plan like
+    * [[labelValues]]. */
+  def labelKeys(limit: Int = Int.MaxValue): DataFrame =
+    discovery(loadedCatalog().map(_.keysByMetric.valuesIterator.flatten.toSet + "__name__"),
+      "tag_key", limit,
+      tags.scan(ScanRequest(projection = Some(Seq("tag_key"))))
+        .union(spark.range(1).select(lit("__name__").as("tag_key"))))
+
+  /** One discovery column `c`: the driver's `local` values as a sorted
+    * local frame, or (None: above the driver cap) `scan`'s distinct values
+    * sorted in the plan; a capped `limit` sorts + limits in the plan. */
+  private def discovery(local: Option[Iterable[String]], c: String, limit: Int,
+      scan: => DataFrame): DataFrame = {
+    val sorted = local match {
+      case Some(vs) => localFrame(vs.toSeq.distinct.sorted(utf8Order).map(Row(_)),
+        StructType(Seq(StructField(c, StringType))))
+      case None => scan.distinct().orderBy(c)
+    }
+    if (limit == Int.MaxValue) sorted else sorted.orderBy(c).limit(limit)
   }
 
   /** [[query]] with the step-1 TSID set already resolved — the PromQL
@@ -918,14 +1007,10 @@ final class MetricEngine(spark: SparkSession, root: String,
     }
     var rows = rows0
     if (tags.nonEmpty) {
-      // ONE index join however many grouping tags (round 14): all keys
-      // read in a single scan aggregated to a per-series tag_key→value
-      // map — the per-tag loop this replaces built |tags| joins per query
-      val lbls = index.scan(ScanRequest(predicates = Seq(
-          col("metric_id") === mid, col("tag_key").isin(tags: _*))))
-        .groupBy("tsid")
-        .agg(map_from_entries(collect_list(
-          struct(col("tag_key"), col("tag_value")))).as("__graft_tags__"))
+      // ONE label join however many grouping tags (round 14): a per-series
+      // tag_key→value map — the per-tag loop this replaces built |tags|
+      // joins per query
+      val lbls = labelMapFrame(loadedCatalog(), mid, tags, "__graft_tags__")
       rows = rows.join(maybeBroadcast(lbls), Seq("tsid"), "left")
       tags.zip(aliases).foreach { case (tag, al) =>
         rows = rows.withColumn(al,
@@ -936,6 +1021,27 @@ final class MetricEngine(spark: SparkSession, root: String,
     val out = agg(rows, aliases.map(col) ++ bucketCol.toSeq)
     tags.zip(aliases).foldLeft(out) { case (df, (tag, al)) =>
       df.withColumnRenamed(al, tag) }
+  }
+
+  /** (tsid, `out`: the series' labels restricted to `keys`) of metric
+    * `mid`'s series: a local frame from the catalog `cat` with no job,
+    * or above its cap ONE index scan aggregated per series (series
+    * carrying none of `keys` are absent there; a left join reads both
+    * the same). */
+  private[graft] def labelMapFrame(cat: Option[SeriesCatalog], mid: Long,
+      keys: Seq[String], out: String): DataFrame = cat match {
+    case Some(c) =>
+      val wanted = keys.toSet
+      localFrame(c.series(mid).map { case (tsid, s) =>
+          Row(tsid, s.labels.filter(kv => wanted(kv._1))) }.toSeq,
+        StructType(Seq(StructField("tsid", LongType),
+          StructField(out, MapType(StringType, StringType)))))
+    case None =>
+      index.scan(ScanRequest(predicates = Seq(
+          col("metric_id") === mid, col("tag_key").isin(keys: _*))))
+        .groupBy("tsid")
+        .agg(map_from_entries(collect_list(
+          struct(col("tag_key"), col("tag_value")))).as(out))
   }
 
   /** Unknown-metric result for a fast-path aggregation: empty, with the
@@ -961,8 +1067,8 @@ final class MetricEngine(spark: SparkSession, root: String,
     *
     * GENERAL PATH — everything else (regex/negative matchers, multi-label
     * grouping, topk/bottomk/quantile, binary operators): the referenced
-    * label columns are joined onto the data scan from the index tables
-    * (broadcast; tag dictionaries are small) and the full
+    * label columns are joined onto the data scan from the series catalog
+    * (a broadcast local frame; the index tables above its cap) and the full
     * [[graft.promql.PromQLContext]] evaluator runs with tsid as the series
     * identity. `=` and positive non-empty-matching regex matchers push down
     * into the index as a TSID semi-join prune; the rest (negative /
@@ -972,17 +1078,16 @@ final class MetricEngine(spark: SparkSession, root: String,
     * (`sum(a)/sum(b)`), as raw range-vector operands carry per-metric tsids.
     */
   /** Label sets of the series matching a PromQL selector — the
-    * `/api/v1/series` discovery surface. The metric set resolves as a
-    * FRAME ([[MatchedMetrics.ids]] — `__name__` matchers as Spark
-    * predicates over the metric-name dictionary), series match
-    * DISTRIBUTED through [[matchedSeriesFrameAll]] (index-pruned
-    * `=`/positive-regex, residual matchers as a Spark filter over the
-    * decoded key — exact Prometheus semantics, anchored regexes, absent
-    * label = ""), and ONE `TakeOrderedAndProject(limit)` on the
-    * canonical key collects the survivors — name-major order (the key
-    * starts with the metric name), one Spark job however many names a
-    * federation regex matches, never more than `limit` keys on the
-    * driver. */
+    * `/api/v1/series` discovery surface, in canonical-key order
+    * (name-major: the key starts with the metric name), at most `limit`.
+    * While the catalog and the metric dictionary are loaded, the match
+    * runs on the driver with no Spark job. Above either cap the metric
+    * set resolves as a FRAME ([[MatchedMetrics.ids]]), series match
+    * DISTRIBUTED through [[matchedSeriesFrameAll]], and ONE
+    * `TakeOrderedAndProject(limit)` on the key collects the survivors —
+    * one job however many names a federation regex matches, never more
+    * than `limit` keys on the driver. Both arms apply exact Prometheus
+    * matcher semantics (anchored regexes, absent label = ""). */
   def seriesFor(selectorText: String, limit: Int = 1000): Seq[Map[String, String]] = {
     import graft.promql._
     val sel = PromQLParser.parse(selectorText) match {
@@ -990,13 +1095,23 @@ final class MetricEngine(spark: SparkSession, root: String,
       case other => throw new IllegalArgumentException(
         s"series discovery takes a plain selector, got: $other")
     }
-    matchedSeriesFrameAll(new MatchedMetrics(Seq(sel.allMatchers)).ids,
-        sel.matchers.filterNot(_.label == "__name__"))
-      .select("series_key").orderBy("series_key").limit(limit)
-      .collect().map { r =>
-        val (name, labels) = MetricEngine.parseSeriesKey(r.getString(0))
-        labels + ("__name__" -> name)
-      }.toSeq
+    val matched = new MatchedMetrics(Seq(sel.allMatchers))
+    val labelMs = sel.matchers.filterNot(_.label == "__name__")
+    val keys = (loadedCatalog(), matched.all) match {
+      case (Some(c), Some(pairs)) =>
+        val keep = labelsMatch(labelMs)
+        pairs.flatMap(p => c.series(p._2).valuesIterator
+            .collect { case s if keep(s.labels) => s.key })
+          .sorted(utf8Order).take(limit)
+      case _ =>
+        matchedSeriesFrameAll(None, None, matched.ids, labelMs)
+          .select("series_key").orderBy("series_key").limit(limit)
+          .collect().map(_.getString(0)).toSeq
+    }
+    keys.map { k =>
+      val (name, labels) = MetricEngine.parseSeriesKey(k)
+      labels + ("__name__" -> name)
+    }
   }
 
   /** By-labels the [[query]] fast path lowers onto [[MetricQuery]]:
@@ -1116,7 +1231,7 @@ final class MetricEngine(spark: SparkSession, root: String,
               StructField("value", DoubleType, nullable = false)))))
         data.scan(ScanRequest(range = range,
             predicates = Seq(col("metric_id") === mid)))
-          .join(maybeBroadcast(indexExactTsids(mid, sel.matchers)),
+          .join(maybeBroadcast(indexExactTsids(loadedCatalog(), mid, sel.matchers)),
             Seq("tsid"), "left_semi")
           .select(col("tsid"), col("ts").as("ts_ms"), col("value"))
       // by (__name__) must take the general path — the fast path's index
@@ -1132,7 +1247,7 @@ final class MetricEngine(spark: SparkSession, root: String,
           by.headOption) // tsids/tags resolved below; labelFilters unused
         val mid = metricIdOf(sel.metric).getOrElse(
           return emptyAggFrame(by, stepMs))
-        val tsids = indexExactTsids(mid, sel.matchers)
+        val tsids = indexExactTsids(loadedCatalog(), mid, sel.matchers)
         // transparent downsampling: a registered rollup answers combinable
         // aggregations from its partials when the step aligns — the same
         // result, grid/interval× less scan (Rollup Scaladoc; RollupSpec
@@ -1148,7 +1263,7 @@ final class MetricEngine(spark: SparkSession, root: String,
           Some(win), MetricAgg.Sum, by.headOption, rate = true)
         val mid = metricIdOf(sel.metric).getOrElse(
           return emptyAggFrame(by, Some(win)))
-        val tsids = indexExactTsids(mid, sel.matchers)
+        val tsids = indexExactTsids(loadedCatalog(), mid, sel.matchers)
         // counter rollups route here too: per-bucket (first, last, inc)
         // partials reconstruct the raw path's reset-aware deltas exactly
         val inc = rollupRouted(q, tsids, by)
@@ -1592,22 +1707,6 @@ final class MetricEngine(spark: SparkSession, root: String,
     shaped.select((keys0.map(MetricEngine.qcol) :+ col("value")): _*)
   }
 
-  /** Per-metric tag-KEY dictionary cache (round 15): the serving
-    * decoration of every exact-name result re-discovered the metric's
-    * label keys with its own scan+collect job; the key set only changes
-    * when a new series registers ([[registerSeries]] adds the new keys
-    * to a cached entry; [[registerSeriesDistributed]] clears the cache).
-    * Bounded by the number of queried metrics × their key counts. */
-  private val tagKeysCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
-
-  private def tagKeysOf(mid: Long): Seq[String] =
-    tagKeysCache.computeIfAbsent(mid, _ =>
-      tags.scan(ScanRequest(
-          predicates = Seq(col("metric_id") === mid),
-          projection = Some(Seq("tag_key"))))
-        .distinct().collect().map(_.getString(0)).toSeq)
-
   /** Histogram rows of the matched series within `range`, shaped like
     * [[queryHistograms]] output (series_key + ts_ms + histogram cols).
     * Every caller probes `rows.isEmpty` to route native-vs-classic and
@@ -1651,7 +1750,7 @@ final class MetricEngine(spark: SparkSession, root: String,
   private def decorateSeriesLabels(quant: DataFrame,
       matchers: Seq[graft.promql.LabelMatcher],
       extraCols: Seq[String] = Nil): DataFrame = {
-    val keys = new MatchedMetrics(Seq(matchers)).tagKeys.toSeq.sorted
+    val keys = new MatchedMetrics(Seq(matchers)).tagKeys(loadedCatalog()).toSeq.sorted
     // a label key named like a structural column (a label literally
     // called "value", or a carried ts_ms) would emit DUPLICATE output
     // columns whose fieldIndex resolution is arbitrary at the serving
@@ -1695,9 +1794,11 @@ final class MetricEngine(spark: SparkSession, root: String,
 
   /** Build a [[graft.promql.PromQLContext]] over the engine's storage for
     * the metrics and labels `expr` references: per metric, the data scan is
-    * label-enriched by broadcast-joining the index table's (tsid, tag_value)
-    * pairs per referenced label; metrics union into one frame with
-    * `__name__`. Absent labels are null → the evaluator's absent-is-empty
+    * pruned and label-enriched by ONE broadcast join of a local frame of
+    * the kept series' referenced labels, built from the series catalog
+    * with no job (above its cap: an index-table prune and a label map
+    * aggregated from the index); metrics union into one frame with
+    * `__name__`. Absent labels read "" → the evaluator's absent-is-empty
     * matcher semantics apply unchanged.
     *
     * `latestOnly` turns on the evaluator's instant-selector mode
@@ -1733,13 +1834,14 @@ final class MetricEngine(spark: SparkSession, root: String,
     // matched-name cardinality (the same shape as [[matchedSeriesScan]];
     // reference docs/rfcs/20240827-metric-engine.md:121).
     val matched = new MatchedMetrics(selectorList.map(_.allMatchers))
+    val cat = loadedCatalog()
     val someNames = matched.some
     val capped = matched.capped
     // Per-selector resolved names — branch-path bookkeeping only, so it
     // never materializes above the cap.
     val resolved: Map[Selector, Set[String]] =
       if (capped) Map.empty
-      else selectorList.zip(matched.perSet)
+      else selectorList.zip(matched.perSet(someNames))
         .map { case (s, ps) => s -> ps.map(_._1).toSet }.toMap
     // labels the evaluator READS must be joined from the index: matcher,
     // grouping and vector-matching labels, `le`, and the label functions'
@@ -1773,7 +1875,7 @@ final class MetricEngine(spark: SparkSession, root: String,
     // FULL labelset, referenced or not).
     val allKeys: Set[String] =
       if (allLabels || tree.exists { case a: Agg => a.without; case _ => false })
-        matched.tagKeys
+        matched.tagKeys(cat)
       else Set.empty
     val labelCols = (labelSet ++ allKeys).toSeq.sorted
     // Labels whose bare names collide with the evaluator's structural
@@ -1806,47 +1908,42 @@ final class MetricEngine(spark: SparkSession, root: String,
     // aggregate there was dropped by AQE's one-row rewrite only when the
     // index stage's statistics arrived before the aggregate's own shuffle
     // stage was created, so one query ran 9 or 10 jobs from run to run.
-    def prunableTsids(mid: Long, sel: Selector): Option[DataFrame] = {
-      val per = sel.matchers.flatMap {
-        // __name__ matchers are resolved at the metric level, not the index
-        case LabelMatcher("__name__", _, _) => None
-        case LabelMatcher(l, MatchOp.Eq, v) if v.nonEmpty =>
-          Some(index.scan(ScanRequest(predicates = Seq(
-            col("metric_id") === mid, col("tag_key") === l, col("tag_value") === v)))
-            .select("tsid"))
-        case LabelMatcher(l, MatchOp.Re, re) if !"".matches(s"^(?:$re)$$") =>
-          Some(index.scan(ScanRequest(predicates = Seq(
-            col("metric_id") === mid, col("tag_key") === l,
-            col("tag_value").rlike("\\A(?:" + re + ")\\z"))))
-            .select("tsid"))
-        case _ => None
-      }
-      per.reduceOption((a, b) => a.join(b, Seq("tsid"), "left_semi"))
+    def prunableTsids(mid: Long, sel: Selector): Option[DataFrame] = cat match {
+      case Some(_) =>
+        val exact = sel.matchers.filter(m => indexExact(Seq(m)))
+        if (exact.isEmpty) None else Some(indexExactTsids(cat, mid, exact))
+      case None =>
+        sel.matchers.flatMap {
+          // __name__ matchers are resolved at the metric level, not the index
+          case LabelMatcher("__name__", _, _) => None
+          case LabelMatcher(l, MatchOp.Eq, v) if v.nonEmpty =>
+            Some(index.scan(ScanRequest(predicates = Seq(
+              col("metric_id") === mid, col("tag_key") === l, col("tag_value") === v)))
+              .select("tsid"))
+          case LabelMatcher(l, MatchOp.Re, re) if !"".matches(s"^(?:$re)$$") =>
+            Some(index.scan(ScanRequest(predicates = Seq(
+              col("metric_id") === mid, col("tag_key") === l,
+              col("tag_value").rlike("\\A(?:" + re + ")\\z"))))
+              .select("tsid"))
+          case _ => None
+        }.reduceOption((a, b) => a.join(b, Seq("tsid"), "left_semi"))
     }
     val byMetric: String => Seq[Selector] =
       m => selectorList.filter(s => resolved(s).contains(m))
-    // ONE label join regardless of referenced-key count (round 14): all
-    // keys read in a single index scan aggregated to a per-series
-    // tag_key→tag_value map, decoded into the flat __lbl_* columns. The
-    // per-key join loop this replaces built |labels| joins per metric —
-    // `without(...)` over a wide metric multiplied that into plan bloat.
-    // Absent label = empty string (Prometheus) — also keeps these columns
-    // usable as equi-join keys in binary-operator matching.
+    // ONE label join regardless of referenced-key count (round 14): a
+    // per-series tag_key→tag_value map of the referenced keys, decoded
+    // into the flat __lbl_* columns. The per-key join loop this replaces
+    // built |labels| joins per metric — `without(...)` over a wide metric
+    // multiplied that into plan bloat. Absent label = empty string
+    // (Prometheus) — also keeps these columns usable as equi-join keys in
+    // binary-operator matching.
+    def decodeLabels(joined: DataFrame): DataFrame =
+      labelCols.foldLeft(joined)((r, l) => r.withColumn(lblCol(l),
+        coalesce(col("__lbls__").getItem(l), lit("")))).drop("__lbls__")
     def attachLabels(rows0: DataFrame, keyCols: Seq[String],
-        preds: Seq[Column], midsF: Option[DataFrame]): DataFrame =
+        lbls: => DataFrame): DataFrame =
       if (labelCols.isEmpty) rows0
-      else {
-        var idx = index.scan(ScanRequest(predicates =
-          preds :+ col("tag_key").isin(labelCols: _*)))
-        midsF.foreach(f => idx =
-          idx.join(maybeBroadcast(f), Seq("metric_id"), "left_semi"))
-        val lbls = idx.groupBy(keyCols.map(col): _*)
-          .agg(map_from_entries(collect_list(
-            struct(col("tag_key"), col("tag_value")))).as("__lbls__"))
-        val joined = rows0.join(maybeBroadcast(lbls), keyCols, "left")
-        labelCols.foldLeft(joined)((r, l) => r.withColumn(lblCol(l),
-          coalesce(col("__lbls__").getItem(l), lit("")))).drop("__lbls__")
-      }
+      else decodeLabels(rows0.join(maybeBroadcast(lbls), keyCols, "left"))
     val frames = if (!capped) someNames.map { case (m, mid) =>
         // offset selectors read data BEFORE the query range — widen the
         // manifest prune by the largest offset on this metric (the
@@ -1862,17 +1959,19 @@ final class MetricEngine(spark: SparkSession, root: String,
           .map(_._2)
           .foldLeft(offWidened)((r, p) => TimeRange(
             math.min(r.start, p.start), math.max(r.end, p.end)))
-        var rows = data.scan(ScanRequest(range = scanRange,
+        val rows = data.scan(ScanRequest(range = scanRange,
             predicates = Seq(col("metric_id") === mid)))
           .select(lit(m).as("__name__"), col("tsid"), col("ts"), col("value"))
         // Union of per-selector prunes (a selector with nothing prunable
         // needs every series — no prune for the whole metric then).
         val perSel = byMetric(m).map(prunableTsids(mid, _))
-        if (perSel.forall(_.isDefined)) {
-          val prunable = perSel.flatten.reduce(_ union _)
-          rows = rows.join(maybeBroadcast(prunable), Seq("tsid"), "left_semi")
-        }
-        attachLabels(rows, Seq("tsid"), Seq(col("metric_id") === mid), None)
+        val pruned =
+          if (perSel.forall(_.isDefined))
+            rows.join(maybeBroadcast(perSel.flatten.reduce(_ union _)),
+              Seq("tsid"), "left_semi")
+          else rows
+        attachLabels(pruned, Seq("tsid"),
+          labelMapFrame(cat, mid, labelCols, "__lbls__"))
       }
     else {
       // Above the fan-out cap: ONE scan for ALL matched metrics. The
@@ -1882,27 +1981,52 @@ final class MetricEngine(spark: SparkSession, root: String,
       // matched (metric_id, tsid) frames (exact per selector, a sound
       // superset of the union; each selector's matchers re-filter over
       // the joined labels downstream), and metric names attach from the
-      // dictionary frame. The data pk leads with metric_id, so the
-      // series join filters right behind the sorted scan.
+      // dictionary. The data pk leads with metric_id, so the series join
+      // filters right behind the sorted scan.
       val maxOff = selectorList.map(_.offsetMs).max
       val offWidened =
         if (maxOff == 0L || range.start == Long.MinValue) range
         else TimeRange(range.start - maxOff, range.end)
       val scanRange = pinList.map(_._2).foldLeft(offWidened)((r, p) =>
         TimeRange(math.min(r.start, p.start), math.max(r.end, p.end)))
-      val sframe = selectorList.zip(matched.frames).map { case (sel, f) =>
-          matchedSeriesFrameAll(f.select("metric_id"),
-            sel.matchers.filterNot(_.label == "__name__"))
-            .select("metric_id", "tsid")
-        }.reduce(_ unionByName _).distinct()
-      val named = matched.named
-      val rows = data.scan(ScanRequest(range = scanRange))
-        .join(maybeBroadcast(sframe), Seq("metric_id", "tsid"), "left_semi")
-        .join(maybeBroadcast(named), Seq("metric_id"))
-        .select(col("metric_name").as("__name__"), col("metric_id"),
-          col("tsid"), col("ts"), col("value"))
-      Seq(attachLabels(rows, Seq("metric_id", "tsid"), Nil,
-        Some(named.select("metric_id"))).drop("metric_id"))
+      val wanted = labelCols.toSet
+      (cat, matched.all) match {
+        case (Some(c), Some(pairs)) =>
+          // the matched series, their names and labels in ONE local frame
+          val kept = selectorList.zip(matched.perSet(pairs)).flatMap { case (sel, ps) =>
+              val keep = labelsMatch(sel.matchers.filterNot(_.label == "__name__"))
+              ps.flatMap { case (name, mid) => c.series(mid).collect {
+                case (tsid, s) if keep(s.labels) =>
+                  Row(mid, tsid, name, s.labels.filter(kv => wanted(kv._1)))
+              } }
+            }.distinctBy(r => (r.getLong(0), r.getLong(1)))
+          val local = localFrame(kept, StructType(Seq(
+            StructField("metric_id", LongType), StructField("tsid", LongType),
+            StructField("__name__", StringType),
+            StructField("__lbls__", MapType(StringType, StringType)))))
+          Seq(decodeLabels(data.scan(ScanRequest(range = scanRange))
+            .join(maybeBroadcast(local), Seq("metric_id", "tsid"))
+            .select("__name__", "tsid", "ts", "value", "__lbls__")))
+        case _ =>
+          val sframe = selectorList.zip(matched.frames).map { case (sel, f) =>
+              matchedSeriesFrameAll(None, None, f.select("metric_id"),
+                sel.matchers.filterNot(_.label == "__name__"))
+                .select("metric_id", "tsid")
+            }.reduce(_ unionByName _).distinct()
+          val named = matched.named
+          val rows = data.scan(ScanRequest(range = scanRange))
+            .join(maybeBroadcast(sframe), Seq("metric_id", "tsid"), "left_semi")
+            .join(maybeBroadcast(named), Seq("metric_id"))
+            .select(col("metric_name").as("__name__"), col("metric_id"),
+              col("tsid"), col("ts"), col("value"))
+          Seq(attachLabels(rows, Seq("metric_id", "tsid"),
+            index.scan(ScanRequest(predicates = Seq(col("tag_key").isin(labelCols: _*))))
+              .join(maybeBroadcast(named.select("metric_id")), Seq("metric_id"), "left_semi")
+              .groupBy("metric_id", "tsid")
+              .agg(map_from_entries(collect_list(
+                struct(col("tag_key"), col("tag_value")))).as("__lbls__")))
+            .drop("metric_id"))
+      }
     }
     val samples = frames.reduceOption(_.unionByName(_)).getOrElse {
       spark.createDataFrame(
@@ -2024,6 +2148,9 @@ object MetricEngine {
         unescPartCol(substring_index(e, "\u0002", -1)))))
   }
 
+  /** Spark's string order (UTF-8 bytes) for sorts on the driver. */
+  private[metric] val utf8Order: Ordering[String] = Ordering.fromLessThan(utf8Lt)
+
   private def utf8Lt(x: String, y: String): Boolean = {
     val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -2036,6 +2163,41 @@ object MetricEngine {
     }
     a.length < b.length
   }
+  /** One series of the driver-side catalog: its canonical key and the
+    * labels decoded from it. */
+  private[graft] final case class CatalogSeries(key: String,
+      labels: Map[String, String])
+
+  /** The series catalog behind [[MetricEngine]]'s label matching:
+    * metric_id → (tsid → series), each metric's label keys, and the
+    * series count. Immutable — a registration builds the next value and
+    * publishes it with one write, so a reader's snapshot is never
+    * partial, and unchanged metrics share their maps with it. */
+  private[graft] final case class SeriesCatalog(
+      byMetric: Map[Long, Map[Long, CatalogSeries]],
+      keysByMetric: Map[Long, Set[String]], size: Int) {
+    def series(mid: Long): Map[Long, CatalogSeries] =
+      byMetric.getOrElse(mid, Map.empty)
+    def keysOf(mid: Long): Set[String] = keysByMetric.getOrElse(mid, Set.empty)
+    def contains(mid: Long, tsid: Long): Boolean = series(mid).contains(tsid)
+
+    /** This catalog plus the (metric_id, tsid, series_key) series. */
+    def added(fresh: Iterable[(Long, Long, String)]): SeriesCatalog =
+      fresh.foldLeft(this) { case (c, (mid, tsid, key)) =>
+        if (c.contains(mid, tsid)) c
+        else {
+          // label names are few: one shared String each
+          val s = CatalogSeries(key,
+            parseSeriesKey(key)._2.map { case (k, v) => k.intern() -> v })
+          SeriesCatalog(c.byMetric.updated(mid, c.series(mid).updated(tsid, s)),
+            c.keysByMetric.updated(mid, c.keysOf(mid) ++ s.labels.keys), c.size + 1)
+        }
+      }
+  }
+  private[graft] object SeriesCatalog {
+    val empty: SeriesCatalog = SeriesCatalog(Map.empty, Map.empty, 0)
+  }
+
   /** One series of a driver-local write batch, as [[MetricEngine]]'s
     * registration sees it. */
   private final case class NewSeries(name: String, metricId: Long, tsid: Long,

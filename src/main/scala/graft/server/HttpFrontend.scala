@@ -724,12 +724,12 @@ final class HttpFrontend(
     * calls for completion: `GET /api/v1/labels` (label names, plus
     * `__name__`) and `GET /api/v1/label/<name>/values` (that label's
     * values; `__name__` resolves to the metric-name dictionary). Without
-    * `match[]` both answer from the small global dictionaries (tags/
-    * metrics) — never the data table. With `match[]` selectors they
-    * narrow to the matching series' decoded label sets
-    * ([[MetricEngine.seriesFor]], the same series-meta-table walk
-    * `/api/v1/series` uses; multiple selectors union, Prometheus
-    * semantics) — still meta-tables only. */
+    * `match[]` both answer from the engine's series catalog and metric
+    * dictionary (the tags/metrics tables above their caps) — never the
+    * data table. With `match[]` selectors they narrow to the matching
+    * series' decoded label sets ([[MetricEngine.seriesFor]], the same
+    * series walk `/api/v1/series` uses; multiple selectors union,
+    * Prometheus semantics). */
   countedContext("/api/v1/labels", (ex: HttpExchange) => {
     try {
       val pairs = paramPairs(ex)
@@ -740,9 +740,7 @@ final class HttpFrontend(
           sels.flatMap(engine.seriesFor(_)).distinct
             .flatMap(_.keys).distinct.sorted
         else
-          // sort + limit INSIDE the plan (MetricEngine.labelKeys →
-          // TakeOrderedAndProject), the labelValues symmetry — never a
-          // full dictionary collect
+          // sorted by MetricEngine.labelKeys; a limit caps it in the plan
           engine.labelKeys(limitParam(pairs))
             .collect().map(_.getString(0)).toSeq
       respond(ex, 200,
@@ -767,10 +765,9 @@ final class HttpFrontend(
         val pairs = paramPairs(ex)
         val sels = matchSelectors(pairs)
         val lim = limitParam(pairs)
-        // no-selector arm: the sort AND the limit live INSIDE the plan
-        // (MetricEngine.labelValues → TakeOrderedAndProject) — a
-        // high-cardinality label never stages its full value dictionary
-        // on the driver per Grafana variable refresh
+        // no-selector arm: sorted by MetricEngine.labelValues, a limit
+        // capping it in the plan; above the catalog cap a high-cardinality
+        // label never stages its full value dictionary on the driver
         val values: Seq[String] =
           if (sels.nonEmpty)
             sels.flatMap(engine.seriesFor(_)).distinct
@@ -793,7 +790,8 @@ final class HttpFrontend(
   /** `GET /api/v1/series?match[]=<selector>` — series discovery: decoded
     * label sets of every series matching the selector, in the standard
     * envelope. Multiple `match[]` parameters union (Prometheus
-    * semantics); results come from the small series meta table only. */
+    * semantics); results come from the engine's series catalog (the series
+    * meta table above its cap). */
   countedContext("/api/v1/series", (ex: HttpExchange) => {
     try {
       val pairs = paramPairs(ex)

@@ -30,6 +30,9 @@ import graft.streaming.RemoteWrite
   * SCALE.md.
   */
 object CodecBench {
+  /** Warm-up budget of every lane. */
+  private val WarmupNs = 2000L * 1000 * 1000
+
   def main(args: Array[String]): Unit = {
     val workload = RemoteWriteWorkload.load(args.headOption)
     val bytes = workload.bytes
@@ -39,22 +42,38 @@ object CodecBench {
     println(f"[codec] workload: ${workload.label}, ${bytes.length} bytes, " +
       f"$nSamples samples")
 
-    def bench(label: String, iters: Int)(f: => Unit): Double = {
-      (1 to 3).foreach(_ => f) // warmup
+    // Each lane first runs at least 3 calls and `warmNs` of warm-up, so a
+    // small payload times the codec rather than the JIT compiling it.
+    def timed(iters: Int, warmNs: Long)(f: => Unit): Double = {
+      val warm = System.nanoTime() + warmNs
+      var n = 0
+      while (n < 3 || System.nanoTime() < warm) { f; n += 1 }
       val t0 = System.nanoTime()
       (1 to iters).foreach(_ => f)
-      val per = (System.nanoTime() - t0) / 1e6 / iters
+      (System.nanoTime() - t0) / 1e6 / iters
+    }
+    def bench(label: String, iters: Int, warmNs: Long)(f: => Unit): Double = {
+      val per = timed(iters, warmNs)(f)
       println(f"[codec] $label%-42s $per%9.2f ms/iter")
       per
     }
 
-    // sequential parse at the reference's scales (config.toml sequential_scales)
-    for (scale <- Seq(1, 5, 10, 20, 50, 100)) {
-      val per = bench(s"remote_write_sequential/graft/$scale",
-        iters = math.max(3, 60 / scale)) {
+    // sequential parse at the reference's scales (config.toml
+    // sequential_scales), in ascending and then descending order so that
+    // no scale always runs first; each scale times 300 parses and reports
+    // its faster pass and its per-parse time, which should agree across
+    // scales
+    val scales = Seq(1, 5, 10, 20, 50, 100)
+    val seqMs = (scales ++ scales.reverse).map { scale =>
+      scale -> timed(iters = 300 / scale, WarmupNs) {
         var i = 0
         while (i < scale) { RemoteWrite.decode(bytes); i += 1 }
       }
+    }.groupMapReduce(_._1)(_._2)(math.min)
+    for (scale <- scales) {
+      val per = seqMs(scale)
+      println(f"[codec] ${s"remote_write_sequential/graft/$scale"}%-42s " +
+        f"$per%9.2f ms/iter ${per / scale}%7.3f ms/parse")
       if (scale == 1)
         println(f"[codec]   => ${mb / (per / 1000)}%.0f MB/s, " +
           f"${nSamples / (per / 1000)}%.0f samples/s single-thread")
@@ -72,7 +91,7 @@ object CodecBench {
     val mbV2 = bytesV2.length / 1e6
     println(f"[codec] v2 transcode: ${bytesV2.length} bytes " +
       f"(${100.0 * bytesV2.length / bytes.length}%.0f%% of v1)")
-    val perV2 = bench("remote_write_sequential/graft-v2/1", iters = 60) {
+    val perV2 = bench("remote_write_sequential/graft-v2/1", iters = 60, WarmupNs) {
       RemoteWrite.decode(bytesV2)
     }
     println(f"[codec]   => ${mbV2 / (perV2 / 1000)}%.0f MB/s wire, " +
@@ -82,7 +101,8 @@ object CodecBench {
     val cpus = Runtime.getRuntime.availableProcessors()
     val pool = Executors.newFixedThreadPool(cpus)
     for (scale <- Seq(10, 50)) {
-      val per = bench(s"remote_write_concurrent/graft/${cpus}x$scale", iters = 3) {
+      val per = bench(s"remote_write_concurrent/graft/${cpus}x$scale", iters = 3,
+          WarmupNs) {
         val futs = (1 to cpus).map(_ => pool.submit(new Runnable {
           def run(): Unit = {
             var i = 0
@@ -103,7 +123,9 @@ object CodecBench {
       SstFile(i.toLong, s"/data/$i.parquet", 1, 1, TimeRange(1, 2))))
     seed.mergeSnapshot()
     var nextId = 10000L
-    bench("manifest_encoding/snapshot_1000+100", iters = 20) {
+    // every call grows the snapshot by 100 records, so this lane keeps
+    // the 3-call warm-up and times a snapshot of 1,300 to 3,300 records
+    bench("manifest_encoding/snapshot_1000+100", iters = 20, warmNs = 0) {
       val m = new Manifest(root, mergeThreshold = Int.MaxValue) // load 1000
       m.update((1 to 100).map { _ =>
         nextId += 1

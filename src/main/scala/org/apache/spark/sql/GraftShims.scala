@@ -22,6 +22,20 @@ object GraftShims {
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** The logical plans the session's CacheManager holds entries for. Its
+    * entry list has no public accessor, so it is read reflectively. */
+  def cachedPlans(spark: SparkSession): Seq[catalyst.plans.logical.LogicalPlan] = {
+    val cm = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    val entries = classOf[execution.CacheManager].getDeclaredMethod("cachedData")
+    entries.setAccessible(true)
+    entries.invoke(cm).asInstanceOf[Seq[execution.CachedData]].map(_.plan)
+  }
+
+  /** Drop the CacheManager entry of `plan` and free its blocks. */
+  def uncachePlan(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): Unit =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.uncacheQuery(
+      spark.asInstanceOf[classic.SparkSession], plan, cascade = false, blocking = true)
+
   /** Free the blocks under a `localCheckpoint()`ed frame no reader needs,
     * without `RDD.unpersist`'s warning that they cannot be recomputed. */
   def releaseCheckpoint(df: DataFrame): Unit =

@@ -1286,4 +1286,77 @@ class HttpFrontendSpec extends AnyFunSuite {
       fe.stop()
     }
   }
+  test("serving plans scan only the data table: after warm-up, building " +
+      "range, instant, remote-read and series queries runs no Spark job, " +
+      "label and series discovery run none at all, and no serving plan " +
+      "reads the index, series or tags tables") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftShims
+    import graft.promql.{LabelMatcher, MatchOp}
+    val root = Files.createTempDirectory("graft-http-catalog").toString
+    val engine = new MetricEngine(spark, root)
+    val fe = new HttpFrontend(spark, engine)
+    val port = fe.start()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      GraftShims.drainListeners(spark)
+      jobs.set(0)
+      f
+      GraftShims.drainListeners(spark)
+      jobs.get()
+    }
+    try {
+      assert(post(port, "/api/v1/write", org.xerial.snappy.Snappy.compress(
+        RemoteWrite.encode(samples(60, 0)))).statusCode() == 204)
+      val range = TimeRange(t0, t0 + 60000L)
+      val builds: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "fast range" -> (() => engine.queryPromQL(
+          """sum by (host) (rate(cpu_seconds_total{host=~"h[01]"}[10s]))""",
+          range, Some(10000L))),
+        "general range" -> (() => engine.queryPromQL(
+          "topk(2, sum by (host) (rate(cpu_seconds_total[10s])))", range,
+          Some(10000L))),
+        "instant" -> (() => engine.instantPromQL(
+          "sum by (host) (cpu_seconds_total)", t0 + 30000L)),
+        "without" -> (() => engine.instantPromQL(
+          "sum without (mode) (cpu_seconds_total)", t0 + 30000L)),
+        "remote read" -> (() => engine.readRaw(Seq(
+          LabelMatcher("__name__", MatchOp.Eq, "cpu_seconds_total"),
+          LabelMatcher("host", MatchOp.Eq, "h1")), range)))
+      // warm-up: the first calls load the metric dictionary and catalog
+      builds.foreach(_._2().collect())
+      engine.seriesFor("cpu_seconds_total")
+      spark.sparkContext.addSparkListener(listener)
+      builds.foreach { case (name, build) =>
+        var df: org.apache.spark.sql.DataFrame = null
+        assert(jobsOf { df = build() } == 0, s"building $name ran Spark jobs")
+        val meta = Seq(engine.index, engine.series, engine.tags).map(_.root)
+        val read = df.inputFiles.filter(f => meta.exists(f.contains))
+        assert(read.isEmpty, s"$name reads meta tables: ${read.toSeq}")
+        assert(df.collect().nonEmpty, name)
+      }
+      var found = Seq.empty[Map[String, String]]
+      assert(jobsOf { found = engine.seriesFor("""cpu_seconds_total{host="h1"}""") } == 0)
+      assert(found.map(_("host")) == Seq("h1"))
+      var keys = Seq.empty[String]
+      assert(jobsOf { keys = engine.labelKeys().collect().map(_.getString(0)).toSeq } == 0)
+      assert(keys == Seq("__name__", "host", "mode"))
+      // the same over the socket
+      assert(jobsOf {
+        val r = get(port, "/api/v1/labels")
+        assert(r.statusCode() == 200 && r.body().contains("\"mode\""), r.body())
+      } == 0)
+      assert(jobsOf {
+        val r = get(port, "/api/v1/series?match[]=" +
+          java.net.URLEncoder.encode("""cpu_seconds_total{host="h2"}""", "UTF-8"))
+        assert(r.statusCode() == 200 && r.body().contains("\"h2\""), r.body())
+      } == 0)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      fe.stop()
+    }
+  }
 }

@@ -254,8 +254,9 @@ class MetricEngineSpec extends AnyFunSuite {
   }
 
   test("readRaw with mixed exact + residual matchers matches the " +
-      "driver-side reference on a 500-series fixture, with no " +
-      "LocalTableScan (no driver-staged series keys) in the plan") {
+      "driver-side reference on a 500-series fixture; its series frame " +
+      "is a catalog LocalTableScan under the cap, and the above-cap arm " +
+      "stages no series keys on the driver") {
     import graft.promql.{LabelMatcher, MatchOp}
     val (e, samples) = highCardEngine()
     val matchers = Seq(
@@ -264,8 +265,17 @@ class MetricEngineSpec extends AnyFunSuite {
       LabelMatcher("zone", MatchOp.Nre, "z[01]")) // residual; absent matches
     val df = e.readRaw(matchers, TimeRange(Long.MinValue, Long.MaxValue))
     val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("LocalTableScan"),
-      s"series walk staged keys on the driver:\n$plan")
+    assert(plan.contains("LocalTableScan"),
+      s"series walk did not read the catalog:\n$plan")
+    // the above-cap arm: distributed, no driver-staged keys, same series
+    val mid = e.metrics.scan().collect()(0).getAs[Long]("metric_id")
+    val distributed = e.matchedSeriesFrame(None, mid, matchers.tail)
+    assert(!distributed.queryExecution.executedPlan.toString
+      .contains("LocalTableScan"))
+    def keys(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(keys(distributed) ==
+      keys(e.matchedSeriesFrame(e.loadedCatalog(), mid, matchers.tail)))
     def m(v: String, re: String) = v.matches("^(?:" + re + ")$")
     val expect = samples.filter { s =>
       m(s.labels.getOrElse("shard", ""), "s1.*") &&
@@ -720,5 +730,85 @@ class MetricEngineSpec extends AnyFunSuite {
     assert(stored(reopened)(1) == before(1) + 1 && stored(reopened)(3) == before(3) + 2)
     assert(reopened.series.scan().count() == 7)
     assert(reopened.data.scan().count() == 4 * 3 + 4 * 3 + 6 * 3 + 2 * 3)
+  }
+  test("series catalog == distributed index/series arm: random label sets " +
+      "(absent labels, dotted UTF-8 names, key escape characters in " +
+      "values) under =, !=, =~, !~ and empty-matching regex matchers") {
+    import spark.implicits._
+    import graft.promql.{LabelMatcher, MatchOp}
+    val e = engine()
+    val rnd = new scala.util.Random(20261019L)
+    val keys = Seq("a", "svc.name", "zö.ne", "b")
+    val values = Seq("x", "xy", "x\u0001y", "\u0000", "v\u0002", "\u00002",
+      "p.q", "ü", "")
+    val samples = for (m <- Seq("cat_a", "cat_b"); i <- 0 until 40) yield
+      Sample(m, keys.filter(_ => rnd.nextDouble() < 0.6)
+          .map(k => k -> values(rnd.nextInt(values.size))).toMap + ("i" -> s"$i"),
+        day + i, i.toDouble)
+    e.write(samples.toDF())
+    val cat = e.loadedCatalog()
+    assert(cat.exists(_.size == 80))
+    val mids = e.metrics.scan().collect()
+      .map(r => r.getAs[String]("metric_name") -> r.getAs[Long]("metric_id")).toMap
+    val patterns = Seq("x.*", "", ".*", "(x.*)?", "x\u0001y|p\\.q", "[^x].*", "ü|v.")
+    def matcher(): LabelMatcher = {
+      val k = keys(rnd.nextInt(keys.size))
+      rnd.nextInt(4) match {
+        case 0 => LabelMatcher(k, MatchOp.Eq, values(rnd.nextInt(values.size)))
+        case 1 => LabelMatcher(k, MatchOp.Ne, values(rnd.nextInt(values.size)))
+        case 2 => LabelMatcher(k, MatchOp.Re, patterns(rnd.nextInt(patterns.size)))
+        case _ => LabelMatcher(k, MatchOp.Nre, patterns(rnd.nextInt(patterns.size)))
+      }
+    }
+    def exact(m: LabelMatcher) = m.op match {
+      case MatchOp.Eq => m.value.nonEmpty
+      case MatchOp.Re => !"".matches(s"^(?:${m.value})$$")
+      case _ => false
+    }
+    def rows(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    val mid = mids("cat_a")
+    val labelKeys = keys :+ "i"
+    var nonEmpty = 0
+    for (_ <- 0 until 16) {
+      val ms = Seq.fill(1 + rnd.nextInt(2))(matcher())
+      val clue = ms.mkString(", ")
+      val local = e.matchedSeriesFrame(cat, mid, ms)
+      val dist = e.matchedSeriesFrame(None, mid, ms)
+      assert(rows(local) == rows(dist), clue)
+      val both = Seq(mids("cat_a"), mids("cat_b"))
+      assert(rows(e.matchedSeriesFrameAll(cat, Some(both), both.toDF("metric_id"), ms)) ==
+        rows(e.matchedSeriesFrameAll(None, None, both.toDF("metric_id"), ms)), clue)
+      val ex = ms.filter(exact)
+      if (ex.nonEmpty)
+        assert(rows(e.indexExactTsids(cat, mid, ex)) ==
+          rows(e.indexExactTsids(None, mid, ex)), clue)
+      // decoded labels of every matched series: catalog vs index rows
+      val matched = local.collect().map(_.getLong(0)).toSet
+      if (matched.nonEmpty) nonEmpty += 1
+      def labelsOf(f: org.apache.spark.sql.DataFrame) = f.collect()
+        .map(r => r.getLong(0) -> r.getMap[String, String](1).toMap).toMap
+      val fromCat = labelsOf(e.labelMapFrame(cat, mid, labelKeys, "l"))
+      val fromIndex = labelsOf(e.labelMapFrame(None, mid, labelKeys, "l"))
+      matched.foreach(t => assert(fromCat(t) == fromIndex.getOrElse(t, Map.empty), clue))
+    }
+    assert(nonEmpty >= 4, s"only $nonEmpty matcher sets matched any series")
+  }
+
+  test("a query racing registerSeries sees the old or the new series " +
+      "set, never part of a batch") {
+    import spark.implicits._
+    val e = engine()
+    def batch(b: Int) = (0 until 5).map(i =>
+      Sample("race_total", Map("b" -> s"$b", "i" -> s"$i"), day + b, 1.0))
+    e.write(batch(0).toDF())
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val writer = new Thread(() => (1 to 6).foreach(b => e.write(batch(b).toDF())))
+    writer.start()
+    while (writer.isAlive) seen += e.seriesFor("race_total", limit = 1000).size
+    writer.join()
+    seen += e.seriesFor("race_total", limit = 1000).size
+    assert(seen.forall(_ % 5 == 0), seen.distinct)
+    assert(seen == seen.sorted && seen.last == 35, seen.distinct)
   }
 }

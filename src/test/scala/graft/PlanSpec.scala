@@ -211,4 +211,16 @@ class PlanSpec extends AnyFunSuite {
     assert(oracles == queries, s"without an oracle: ${(queries -- oracles).toSeq.sorted}; " +
       s"without a query: ${(oracles -- queries).toSeq.sorted}")
   }
+  test("GraftShims lists and drops CacheManager entries (the Bench's " +
+      "honest-sample release)") {
+    import org.apache.spark.sql.GraftShims
+    val before = GraftShims.cachedPlans(spark)
+    val df = spark.range(10).selectExpr("id * 7 as v").cache()
+    df.count()
+    val fresh = GraftShims.cachedPlans(spark).filterNot(p => before.exists(_ eq p))
+    assert(fresh.size == 1)
+    fresh.foreach(GraftShims.uncachePlan(spark, _))
+    assert(GraftShims.cachedPlans(spark).size == before.size)
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
 }
