@@ -12,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong`: parquet TIMESTAMP(NANOS) columns (one generation of
   *    the events table shipped as such) read as epoch-nanos Longs instead
   *    of failing the scan; micros-typed generations read as timestamps and
-  *    normalize at the SparkEntry edge.
+  *    normalize at the SparkEntry edge;
+  *  - `file:` resolves to [[graft.storage.PosixLocalFileSystem]], which sets
+  *    file modes without forking `chmod` (effective only if nothing in the
+  *    JVM resolved a local path before the session was built).
   */
 object GraftSession {
 
@@ -34,6 +37,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.storage.PosixLocalFileSystem].getName)
 
   def create(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = builder(cores).getOrCreate()

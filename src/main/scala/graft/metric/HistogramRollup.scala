@@ -38,9 +38,10 @@ import graft.storage._
   * Refresh is watermark-incremental per dirty segment, identical policy
   * to [[Rollup.refresh]] (one Spark job over contiguous dirty runs,
   * last-write-wins re-rolls, late data repairs its bucket on the next
-  * tick). Scale: the refresh shuffles on (series, bucket[, index]) —
-  * uniform hash keys — and is linear in PRESENT bucket entries, never a
-  * dense ts×bucket fill. */
+  * tick). Scale: a dirty range small enough for one partition refreshes
+  * with no shuffle (`TimeMergeStorage.mergeInput`); a larger one shuffles
+  * on (series, bucket[, index]) — uniform hash keys. Either way it is
+  * linear in PRESENT bucket entries, never a dense ts×bucket fill. */
 class HistogramRollup(engine: MetricEngine, val gridMs: Long) {
   require(gridMs > 0, s"gridMs must be positive, got $gridMs")
   require(engine.histograms.segmentMs % gridMs == 0,

@@ -917,8 +917,10 @@ final class MetricEngine(spark: SparkSession, root: String,
     * label (instance / pod ids — this endpoint's worst customer,
     * refreshed per Grafana variable) never stages its full value
     * dictionary on the driver. A capped call (`limit` below
-    * Int.MaxValue, the API's explicit no-limit contract) sorts and limits
-    * INSIDE the plan on both arms (TakeOrderedAndProject). */
+    * Int.MaxValue, the API's explicit no-limit contract) takes the first
+    * `limit` sorted values on the driver while the dictionary is loaded,
+    * and sorts and limits INSIDE the plan (TakeOrderedAndProject) above
+    * its cap. */
   def labelValues(label: String, limit: Int = Int.MaxValue): DataFrame =
     if (label == "__name__")
       discovery(loadedDict().map(_.keys), "metric_name", limit,
@@ -934,25 +936,24 @@ final class MetricEngine(spark: SparkSession, root: String,
   /** Capped label-NAMES discovery frame — the engine behind
     * `GET /api/v1/labels` (no-selector arm): distinct tag keys plus the
     * implicit `__name__`, sorted — from the catalog with no job, or
-    * above its cap from the `tags` scan; capped in the plan like
-    * [[labelValues]]. */
+    * above its cap from the `tags` scan; capped like [[labelValues]]. */
   def labelKeys(limit: Int = Int.MaxValue): DataFrame =
     discovery(loadedCatalog().map(_.keysByMetric.valuesIterator.flatten.toSet + "__name__"),
       "tag_key", limit,
       tags.scan(ScanRequest(projection = Some(Seq("tag_key"))))
         .union(spark.range(1).select(lit("__name__").as("tag_key"))))
 
-  /** One discovery column `c`: the driver's `local` values as a sorted
-    * local frame, or (None: above the driver cap) `scan`'s distinct values
-    * sorted in the plan; a capped `limit` sorts + limits in the plan. */
+  /** One discovery column `c`: the driver's `local` values, sorted and
+    * cut to `limit` on the driver, as a local frame (no job); or (None:
+    * above the driver cap) `scan`'s distinct values sorted, and a capped
+    * `limit` taken, in the plan. */
   private def discovery(local: Option[Iterable[String]], c: String, limit: Int,
-      scan: => DataFrame): DataFrame = {
-    val sorted = local match {
-      case Some(vs) => localFrame(vs.toSeq.distinct.sorted(utf8Order).map(Row(_)),
-        StructType(Seq(StructField(c, StringType))))
-      case None => scan.distinct().orderBy(c)
-    }
-    if (limit == Int.MaxValue) sorted else sorted.orderBy(c).limit(limit)
+      scan: => DataFrame): DataFrame = local match {
+    case Some(vs) => localFrame(vs.toSeq.distinct.sorted(utf8Order).take(limit).map(Row(_)),
+      StructType(Seq(StructField(c, StringType))))
+    case None =>
+      val sorted = scan.distinct().orderBy(c)
+      if (limit == Int.MaxValue) sorted else sorted.limit(limit)
   }
 
   /** [[query]] with the step-1 TSID set already resolved — the PromQL

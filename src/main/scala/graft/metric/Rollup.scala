@@ -29,11 +29,13 @@ import graft.storage._
   * after restart stays proportional to NEW data, not history.
   *
   * Scale: refresh reads only dirty segments (bounded by ingest rate ×
-  * refresh cadence, not table size), shuffles on (tsid, bucket) — the
-  * same uniform keys as every engine aggregation — and writes one
-  * sorted SST per dirty segment. Queries prune rollup SSTs by time
-  * range exactly like raw scans, then aggregate ~grid/interval× fewer
-  * rows.
+  * refresh cadence, not table size). A dirty range small enough for one
+  * partition merges, windows and aggregates in that partition with no
+  * shuffle (`TimeMergeStorage.mergeInput`); a larger one shuffles on
+  * (tsid, bucket) — the same uniform keys as every engine aggregation.
+  * Either way it writes one sorted SST per dirty segment. Queries prune
+  * rollup SSTs by time range exactly like raw scans, then aggregate
+  * ~grid/interval× fewer rows.
   *
   * TTL note: expiring raw SSTs removes files without minting new ids,
   * so expired segments never re-roll and their rollup rows OUTLIVE the
@@ -117,7 +119,8 @@ final class Rollup(engine: MetricEngine, val gridMs: Long) {
     *
     * BACKFILL SHAPE: all dirty segments aggregate and write in ONE Spark
     * job — per-segment manifest-pruned scans union into a single
-    * (tsid, bucket) shuffle, and [[TimeMergeStorage.writeSegmented]]
+    * aggregation (one (tsid, bucket) shuffle above the single-partition
+    * bound, none below it), and [[TimeMergeStorage.writeSegmented]]
     * emits one sorted SST per segment via dynamic partitioning. A cold
     * rollup over a year of 12 h segments is one job, not ~730 sequential
     * ones; steady-state (one dirty segment per tick) takes the same
@@ -134,7 +137,7 @@ final class Rollup(engine: MetricEngine, val gridMs: Long) {
       .map(f => TimeRange.truncate(f.timeRange.start, segMs)).distinct.sorted
     if (dirty.nonEmpty) {
       // contiguous dirty segments scan as ONE range (a backfill is one
-      // run → one merge exchange, not one per segment; merge-on-read
+      // run → at most one merge exchange, not one per segment; merge-on-read
       // dedup keys on (metric_id, tsid, ts), so a multi-segment scan
       // collapses exactly the same duplicates as per-segment scans)
       val runs = dirty.foldLeft(List.empty[(Long, Long)]) {

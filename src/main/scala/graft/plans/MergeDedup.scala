@@ -23,7 +23,10 @@ import graft.storage.UpdateMode
   * Where the reference demands `Distribution::SinglePartition`
   * (read.rs:154-156) — correct single-node, a bottleneck at 100 TB — this
   * node declares what it actually needs and lets `EnsureRequirements` plan
-  * the cluster shape:
+  * the cluster shape. A storage scan small enough for one partition hands
+  * it a `coalesce(1)` input (`TimeMergeStorage.mergeInput`); its
+  * `SinglePartition` satisfies both requirements below, so the merge plans
+  * only a local sort — the reference's shape. A larger input gets:
   *
   *  - `globalSort=false`: `ClusteredDistribution(pks)` + per-partition
   *    ordering. One hash exchange; every partition merges its own key space.
@@ -92,12 +95,14 @@ object MergeDedupStrategy extends SparkStrategy {
 }
 
 /** Physical sorted-run dedup. Requires child rows clustered (or range-
-  * partitioned) and sorted by `(pks, __seq__, values)`; does one linear pass
-  * per partition: O(rows), no hash table, no per-group state beyond the run
-  * accumulator. The `values` tail of the required ordering makes the
-  * Overwrite winner deterministic when a single write batch carries
-  * duplicate pks (same `__seq__`) — identical to `MergeOps.dedupMerge`'s
-  * `max_by(packed, struct(seq, values))` tiebreak.
+  * partitioned) and sorted by `(pks, __seq__, values)`; a single-partition
+  * child satisfies the distribution as it is, so only the sort is planned.
+  * Does one linear pass per partition: O(rows), no hash table, no
+  * per-group state beyond the run accumulator. The `values` tail of the
+  * required ordering makes the Overwrite winner deterministic when a
+  * single write batch carries duplicate pks (same `__seq__`) — identical
+  * to `MergeOps.dedupMerge`'s `max_by(packed, struct(seq, values))`
+  * tiebreak.
   */
 final case class MergeDedupExec(
     pkNames: Seq[String],

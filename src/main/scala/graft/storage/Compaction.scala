@@ -209,12 +209,13 @@ final class Compactor(val storage: TimeMergeStorage, cfg: CompactionConfig) {
         if (task.inputs.nonEmpty) {
           val range = task.inputs.map(_.timeRange).reduce(_ merge _)
           val id = storage.allocId()
-          // Same native MergeDedupExec the scan path plans (read-path and
-          // compaction-path merges share ONE code path — a compacted Append
-          // table concatenates identically to a merge-on-read scan).
+          // Same native MergeDedupExec the scan path plans, over the same
+          // single-partition-when-small input (read-path and compaction-path
+          // merges share ONE code path — a compacted Append table
+          // concatenates identically to a merge-on-read scan).
           val merged = graft.plans.MergeDedupOps.nativeDedupMerge(
-            storage.spark.read.schema(storage.schema.fullSchema)
-              .parquet(task.inputs.map(_.path): _*),
+            storage.mergeInput(storage.spark.read.schema(storage.schema.fullSchema)
+              .parquet(task.inputs.map(_.path): _*), task.inputs),
             storage.schema.primaryKeys,
             storage.schema.updateMode,
             globalSort = false)

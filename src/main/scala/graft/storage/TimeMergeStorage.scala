@@ -59,11 +59,12 @@ final case class WriteOptions(
   *    row-group pruning + predicate pushdown for free;
   *  - time pruning happens at the manifest (file list) level before any task
   *    is scheduled, the analog of partition pruning;
-  *  - merge-on-read dedup is a hash aggregation on the pk — it shuffles once
-  *    on exactly the key the data is sorted by, partial-aggregates map-side,
-  *    and parallelizes across executors (unlike the reference's
-  *    single-partition MergeExec, read.rs:154-156, which is the right call
-  *    single-node but not at 100 TB);
+  *  - merge-on-read dedup ([[graft.plans.MergeDedup]]) reads a small
+  *    planned file set as ONE partition, like the reference's
+  *    single-partition MergeExec (read.rs:154-156), so nothing above it
+  *    shuffles either ([[mergeInput]]); a scan whose estimated decoded size
+  *    exceeds one post-shuffle partition shuffles once on exactly the key
+  *    the data is sorted by and merges in parallel across executors;
   *  - `timestampColumn` (when present among pks) lets scan prune segments.
   */
 final class TimeMergeStorage(
@@ -482,12 +483,30 @@ final class TimeMergeStorage(
           TimeMergeStorage.qcol(ts) < lit(req.range.end))
       }
     preMerge.foreach(p => df = df.filter(p)) // pushed to parquet by Catalyst
-    df = merge(df.select(mergeCols.map(TimeMergeStorage.qcol): _*))
+    df = merge(mergeInput(df.select(mergeCols.map(TimeMergeStorage.qcol): _*), ssts))
     postMerge.foreach(p => df = df.filter(p))
     if (req.keepBuiltins)
       df.select(widened.map(TimeMergeStorage.qcol): _*)
         .withColumn(ReservedCol, lit(null).cast("long"))
     else df.select(userCols.map(TimeMergeStorage.qcol): _*)
+  }
+
+  /** The merge's input `df`, read from `ssts`, as ONE partition
+    * (`coalesce(1)`, no shuffle) when its estimated decoded size fits the
+    * size AQE targets for one post-shuffle partition
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`): the manifest's
+    * row counts × 8 B × (columns + 1). `SinglePartition` then satisfies the
+    * merge's clustered or ordered distribution and every window, aggregate
+    * and union above it, so a small scan and what consumes it plan only
+    * local sorts — the reference's single-partition MergeExec
+    * (read.rs:154-156). Above the bound the frame is returned unchanged and
+    * the merge plans its one exchange. Compaction reads its inputs
+    * through the same rule. */
+  private[storage] def mergeInput(df: DataFrame, ssts: Seq[SstFile]): DataFrame = {
+    val estimate = ssts.map(_.numRows).sum * 8L * (df.columns.length + 1)
+    val target = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (estimate <= target) df.coalesce(1) else df
   }
 
   /** The file list a scan will actually read: manifest time pruning, then

@@ -255,16 +255,19 @@ class MergeDedupExecSpec extends AnyFunSuite {
     st.write(mk(Seq(Row(1, 10L, 1.0), Row(2, 20L, 2.0), Row(1, 30L, 3.0))), TimeRange(0, 1000))
     st.write(mk(Seq(Row(1, 10L, 9.0), Row(3, 40L, 4.0))), TimeRange(0, 1000))
 
-    val native = st.scanSorted()
-    val fallback = st.scanSorted(native = false)
-    val a = native.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toList
-    val b = fallback.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toList
-    assert(a == b)
-    assert(a == a.sortBy(t => (t._1, t._2)), "scanSorted contract: pk-ordered")
-    assert(a.contains((1, 10L, 9.0)) && !a.contains((1, 10L, 1.0)), "LWW by seq")
-    val nNative = "Exchange".r.findAllIn(native.queryExecution.executedPlan.toString).size
-    val nFallback = "Exchange".r.findAllIn(fallback.queryExecution.executedPlan.toString).size
-    assert(nNative < nFallback,
-      s"native path must shuffle less: native=$nNative fallback=$nFallback")
+    // above the single-partition bound (one byte): the exchange arm
+    SparkTestSession.aboveMergeBound {
+      val native = st.scanSorted()
+      val fallback = st.scanSorted(native = false)
+      val a = native.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toList
+      val b = fallback.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toList
+      assert(a == b)
+      assert(a == a.sortBy(t => (t._1, t._2)), "scanSorted contract: pk-ordered")
+      assert(a.contains((1, 10L, 9.0)) && !a.contains((1, 10L, 1.0)), "LWW by seq")
+      val nNative = "Exchange".r.findAllIn(native.queryExecution.executedPlan.toString).size
+      val nFallback = "Exchange".r.findAllIn(fallback.queryExecution.executedPlan.toString).size
+      assert(nNative < nFallback,
+        s"native path must shuffle less: native=$nNative fallback=$nFallback")
+    }
   }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.Row
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -79,6 +82,63 @@ class MergePropertySpec extends AnyFunSuite {
         pk -> g.sortBy(_._3).map(_._2).mkString
       }
       assert(got == want, s"case $i: $rows")
+    }
+  }
+
+  private val fileSchema = StructType(Seq(
+    StructField("k", IntegerType), StructField("ts", LongType),
+    StructField("v", StringType)))
+
+  /** 1-4 files of (k, ts, v) rows on a small key space, so pks repeat
+    * across files; some files also repeat a pk inside themselves. */
+  private val fileSetGen: Gen[List[List[(Int, Long, String)]]] = for {
+    nFiles <- Gen.choose(1, 4)
+    files <- Gen.listOfN(nFiles, for {
+      n <- Gen.choose(1, 12)
+      rows <- Gen.listOfN(n, for {
+        k <- Gen.choose(0, 2)
+        ts <- Gen.choose(0L, 7L)
+        v <- Gen.alphaStr.map(_.take(2))
+      } yield (k, ts, v))
+      dup <- Gen.oneOf(true, false)
+    } yield if (dup) rows :+ rows.head.copy(_3 = "dup") else rows)
+  } yield files
+
+  test("single-partition scan == exchange scan row for row over random file " +
+      "sets (overlapping and disjoint ts, in-file duplicate pks, both modes)") {
+    import scala.jdk.CollectionConverters._
+    val reqs = Seq(
+      ScanRequest(),
+      ScanRequest(predicates = Seq(col("k") === 1)),
+      ScanRequest(range = TimeRange(2L, 105L), predicates = Seq(col("v") > "M")),
+      ScanRequest(predicates = Seq(col("ts") >= 3L, col("v") > "M"),
+        projection = Some(Seq("v"))))
+    def rows(df: DataFrame): List[String] = df.collect().map(_.toSeq.mkString("|")).toList
+    for (i <- 0L until 8L; mode <- Seq(UpdateMode.Overwrite, UpdateMode.Append)) {
+      val files = fileSetGen.apply(Gen.Parameters.default, Seed(i * 7919 + 3)).get
+      // odd cases give each file its own ts range: pk-disjoint files
+      val disjoint = i % 2 == 1
+      val st = new TimeMergeStorage(spark,
+        Files.createTempDirectory("graft-merge-arms").toString,
+        StorageSchema(fileSchema, 2, mode), segmentMs = 1L << 20,
+        timestampColumn = Some("ts"))
+      files.zipWithIndex.foreach { case (f, n) =>
+        val shift = if (disjoint) n * 100L else 0L
+        st.write(spark.createDataFrame(
+          f.map { case (k, ts, v) => Row(k, ts + shift, v) }.asJava, fileSchema),
+          TimeRange(0L, 1000L))
+      }
+      for (req <- reqs) {
+        val single = (rows(st.scan(req)).sorted, rows(st.scanSorted(req)))
+        val exchange = SparkTestSession.aboveMergeBound(
+          (rows(st.scan(req)).sorted, rows(st.scanSorted(req))))
+        assert(single == exchange, s"case $i $mode $req: $files")
+      }
+      // the two arms really are different plans
+      val plan = st.scan().queryExecution.executedPlan.toString
+      assert(plan.contains("Coalesce 1") && !plan.contains("Exchange"), plan)
+      assert(SparkTestSession.aboveMergeBound(
+        st.scan().queryExecution.executedPlan.toString).contains("Exchange"))
     }
   }
 }

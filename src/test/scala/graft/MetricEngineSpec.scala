@@ -413,32 +413,32 @@ class MetricEngineSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.promql.rangeWindows")
   }
 
-  test("labelValues caps the discovery plan: sort + limit execute as " +
-      "TakeOrderedAndProject, never a full driver collect") {
+  test("capped labelValues/labelKeys over the catalog: no job, same answers") {
     val (e, samples) = highCardEngine()
-    val df = e.labelValues("host", 5)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"label-values limit did not push into the plan:\n$plan")
-    val got = df.collect().map(_.getString(0)).toSeq
-    val expect = samples.flatMap(_.labels.get("host")).distinct.sorted.take(5)
-    assert(got == expect)
-    // uncapped arm still answers the full sorted dictionary
-    val all = e.labelValues("zone").collect().map(_.getString(0)).toSeq
-    assert(all == samples.flatMap(_.labels.get("zone")).distinct.sorted)
-    // __name__ routes to the metric-name dictionary
-    assert(e.labelValues("__name__", 10).collect().map(_.getString(0)).toSeq
-      == Seq("hc_metric"))
-    // labelKeys (the /api/v1/labels no-selector arm) gets the same
-    // in-plan cap: sort + limit execute as TakeOrderedAndProject
-    val keys = e.labelKeys(2)
-    assert(keys.queryExecution.executedPlan.toString
-      .contains("TakeOrderedAndProject"),
-      s"labelKeys limit did not push into the plan:\n${keys.queryExecution}")
+    // load the driver dictionaries first (one scan each, once per engine)
+    assert(e.loadedCatalog().isDefined)
+    e.labelValues("__name__").collect()
+    val group = "discovery-" + System.nanoTime()
+    spark.sparkContext.setJobGroup(group, "capped discovery")
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getString(0)).toSeq
     val allKeys = (samples.flatMap(_.labels.keys) :+ "__name__")
       .distinct.sorted
-    assert(keys.collect().map(_.getString(0)).toSeq == allKeys.take(2))
-    assert(e.labelKeys().collect().map(_.getString(0)).toSeq == allKeys)
+    try {
+      // the catalog arm sorts and takes on the driver
+      assert(values(e.labelValues("host", 5)) ==
+        samples.flatMap(_.labels.get("host")).distinct.sorted.take(5))
+      // uncapped arm still answers the full sorted dictionary
+      assert(values(e.labelValues("zone")) ==
+        samples.flatMap(_.labels.get("zone")).distinct.sorted)
+      // __name__ routes to the metric-name dictionary
+      assert(values(e.labelValues("__name__", 10)) == Seq("hc_metric"))
+      // labelKeys (the /api/v1/labels no-selector arm) is capped alike
+      assert(values(e.labelKeys(2)) == allKeys.take(2))
+      assert(values(e.labelKeys()) == allKeys)
+    } finally spark.sparkContext.clearJobGroup()
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    assert(jobs == 0, s"catalog-arm discovery ran $jobs jobs")
   }
 
   test("regex matchers are exactly anchored end-to-end: a label value " +

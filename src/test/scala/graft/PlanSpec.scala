@@ -2,20 +2,24 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.CoalesceExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.MergeDedupExec
 import graft.storage._
 
 /** Plan-shape assertions — the analog of the reference's golden physical-plan
   * test (read.rs:575-617), kept to stable substrings rather than full plan
   * text (Spark plan rendering changes across versions). */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
 
-  private def scanPlan(nativeMerge: Boolean): (String, Seq[String]) = {
+  private def scanFrame(nativeMerge: Boolean): DataFrame = {
     val schema = StructType(Seq(
       StructField("pk1", IntegerType), StructField("pk2", IntegerType),
       StructField("value", LongType)))
@@ -24,12 +28,17 @@ class PlanSpec extends AnyFunSuite {
       StorageSchema(schema, 2), segmentMs = 7200000L)
     s.write(spark.createDataFrame(spark.sparkContext.parallelize(
       Seq(Row(1, 1, 1L), Row(2, 2, 2L)), 1), schema), TimeRange(1, 10))
-    val df = s.scan(ScanRequest(predicates = Seq(col("pk1") === 1)), nativeMerge)
+    s.scan(ScanRequest(predicates = Seq(col("pk1") === 1)), nativeMerge)
+  }
+
+  private def scanPlan(nativeMerge: Boolean): (String, Seq[String]) = {
+    val df = scanFrame(nativeMerge)
     (df.queryExecution.executedPlan.toString, df.schema.fieldNames.toSeq)
   }
 
   test("scan plan: predicate pushed to parquet, native merge exec, builtins stripped") {
-    val (plan, outCols) = scanPlan(nativeMerge = true)
+    // above the single-partition bound (one byte): the exchange arm
+    val (plan, outCols) = SparkTestSession.aboveMergeBound(scanPlan(nativeMerge = true))
     // predicate reaches the scan (reference: pruning_predicate on ParquetExec)
     assert(plan.contains("PushedFilters") && plan.contains("pk1"), plan)
     // merge-on-read dedup planned as the native sorted-run operator over a
@@ -39,6 +48,33 @@ class PlanSpec extends AnyFunSuite {
     // builtins do not appear in the output schema (checked on the schema
     // itself — under AQE the plan's first line is just AdaptiveSparkPlan)
     assert(outCols == Seq("pk1", "pk2", "value"), outCols)
+  }
+
+  test("small scan: no Exchange, Coalesce 1 below MergeDedup") {
+    val df = scanFrame(nativeMerge = true)
+    val plan = df.queryExecution.executedPlan
+    assert(!plan.toString.contains("Exchange"), plan)
+    val merges = collect(plan) { case m: MergeDedupExec => m }
+    assert(merges.size == 1, plan)
+    assert(merges.head.collect { case c: CoalesceExec => c.numPartitions } == Seq(1),
+      plan)
+    assert(df.collect().map(_.toSeq).toSeq == Seq(Seq(1, 1, 1L)))
+  }
+
+  test("serve range shape plans no ShuffleExchangeExec: " +
+      "sum by (job) (rate(x{instance=~...}[5m]))") {
+    import spark.implicits._
+    val engine = new graft.metric.MetricEngine(spark,
+      Files.createTempDirectory("graft-plan-range").toString)
+    engine.write((for (i <- 0 until 8; t <- 0 until 250) yield
+      graft.metric.Sample("x", Map("job" -> s"j${i % 2}", "instance" -> s"host-$i"),
+        t * 15000L, (t * (i + 1)).toDouble)).toDF())
+    val df = engine.queryPromQL(
+      """sum by (job) (rate(x{instance=~"host-[0-3].*"}[5m]))""",
+      TimeRange(7000L, 3607001L), Some(300000L))
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+    assert(df.count() > 0)
   }
 
   test("remote-read and federation plans broadcast the matched-series frame " +

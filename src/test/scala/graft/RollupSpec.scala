@@ -92,6 +92,26 @@ class RollupSpec extends AnyFunSuite {
     assert(hourlySum()(("a", 0L)) == 6.0)
   }
 
+  test("a refresh rolls equal rows whether its scan reads one partition " +
+      "or goes through the merge exchange") {
+    def rolled(aboveBound: Boolean): Set[Seq[Any]] = {
+      val eng = freshEngine()
+      val rnd = new scala.util.Random(7)
+      // integral values keep every partial exact in any summation order
+      def batch(): Unit = write(eng, (0 until 80).map(i =>
+        (s"h${i % 3}", (rnd.nextDouble() * 4 * day).toLong, rnd.nextInt(100).toDouble)))
+      val r = new Rollup(eng, gridMs = hour)
+      def refresh() =
+        if (aboveBound) SparkTestSession.aboveMergeBound(r.refresh()) else r.refresh()
+      batch(); refresh()
+      batch(); refresh()
+      r.store.scan().collect().map(_.toSeq).toSet
+    }
+    val single = rolled(aboveBound = false)
+    assert(single.nonEmpty)
+    assert(single == rolled(aboveBound = true))
+  }
+
   test("rollup query equals the raw-table query for every combinable " +
       "aggregation, stepped and unstepped") {
     val eng = freshEngine()

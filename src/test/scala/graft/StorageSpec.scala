@@ -26,6 +26,20 @@ object SparkTestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with `spark.sql.adaptive.advisoryPartitionSizeInBytes` at
+    * one byte, so every storage scan and compaction takes the exchange arm
+    * (`TimeMergeStorage.mergeInput`) instead of reading one partition. */
+  def aboveMergeBound[T](body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
 
 /** Mirrors the reference's storage tests (storage.rs:377-537, read.rs:512-573,
@@ -50,6 +64,26 @@ class StorageSpec extends AnyFunSuite {
     s.write(df, range)
   }
 
+  test("PosixLocalFileSystem gives files and dirs RawLocalFileSystem's modes") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path => HPath}
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val root = Files.createTempDirectory("graft-posixfs")
+    def modes(fs: FileSystem, name: String): Seq[String] = {
+      fs.initialize(java.net.URI.create("file:///"), conf)
+      val dir = new HPath(root.toUri.toString, s"$name/sub")
+      assert(fs.mkdirs(dir))
+      val file = new HPath(dir, "part.parquet")
+      fs.create(file, true).close()
+      Seq(dir, file, new HPath(dir, ".part.parquet.crc")).map(p =>
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(
+          java.nio.file.Paths.get(p.toUri))))
+    }
+    val posix = modes(new graft.storage.PosixLocalFileSystem, "posix")
+    // umask 022 (Hadoop's default fs.permissions.umask-mode)
+    assert(posix == Seq("rwxr-xr-x", "rw-r--r--", "rw-r--r--"))
+    assert(posix == modes(new LocalFileSystem, "raw"))
+  }
   test("write + scan round-trip with last-write-wins (storage.rs:391-491)") {
     val s = mkStorage(tmpRoot())
     // batch1 @ [1,10), batch2 @ [10,20) — FIXTURES §A
