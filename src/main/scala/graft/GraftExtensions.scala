@@ -26,5 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Physical planning for the native sorted-run merge operator (the
     // reference MergeExec analog, graft.plans.MergeDedup).
     e.injectPlannerStrategy(_ => graft.plans.MergeDedupStrategy)
+    // A driver-local broadcast side is built on the driver, with no job.
+    e.injectQueryStagePrepRule(_ => org.apache.spark.sql.DriverLocalBroadcast)
   }
 }

@@ -60,7 +60,10 @@ final case class MetricQuery(
   * shuffles on tsid which is a uniform 64-bit hash, so no skew; label
   * lookups produce small TSID sets that broadcast into the data scan,
   * resolved on the driver from the series catalog (at most 100k series)
-  * or, above it, by the index/series tables.
+  * or, above it, by the index/series tables. A catalog-built TSID or label
+  * frame is driver-local, and its broadcast is built on the driver with no
+  * Spark job (`org.apache.spark.sql.DriverLocalBroadcast`, a query-stage
+  * prep rule that [[graft.GraftExtensions]] injects).
   */
 final class MetricEngine(spark: SparkSession, root: String,
     segmentMs: Long = 12L * 3600 * 1000,
@@ -892,7 +895,9 @@ final class MetricEngine(spark: SparkSession, root: String,
 
   /** Step 2: probe the data table with the TSID set (broadcast semi-join),
     * bucket by step, aggregate; optional per-tag grouping joins the index
-    * back for the tag value; optional reset-aware rate. */
+    * back for the tag value; optional reset-aware rate. A TSID set from the
+    * series catalog is a local frame: its broadcast runs no job, so the
+    * query's jobs are the data scan's. */
   def query(q: MetricQuery): DataFrame = {
     // unknown metric → empty frame with the query's real output schema
     // (tag, bucket, value as applicable), not a bare [value] stub
@@ -1797,8 +1802,8 @@ final class MetricEngine(spark: SparkSession, root: String,
     * the metrics and labels `expr` references: per metric, the data scan is
     * pruned and label-enriched by ONE broadcast join of a local frame of
     * the kept series' referenced labels, built from the series catalog
-    * with no job (above its cap: an index-table prune and a label map
-    * aggregated from the index); metrics union into one frame with
+    * and broadcast with no job (above its cap: an index-table prune and a
+    * label map aggregated from the index); metrics union into one frame with
     * `__name__`. Absent labels read "" → the evaluator's absent-is-empty
     * matcher semantics apply unchanged.
     *

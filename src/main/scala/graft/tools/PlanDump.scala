@@ -14,8 +14,9 @@ import org.apache.spark.sql.execution.{ExplainMode, LocalTableScanExec,
   * to re-plan) and captures the PRE-EXECUTION formatted plan — the shape
   * evidence (Exchange count, join strategy, PushedFilters) is all in the
   * initial plan. The dump's first line counts the Spark jobs that ran while
-  * the query was BUILT: a builder that collects or checkpoints runs its
-  * work there, and its plan only reads the result ("built eagerly").
+  * the query was BUILT — a builder that collects or checkpoints runs its
+  * work there, and its plan only reads the result ("built eagerly") — and
+  * the jobs one `collect()` of the built frame then runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -44,10 +45,15 @@ object PlanDump {
           val eager = jobs.get > 0 && df.queryExecution.sparkPlan
             .collectLeaves().forall(l =>
               l.isInstanceOf[LocalTableScanExec] || l.isInstanceOf[RDDScanExec])
-          val head = s"build jobs: ${jobs.get}" +
+          val built = s"build jobs: ${jobs.get}" +
             (if (eager) " (built eagerly: the plan reads the result)" else "")
-          val plan = head + "\n" + df.queryExecution.explainString(
+          val explained = df.queryExecution.explainString(
             ExplainMode.fromString("formatted"))
+          jobs.set(0L)
+          df.collect()
+          GraftShims.drainListeners(spark)
+          val head = s"$built; run jobs: ${jobs.get}"
+          val plan = head + "\n" + explained
           java.nio.file.Files.write(outDir.resolve(s"${q}_$tag.txt"),
             plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           println(s"[plandump] wrote ${q}_$tag.txt (${plan.length} chars, $head)")

@@ -40,6 +40,42 @@ class HttpFrontendSpec extends AnyFunSuite {
       .POST(HttpRequest.BodyPublishers.ofString(form)).build(),
       HttpResponse.BodyHandlers.ofString())
 
+  /** Records each Spark job started while [[jobsIn]] runs its body, named
+    * by its SQL execution (with the driver call that started it), its job
+    * tags and its stages, so a count that differs names the job that made
+    * the difference. Each body runs alone on the session, so the jobs
+    * started between its start and its end are its own. A broadcast
+    * exchange tags the job that collects its child
+    * `broadcast exchange (runId …)`. */
+  private final class JobLog extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
+    private val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+        // the driver call that started the execution
+        executions.put(s.executionId, s.details.linesIterator
+          .find(l => l.contains("graft.") && !l.contains("sql.")).getOrElse(""))
+      case _ =>
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      jobs.add(s"job ${e.jobId}, " +
+        prop("spark.sql.execution.id").map(x => s"execution $x (${executions.get(x.toLong)})")
+          .getOrElse("no execution") +
+        prop("spark.job.tags").map(t => s", tags [$t]").getOrElse("") +
+        ", stages " + e.stageInfos.map(st => s"${st.stageId} ${st.name}").mkString("; "))
+    }
+    def jobsIn(f: => Unit): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      org.apache.spark.sql.GraftShims.drainListeners(spark)
+      jobs.clear()
+      f
+      org.apache.spark.sql.GraftShims.drainListeners(spark)
+      jobs.asScala.toList
+    }
+  }
+
   private def samples(n: Int, offset: Int): Seq[Sample] =
     (0 until n).map(i => Sample("cpu_seconds_total",
       Map("host" -> s"h${i % 3}", "mode" -> "user"),
@@ -1165,8 +1201,6 @@ class HttpFrontendSpec extends AnyFunSuite {
       "OTLP POSTs with new or known series; only the first write after an " +
       "engine opens loads the tsid set; a query after a new series reloads " +
       "no dictionary") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.GraftShims
     import graft.streaming.Otlp
     val root = Files.createTempDirectory("graft-http-zerojob").toString
     // a root that already holds series, so the reopened engine has a real
@@ -1175,37 +1209,8 @@ class HttpFrontendSpec extends AnyFunSuite {
       import spark.implicits._
       new MetricEngine(spark, root).write(samples(30, 0).toDF())
     }
-    // Each request runs alone, with nothing else on the session, so the
-    // jobs started between its send and its response are its own. Each job
-    // is recorded with its SQL execution and its stages, so a count that
-    // differs names the job that made the difference.
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            // the driver call that started the execution
-            executions.put(s.executionId, s.details.linesIterator
-              .find(l => l.contains("graft.") && !l.contains("sql.")).getOrElse(""))
-          case _ =>
-        }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        jobs.add(s"job ${e.jobId}, " +
-          prop("spark.sql.execution.id").map(x => s"execution $x (${executions.get(x.toLong)})")
-            .getOrElse("no execution") +
-          ", stages " + e.stageInfos.map(st => s"${st.stageId} ${st.name}").mkString("; "))
-      }
-    }
-    def jobsIn(f: => Unit): Seq[String] = {
-      import scala.jdk.CollectionConverters._
-      GraftShims.drainListeners(spark)
-      jobs.clear()
-      f
-      GraftShims.drainListeners(spark)
-      jobs.asScala.toList
-    }
+    val listener = new JobLog
+    import listener.jobsIn
     def jobsOf(f: => Unit): Int = jobsIn(f).length
     val engine = new MetricEngine(spark, root)
     val fe = new HttpFrontend(spark, engine)
@@ -1354,6 +1359,90 @@ class HttpFrontendSpec extends AnyFunSuite {
           java.net.URLEncoder.encode("""cpu_seconds_total{host="h2"}""", "UTF-8"))
         assert(r.statusCode() == 200 && r.body().contains("\"h2\""), r.body())
       } == 0)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      fe.stop()
+    }
+  }
+
+  test("keep-alive responses carry no delayed-ACK stall: after 10 warm-up " +
+      "requests, the median of 30 sequential GET /-/healthy on one " +
+      "keep-alive client is under 10 ms") {
+    // With Nagle's algorithm on, a response's body segment waits ~40 ms for
+    // the client's delayed ACK of its header segment. The frontend turns it
+    // off with a property the JDK reads only for the JVM's first HttpServer,
+    // so this also fails if another HttpServer was made first.
+    val fe = new HttpFrontend(spark, new MetricEngine(spark,
+      Files.createTempDirectory("graft-http-nodelay").toString))
+    val port = fe.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      val healthy = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/-/healthy")).GET().build()
+      def roundTripMs(): Double = {
+        val t = System.nanoTime()
+        val r = client.send(healthy, HttpResponse.BodyHandlers.ofString())
+        val ms = (System.nanoTime() - t) / 1e6
+        assert(r.statusCode() == 200 && r.body().nonEmpty, r.body())
+        ms
+      }
+      (1 to 10).foreach(_ => roundTripMs())
+      val ms = IndexedSeq.fill(30)(roundTripMs()).sorted
+      val median = (ms(14) + ms(15)) / 2
+      assert(median < 10.0, f"median $median%.2f ms over ${ms.mkString(", ")}")
+    } finally fe.stop()
+  }
+
+  test("serving requests run one Spark job and no broadcast collect after " +
+      "warm-up: query_range, instant query and remote read") {
+    import graft.streaming.RemoteRead
+    val fe = new HttpFrontend(spark, new MetricEngine(spark,
+      Files.createTempDirectory("graft-http-onejob").toString))
+    val port = fe.start()
+    val listener = new JobLog
+    try {
+      val counters = for (i <- 0 until 8; t <- 0 until 40) yield
+        Sample("x", Map("job" -> s"j${i % 2}", "instance" -> s"host-$i"),
+          t0 + t * 15000L, (t * (i + 1)).toDouble)
+      val gauges = for (i <- 0 until 4) yield
+        Sample("gauge", Map("job" -> s"j${i % 2}", "instance" -> s"host-$i"),
+          t0 + 300000L, i.toDouble)
+      assert(post(port, "/api/v1/write", org.xerial.snappy.Snappy.compress(
+        RemoteWrite.encode(counters ++ gauges))).statusCode() == 204)
+      def enc(q: String) = java.net.URLEncoder.encode(q, "UTF-8")
+      val range = enc("""sum by (job) (rate(x{instance=~"host-[0-3].*"}[5m]))""")
+      val requests: Seq[(String, () => Unit)] = Seq(
+        "query_range" -> { () =>
+          val r = get(port, s"/api/v1/query_range?query=$range" +
+            s"&start=${t0 / 1000}&end=${t0 / 1000 + 600}&step=300")
+          assert(r.statusCode() == 200 && r.body().contains("\"j1\""), r.body())
+        },
+        "instant query" -> { () =>
+          val r = get(port, s"/api/v1/query?query=${enc("sum by (job) (gauge)")}" +
+            s"&time=${t0 / 1000 + 300}")
+          assert(r.statusCode() == 200 && r.body().contains("\"j1\""), r.body())
+        },
+        "remote read" -> { () =>
+          val req = org.xerial.snappy.Snappy.compress(RemoteRead.encodeRequest(Seq(
+            RemoteRead.Query(t0, t0 + 600000L, Seq(
+              RemoteRead.Matcher(0, "__name__", "x"),
+              RemoteRead.Matcher(0, "instance", "host-1"))))))
+          val r = http.send(HttpRequest.newBuilder(
+              URI.create(s"http://127.0.0.1:$port/api/v1/read"))
+            .POST(HttpRequest.BodyPublishers.ofByteArray(req)).build(),
+            HttpResponse.BodyHandlers.ofByteArray())
+          assert(r.statusCode() == 200, new String(r.body(), "UTF-8"))
+          assert(RemoteRead.decodeResponse(r.body()).head.map(_.samples.length) ==
+            Seq(40))
+        })
+      // warm-up: the first requests load the metric dictionary and catalog
+      requests.foreach(_._2())
+      spark.sparkContext.addSparkListener(listener)
+      for ((name, request) <- requests) {
+        val jobs = listener.jobsIn(request())
+        assert(jobs.length == 1 && !jobs.exists(_.contains("broadcast exchange")),
+          s"$name ran ${jobs.length} jobs:\n${jobs.mkString("\n")}")
+      }
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       fe.stop()

@@ -265,7 +265,9 @@ class MetricEngineSpec extends AnyFunSuite {
       LabelMatcher("zone", MatchOp.Nre, "z[01]")) // residual; absent matches
     val df = e.readRaw(matchers, TimeRange(Long.MinValue, Long.MaxValue))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("LocalTableScan"),
+    // the catalog's local frame reaches its broadcast as the job-free
+    // LocalBroadcastSource that replaces its LocalTableScan
+    assert(plan.contains("LocalBroadcastSource"),
       s"series walk did not read the catalog:\n$plan")
     // the above-cap arm: distributed, no driver-staged keys, same series
     val mid = e.metrics.scan().collect()(0).getAs[Long]("metric_id")

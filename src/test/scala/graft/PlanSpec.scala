@@ -259,4 +259,109 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(GraftShims.cachedPlans(spark).size == before.size)
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
+
+  test("a driver-local broadcast side runs no job and answers like the same " +
+      "rows distributed: seeded frames (empty, one row, more rows than " +
+      "defaultParallelism, duplicate and null keys) under inner, left-outer, " +
+      "left-semi, left-anti, null-aware NOT IN and nested-loop joins; two " +
+      "local frames of one schema in one plan share no exchange") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.{GraftShims, LocalBroadcastSourceExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.functions.broadcast
+    val sc = spark.sparkContext
+    val sideSchema = StructType(Seq(
+      StructField("k", IntegerType), StructField("v", StringType)))
+    val probeSchema = StructType(Seq(
+      StructField("pk", IntegerType), StructField("x", LongType)))
+    def local(rows: Seq[Row]) = spark.createDataFrame(rows.asJava, sideSchema)
+    def distributed(rows: Seq[Row]) =
+      spark.createDataFrame(sc.parallelize(rows, 2), sideSchema)
+
+    // a broadcast exchange tags the job that collects its child
+    val broadcastJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("broadcast exchange"))) broadcastJobs.incrementAndGet()
+    }
+    case class Run(answer: Seq[String], broadcastJobs: Int, localSources: Int,
+        reused: Int)
+    def run(df: DataFrame): Run = {
+      val plan = df.queryExecution.executedPlan
+      // before execution: AQE may drop a materialized broadcast from the
+      // final plan (a NOT IN whose build side holds a null key is empty)
+      val sources = collect(plan) { case s: LocalBroadcastSourceExec => s }.size
+      GraftShims.drainListeners(spark)
+      broadcastJobs.set(0)
+      val answer = df.collect().map(_.toString).toSeq.sorted
+      GraftShims.drainListeners(spark)
+      Run(answer, broadcastJobs.get, sources,
+        collect(plan) { case r: ReusedExchangeExec => r }.size)
+    }
+
+    sc.addSparkListener(listener)
+    try {
+      var distributedBroadcastJobs = 0
+      for (seed <- Seq(3L, 17L, 29L)) {
+        val rnd = new scala.util.Random(seed)
+        def key(): Any = if (rnd.nextInt(6) == 0) null else rnd.nextInt(8)
+        def rows(n: Int) = Seq.fill(n)(Row(key(), s"v${rnd.nextInt(50)}"))
+        val probe = spark.createDataFrame(sc.parallelize(
+          Seq.fill(24)(Row(if (rnd.nextInt(8) == 0) null else rnd.nextInt(10) - 1,
+            rnd.nextLong())), 2), probeSchema)
+        probe.createOrReplaceTempView("bcast_probe")
+        val n = sc.defaultParallelism
+        val sides = Seq(
+          "empty" -> Nil,
+          "one row" -> Seq(Row(rnd.nextInt(8), "one")),
+          "above defaultParallelism" -> rows(3 * n + 1 + rnd.nextInt(n)),
+          "duplicate and null keys" ->
+            (rows(n) ++ Seq(Row(null, "n0"), Row(3, "d"), Row(3, "d"), Row(null, "n1"))))
+        for ((sideName, sideRows) <- sides) {
+          def joins(side: DataFrame): Seq[(String, DataFrame)] = {
+            side.createOrReplaceTempView("bcast_side")
+            val eq = probe("pk") === side("k")
+            Seq(
+              "inner" -> probe.join(broadcast(side), eq, "inner"),
+              "left outer" -> probe.join(broadcast(side), eq, "left_outer"),
+              "left semi" -> probe.join(broadcast(side), eq, "left_semi"),
+              "left anti" -> probe.join(broadcast(side), eq, "left_anti"),
+              "null-aware NOT IN" -> spark.sql("SELECT * FROM bcast_probe WHERE pk " +
+                "NOT IN (SELECT /*+ BROADCAST(bcast_side) */ k FROM bcast_side)"),
+              "nested loop" -> probe.join(broadcast(side), probe("pk") < side("k")))
+          }
+          val expected = joins(distributed(sideRows)).map { case (j, df) => j -> run(df) }
+          val got = joins(local(sideRows)).map { case (j, df) => j -> run(df) }
+          for (((join, want), (_, r)) <- expected.zip(got)) {
+            val ctx = s"seed $seed, $sideName side, $join"
+            distributedBroadcastJobs += want.broadcastJobs
+            assert(r.answer == want.answer, ctx)
+            assert(r.broadcastJobs == 0, ctx)
+            // an empty local side is optimized away before planning
+            assert(sideRows.isEmpty || r.localSources > 0, ctx)
+          }
+        }
+        // two local frames of one schema in one plan: each broadcast keeps
+        // its own rows; equal rows may share one exchange
+        def twoSides(mk: Seq[Row] => DataFrame, a: Seq[Row], b: Seq[Row]) = {
+          val (fa, fb) = (mk(a), mk(b))
+          probe.join(broadcast(fa), probe("pk") === fa("k")).select(probe("pk"), fa("v"))
+            .union(probe.join(broadcast(fb), probe("pk") === fb("k")).select(probe("pk"), fb("v")))
+        }
+        val (a, b) = (rows(2 * n), rows(2 * n))
+        assert(a != b)
+        val split = run(twoSides(local, a, b))
+        assert(split.answer == run(twoSides(distributed, a, b)).answer, s"seed $seed")
+        assert(split.broadcastJobs == 0 && split.localSources == 2 && split.reused == 0,
+          s"seed $seed: $split")
+        val same = run(twoSides(local, a, a))
+        assert(same.answer == run(twoSides(distributed, a, a)).answer, s"seed $seed")
+        assert(same.broadcastJobs == 0 && same.reused == 1, s"seed $seed: $same")
+      }
+      // the job detector sees the broadcasts of the distributed frames
+      assert(distributedBroadcastJobs > 0)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -22,6 +22,7 @@ object SparkTestSession {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
+    .withExtensions(new GraftExtensions)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
