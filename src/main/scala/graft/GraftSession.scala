@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 /** One-call session factory with every setting the engine depends on — the
   * entry point a user of the library starts from.
@@ -62,6 +63,24 @@ object GraftSession {
       exprs => graft.functions.FloatDotProduct(exprs(0), exprs(1)),
       "scala_udf")
     org.apache.spark.sql.GraftShims.addStrategy(spark, graft.plans.MergeDedupStrategy)
+  }
+
+  /** Broadcast-when-small (SURVEY §2.3 "broadcast when small, else shuffle
+    * hash"), the one gate of every engine and pipeline broadcast: hint
+    * only while the optimizer's size estimate (parquet bytes after
+    * pruning/filter estimation) stays under `graft.broadcastMaxBytes`
+    * (default 64 MB). Above it the join shape is left to AQE — which
+    * still converts genuinely-small runtime sides to broadcast, but never
+    * forces a driver collect of an unexpectedly huge side (a
+    * low-selectivity matcher over a million-series metric, a huge
+    * benchmark suite). Cost-free: a plan-stats read, no extra Spark job. */
+  def maybeBroadcast(df: DataFrame): DataFrame = {
+    // Defensive parse: a malformed conf value must not throw from inside
+    // every query's planning path — fall back to the default cap.
+    val cap = df.sparkSession.conf.getOption("graft.broadcastMaxBytes")
+      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap) broadcast(df)
+    else df
   }
 
   /** Register every parquet table under `dir` as a temp view, so the whole

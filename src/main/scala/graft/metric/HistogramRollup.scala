@@ -6,50 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.storage._
 
-/** Downsampled rollup over the engine's NATIVE HISTOGRAMS table — the
-  * months-long-p99-dashboard path ([[Rollup]]'s counter partials, applied
-  * bucket-wise): `histogram_quantile(q, sum by (...) (rate(m[30d])))` at
-  * 15 s scrape resolution otherwise scans 172,800 histogram rows per
-  * series; a 1 h grid scans 720 reconstructed partials.
-  *
-  * One rollup row per (metric_id, tsid, grid bucket) holding, per bucket
-  * index, the round-11 sparse-increase partials:
-  *  - `i_*` — the WITHIN-bucket reset-aware increase
-  *    ([[NativeHistograms.increase]]'s exact arithmetic, confined to the
-  *    grid bucket: the bucket's first sample is the local baseline),
-  *  - `f_*` / `l_*` — the bucket's FIRST and LAST sample's sparse arrays
-  *    (and zero counts), so query time reconstructs the cross-bucket
-  *    boundary delta per index exactly like the scalar rollup does from
-  *    `(prev.last, next.first)`:
-  *      idx present at the next bucket's first sample →
-  *        reset-aware delta vs `coalesce(prev.l[idx], 0)`
-  *      idx absent at the first sample → 0 extra (its first in-bucket
-  *        appearance already contributed its full count to `i_*`)
-  *      series' first in-range bucket → 0 (the raw path's
-  *        overall-first-sample rule).
-  * Summing `i` + boundary per index over the range reproduces the raw
-  * path's chained deltas exactly on grid-aligned windows. Mixed schemas
-  * WITHIN one grid bucket downscale to the bucket's coarsest at refresh
-  * ([[NativeHistograms.downscaleToCoarsest]]); a schema change ACROSS
-  * buckets of one query window routes that window to raw at query time
-  * ([[increaseFromGrid]] pre-probes and returns None — rare, and the raw
-  * path converts exactly, so the fallback is invisible to the caller).
-  *
-  * Refresh is watermark-incremental per dirty segment, identical policy
-  * to [[Rollup.refresh]] (one Spark job over contiguous dirty runs,
-  * last-write-wins re-rolls, late data repairs its bucket on the next
-  * tick). Scale: a dirty range small enough for one partition refreshes
-  * with no shuffle (`TimeMergeStorage.mergeInput`); a larger one shuffles
-  * on (series, bucket[, index]) — uniform hash keys. Either way it is
-  * linear in PRESENT bucket entries, never a dense ts×bucket fill. */
-class HistogramRollup(engine: MetricEngine, val gridMs: Long) {
-  require(gridMs > 0, s"gridMs must be positive, got $gridMs")
-  require(engine.histograms.segmentMs % gridMs == 0,
-    s"gridMs ($gridMs) must divide the histograms segment size " +
-      s"(${engine.histograms.segmentMs}) so buckets never straddle segments")
-
-  private val spark = engine.histograms.spark
-
+object HistogramRollup {
   private val schema = StructType(Seq(
     StructField("metric_id", LongType, nullable = false),
     StructField("tsid", LongType, nullable = false),
@@ -79,118 +36,93 @@ class HistogramRollup(engine: MetricEngine, val gridMs: Long) {
     // back null here and the query side falls back to bucket mass.
     StructField("f_count", DoubleType), StructField("l_count", DoubleType),
     StructField("i_count", DoubleType)))
+}
 
-  /** The rollup's own time-merge store, next to the histograms table. */
-  val store = new TimeMergeStorage(spark,
-    s"${engine.histograms.root}_hrollup_$gridMs",
-    StorageSchema(schema, numPrimaryKeys = 3), engine.histograms.segmentMs,
-    timestampColumn = Some("ts"))
-
-  private val fs = store.spark.sparkContext.hadoopConfiguration
-  private val watermarkPath =
-    new org.apache.hadoop.fs.Path(s"${store.root}/rollup_watermark")
-
-  private def readWatermark(): Long = {
-    val hfs = watermarkPath.getFileSystem(fs)
-    if (!hfs.exists(watermarkPath)) Long.MinValue
-    else {
-      val in = hfs.open(watermarkPath)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong
-      finally in.close()
-    }
-  }
-
-  private def writeWatermark(v: Long): Unit = {
-    val hfs = watermarkPath.getFileSystem(fs)
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"${store.root}/.rollup_watermark.tmp")
-    val out = hfs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (hfs.exists(watermarkPath)) hfs.delete(watermarkPath, false)
-    if (!hfs.rename(tmp, watermarkPath))
-      throw new java.io.IOException(s"failed to commit $watermarkPath")
-  }
-
-  @volatile private var cachedWatermark: Long = readWatermark()
-
-  /** Same freshness gate as [[Rollup.isFresh]]: a lagging rollup routes
-    * to raw, never to stale answers. */
-  def isFresh: Boolean =
-    engine.histograms.manifest.maxSstId <= cachedWatermark
+/** Downsampled rollup over the engine's NATIVE HISTOGRAMS table — the
+  * months-long-p99-dashboard path ([[Rollup]]'s counter partials, applied
+  * bucket-wise): `histogram_quantile(q, sum by (...) (rate(m[30d])))` at
+  * 15 s scrape resolution otherwise scans 172,800 histogram rows per
+  * series; a 1 h grid scans 720 reconstructed partials.
+  *
+  * One rollup row per (metric_id, tsid, grid bucket) holding, per bucket
+  * index, the round-11 sparse-increase partials:
+  *  - `i_*` — the WITHIN-bucket reset-aware increase
+  *    ([[NativeHistograms.increase]]'s exact arithmetic, confined to the
+  *    grid bucket: the bucket's first sample is the local baseline),
+  *  - `f_*` / `l_*` — the bucket's FIRST and LAST sample's sparse arrays
+  *    (and zero counts), so query time reconstructs the cross-bucket
+  *    boundary delta per index exactly like the scalar rollup does from
+  *    `(prev.last, next.first)`:
+  *      idx present at the next bucket's first sample →
+  *        reset-aware delta vs `coalesce(prev.l[idx], 0)`
+  *      idx absent at the first sample → 0 extra (its first in-bucket
+  *        appearance already contributed its full count to `i_*`)
+  *      series' first in-range bucket → 0 (the raw path's
+  *        overall-first-sample rule).
+  * Summing `i` + boundary per index over the range reproduces the raw
+  * path's chained deltas exactly on grid-aligned windows. Mixed schemas
+  * WITHIN one grid bucket downscale to the bucket's coarsest at refresh
+  * ([[NativeHistograms.downscaleToCoarsest]]); a schema change ACROSS
+  * buckets of one query window routes that window to raw at query time
+  * ([[increaseFromGrid]] pre-probes and returns None — rare, and the raw
+  * path converts exactly, so the fallback is invisible to the caller).
+  *
+  * Refresh is the shared [[RollupStore]] policy; [[roll]] only builds
+  * the partials. A dirty range small enough for one partition refreshes
+  * with no shuffle; a larger one shuffles on (series, bucket[, index]) —
+  * uniform hash keys. Either way it is linear in PRESENT bucket entries,
+  * never a dense ts×bucket fill. */
+class HistogramRollup(engine: MetricEngine, gridMs: Long)
+    extends RollupStore(engine.histograms, "hrollup", gridMs,
+      HistogramRollup.schema) {
+  import HistogramRollup.schema
 
   private val histCols = Seq("count", "sum", "bucket_schema",
     "zero_threshold", "zero_count", "pos_idx", "pos_cnt", "neg_idx",
     "neg_cnt", "custom_values")
 
-  /** Roll every segment containing histogram SSTs newer than the last
-    * refresh — [[Rollup.refresh]]'s exact incremental policy over the
-    * histograms table. */
-  def refresh(): Rollup.RefreshStats = {
-    val watermark = readWatermark()
-    val ssts = engine.histograms.manifest.allSsts()
-    if (ssts.isEmpty) return Rollup.RefreshStats(0, watermark)
-    val segMs = engine.histograms.segmentMs
-    val dirty = ssts.filter(_.id > watermark)
-      .map(f => TimeRange.truncate(f.timeRange.start, segMs)).distinct.sorted
-    if (dirty.nonEmpty) {
-      val runs = dirty.foldLeft(List.empty[(Long, Long)]) {
-        case ((s, e) :: rest, seg) if seg == e => (s, seg + segMs) :: rest
-        case (acc, seg) => (seg, seg + segMs) :: acc
-      }.reverse
-      val scans = runs.map { case (s, e) =>
-        engine.histograms.scan(ScanRequest(range = TimeRange(s, e)))
-      }
-      // synthetic per-(series, grid bucket) key: the round-11 increase
-      // machinery then confines its delta chain to the bucket (its
-      // "overall-first sample = 0" rule becomes our first-of-bucket rule)
-      // and downscales mixed schemas to the bucket's coarsest
-      val base = scans.reduce(_.unionByName(_))
-        .withColumn("__bucket__",
-          floor(col("ts") / lit(gridMs)).cast("long") * gridMs)
-        .withColumn("__sk__", concat_ws(":",
-          col("metric_id"), col("tsid"), col("__bucket__")))
-      val conv = NativeHistograms.downscaleToCoarsest(base, Seq("__sk__"))
-      val incs = NativeHistograms.increase(
-        conv.select(col("__sk__").as("series_key") +:
-          col("ts").as("ts_ms") +: histCols.map(col): _*))
-        .select(col("series_key").as("__sk__"),
-          col("bucket_schema"), col("zero_threshold"), col("custom_values"),
-          col("zero_count").as("i_zero"), col("count").as("i_count"),
-          col("pos_idx").as("i_pos_idx"), col("pos_cnt").as("i_pos_cnt"),
-          col("neg_idx").as("i_neg_idx"), col("neg_cnt").as("i_neg_cnt"))
-      val edge = struct(col("zero_count"), col("count"), col("pos_idx"),
-        col("pos_cnt"), col("neg_idx"), col("neg_cnt"))
-      val fl = conv
-        .groupBy(col("metric_id"), col("tsid"), col("__bucket__"))
-        .agg(min_by(edge, col("ts")).as("__f__"),
-          max_by(edge, col("ts")).as("__l__"))
-        .withColumn("__sk__", concat_ws(":",
-          col("metric_id"), col("tsid"), col("__bucket__")))
-      val rolled = fl.join(incs, Seq("__sk__"))
-        .select(col("metric_id"), col("tsid"), col("__bucket__").as("ts"),
-          col("bucket_schema"), col("zero_threshold"), col("custom_values"),
-          col("__f__.zero_count").as("f_zero"),
-          col("__l__.zero_count").as("l_zero"), col("i_zero"),
-          col("__f__.count").as("f_count"),
-          col("__l__.count").as("l_count"), col("i_count"),
-          col("__f__.pos_idx").as("f_pos_idx"),
-          col("__f__.pos_cnt").as("f_pos_cnt"),
-          col("__l__.pos_idx").as("l_pos_idx"),
-          col("__l__.pos_cnt").as("l_pos_cnt"),
-          col("i_pos_idx"), col("i_pos_cnt"),
-          col("__f__.neg_idx").as("f_neg_idx"),
-          col("__f__.neg_cnt").as("f_neg_cnt"),
-          col("__l__.neg_idx").as("l_neg_idx"),
-          col("__l__.neg_cnt").as("l_neg_cnt"),
-          col("i_neg_idx"), col("i_neg_cnt"))
-      store.writeSegmented(rolled)
-    }
-    val newWatermark = ssts.map(_.id).max
-    if (dirty.nonEmpty || watermark == Long.MinValue) {
-      writeWatermark(newWatermark)
-      cachedWatermark = newWatermark
-    }
-    Rollup.RefreshStats(dirty.size, newWatermark)
+  protected def roll(bucketed: DataFrame): DataFrame = {
+    // synthetic per-(series, grid bucket) key: the round-11 increase
+    // machinery then confines its delta chain to the bucket (its
+    // "overall-first sample = 0" rule becomes our first-of-bucket rule)
+    // and downscales mixed schemas to the bucket's coarsest
+    val base = bucketed
+      .withColumn("__sk__", concat_ws(":",
+        col("metric_id"), col("tsid"), col("__bucket__")))
+    val conv = NativeHistograms.downscaleToCoarsest(base, Seq("__sk__"))
+    val incs = NativeHistograms.increase(
+      conv.select(col("__sk__").as("series_key") +:
+        col("ts").as("ts_ms") +: histCols.map(col): _*))
+      .select(col("series_key").as("__sk__"),
+        col("bucket_schema"), col("zero_threshold"), col("custom_values"),
+        col("zero_count").as("i_zero"), col("count").as("i_count"),
+        col("pos_idx").as("i_pos_idx"), col("pos_cnt").as("i_pos_cnt"),
+        col("neg_idx").as("i_neg_idx"), col("neg_cnt").as("i_neg_cnt"))
+    val edge = struct(col("zero_count"), col("count"), col("pos_idx"),
+      col("pos_cnt"), col("neg_idx"), col("neg_cnt"))
+    val fl = conv
+      .groupBy(col("metric_id"), col("tsid"), col("__bucket__"))
+      .agg(min_by(edge, col("ts")).as("__f__"),
+        max_by(edge, col("ts")).as("__l__"))
+      .withColumn("__sk__", concat_ws(":",
+        col("metric_id"), col("tsid"), col("__bucket__")))
+    fl.join(incs, Seq("__sk__"))
+      .select(col("metric_id"), col("tsid"), col("__bucket__").as("ts"),
+        col("bucket_schema"), col("zero_threshold"), col("custom_values"),
+        col("__f__.zero_count").as("f_zero"),
+        col("__l__.zero_count").as("l_zero"), col("i_zero"),
+        col("__f__.count").as("f_count"),
+        col("__l__.count").as("l_count"), col("i_count"),
+        col("__f__.pos_idx").as("f_pos_idx"),
+        col("__f__.pos_cnt").as("f_pos_cnt"),
+        col("__l__.pos_idx").as("l_pos_idx"),
+        col("__l__.pos_cnt").as("l_pos_cnt"),
+        col("i_pos_idx"), col("i_pos_cnt"),
+        col("__f__.neg_idx").as("f_neg_idx"),
+        col("__f__.neg_cnt").as("f_neg_cnt"),
+        col("__l__.neg_idx").as("l_neg_idx"),
+        col("__l__.neg_cnt").as("l_neg_cnt"),
+        col("i_neg_idx"), col("i_neg_cnt"))
   }
 
   /** Whole-window bucket-wise increase over `range` (grid-aligned,

@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftSession.maybeBroadcast
 import graft.storage._
 
 /** A single time-series sample, the write-path unit
@@ -89,24 +90,6 @@ final class MetricEngine(spark: SparkSession, root: String,
   val histograms = new TimeMergeStorage(spark, s"$root/histograms",
     StorageSchema(histogramsSchema, numPrimaryKeys = 3), segmentMs,
     timestampColumn = Some("ts"))
-
-  /** Broadcast-when-small (SURVEY §2.3 "broadcast when small, else shuffle
-    * hash"): hint only while the optimizer's size estimate (parquet bytes
-    * after pruning/filter estimation) stays under
-    * `graft.metric.broadcastMaxBytes` (default 64 MB). Above it the join
-    * shape is left to AQE — which still converts genuinely-small runtime
-    * sides to broadcast, but never forces a driver collect of an
-    * unexpectedly huge TSID set (a low-selectivity matcher over a
-    * million-series metric would OOM the driver under an unconditional
-    * hint). Cost-free: a plan-stats read, no extra Spark job. */
-  private[metric] def maybeBroadcast(df: DataFrame): DataFrame = {
-    // Defensive parse: a malformed conf value must not throw from inside
-    // every query's planning path — fall back to the default cap.
-    val cap = spark.conf.getOption("graft.metric.broadcastMaxBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= cap) broadcast(df)
-    else df
-  }
 
   /** Canonical series key: name + sorted `\u0001 key \u0002 value` pairs
     * with keys
@@ -798,12 +781,9 @@ final class MetricEngine(spark: SparkSession, root: String,
     * either unbounded (scan everything — trivially whole buckets) or
     * aligned to `w`. */
   private def histRollupForRange(range: TimeRange,
-      w: Long): Option[HistogramRollup] = {
-    def ok(v: Long) = v == Long.MinValue || v == Long.MaxValue ||
-      (math.abs(v) <= Long.MaxValue / 2 && math.floorMod(v, w) == 0)
-    histRollups.find(r => r.isFresh && w % r.gridMs == 0 &&
-      ok(range.start) && ok(range.end))
-  }
+      w: Long): Option[HistogramRollup] =
+    if (!RollupStore.boundsOk(range, w)) None
+    else histRollups.find(r => r.isFresh && w % r.gridMs == 0)
 
   /** Route `q` to the coarsest registered rollup that can answer it
     * EXACTLY, or None for raw. Routable: combinable aggregation (or
@@ -824,9 +804,7 @@ final class MetricEngine(spark: SparkSession, root: String,
       MetricAgg.Min, MetricAgg.Max, MetricAgg.Avg)
     val aggOk =
       if (q.rate) q.agg == MetricAgg.Sum else combinable.contains(q.agg)
-    def boundOk(v: Long) = v == Long.MinValue || v == Long.MaxValue ||
-      math.abs(v) <= Long.MaxValue / 2
-    if (!aggOk || !boundOk(q.range.start) || !boundOk(q.range.end)) return None
+    if (!aggOk || !RollupStore.boundsOk(q.range, 1L)) return None
     rollups.find(r => q.stepMs.forall(_ % r.gridMs == 0) && r.isFresh)
       .map(_.query(q, Some(tsids), tags))
   }

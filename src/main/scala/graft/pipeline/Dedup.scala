@@ -613,8 +613,8 @@ object Dedup {
     * the frequency pass is one map-side-combinable aggregation keyed on the
     * line; the removal join ships ONLY the boilerplate set (df > threshold
     * — tiny by construction: boilerplate is the head of the line-frequency
-    * distribution) as a broadcast anti-join behind the same plan-stats gate
-    * as [[TextAnalysis.contaminatedDocs]]; reassembly is one aggregation on
+    * distribution) as a broadcast anti-join behind the plan-stats gate
+    * [[graft.GraftSession.maybeBroadcast]]; reassembly is one aggregation on
     * the document id. Nothing is ever all-pairs and no state is
     * corpus-sized except the flat line rows themselves. */
   def lineDedup(df: DataFrame, idCol: String, textCol: String,
@@ -630,13 +630,7 @@ object Dedup {
     val boiler = lines.groupBy("line")
       .agg(count_distinct(col(idCol)).as("__df__"))
       .filter(col("__df__") > maxDocFreq).select("line")
-    val cap = df.sparkSession.conf.getOption("graft.pipeline.broadcastMaxBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    val boilerSide =
-      if (boiler.queryExecution.optimizedPlan.stats.sizeInBytes <= cap)
-        broadcast(boiler)
-      else boiler
-    lines.join(boilerSide, Seq("line"), "left_anti")
+    lines.join(graft.GraftSession.maybeBroadcast(boiler), Seq("line"), "left_anti")
       .groupBy(col(idCol))
       .agg(
         array_join(transform(

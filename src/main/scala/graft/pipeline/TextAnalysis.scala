@@ -106,9 +106,10 @@ object TextAnalysis {
     * billion distinct grams keeps the collision expectation ~1e-2 rows —
     * and a collision only ever ADDS a false contamination hit (safe
     * direction for a removal list). The benchmark side (test sets are tiny
-    * next to a 100 TB training corpus) is distinct'd and broadcast behind a
-    * plan-stats gate: an unexpectedly huge benchmark suite degrades to a
-    * shuffle semi-join instead of a driver OOM. */
+    * next to a 100 TB training corpus) is distinct'd and broadcast behind
+    * the plan-stats gate [[graft.GraftSession.maybeBroadcast]]: an
+    * unexpectedly huge benchmark suite degrades to a shuffle semi-join
+    * instead of a driver OOM. */
   def contaminatedDocs(train: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, k: Int = 13): DataFrame = {
     val tg = train
@@ -118,12 +119,7 @@ object TextAnalysis {
       .select(explode(wordGrams(col(benchTextCol), k)).as("gram"))
       .select(xxhash64(col("gram")).as("gh"))
       .distinct()
-    val cap = bench.sparkSession.conf.getOption("graft.pipeline.broadcastMaxBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    val bgSide =
-      if (bg.queryExecution.optimizedPlan.stats.sizeInBytes <= cap) broadcast(bg)
-      else bg
-    tg.join(bgSide, Seq("gh"), "left_semi")
+    tg.join(graft.GraftSession.maybeBroadcast(bg), Seq("gh"), "left_semi")
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
   }
 

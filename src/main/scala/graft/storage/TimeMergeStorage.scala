@@ -369,33 +369,23 @@ final class TimeMergeStorage(
     ssts
   }
 
-  /** Merge-on-read scan. `nativeMerge=true` (default) plans the sorted-run
-    * [[graft.plans.MergeDedupExec]] — measured 1.6× the hash-agg merge at
-    * 10M rows (one clustered exchange + linear run reduction, no hash
-    * table; spills through the external sorter at scale). The hash-agg
-    * path stays selectable: its map-side partial aggregation wins when
-    * most rows are duplicates of in-partition neighbors. */
-  def scan(req: ScanRequest = ScanRequest(), nativeMerge: Boolean = true): DataFrame =
-    if (nativeMerge)
-      scanWith(req, merge = df => graft.plans.MergeDedupOps.nativeDedupMerge(
-        df, schema.primaryKeys, schema.updateMode, globalSort = false))
-    else
-      scanWith(req, merge = df => MergeOps.dedupMerge(
-        df, schema.primaryKeys,
-        df.columns.filterNot(c => schema.primaryKeys.contains(c) || c == SeqCol).toSeq,
-        schema.updateMode))
+  /** Merge-on-read scan, planned as the sorted-run
+    * [[graft.plans.MergeDedupExec]] — measured 1.6× the hash-agg merge
+    * ([[MergeOps.dedupMerge]]) at 10M rows (one clustered exchange +
+    * linear run reduction, no hash table; spills through the external
+    * sorter at scale). */
+  def scan(req: ScanRequest = ScanRequest()): DataFrame =
+    scanWith(req, merge = df => graft.plans.MergeDedupOps.nativeDedupMerge(
+      df, schema.primaryKeys, schema.updateMode, globalSort = false))
 
   /** Output-ordering contract of the reference scan ("sorted by time, old →
-    * latest", storage.rs:82-84). `native=true` (default) plans the custom
-    * [[graft.plans.MergeDedupExec]] with a range-partitioned requirement:
-    * ONE shuffle produces both the merge and the global pk order —
-    * vs the hash-agg path's two (agg exchange + sort exchange). */
-  def scanSorted(req: ScanRequest = ScanRequest(), native: Boolean = true): DataFrame =
-    if (native)
-      scanWith(req, merge = df => graft.plans.MergeDedupOps.nativeDedupMerge(
-        df, schema.primaryKeys, schema.updateMode, globalSort = true))
-    else
-      scan(req).sort(pkOrder: _*)
+    * latest", storage.rs:82-84): [[graft.plans.MergeDedupExec]] with a
+    * range-partitioned requirement, so ONE shuffle produces both the merge
+    * and the global pk order — vs two for `scan(req).sort(pks)` (merge
+    * exchange + sort exchange). */
+  def scanSorted(req: ScanRequest = ScanRequest()): DataFrame =
+    scanWith(req, merge = df => graft.plans.MergeDedupOps.nativeDedupMerge(
+      df, schema.primaryKeys, schema.updateMode, globalSort = true))
 
   /** Merge-on-read DELETE (beyond-ref; the reference's overwrite mode has
     * no delete marker): rows written with `tombstoneCol = true` are delete

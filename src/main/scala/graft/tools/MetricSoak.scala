@@ -61,8 +61,8 @@ object MetricSoak {
     // histogram-rollup lane (round 12): when BOTH lanes are on, the same
     // scheduler tick also re-rolls the native-histogram partials
     val histRollup = new HistogramRollup(engine, gridMs = 3600L * 1000)
-    val rollupScheduler = new RollupScheduler(Seq(rollup), intervalMs = 1000L,
-      histRollups = if (useHist && useRollup) Seq(histRollup) else Nil)
+    val rollupScheduler = new RollupScheduler(
+      Seq(rollup) ++ (if (useHist) Seq(histRollup) else Nil), intervalMs = 1000L)
     if (useRollup) {
       engine.registerRollup(rollup)
       if (useHist) engine.registerHistogramRollup(histRollup)

@@ -258,7 +258,7 @@ class MergeDedupExecSpec extends AnyFunSuite {
     // above the single-partition bound (one byte): the exchange arm
     SparkTestSession.aboveMergeBound {
       val native = st.scanSorted()
-      val fallback = st.scanSorted(native = false)
+      val fallback = st.scan().sort(col("k"), col("ts"))
       val a = native.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toList
       val b = fallback.collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toList
       assert(a == b)

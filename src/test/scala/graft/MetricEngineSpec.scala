@@ -69,14 +69,14 @@ class MetricEngineSpec extends AnyFunSuite {
       labelFilters = Map("url" -> "/api/put"), groupByTag = Some("url"))
     val hinted = e.query(q)
     assert(hintCount(hinted) > 0, "small TSID sets should carry the broadcast hint")
-    spark.conf.set("graft.metric.broadcastMaxBytes", "0")
+    spark.conf.set("graft.broadcastMaxBytes", "0")
     try {
       // over-cap: no hint — the join shape is AQE's call, never a forced
       // driver collect of an unbounded TSID set
       val unhinted = e.query(q)
       assert(hintCount(unhinted) == 0)
       assert(unhinted.collect().toSet == hinted.collect().toSet)
-    } finally spark.conf.unset("graft.metric.broadcastMaxBytes")
+    } finally spark.conf.unset("graft.broadcastMaxBytes")
   }
 
   test("bucketed data-table ingest: N SSTs per segment, queries unchanged") {

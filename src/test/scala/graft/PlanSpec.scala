@@ -19,7 +19,7 @@ import graft.storage._
 class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
 
-  private def scanFrame(nativeMerge: Boolean): DataFrame = {
+  private def scanFrame(): DataFrame = {
     val schema = StructType(Seq(
       StructField("pk1", IntegerType), StructField("pk2", IntegerType),
       StructField("value", LongType)))
@@ -28,17 +28,17 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       StorageSchema(schema, 2), segmentMs = 7200000L)
     s.write(spark.createDataFrame(spark.sparkContext.parallelize(
       Seq(Row(1, 1, 1L), Row(2, 2, 2L)), 1), schema), TimeRange(1, 10))
-    s.scan(ScanRequest(predicates = Seq(col("pk1") === 1)), nativeMerge)
+    s.scan(ScanRequest(predicates = Seq(col("pk1") === 1)))
   }
 
-  private def scanPlan(nativeMerge: Boolean): (String, Seq[String]) = {
-    val df = scanFrame(nativeMerge)
+  private def scanPlan(): (String, Seq[String]) = {
+    val df = scanFrame()
     (df.queryExecution.executedPlan.toString, df.schema.fieldNames.toSeq)
   }
 
   test("scan plan: predicate pushed to parquet, native merge exec, builtins stripped") {
     // above the single-partition bound (one byte): the exchange arm
-    val (plan, outCols) = SparkTestSession.aboveMergeBound(scanPlan(nativeMerge = true))
+    val (plan, outCols) = SparkTestSession.aboveMergeBound(scanPlan())
     // predicate reaches the scan (reference: pruning_predicate on ParquetExec)
     assert(plan.contains("PushedFilters") && plan.contains("pk1"), plan)
     // merge-on-read dedup planned as the native sorted-run operator over a
@@ -51,7 +51,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("small scan: no Exchange, Coalesce 1 below MergeDedup") {
-    val df = scanFrame(nativeMerge = true)
+    val df = scanFrame()
     val plan = df.queryExecution.executedPlan
     assert(!plan.toString.contains("Exchange"), plan)
     val merges = collect(plan) { case m: MergeDedupExec => m }
@@ -99,12 +99,6 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val fed = engine.federate("cpu", nowMs = 10000L, lookbackMs = 9000L)
     val fedPlan = fed.queryExecution.executedPlan.toString
     assert(fedPlan.contains("BroadcastHashJoin"), fedPlan.take(2000))
-  }
-
-  test("scan plan fallback: merge planned as hash aggregation on the pks") {
-    val (plan, outCols) = scanPlan(nativeMerge = false)
-    assert(plan.contains("max_by") || plan.contains("HashAggregate"), plan)
-    assert(outCols == Seq("pk1", "pk2", "value"), outCols)
   }
 
   test("query plans: q3 broadcasts the filtered dimension (no shuffle join on customer)") {

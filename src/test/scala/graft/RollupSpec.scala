@@ -159,13 +159,13 @@ class RollupSpec extends AnyFunSuite {
     val hinted = r.query(q)
     assert(hintCount(hinted) > 0,
       "small TSID sets should carry the broadcast hint on the rollup path")
-    spark.conf.set("graft.metric.broadcastMaxBytes", "0")
+    spark.conf.set("graft.broadcastMaxBytes", "0")
     try {
       // over-cap: NO forced broadcast — the join shape is AQE's call
       val unhinted = r.query(q)
       assert(hintCount(unhinted) == 0, "rollup path must honor the size gate")
       assert(unhinted.collect().toSet == hinted.collect().toSet)
-    } finally spark.conf.unset("graft.metric.broadcastMaxBytes")
+    } finally spark.conf.unset("graft.broadcastMaxBytes")
   }
 
   test("last partial carries each bucket's newest value") {
@@ -426,14 +426,38 @@ class RollupSpec extends AnyFunSuite {
 
   test("watermark survives a reopen: a new Rollup instance over the same " +
       "roots refreshes nothing until new data arrives") {
-    val eng = freshEngine()
-    write(eng, Seq(("a", 1000L, 1.0)))
-    val r1 = new Rollup(eng, gridMs = hour)
-    assert(r1.refresh().segmentsRolled == 1)
-    val r2 = new Rollup(eng, gridMs = hour) // same engine root -> same store
-    assert(r2.refresh().segmentsRolled == 0)
-    write(eng, Seq(("a", hour * 5, 2.0)))
-    assert(r2.refresh().segmentsRolled == 1)
+    import graft.streaming.MetricStreamIngest
+    import graft.streaming.RemoteWrite.HistogramSample
+    // one scalar and one native-histogram rollup: ingest one sample at a
+    // time, and open a rollup over the engine's roots as (refresh,
+    // freshness gate, store root)
+    type Opened = (() => Rollup.RefreshStats, () => Boolean, String)
+    val kinds = Seq[(String, (MetricEngine, Long) => Unit, MetricEngine => Opened)](
+      ("_rollup_", (eng, ts) => write(eng, Seq(("a", ts, 1.0))), eng => {
+        val r = new Rollup(eng, gridMs = hour)
+        (() => r.refresh(), () => r.isFresh, r.store.root)
+      }),
+      ("_hrollup_", (eng, ts) => MetricStreamIngest.ingestHistograms(eng, spark,
+        Seq(HistogramSample("lat", Map("host" -> "a"), ts, count = 3,
+          sum = 4.5, schema = 0, zeroThreshold = 0.0, zeroCount = 0,
+          positiveBuckets = Seq((1, 3.0)), negativeBuckets = Nil))), eng => {
+        val r = new HistogramRollup(eng, gridMs = hour)
+        (() => r.refresh(), () => r.isFresh, r.store.root)
+      }))
+    for ((kind, ingest, open) <- kinds) {
+      val eng = freshEngine()
+      ingest(eng, 1000L)
+      val (refresh1, _, root) = open(eng)
+      assert(root.endsWith(s"$kind$hour"), root)
+      assert(refresh1().segmentsRolled == 1, kind)
+      // same engine root -> same store and persisted watermark
+      val (refresh2, fresh2, _) = open(eng)
+      assert(fresh2(), s"$kind: the reopened watermark covers the manifest")
+      assert(refresh2().segmentsRolled == 0, kind)
+      ingest(eng, hour * 5)
+      assert(!fresh2(), kind)
+      assert(refresh2().segmentsRolled == 1, kind)
+    }
   }
 
   test("histogram rollup: routed histogram_quantile(q, rate(m[w])) and " +
@@ -613,7 +637,7 @@ class RollupSpec extends AnyFunSuite {
         positiveBuckets = Seq((1, 3.0)), negativeBuckets = Nil)))
     val r = new Rollup(eng, gridMs = hour)
     val hr = new HistogramRollup(eng, gridMs = hour)
-    val sched = new RollupScheduler(Seq(r), histRollups = Seq(hr))
+    val sched = new RollupScheduler(Seq(r, hr))
     assert(!r.isFresh && !hr.isFresh)
     sched.runOnce()
     assert(r.isFresh && hr.isFresh)
@@ -628,7 +652,7 @@ class RollupSpec extends AnyFunSuite {
       override def refresh(): Rollup.RefreshStats =
         throw new RuntimeException("poisoned lane")
     }
-    val sched2 = new RollupScheduler(Nil, histRollups = Seq(hr, broken))
+    val sched2 = new RollupScheduler(Seq(hr, broken))
     sched2.runOnce()
     assert(hr.isFresh)
     assert(sched2.refreshFailuresTotal == 1)
